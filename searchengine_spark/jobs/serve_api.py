@@ -12,10 +12,10 @@ container + Mongo connection pool play.
 Query routing mirrors SearchService.processSearchQuery:
 
 - quoted query (``isPhraseSearch``, SearchService.java:93-95) → phrase
-  path: positional adjacency over the stored postings
-  (serve.phrase_match — correct-by-positions, unlike the reference's
-  snippet-scan, quirk Q10) filters candidates, THEN BM25 ranks the
-  survivors (filter-then-rank, the reference's flow at :99-133);
+  path: positional adjacency over the stored postings (correct-by-
+  positions, unlike the reference's snippet-scan, quirk Q10) filters
+  candidates, THEN BM25 ranks the survivors (filter-then-rank, the
+  reference's flow at :99-133);
 - plain query → term path: index-served BM25 top-k with url/title/snippet
   assembly (results.search_results = convertDocumentsToResults shape).
 
@@ -23,11 +23,18 @@ Result rows carry exactly the reference's five fields
 (SearchService.java:391-423): ``term, url, title, snippet, id``
 (id = doc_id — our analog of the Mongo ObjectId).
 
+Per request, a plain or phrase search is three Spark executions, all in
+results.search_results: one lexicon point lookup; one top-k aggregate over
+the pruned postings that scores, picks each doc's snippet term and (for a
+phrase) checks adjacency in the same pass; one documents scan with the <=k
+winner ids pushed down and their scores/terms inlined as literal maps. The
+<=k rows are ordered by rank on the driver.
+
 Scale: the HTTP layer is driver-side only; every request runs the same
-partition-pruned broadcast-join plans the gated queries run, so a serving
-deployment is one long-lived Spark application per replica with the index
-on shared storage — the reference's "Spring app over a shared MongoDB"
-topology, re-expressed.
+partition-pruned plans the gated queries run, so a serving deployment is
+one long-lived Spark application per replica with the index on shared
+storage — the reference's "Spring app over a shared MongoDB" topology,
+re-expressed.
 
 Run:
     spark-submit --py-files sespark.zip searchengine_spark/jobs/serve_api.py \\
@@ -125,11 +132,16 @@ class SearchAPI:
                     terms = expanded
         if not terms:
             return []
-        if is_phrase and len(terms) >= 2:
-            doc_filter = serve.phrase_match(self.spark, self.idx, terms)
         res = search_results(
-            self.spark, self.idx, self.documents, terms, k=k, doc_filter=doc_filter
+            self.spark,
+            self.idx,
+            self.documents,
+            terms,
+            k=k,
+            doc_filter=doc_filter,
+            phrase=is_phrase and len(terms) >= 2,
         )
+        # <=k rows: ranked on the driver, not by a Spark range sort
         return [
             {
                 "term": r["term"],
@@ -138,7 +150,7 @@ class SearchAPI:
                 "snippet": r["snippet"],
                 "id": r["doc_id"],
             }
-            for r in res.orderBy("rank").collect()
+            for r in sorted(res.collect(), key=lambda r: r["rank"])
         ]
 
     def suggest_query(self, raw_query: str) -> str | None:

@@ -8,6 +8,13 @@ in the pytest oracle suite; this module gates it: BM25 top-k from the gate
 index, then url/title lookup and a 60-word centered snippet rendered at
 query time for the <=k candidate docs.
 
+A request is three Spark executions (``search_results``): one lexicon
+lookup; one ``groupBy(doc_id)`` over the pruned postings that computes the
+score, the snippet term and, for a quoted phrase, the positional adjacency
+check together, then keeps the bounded top-k; one documents scan that
+reads the <=k winners by pushed-down id and takes their scores and terms
+from literal maps — no broadcast join and no second postings pass.
+
 Snippet contract (the simple-tokenizer analog of
 Indexer.getCenteredTermSnippets, Indexer.java:354-394, so the DuckDB oracle
 can replicate it bit-for-bit — the Porter-stemmed variant stays covered by
@@ -25,11 +32,16 @@ tests/oracle.py):
 - snippet term = the lexicographically LAST matched query term of the doc
   (the pinned Q12 "last processed term" order).
 
-Everything here is Catalyst higher-order functions over <=k rows — the
+The snippet is Catalyst higher-order functions over <=k rows — the
 per-element lambda interpretation cost is bounded by k, not corpus size.
+The phrase check's lambda runs over the first phrase term's positions per
+candidate doc, bounded by the phrase terms' posting mass.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +49,10 @@ from pyspark.sql import functions as F
 from searchengine_spark.functions.tokenize import TOKEN_SPLIT_RE
 
 SNIPPET_WORDS = 60
+_RESULT_SCHEMA = (
+    "rank int, doc_id long, term string, url string, title string, "
+    "snippet string, score_micros long"
+)
 
 
 def _word_matches(word: Column, term: Column) -> Column:
@@ -81,6 +97,85 @@ def snippet_expr(words: Column, term: Column, n_words: int = SNIPPET_WORDS) -> C
     )
 
 
+def _sql_literal(x: str | int | float) -> str:
+    """``x`` as a Spark SQL literal of its exact value: a string, a bigint,
+    or a double parsed back from its round-trip ``repr``."""
+    if isinstance(x, str):
+        return "'" + x.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(x, float):
+        return f"CAST('{x!r}' AS DOUBLE)"
+    return f"{int(x)}L"
+
+
+def _literal_map(pairs: dict) -> Column:
+    """A driver dict inlined into the plan as one literal map: the request's
+    few idf values and <=k winner fields ride in the expression instead of
+    a driver-built frame behind a broadcast join. Built as one SQL
+    expression — one JVM call, where a ``lit`` per entry costs a round trip
+    each."""
+    entries = ", ".join(f"{_sql_literal(k)}, {_sql_literal(v)}" for k, v in pairs.items())
+    return F.expr(f"map({entries})")
+
+
+def _phrase_adjacent(pos: dict[str, Column], phrase_terms: list[str]) -> Column:
+    """True iff some position p of the first phrase term has term i at
+    p + i for every i — exact token adjacency over the stored positions
+    arrays (the serve.phrase_match contract). ``pos`` maps each distinct
+    phrase term to its per-doc positions array (null when the doc lacks
+    the term, which makes the check null, i.e. filtered out)."""
+    def adjacent(p: Column) -> Column:
+        return reduce(
+            operator.and_,
+            [F.array_contains(pos[t], p + i) for i, t in enumerate(phrase_terms[1:], 1)],
+            F.lit(True),
+        )
+
+    return F.exists(pos[phrase_terms[0]], adjacent)
+
+
+def _topk(
+    idx: dict,
+    rows: list,
+    query_terms: list[str],
+    k: int,
+    doc_filter: DataFrame | None,
+    phrase: bool,
+) -> DataFrame:
+    """The request's one top-k aggregate over the pruned postings:
+    ``(doc_id, score_micros, term)`` with ``term`` the doc's last matched
+    query term (Q12) and, for a phrase, only docs holding it adjacently."""
+    from searchengine_spark.operators import serve
+
+    idf = _literal_map({r["term"]: r["idf_bm25"] for r in rows})
+    contrib = serve._bm25_contrib(idx["avgdl"])
+    aggs = [
+        F.sum(F.round(contrib * 1e6).cast("long")).alias("score_micros"),
+        F.max("term").alias("term"),
+    ]
+    distinct = list(dict.fromkeys(query_terms)) if phrase else []
+    # postings are unique per (term, doc): each max() sees one non-null array
+    aggs += [
+        F.max(F.when(F.col("term") == t, F.col("positions"))).alias(f"_pos{i}")
+        for i, t in enumerate(distinct)
+    ]
+    top = (
+        serve._pruned_postings(idx, rows)
+        .withColumn("idf_bm25", idf[F.col("term")])
+        .groupBy("doc_id")
+        .agg(*aggs)
+    )
+    if phrase:
+        pos = {t: F.col(f"_pos{i}") for i, t in enumerate(distinct)}
+        top = top.filter(_phrase_adjacent(pos, query_terms))
+    if doc_filter is not None:
+        top = top.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
+    return (
+        top.select("doc_id", "score_micros", "term")
+        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
+        .limit(k)
+    )
+
+
 def search_results(
     spark: SparkSession,
     idx: dict,
@@ -88,85 +183,65 @@ def search_results(
     query_terms: list[str],
     k: int = 10,
     doc_filter: DataFrame | None = None,
+    phrase: bool = False,
 ) -> DataFrame:
     """Index-served BM25 top-k assembled into the reference's response shape:
     ``(rank, doc_id, term, url, title, snippet, score_micros)``.
 
-    Plan: bm25_topk (pruned postings scan + broadcast lexicon + bounded
-    top-k) → broadcast the <=k winners against documents for url/title/text
-    (one equi-join, hit side broadcast) → snippet expression over k rows.
+    Plan, three Spark executions per call (the last when the caller
+    collects the returned frame):
 
-    ``doc_filter`` (a ``doc_id`` DataFrame) restricts candidates BEFORE the
-    top-k bound — the REST phrase path passes the positional phrase-match
-    doc set here, mirroring the reference's filter-then-rank phrase flow
-    (SearchService.handlePhraseSearch, SearchService.java:99-133) but
-    filtering on true positional adjacency instead of snippet scans.
+    1. one lexicon point lookup (``serve._qlex``) — its rows give the
+       bucket pruning, the idf values and, for a phrase, the
+       all-terms-present check;
+    2. one top-k aggregate over the pruned postings: ``groupBy(doc_id)``
+       computes the BM25 score (the shared ``serve._bm25_contrib``, idf
+       from a literal term→idf map), the Q12 snippet term ``max(term)``
+       and, for a phrase, each phrase term's positions, checked for
+       adjacency in the same pass; the bounded top-k is collected;
+    3. one results scan: the documents scan with the <=k winner ids
+       pushed down, each winner's score and term read from literal maps,
+       then the snippet expression, the Q11 filter and the rank window.
+
+    ``phrase=True`` keeps only docs holding ``query_terms`` token-adjacent
+    (the serve.phrase_match contract) BEFORE the top-k bound — the
+    reference's filter-then-rank phrase flow
+    (SearchService.handlePhraseSearch, SearchService.java:99-133) on true
+    positional adjacency instead of snippet scans. ``doc_filter`` (a
+    ``doc_id`` DataFrame, e.g. a boolean query's hit set) likewise
+    restricts candidates before the bound.
     """
     from pyspark.sql import Window
 
     from searchengine_spark.operators import serve
 
-    if doc_filter is None:
-        top = serve.bm25_topk(spark, idx, query_terms, k=k)
-    else:
-        top = (
-            serve.bm25_scores(spark, idx, query_terms)
-            .join(doc_filter.select("doc_id"), "doc_id", "left_semi")
-            .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-            .limit(k)
-        )
-    empty_schema = (
-        "rank int, doc_id long, term string, url string, title string, "
-        "snippet string, score_micros long"
-    )
     rows = serve._qlex(spark, idx, query_terms)
-    if not rows:
-        return spark.createDataFrame([], empty_schema)
-    # the <=k winners are collected so their doc_ids PUSH DOWN into both
-    # the postings scan and the documents scan (parquet row-group pruning
-    # on the doc_id-clustered files) — a broadcast-join key never reaches
-    # the reader, so without this every request decoded the whole corpus's
-    # text column just to probe a k-row hash table (the same rank-first
-    # overfetch rule search_compat uses)
-    top_rows = top.collect()
+    if not rows or (phrase and not set(query_terms) <= {r["term"] for r in rows}):
+        return spark.createDataFrame([], _RESULT_SCHEMA)
+    # the <=k winners are collected so their doc_ids PUSH DOWN into the
+    # documents scan (parquet row-group pruning on the doc_id-clustered
+    # files) — a join key never reaches the reader, so without this every
+    # request would decode the whole corpus's text column
+    top_rows = _topk(idx, rows, query_terms, k, doc_filter, phrase).collect()
     if not top_rows:
-        return spark.createDataFrame([], empty_schema)
-    ids = [int(r["doc_id"]) for r in top_rows]
-    top_df = spark.createDataFrame(
-        [(int(r["doc_id"]), int(r["score_micros"])) for r in top_rows],
-        "doc_id long, score_micros long",
-    )
-    # last matched term per winning doc (Q12 pinned order): tiny pruned
-    # postings pass restricted to the k winners
-    post = serve._pruned_postings(idx, rows)
-    last_term = (
-        post.filter(F.col("doc_id").isin(ids))
-        .groupBy("doc_id")
-        .agg(F.max("term").alias("term"))
-    )
+        return spark.createDataFrame([], _RESULT_SCHEMA)
+    score = {int(r["doc_id"]): int(r["score_micros"]) for r in top_rows}
+    term = {int(r["doc_id"]): r["term"] for r in top_rows}
     # url/title derived exactly as the compat fixture does (documents.parquet
     # has no url/title columns): url = doc://{source}/{doc_id}, title = first
     # 48 chars — the convertDocumentsToResults field mapping
-    docs_side = documents.filter(F.col("doc_id").isin(ids)).select(
+    doc_id = F.col("doc_id")
+    barrier = documents.filter(doc_id.isin(list(score))).select(
         "doc_id",
+        _literal_map(term)[doc_id].alias("term"),
         F.concat(
-            F.lit("doc://"), F.col("source"), F.lit("/"), F.col("doc_id").cast("string")
+            F.lit("doc://"), F.col("source"), F.lit("/"), doc_id.cast("string")
         ).alias("url"),
         F.substring("text", 1, 48).alias("title"),
-        F.col("text").alias("_text"),
-    )
-    joined = docs_side.join(F.broadcast(top_df), "doc_id").join(
-        F.broadcast(last_term), "doc_id"
-    )
-    # Generate barrier: the word array becomes a real attribute, evaluated
-    # once per row, before the per-word snippet lambdas touch it
-    barrier = joined.select(
-        "doc_id",
-        "term",
-        "url",
-        "title",
-        "score_micros",
-        F.explode(F.array(F.split(F.col("_text"), r"\s+"))).alias("_words"),
+        _literal_map(score)[doc_id].alias("score_micros"),
+        # Generate barrier: the word array becomes a real attribute,
+        # evaluated once per row, before the per-word snippet lambdas touch it
+        F.explode(F.array(F.split(F.col("text"), r"\s+"))).alias("_words"),
     )
     out = barrier.withColumn(
         "snippet", snippet_expr(F.col("_words"), F.col("term"))

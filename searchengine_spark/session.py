@@ -1,7 +1,8 @@
 """SparkSession factory.
 
-Defaults are tuned for the sandbox (local[N], 32 cores, 128 GiB) but every
-knob is the one you would also set on a 1000-executor cluster:
+Defaults are sized from the host (local[cores], driver heap from free
+memory) but every knob is the one you would also set on a 1000-executor
+cluster:
 
 - AQE on (runtime coalesce + skew-join splitting),
 - shuffle partitions sized to parallelism (not the 200 default),
@@ -17,7 +18,7 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -52,6 +53,18 @@ def _export_pythonpath() -> None:
 
 
 _PYFILE_SENT: set[str] = set()
+
+
+def _default_driver_memory() -> str:
+    """About 60% of the host's MemAvailable, in whole GiB, 1g-16g: the
+    driver heap starts at its full size (-Xms below), so a fixed 16g fails
+    to start the JVM on a host with less memory free."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{max(1, min(16, kb * 6 // 10 >> 20))}g"
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -94,7 +107,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
 
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -11,9 +11,11 @@ sys.path.insert(0, REPO)
 
 @pytest.fixture(scope="session")
 def spark():
-    from searchengine_spark.session import get_spark
+    from searchengine_spark.session import DEFAULT_CPUS, get_spark
 
-    s = get_spark(master="local[8]", app_name="tests", shuffle_partitions=8)
+    s = get_spark(
+        master=f"local[{DEFAULT_CPUS}]", app_name="tests", shuffle_partitions=8
+    )
     yield s
 
 

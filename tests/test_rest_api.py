@@ -10,6 +10,7 @@ import urllib.error
 import urllib.parse
 import urllib.request
 
+import duckdb
 import pytest
 
 SF_SMALL = os.environ.get("PARITY_SMALL_SF_DIR", "/root/testdata/sf0.001")
@@ -72,6 +73,52 @@ def test_phrase_query_filters_then_ranks(spark, api_server):
     status2, unquoted = _get(base, f"/api/search?query=hash+join&k=25")
     assert status2 == 200
     assert body["total"] <= unquoted["total"]
+
+
+@pytest.mark.parametrize("phrase", ["hash join", "the the", "hash zzzqqqxxyy"])
+def test_phrase_ids_match_oracle(api_server, phrase):
+    """Quoted queries over the wire return exactly oracles.phrase_topk_sql's
+    ids in rank order: a common phrase, a repeated-term phrase and a phrase
+    with a term absent from the lexicon (empty on both sides)."""
+    from searchengine_spark import oracles
+    from tests.conftest import register_views
+
+    _, base = api_server
+    status, body = _get(base, "/api/search?query=" + urllib.parse.quote(f'"{phrase}"'))
+    assert status == 200
+    con = duckdb.connect()
+    register_views(con, SF_SMALL)
+    want = [int(r[0]) for r in con.execute(oracles.phrase_topk_sql(phrase.split(), 10)).fetchall()]
+    assert [r["id"] for r in body["results"]] == want
+    assert (len(want) > 0) == (phrase != "hash zzzqqqxxyy")
+
+
+def test_search_request_shape(spark, api_server, monkeypatch):
+    """A plain or phrase request looks the lexicon up once, and its results
+    frame reads only the documents: no postings scan, no broadcast."""
+    from searchengine_spark.operators import serve
+    from searchengine_spark.operators.results import search_results
+    from tests.test_plans import plan_of
+
+    api, _ = api_server
+    lookup, calls = serve._qlex, []
+
+    def counted(*a, **kw):
+        calls.append(a[-1])
+        return lookup(*a, **kw)
+
+    monkeypatch.setattr(serve, "_qlex", counted)
+    for q in ("hash join", '"hash join"'):
+        calls.clear()
+        assert api.search(q)
+        assert len(calls) == 1, (q, calls)
+    for phrase in (False, True):
+        res = search_results(
+            spark, api.idx, api.documents, ["hash", "join"], k=10, phrase=phrase
+        )
+        plan = plan_of(res)
+        assert "postings" not in plan and "BroadcastExchange" not in plan
+        assert "documents" in plan
 
 
 def test_no_hit_and_errors(api_server):

@@ -4,16 +4,18 @@ The reference materializes {term, url, title, snippet, id} per hit
 (SearchService.convertDocumentsToResults, :391-423) with a 60-word centered,
 bolded, ellipsized snippet (Indexer.getCenteredTermSnippets, :354-394).
 These tests pin the simple-tokenizer snippet expression against hand-built
-expectations, and audit that assembling results costs broadcast joins over
-the <=k winners — never a corpus-wide shuffle.
+expectations, compare whole result rows with the DuckDB oracle, and audit
+that assembling results never joins the <=k winners through a shuffle.
 """
 
 from __future__ import annotations
 
-import os
-
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
+from searchengine_spark import oracles
+from tests.conftest import compare_spark_duck, register_views
 from tests.test_plans import SF_DIR, plan_of
 
 
@@ -69,7 +71,10 @@ def test_snippet_no_match_is_null(spark):
     assert _snip(spark, "alpha beta", "zzz") is None
 
 
-def test_search_results_matches_reference_shape_and_is_broadcast_only(spark):
+def test_search_results_matches_reference_shape_and_never_shuffle_joins(spark):
+    """Reference row shape, dense ranks in (score desc, doc_id asc) order,
+    and no shuffled join: the winners' fields reach the documents scan as
+    literals, not through a join."""
     from searchengine_spark.operators.results import search_results
     from searchengine_spark.plans.gate_index import gate_index
     from searchengine_spark.sources.tables import load_table
@@ -88,3 +93,26 @@ def test_search_results_matches_reference_shape_and_is_broadcast_only(spark):
     # ranks follow score desc, doc_id asc
     key = [(-r["score_micros"], r["doc_id"]) for r in rows]
     assert key == sorted(key)
+
+
+@pytest.mark.parametrize(
+    "terms",
+    [["spark"], ["hash", "join"], ["spark", "hash", "join"], ["query", "plan", "the", "data"]],
+)
+def test_search_results_rows_match_oracle(spark, terms):
+    """All seven result columns equal oracles.search_results_sql: score,
+    Q12 snippet term, url/title and the snippet text itself."""
+    from searchengine_spark.operators.results import search_results
+    from searchengine_spark.plans.gate_index import gate_index
+    from searchengine_spark.sources.tables import load_table
+
+    idx = gate_index(spark, SF_DIR)
+    docs = load_table(spark, SF_DIR, "documents")
+    con = duckdb.connect()
+    register_views(con, SF_DIR)
+    sp, _ = compare_spark_duck(
+        search_results(spark, idx, docs, terms, k=10),
+        con,
+        oracles.search_results_sql(terms, k=10),
+    )
+    assert len(sp) > 0
