@@ -3,7 +3,7 @@
 
 Default mode (driver contract): run the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line::
+``local[$SPARK_GRAFT_CPUS]`` (default: the host's cores) and print ONE JSON line::
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"bm25_topk": sec, ...}, "sf": 0.1,
@@ -29,8 +29,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from searchengine_spark.session import DEFAULT_CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = DEFAULT_CPUS
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "50000"))
 
 HEADLINE = [

@@ -135,7 +135,9 @@ def build_index(
                 index_dir,
                 "segments",
                 partition_by=["bucket"],
-                # bucket-partitioned: each file sees ~vocab/n_buckets terms
+                # encode clusters on (bucket, shard), so each bucket=* dir
+                # holds one file per shard and each file sees
+                # ~vocab/n_buckets terms
                 options=lin.term_bloom_options(n_terms // 64),
             )
         parts = lin.partition_metrics(stage_path("segments"))

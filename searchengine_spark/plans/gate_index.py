@@ -43,7 +43,7 @@ from searchengine_spark.functions.tokenize import doc_len, exploded_tokens
 from searchengine_spark.operators.ir import idf_bm25_expr, idf_compat_expr
 from searchengine_spark.sources.tables import load_table
 
-GATE_INDEX_VERSION = 4  # v4: + quantized-impact postings (8-bit impacts)
+GATE_INDEX_VERSION = 5  # v5: one segments/docvecs file per bucket
 N_BUCKETS = 64
 
 # in-memory cache: (spark appId, digest) -> handles dict
@@ -88,7 +88,7 @@ def build_gate_index(spark: SparkSession, sf_dir: str, base: str) -> None:
         .join(dls, "doc_id")
         .withColumn("bucket", F.pmod(F.hash("term"), F.lit(N_BUCKETS)).cast("int"))
     )
-    from searchengine_spark.plans.lineage import term_bloom_options
+    from searchengine_spark.plans.lineage import partition_metrics, term_bloom_options
 
     post.write.mode("overwrite").options(**term_bloom_options(1 << 14)).partitionBy(
         "bucket"
@@ -99,13 +99,15 @@ def build_gate_index(spark: SparkSession, sf_dir: str, base: str) -> None:
     # (doc, term, tf, positions) rows re-bucketed by doc_id so a per-doc
     # point lookup prunes to ONE directory instead of scanning every term
     # bucket. Serves term_vectors / MoreLikeThis-style doc fetches.
+    # Clustered by dbucket so each dbucket=* dir is one file, not one per
+    # scan task.
     post.select(
         F.pmod(F.col("doc_id"), F.lit(N_BUCKETS)).cast("int").alias("dbucket"),
         "doc_id",
         "term",
         "tf",
         "positions",
-    ).write.mode("overwrite").partitionBy("dbucket").parquet(
+    ).repartition("dbucket").write.mode("overwrite").partitionBy("dbucket").parquet(
         os.path.join(base, "docvecs")
     )
 
@@ -129,6 +131,11 @@ def build_gate_index(spark: SparkSession, sf_dir: str, base: str) -> None:
         )
     )
     lex.write.mode("overwrite").parquet(os.path.join(base, "lexicon"))
+    # bloom size for the bucket-partitioned segments/impacts files: distinct
+    # terms per file, as build_index sizes its segments
+    terms_per_bucket = sum(
+        p["rows"] for p in partition_metrics(os.path.join(base, "lexicon"))
+    ) // N_BUCKETS
 
     # compressed segments (delta+varint+block-max) — the WAND serve path
     from searchengine_spark.operators.segments import encode_segments
@@ -139,9 +146,9 @@ def build_gate_index(spark: SparkSession, sf_dir: str, base: str) -> None:
     seg = encode_segments(
         seg_in, spark.read.parquet(os.path.join(base, "lexicon")), avgdl, shard_span=span
     )
-    seg.write.mode("overwrite").options(**term_bloom_options(1 << 14)).partitionBy(
-        "bucket"
-    ).parquet(os.path.join(base, "segments"))
+    seg.write.mode("overwrite").options(
+        **term_bloom_options(terms_per_bucket)
+    ).partitionBy("bucket").parquet(os.path.join(base, "segments"))
 
     # quantized-impact postings (Anserini-style impact index): each
     # posting's BM25 contribution frozen to an 8-bit level of the GLOBAL
@@ -173,9 +180,9 @@ def build_gate_index(spark: SparkSession, sf_dir: str, base: str) -> None:
         F.floor(F.lit(255.0) * F.col("_c") / F.lit(max_contrib))
         .cast("int")
         .alias("impact"),
-    ).write.mode("overwrite").options(**term_bloom_options(1 << 14)).partitionBy(
-        "bucket"
-    ).parquet(os.path.join(base, "impacts"))
+    ).write.mode("overwrite").options(
+        **term_bloom_options(terms_per_bucket)
+    ).partitionBy("bucket").parquet(os.path.join(base, "impacts"))
 
     with open(os.path.join(base, "meta.json"), "w") as f:
         json.dump(

@@ -3,6 +3,8 @@ uncompressed BM25 join path (and hence the oracle) bit-for-bit."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,7 +24,7 @@ def index(spark, tmp_path_factory):
     corpus = generate_corpus(spark, N_DOCS, seed=42, n_partitions=8)
     index_dir = str(tmp_path_factory.mktemp("segidx"))
     build_index(spark, corpus, index_dir)
-    return load_index(spark, index_dir)
+    return {**load_index(spark, index_dir), "dir": index_dir}
 
 
 def _avgdl(index) -> float:
@@ -84,6 +86,55 @@ def test_merge_associativity(spark, index, tmp_path_factory):
         return {k: sorted(v) for k, v in out.items()}
 
     assert decode_all(merged) == decode_all(single)
+
+
+def _parquet_files_per_dir(table_dir: str) -> dict[str, list[str]]:
+    """{partition dir name: paths of the parquet files in it}."""
+    return {
+        d: [
+            os.path.join(table_dir, d, f)
+            for f in os.listdir(os.path.join(table_dir, d))
+            if f.endswith(".parquet")
+        ]
+        for d in os.listdir(table_dir)
+        if "=" in d
+    }
+
+
+def test_one_file_per_bucket_shard(spark, index, tmp_path_factory):
+    """Segment encode clusters on (bucket, shard), so the bucket-partitioned
+    write puts one file per shard in each bucket=* directory instead of one
+    per encode task."""
+    # single-shard index: exactly one file per bucket directory
+    files = _parquet_files_per_dir(os.path.join(index["dir"], "segments"))
+    assert files and {len(f) for f in files.values()} == {1}
+
+    # multi-shard index: each (bucket, shard) group lies in exactly one
+    # file (two shards of a bucket may share a file when they hash to the
+    # same task)
+    import pyarrow.parquet as pq
+
+    corpus = generate_corpus(spark, N_DOCS, seed=42, n_partitions=8)
+    multi_dir = str(tmp_path_factory.mktemp("segidx_multi"))
+    build_index(spark, corpus, multi_dir, with_pagerank=False, shard_span=N_DOCS // 4)
+    n_shards = []
+    for d, paths in _parquet_files_per_dir(os.path.join(multi_dir, "segments")).items():
+        per_file = [set(pq.read_table(p, columns=["shard"])["shard"].to_pylist()) for p in paths]
+        union = set().union(*per_file)
+        assert sum(map(len, per_file)) == len(union), (d, per_file)
+        n_shards.append(len(union))
+    assert max(n_shards) > 1
+
+
+def test_gate_index_one_file_per_bucket(spark):
+    """The gate index's segments and docvecs directories hold one parquet
+    file per bucket (one shard at this size)."""
+    from searchengine_spark.plans.gate_index import gate_index
+
+    base = gate_index(spark, "/root/testdata/sf0.001")["dir"]
+    for table in ("segments", "docvecs"):
+        files = _parquet_files_per_dir(os.path.join(base, table))
+        assert files and {len(f) for f in files.values()} == {1}, (table, files)
 
 
 @pytest.mark.parametrize(
