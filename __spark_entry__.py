@@ -186,17 +186,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_topk": lambda spark, sf: serve.bm25_topk(
             spark, gate_index(spark, sf), BM25_TERMS, k=TOPK
         ),
-        # the compressed-segment block-max-WAND physical path, same oracle
-        "bm25_topk_wand": lambda spark, sf: serve.bm25_topk_wand(
-            spark, gate_index(spark, sf), BM25_TERMS, k=TOPK
-        ),
-        # MaxScore dynamic pruning over the same segments, same oracle
-        "bm25_topk_maxscore": lambda spark, sf: serve.bm25_topk_maxscore(
-            spark, gate_index(spark, sf), BM25_TERMS, k=TOPK
-        ),
-        # VECTORIZED block-max pruning (interval sweep — block-granular
-        # skipping + numpy scoring, the executor shape that actually beats
-        # exhaustive in a Python worker), same segments, same oracle
+        # the compressed-segment physical path: VECTORIZED block-max
+        # pruning (interval sweep — block-granular skipping + numpy
+        # scoring, the executor shape that actually beats exhaustive in a
+        # Python worker), same oracle as the columnar path
         "bm25_topk_blockmax": lambda spark, sf: serve.bm25_topk_blockmax(
             spark, gate_index(spark, sf), BM25_TERMS, k=TOPK
         ),
@@ -1541,11 +1534,9 @@ def oracle_sql() -> dict[str, str]:
             BM25_TERMS, tombstoned_mod=7, k=TOPK
         ),
         "bm25_topk": oracles.bm25_topk_sql(BM25_TERMS, k=TOPK),
-        # WAND path answers the SAME oracle as the columnar path — the
-        # compressed index is hash-gated, not just property-tested
-        "bm25_topk_wand": oracles.bm25_topk_sql(BM25_TERMS, k=TOPK),
+        # the segment path answers the SAME oracle as the columnar path —
+        # the compressed index is hash-gated, not just property-tested
         "bm25_topk_blockmax": oracles.bm25_topk_sql(BM25_TERMS, k=TOPK),
-        "bm25_topk_maxscore": oracles.bm25_topk_sql(BM25_TERMS, k=TOPK),
         "bm25_impact_topk": oracles.bm25_impact_topk_sql(BM25_TERMS, k=TOPK),
         "bm25_boosted_topk": oracles.bm25_boosted_topk_sql(BOOSTS, k=TOPK),
         "common_terms_topk": oracles.common_terms_topk_sql(COMMON_TERMS_QUERY, k=TOPK),

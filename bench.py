@@ -37,8 +37,6 @@ BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "50000"))
 
 HEADLINE = [
     "bm25_topk",
-    "bm25_topk_wand",
-    "bm25_topk_maxscore",
     "bm25_topk_blockmax",
     "bm25_topk_pruned",
     "bm25_topk_tiered",
@@ -308,16 +306,12 @@ def build_index_bench(cpus: int, n_docs: int) -> dict:
         for f in fs
     )
 
-    # query latency against the COMPRESSED index (block-max WAND path)
-    from pyspark.sql import functions as SF
-
+    # query latency against the COMPRESSED index (block-max top-k path)
     from searchengine_spark.plans.build_index import load_index
-    from searchengine_spark.operators.segments import wand_topk
+    from searchengine_spark.operators.segments import blockmax_topk_micros
     from searchengine_spark.functions.textproc import query_tokenize
 
     idx = load_index(spark, index_dir)
-    stats = idx["documents"].agg(SF.sum("doc_len").alias("s"), SF.count(SF.lit(1)).alias("c")).collect()[0]
-    avgdl = float(stats["s"]) / float(stats["c"]) if stats["c"] else 1.0
     # serving path runs AQE OFF: adaptive re-planning costs ~0.5s of driver
     # round-trips per small query (measured p50 2.0s -> 1.4s); AQE pays off
     # on the build's big shuffles, not on k-row serving plans
@@ -325,7 +319,9 @@ def build_index_bench(cpus: int, n_docs: int) -> dict:
     lats = []
     for q in ["index search engine", "return partition merge", "spark segment", "posting block skip", "graph pagerank crawler", "index search engine", "spark segment"]:
         t0 = time.monotonic()
-        wand_topk(spark, idx["segments"], idx["lexicon"], idx["documents"], query_tokenize(q), avgdl, k=10).collect()
+        blockmax_topk_micros(
+            spark, idx["segments"], idx["lexicon"], query_tokenize(q), idx["avgdl"], k=10
+        ).collect()
         lats.append(time.monotonic() - t0)
     lats.sort()
 
@@ -349,8 +345,8 @@ def build_index_bench(cpus: int, n_docs: int) -> dict:
         "segment_bytes": seg_bytes,
         "stages": stages,
         "stages_ms": stages_ms,
-        "wand_p50_sec": round(lats[len(lats) // 2], 3),
-        "wand_p95_sec": round(_p95(lats), 3),
+        "blockmax_p50_sec": round(lats[len(lats) // 2], 3),
+        "blockmax_p95_sec": round(_p95(lats), 3),
         "compat_p50_sec": round(clats[len(clats) // 2], 3),
         "compat_p95_sec": round(_p95(clats), 3),
     }
@@ -562,7 +558,7 @@ def run_scale_datum() -> None:
     from searchengine_spark.plans.gate_index import gate_index
     from searchengine_spark.session import get_spark
 
-    family = ["bm25_topk_wand", "bm25_batch_topk", "phrase_topk_wand", "federated_topk"]
+    family = ["bm25_topk_blockmax", "bm25_batch_topk", "phrase_topk_wand", "federated_topk"]
     spark = get_spark(master=f"local[{CPUS}]", app_name="bench_scale_datum")
     qs = entrymod.queries()
     sf1 = _sf1_dir()
@@ -919,12 +915,12 @@ def _zipf_sf_dir(n_docs: int, vocab: int = 100_000, n_files: int = 32) -> str:
 
 def run_vocab_datum() -> None:
     """Serving tiers at their DESIGN POINT (VERDICT r04 asks #3 + #6): the
-    driver corpus has ~31 distinct terms, so block-max WAND skipping,
+    driver corpus has ~31 distinct terms, so block-max skipping,
     champion lists, trigram pruning, dictionary compression and Heaps' law
     were measured on degenerate input. This datum benches them on a seeded
     synthetic corpus with Zipf vocabulary ~10^5:
 
-    - BM25 serving family: exhaustive vs WAND / MaxScore / pruned / tiered
+    - BM25 serving family: exhaustive vs block-max / pruned / tiered
       / impact over mixed-frequency query sets (hot+mid+rare terms);
     - dictionary ops: wildcard expansion, fuzzy suggest, front-coded
       dictionary build + its byte-savings ratio;
@@ -979,8 +975,6 @@ def run_vocab_datum() -> None:
     ]
     tiers = {
         "exhaustive": lambda q: serve.bm25_topk(spark, idx, q, k=10),
-        "wand": lambda q: serve.bm25_topk_wand(spark, idx, q, k=10),
-        "maxscore": lambda q: serve.bm25_topk_maxscore(spark, idx, q, k=10),
         "blockmax": lambda q: serve.bm25_topk_blockmax(spark, idx, q, k=10),
         "pruned": lambda q: serve.bm25_topk_pruned(spark, idx, q, k=10, max_postings=64),
         "tiered": lambda q: serve.bm25_topk_tiered(spark, idx, q, k=10, max_postings=64),
@@ -996,9 +990,6 @@ def run_vocab_datum() -> None:
                 fn(q).collect()
             best = min(best, time.monotonic() - t0)
         out["bm25_tiers_5q_sec"][name] = round(best, 3)
-    out["wand_vs_exhaustive"] = round(
-        out["bm25_tiers_5q_sec"]["exhaustive"] / out["bm25_tiers_5q_sec"]["wand"], 3
-    )
 
     # does block-granular skipping actually pay? Same engine (Python
     # worker, numpy scoring), same segments, so the timing gap IS the
@@ -1288,7 +1279,7 @@ def _write_bench_md(out: dict) -> None:
         r = out["results"][str(lv)]
         rows.append(
             f"| local[{lv}] | {r['sec']} | {r['docs_per_sec']} | "
-            f"{r['segment_bytes']:,} | {r.get('wand_p50_sec', '-')} | "
+            f"{r['segment_bytes']:,} | {r.get('blockmax_p50_sec', '-')} | "
             f"{r.get('compat_p50_sec', '-')} | {out['rounds'][str(lv)]} |"
         )
     table = "\n".join(rows)
@@ -1322,7 +1313,7 @@ content are parallelism-independent (tests/test_resume.py). The sandbox VM
 suffers intermittent host-side stalls, so each level runs three times in
 alternating order and the per-level BEST is scored (all rounds shown).
 
-| parallelism | wall (s) | docs/sec | segment bytes | WAND p50 (s) | compat p50 (s) | all rounds (s) |
+| parallelism | wall (s) | docs/sec | segment bytes | block-max p50 (s) | compat p50 (s) | all rounds (s) |
 |---|---|---|---|---|---|---|
 {table}
 

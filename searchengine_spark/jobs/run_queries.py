@@ -2,6 +2,10 @@
 
     spark-submit --py-files sespark.zip searchengine_spark/jobs/run_queries.py \\
         --index <index_dir> --query "inverted index" [--mode bm25|compat|wand] [--k 10]
+
+``--mode wand`` serves from the compressed segments: plain queries through
+the block-max top-k, quoted queries through the segment phrase top-k. It
+prints ``rank, doc_id, url, score_micros`` per hit.
 """
 
 from __future__ import annotations
@@ -25,7 +29,7 @@ def main(argv: list[str] | None = None) -> int:
     from searchengine_spark.session import get_spark
     from searchengine_spark.plans.build_index import load_index
     from searchengine_spark.operators.query import is_phrase_query, search_bm25, search_compat
-    from searchengine_spark.operators.segments import wand_topk
+    from searchengine_spark.operators.segments import blockmax_topk_micros, phrase_topk_micros
     from searchengine_spark.functions.textproc import query_tokenize
 
     # serving session: AQE off — adaptive re-planning adds ~0.5 s of driver
@@ -37,29 +41,29 @@ def main(argv: list[str] | None = None) -> int:
     )
     idx = load_index(spark, args.index)
 
-    if args.mode == "compat":
-        df = search_compat(spark, idx["postings"], idx["lexicon"], idx["documents"], args.query, args.k)
-    elif args.mode == "bm25":
-        df = search_bm25(spark, idx["postings"], idx["lexicon"], idx["documents"], args.query, args.k)
+    if args.mode in ("bm25", "compat"):
+        search = search_bm25 if args.mode == "bm25" else search_compat
+        df = search(spark, idx["postings"], idx["lexicon"], idx["documents"], args.query, args.k)
+        rows = [r.asDict() for r in df.collect()]
     else:
-        stats = idx["documents"].agg(
-            F.sum("doc_len").alias("s"), F.count(F.lit(1)).alias("c")
-        ).collect()[0]
-        avgdl = float(stats["s"]) / float(stats["c"]) if stats["c"] else 1.0
         is_phrase = is_phrase_query(args.query)
-        text = args.query[1:-1] if is_phrase else args.query
-        df = wand_topk(
-            spark,
-            idx["segments"],
-            idx["lexicon"],
-            idx["documents"],
-            query_tokenize(text),
-            avgdl,
-            args.k,
-            phrase=is_phrase,
-        )
-    for row in df.collect():
-        print(json.dumps(row.asDict(), default=str))
+        terms = query_tokenize(args.query[1:-1] if is_phrase else args.query)
+        topk = phrase_topk_micros if is_phrase and len(terms) >= 2 else blockmax_topk_micros
+        hits = topk(
+            spark, idx["segments"], idx["lexicon"], terms, idx["avgdl"], args.k
+        ).collect()
+        # url lookup limited to the <= k winners
+        ids = [h["doc_id"] for h in hits]
+        urls = dict(
+            idx["documents"].filter(F.col("doc_id").isin(ids)).select("doc_id", "url").collect()
+        ) if ids else {}
+        rows = [
+            {"rank": i, "doc_id": h["doc_id"], "url": urls.get(h["doc_id"]),
+             "score_micros": h["score_micros"]}
+            for i, h in enumerate(hits, start=1)
+        ]
+    for row in rows:
+        print(json.dumps(row, default=str))
     return 0
 
 

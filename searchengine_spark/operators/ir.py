@@ -1,46 +1,12 @@
-"""Inverted-index + ranked-retrieval operators over a generic documents table.
-
-These are the engine's core query semantics (SURVEY.md §2.3-§2.6, §3.1-3.2),
-expressed purely with Catalyst-plannable built-ins so they hold at 100 TB:
-
-- postings build  = explode + partial/final hash aggregate (map-side combine);
-- df/idf          = groupBy('term') aggregate (reference: $inc df per insert,
-                    DBController.java:105 — we use countDistinct, quirk Q7 fixed);
-- candidate match = broadcast hash join lexicon × tiny query-term set
-                    (reference: per-term Mongo point lookups,
-                    SearchService.java:471);
-- top-k           = orderBy + limit → TakeOrderedAndProject (partition-local
-                    bounded heap + driver merge — the north rule's top-k heap).
-
-Scores are returned as **bigint micros** (round(score*1e6)): bigint sums are
-exact and associative, so results are bit-identical across partition counts,
-executor counts, and engines (Spark vs the DuckDB oracle) — float summation
-order can never flip a rank.
+"""The two idf definitions every lexicon and scorer shares (SURVEY.md
+§2.3-§2.4): df/idf are per-term columns of the lexicon (reference: $inc df
+per insert, DBController.java:105 — we count distinct docs, quirk Q7
+fixed), computed once at build time and read by every query path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from searchengine_spark.functions.tokenize import doc_len, exploded_tokens
-
-BM25_K1 = 1.2
-BM25_B = 0.75
-
-
-def postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(term, doc_id, tf) — the flat, 1NF form of the reference's nested
-    ``Terms.pages`` array (DBController.java:84-127)."""
-    return (
-        exploded_tokens(docs, id_col, text_col)
-        .groupBy("term", id_col)
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
-def doc_lengths(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    return docs.select(F.col(id_col), doc_len(F.col(text_col)).alias("dl"))
 
 
 def idf_bm25_expr(n_docs: int, df_col: str = "df") -> F.Column:
@@ -55,213 +21,3 @@ def idf_compat_expr(n_docs: int, df_col: str = "df") -> F.Column:
     """The reference's ln(N/(1+df)) (Indexer.java:184, quirk Q9 — may go
     negative; reproduced for compat scoring)."""
     return F.log(F.lit(float(n_docs)) / (F.col(df_col).cast("double") + 1.0))
-
-
-def lexicon(post: DataFrame, n_docs: int, id_col: str = "doc_id") -> DataFrame:
-    """(term, df, idf_bm25, idf_compat) per term."""
-    return post.groupBy("term").agg(F.count_distinct(F.col(id_col)).alias("df")).select(
-        "term",
-        "df",
-        idf_bm25_expr(n_docs).alias("idf_bm25"),
-        idf_compat_expr(n_docs).alias("idf_compat"),
-    )
-
-
-def _query_terms_df(spark: SparkSession, terms: list[str]) -> DataFrame:
-    return spark.createDataFrame([(t,) for t in terms], "term string")
-
-
-def _pruned_postings_with_df(
-    docs: DataFrame, q: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """(term, id, tf, df) restricted to the query terms.
-
-    Pruning happens at the TOKEN level, before any aggregate: df/tf for a
-    term depend only on that term's tokens, so aggregating the ~|q| matching
-    tokens instead of the full vocabulary is exact — and the broadcast join
-    is the pushdown Catalyst cannot do through a groupBy on its own. df then
-    comes from a tiny per-term aggregate broadcast-joined back — NOT from a
-    window partitioned by term, which would concentrate a hot term's entire
-    posting list on one task (the exact skew this engine salts against
-    elsewhere). The pruned explode runs twice (once per aggregate); both
-    passes are map-only scans with no concentration point.
-    """
-    toks_q = exploded_tokens(docs, id_col, text_col).join(F.broadcast(q), "term")
-    post = toks_q.groupBy("term", id_col).agg(F.count(F.lit(1)).alias("tf"))
-    dfs = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))  # |q| rows
-    return post.join(F.broadcast(dfs), "term")
-
-
-def bm25_topk(
-    spark: SparkSession,
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """BM25 top-k: (doc_id, score_micros), deterministic ties by doc_id.
-
-    Plan shape: one scan of documents feeds both postings and doc-lengths
-    (Catalyst reuses the exchange under AQE); the query-term set and the
-    per-term idf are broadcast — the only wide shuffle is the postings
-    aggregate, which is keyed by (term, doc) so stopword-term skew cannot
-    concentrate a single reducer (contrast the groupBy('term') lexicon agg,
-    which is salted at scale — operators/postings.py).
-    """
-    dls = doc_lengths(docs, id_col, text_col)
-    # one scan: doc count + exact engine-portable average (bigint sum/count)
-    sums = dls.agg(F.sum("dl").alias("s"), F.count(F.lit(1)).alias("c")).collect()[0]
-    n_docs = int(sums["c"])
-    avgdl = float(sums["s"]) / float(sums["c"])
-
-    q = _query_terms_df(spark, query_terms)
-    post = _pruned_postings_with_df(docs, q, id_col, text_col)
-
-    idf_bm25 = idf_bm25_expr(n_docs)
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    contrib = idf_bm25 * (tf * (BM25_K1 + 1.0)) / (
-        tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / F.lit(avgdl))
-    )
-    scored = (
-        post.join(dls, id_col)
-        .select(F.col(id_col), F.round(contrib * 1e6).cast("long").alias("c_micros"))
-        .groupBy(id_col)
-        .agg(F.sum("c_micros").alias("score_micros"))
-    )
-    return scored.orderBy(F.desc("score_micros"), F.asc(id_col)).limit(k)
-
-
-def tfidf_topk(
-    spark: SparkSession,
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Reference-style TF-IDF top-k (Ranker.java:41: sum of tf*idf with
-    tf = freq/totalTerms, Indexer.java:255 quirk Q15; idf = ln(N/(1+df)),
-    Indexer.java:184 quirk Q9). Scores in micros for determinism."""
-    n_docs = docs.count()
-    q = _query_terms_df(spark, query_terms)
-    post = _pruned_postings_with_df(docs, q, id_col, text_col)
-    dls = doc_lengths(docs, id_col, text_col)
-
-    contrib = (F.col("tf").cast("double") / F.col("dl").cast("double")) * idf_compat_expr(n_docs)
-    scored = (
-        post.join(dls, id_col)
-        .select(F.col(id_col), F.round(contrib * 1e6).cast("long").alias("c_micros"))
-        .groupBy(id_col)
-        .agg(F.sum("c_micros").alias("score_micros"))
-    )
-    return scored.orderBy(F.desc("score_micros"), F.asc(id_col)).limit(k)
-
-
-def term_search_all(
-    spark: SparkSession,
-    docs: DataFrame,
-    query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Docs containing ALL query terms — posting-list intersection as a
-    semi-join-by-aggregation (SURVEY.md §2.5 J5; the reference fakes this by
-    scanning snippets, SearchService.java:105-117)."""
-    q = _query_terms_df(spark, query_terms)
-    return (
-        exploded_tokens(docs, id_col, text_col)
-        .join(F.broadcast(q), "term")
-        .groupBy(id_col)
-        .agg(F.count_distinct("term").alias("n_terms"))
-        .filter(F.col("n_terms") == len(set(query_terms)))
-        .select(id_col)
-    )
-
-
-def term_search_except(
-    spark: SparkSession,
-    docs: DataFrame,
-    include_terms: list[str],
-    exclude_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Docs containing ALL include terms and NONE of the exclude terms —
-    the set-difference member of the term-search family (SURVEY.md §2.6
-    O4's union + §2.5 J5's intersection get their EXCEPT sibling). ONE
-    corpus pass: tokens join the flagged include∪exclude term set, then a
-    single per-doc aggregate checks both conditions."""
-    inc, exc = set(include_terms), set(exclude_terms)
-    q = docs.sparkSession.createDataFrame(
-        [(t, t in inc, t in exc) for t in inc | exc],
-        "term string, is_inc boolean, is_exc boolean",
-    )
-    return (
-        exploded_tokens(docs, id_col, text_col)
-        .join(F.broadcast(q), "term")
-        .groupBy(id_col)
-        .agg(
-            F.count_distinct(F.when(F.col("is_inc"), F.col("term"))).alias("n_inc"),
-            F.max(F.col("is_exc").cast("int")).alias("any_exc"),
-        )
-        .filter((F.col("n_inc") == len(inc)) & (F.col("any_exc") == 0))
-        .select(id_col)
-    )
-
-
-def phrase_match(
-    docs: DataFrame,
-    phrase_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Docs containing the exact token-adjacent phrase.
-
-    The reference never uses its stored positions for phrases (quirk Q10 —
-    it scans pre-rendered snippets and misses window-spanning phrases,
-    SearchService.java:105-176). We implement phrase search correctly by
-    position adjacency: posexplode → self-equi-join on (doc, pos+i).
-    Positions index the raw split array (empties included) so Spark and the
-    SQL oracle agree exactly.
-    """
-    assert len(phrase_terms) >= 2
-    toks = exploded_tokens(docs, id_col, text_col, with_pos=True)
-    first = toks.filter(F.col("term") == phrase_terms[0]).select(
-        F.col(id_col), F.col("pos").alias("p0")
-    )
-    out = first
-    for i, t in enumerate(phrase_terms[1:], start=1):
-        nxt = toks.filter(F.col("term") == t).select(
-            F.col(id_col).alias("_id"), F.col("pos").alias(f"p{i}")
-        )
-        out = out.join(
-            nxt,
-            (out[id_col] == nxt["_id"]) & (nxt[f"p{i}"] == out["p0"] + i),
-            "inner",
-        ).select(out[id_col], out["p0"])
-    return out.select(id_col).distinct()
-
-
-def prefix_suggest(
-    docs: DataFrame,
-    prefix: str,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Top-k suggestion terms for a prefix, by corpus frequency (ties by
-    term asc) — the engine-side analog of the reference's top-5 prefix
-    suggestions (suggestionService.js:6-31, SURVEY.md A9/O3; the reference
-    counts per-user query history client-side, the engine counts the
-    corpus). startswith compiles to a Catalyst StartsWith — at scale it
-    prunes against a term-sorted lexicon instead of re-tokenizing."""
-    return (
-        exploded_tokens(docs, id_col, text_col)
-        .filter(F.col("term").startswith(prefix))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.asc("term"))
-        .limit(k)
-    )

@@ -27,6 +27,7 @@ from searchengine_spark.functions.textproc import (
     query_words,
     snippet_windows,
 )
+from searchengine_spark.operators.codec import BM25_B, BM25_K1
 from searchengine_spark.operators.scoring import (
     H1_WEIGHT,
     H2_WEIGHT,
@@ -353,8 +354,9 @@ def search_bm25(
     avgdl = (float(stats["s"]) / float(stats["c"])) if stats["c"] else 1.0
     tf = F.col("tf").cast("double")
     dl = F.col("doc_len").cast("double")
-    k1, b = 1.2, 0.75
-    contrib = F.col("idf_bm25") * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / F.lit(avgdl)))
+    contrib = F.col("idf_bm25") * (tf * (BM25_K1 + 1.0)) / (
+        tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / F.lit(avgdl))
+    )
 
     per_doc = (
         matched.select("doc_id", "term", contrib.alias("_c"))

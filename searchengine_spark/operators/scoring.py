@@ -28,9 +28,6 @@ H1_WEIGHT, H2_WEIGHT, H3_WEIGHT = 0.45, 0.25, 0.1
 TFIDF_WEIGHT = 0.4
 PAGERANK_WEIGHT = 0.3
 
-BM25_K1 = 1.2
-BM25_B = 0.75
-
 
 def match_postings(postings, lexicon, qterms):
     """Candidate postings for the query terms: broadcast the tiny query-term

@@ -1,4 +1,4 @@
-"""Segment encode/decode + block-max WAND query execution
+"""Segment encode/decode + block-max top-k query execution
 (SURVEY.md §4.2-2/3; north rule: "groupBy-term into delta-gap +
 varint-compressed posting lists with per-block skip pointers and block-max
 scores, merge partition-local segments into a global index").
@@ -8,8 +8,8 @@ Physical design (doc-sharded, term-bucketed):
 - **shard** = contiguous doc_id range (``doc_id // shard_span``). Each shard
   holds the postings of its docs for every term — a partition-local index
   segment. Doc-range sharding keeps delta-gaps small (better compression)
-  and makes query execution embarrassingly parallel: WAND runs per shard,
-  the global top-k is a TakeOrderedAndProject merge of per-shard heaps.
+  and makes query execution embarrassingly parallel: block-max top-k runs
+  per shard, and a TakeOrderedAndProject merges the per-shard heaps.
   Hot terms split across shards automatically — no single reducer ever sees
   a whole stopword-term posting list (skew defusal at encode time).
 - **bucket** = pmod(hash(term), n_buckets) — the write partition column, so
@@ -31,7 +31,6 @@ inverted-index layout (ICDE 2025) assumes.
 from __future__ import annotations
 
 import heapq
-import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -568,407 +567,13 @@ def incremental_build_postings(docs: DataFrame, shard_span: int = 64) -> DataFra
     return decode_postings(merged)
 
 
-# ------------------------------------------------------------------ WAND
+# ------------------------------------------------------------------ top-k
 
-def _micros(x: float) -> int:
-    """round(x*1e6) half-up — the integer-micros contract every gate uses
-    (same result as Spark ``F.round(col*1e6)`` / DuckDB ``round(x*1e6)``
-    for the positive scores that occur here)."""
-    return int(math.floor(x * 1e6 + 0.5))
-
-
-class _TermIter:
-    """Lazy cursor over one term's sorted block list — the shared postings
-    iterator of every dynamic-pruning executor (_wand_shard,
-    _maxscore_shard). Blocks stepped over by skip pointers are never
-    decoded."""
-
-    __slots__ = ("term", "blocks", "bi", "pi", "ids", "tfs", "dls", "ub",
-                 "idf", "avgdl", "micros")
-
-    def __init__(self, term: str, blocks: list[dict], idf: float, avgdl: float,
-                 micros: bool):
-        self.term = term
-        self.blocks = sorted(blocks, key=lambda b: b["block_id"])
-        self.bi = 0
-        self.idf = idf
-        self.avgdl = avgdl
-        self.micros = micros
-        self.ub = max(b["block_max_score"] for b in self.blocks)
-        if micros:
-            self.ub = _micros(self.ub)
-        self.ids = None  # current block decoded lazily
-
-    @property
-    def exhausted(self) -> bool:
-        return self.bi >= len(self.blocks)
-
-    def _ensure(self):
-        # decode the current block only when its postings are touched —
-        # blocks stepped over by skip pointers are never decoded
-        if self.ids is None and not self.exhausted:
-            self.ids, self.tfs, self.dls = codec.decode_block(self.blocks[self.bi])
-            self.pi = 0
-
-    def _next_block(self):
-        self.bi += 1
-        self.ids = None
-
-    @property
-    def cur(self) -> int:
-        if self.exhausted:
-            return 1 << 62
-        self._ensure()
-        return int(self.ids[self.pi])
-
-    def cur_block_max(self) -> float:
-        if self.exhausted:
-            return 0
-        bm = self.blocks[self.bi]["block_max_score"]
-        return _micros(bm) if self.micros else bm
-
-    def advance_to(self, target: int):
-        # block-level skip via skip_doc_id (no decode), then in-block gallop
-        while not self.exhausted and self.blocks[self.bi]["skip_doc_id"] < target:
-            self._next_block()
-        if self.exhausted:
-            return
-        self._ensure()
-        j = int(np.searchsorted(self.ids[self.pi :], target))
-        self.pi += j
-        if self.pi >= len(self.ids):
-            self._next_block()
-            self.advance_to(target)
-
-    def next_doc(self):
-        self._ensure()
-        self.pi += 1
-        if self.pi >= len(self.ids):
-            self._next_block()
-
-    def score_cur(self) -> float:
-        self._ensure()
-        tf = float(self.tfs[self.pi])
-        dl = float(self.dls[self.pi])
-        c = self.idf * (tf * (codec.BM25_K1 + 1.0)) / (
-            tf + codec.BM25_K1 * (1.0 - codec.BM25_B + codec.BM25_B * dl / self.avgdl)
-        )
-        return _micros(c) if self.micros else c
-
-
-def _wand_shard(
-    term_blocks: dict[str, list[dict]],
-    idfs: dict[str, float],
-    avgdl: float,
-    k: int,
-    threshold: float = float("-inf"),
-    micros: bool = False,
-) -> list[tuple[float, int, list[tuple[str, float]]]]:
-    """Block-max WAND over one shard's decoded block lists.
-
-    Returns up to k (score, doc_id, contribs) tuples. Exact w.r.t. brute
-    force (property-tested): pruning only skips docs whose UB sum can't beat
-    the current kth score.
-
-    With ``micros=True``, every per-term contribution is rounded to bigint
-    micros exactly as the columnar scorers do, and ALL comparisons (upper
-    bounds, pivot selection, heap threshold) run on those integers — the
-    returned scores are bit-identical to ``sum(round(contrib*1e6))``, so the
-    WAND path shares the columnar path's DuckDB oracle. Rounding is monotone,
-    so a rounded block max is still a valid upper bound for rounded
-    contributions; pruning stays exact.
-    """
-    iters = [
-        _TermIter(t, bl, idfs[t], avgdl, micros) for t, bl in term_blocks.items() if bl
-    ]
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
-    results: dict[int, list[tuple[str, float]]] = {}
-
-    def theta() -> float:
-        if len(heap) < k:
-            return threshold
-        return max(heap[0][0], threshold)
-
-    while True:
-        live = [it for it in iters if not it.exhausted]
-        if not live:
-            break
-        live.sort(key=lambda it: it.cur)
-        # find pivot: first index where prefix UB sum exceeds theta
-        acc = 0.0
-        pivot_idx = None
-        for i, it in enumerate(live):
-            acc += it.ub
-            if acc > theta():
-                pivot_idx = i
-                break
-        if pivot_idx is None:
-            break  # no doc can beat theta
-        pivot_doc = live[pivot_idx].cur
-        if live[0].cur == pivot_doc:
-            # shallow block-max check before full scoring
-            bm_sum = sum(it.cur_block_max() for it in live if it.cur <= pivot_doc)
-            # ensure all iters pointing before pivot are AT pivot (they are:
-            # live[0].cur == pivot and sorted)
-            if bm_sum > theta():
-                contribs = []
-                score = 0.0
-                for it in live:
-                    if it.cur == pivot_doc:
-                        c = it.score_cur()
-                        contribs.append((it.term, c))
-                        score += c
-                if score > theta() or len(heap) < k:
-                    # deterministic re-sum in term order for oracle parity
-                    contribs.sort()
-                    score = 0.0
-                    for _, c in contribs:
-                        score += c
-                    if len(heap) < k:
-                        heapq.heappush(heap, (score, -pivot_doc))
-                        results[pivot_doc] = contribs
-                    elif (score, -pivot_doc) > heap[0]:
-                        old = heapq.heappushpop(heap, (score, -pivot_doc))
-                        results.pop(-old[1], None)
-                        results[pivot_doc] = contribs
-            for it in live:
-                if it.cur == pivot_doc:
-                    it.next_doc()
-        else:
-            # advance all iterators before the pivot up to the pivot doc
-            for it in live[:pivot_idx]:
-                it.advance_to(pivot_doc)
-
-    out = []
-    while heap:
-        s, nd = heapq.heappop(heap)
-        out.append((s, -nd, results[-nd]))
-    out.sort(key=lambda t: (-t[0], t[1]))
-    return out
-
-
-def _maxscore_shard(
-    term_blocks: dict[str, list[dict]],
-    idfs: dict[str, float],
-    avgdl: float,
-    k: int,
-    threshold: float = float("-inf"),
-    micros: bool = False,
-) -> list[tuple[float, int, list[tuple[str, float]]]]:
-    """MaxScore (Turtle & Flood 1995) over one shard's block lists — the
-    second dynamic-pruning executor beside block-max WAND, sharing its
-    _TermIter cursors, heap semantics, and (with ``micros=True``) the exact
-    integer-micros contract, so both serve the same DuckDB oracle.
-
-    Terms sort by score upper bound descending and split at the current
-    heap threshold θ: the maximal SUFFIX whose UB sum ≤ θ is non-essential —
-    no document appearing only there can enter the top-k. Candidates are
-    drawn document-at-a-time from the essential prefix; non-essential lists
-    are probed by skip-pointer ``advance_to`` with early exit as soon as the
-    partial score plus the remaining UB suffix cannot beat θ. Same pruning
-    invariant as WAND (skip iff UB-bound ≤ θ), so results are identical."""
-    iters = [
-        _TermIter(t, bl, idfs[t], avgdl, micros) for t, bl in term_blocks.items() if bl
-    ]
-    iters.sort(key=lambda it: (-it.ub, it.term))  # UB desc, deterministic ties
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
-    results: dict[int, list[tuple[str, float]]] = {}
-    last = -1  # largest candidate evaluated so far — see monotonicity note
-
-    def theta() -> float:
-        if len(heap) < k:
-            return threshold
-        return max(heap[0][0], threshold)
-
-    while True:
-        live = [it for it in iters if not it.exhausted]  # keeps UB-desc order
-        if not live:
-            break
-        suffix = [0.0] * (len(live) + 1)
-        for i in range(len(live) - 1, -1, -1):
-            suffix[i] = suffix[i + 1] + live[i].ub
-        th = theta()
-        e = len(live)
-        while e > 0 and suffix[e - 1] <= th:
-            e -= 1
-        if e == 0:
-            break  # every remaining doc's total UB <= theta
-        ess = live[:e]
-        cand = min(it.cur for it in ess)
-        # Monotonicity guard: when an exhausted high-UB list shrinks the
-        # suffix sums, a previously non-essential list can be PROMOTED into
-        # the essential prefix while still positioned on a doc other lists
-        # have already passed — evaluating it would miss their
-        # contributions. Any doc <= last was skippable under the θ in force
-        # when it was passed, and θ only grows, so skipping it now is exact.
-        if cand <= last:
-            for it in ess:
-                if it.cur <= last:
-                    it.advance_to(last + 1)
-            continue
-        last = cand
-        contribs: list[tuple[str, float]] = []
-        score = 0.0
-        for it in ess:
-            if it.cur == cand:
-                c = it.score_cur()
-                contribs.append((it.term, c))
-                score += c
-        pruned_early = False
-        for j in range(e, len(live)):
-            if score + suffix[j] <= th:
-                pruned_early = True
-                break
-            it = live[j]
-            it.advance_to(cand)
-            if not it.exhausted and it.cur == cand:
-                c = it.score_cur()
-                contribs.append((it.term, c))
-                score += c
-        if not pruned_early and (score > th or len(heap) < k):
-            # deterministic re-sum in term order for oracle parity
-            contribs.sort()
-            score = 0.0
-            for _, c in contribs:
-                score += c
-            if len(heap) < k:
-                heapq.heappush(heap, (score, -cand))
-                results[cand] = contribs
-            elif (score, -cand) > heap[0]:
-                old = heapq.heappushpop(heap, (score, -cand))
-                results.pop(-old[1], None)
-                results[cand] = contribs
-        for it in ess:
-            if not it.exhausted and it.cur == cand:
-                it.next_doc()
-
-    out = []
-    while heap:
-        s, nd = heapq.heappop(heap)
-        out.append((s, -nd, results[-nd]))
-    out.sort(key=lambda t: (-t[0], t[1]))
-    return out
-
-
-def _phrase_topk_in_shard(
-    term_blocks: dict[str, list[dict]],
-    terms: list[str],
-    idfs: dict[str, float],
-    avgdl: float,
-    k: int,
-) -> list[tuple[float, int]]:
-    """Exact phrase top-k within one shard: decode positions for docs present
-    in ALL phrase terms' lists, keep position-adjacent docs, score them
-    directly (sorted-term fold — same floats as the join path)."""
-    per_term: list[dict[int, tuple]] = []  # doc -> (positions, tf, dl)
-    for t in terms:
-        blocks = term_blocks.get(t)
-        if not blocks:
-            return []
-        entry: dict[int, tuple] = {}
-        for b in sorted(blocks, key=lambda x: x["block_id"]):
-            ids, tfs, dls = codec.decode_block(b)
-            poss = codec.decode_positions(b)
-            for d, p, tf, dl in zip(ids.tolist(), poss, tfs.tolist(), dls.tolist()):
-                entry[d] = (p, tf, dl)
-        per_term.append(entry)
-    cand = set(per_term[0])
-    for pm in per_term[1:]:
-        cand &= set(pm)
-    out = []
-    for d in cand:
-        first, _, _ = per_term[0][d]
-        rest = [set(pm[d][0].tolist()) for pm in per_term[1:]]
-        if not any(
-            all((p + i + 1) in rest[i] for i in range(len(rest))) for p in first.tolist()
-        ):
-            continue
-        score = 0.0
-        for t in sorted(set(terms)):
-            _, tf, dl = per_term[terms.index(t)][d]
-            score += idfs[t] * (tf * (codec.BM25_K1 + 1.0)) / (
-                tf + codec.BM25_K1 * (1.0 - codec.BM25_B + codec.BM25_B * dl / avgdl)
-            )
-        out.append((score, d))
-    out.sort(key=lambda x: (-x[0], x[1]))
-    return out[:k]
-
-
-def wand_topk(
-    spark: SparkSession,
-    segments: DataFrame,
-    lexicon: DataFrame,
-    documents: DataFrame,
-    query_terms: list[str],
-    avgdl: float,
-    k: int = 10,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    phrase: bool = False,
-) -> DataFrame:
-    """Distributed block-max WAND: partition-pruned segment scan → per-shard
-    WAND heap in applyInPandas → global TakeOrderedAndProject merge.
-
-    With ``phrase=True`` the per-shard executor first restricts to docs where
-    the terms are position-adjacent (decoded from the positions blobs), then
-    scores those docs exactly — same semantics as query.search_bm25's
-    positional phrase mode, but served entirely from the compressed index."""
-    raw_terms = list(query_terms)  # full sequence — phrase adjacency needs dups
-    terms = list(dict.fromkeys(raw_terms))
-    if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, url string, score double")
-    # one tiny job fetches idf AND write-bucket per query term
-    idf_rows = (
-        lexicon.join(F.broadcast(spark.createDataFrame([(t,) for t in terms], "term string")), "term")
-        .select("term", "idf_bm25", F.pmod(F.hash("term"), F.lit(n_buckets)).alias("bucket"))
-        .collect()
-    )
-    idfs = {r["term"]: r["idf_bm25"] for r in idf_rows}
-    if not idfs or (phrase and any(t not in idfs for t in terms)):
-        # phrase semantics: a term absent from the lexicon makes the exact
-        # phrase unmatchable (index/query stem mismatch, quirk Q2, can cause
-        # this even for phrases present in raw text — reference-faithful)
-        return spark.createDataFrame([], "rank int, doc_id long, url string, score double")
-    buckets = sorted({int(r["bucket"]) for r in idf_rows})
-
-    pruned = segments.filter(F.col("bucket").isin(buckets) & F.col("term").isin(list(idfs)))
-
-    ordered_terms = raw_terms
-
-    def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        term_blocks: dict[str, list[dict]] = {}
-        for row in pdf.to_dict("records"):
-            term_blocks.setdefault(row["term"], []).append(row)
-        if phrase and len(ordered_terms) >= 2:
-            ptop = _phrase_topk_in_shard(term_blocks, ordered_terms, idfs, avgdl, k)
-            return pd.DataFrame(
-                [(int(d), float(s)) for s, d in ptop], columns=["doc_id", "score"]
-            ).astype({"doc_id": "int64", "score": "float64"})
-        top = _wand_shard(term_blocks, idfs, avgdl, k)
-        return pd.DataFrame(
-            [(int(d), float(s)) for s, d, _ in top], columns=["doc_id", "score"]
-        )
-
-    per_shard = pruned.groupBy("shard").applyInPandas(run_shard, "doc_id long, score double")
-    ranked = per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    from pyspark.sql import Window
-
-    return (
-        ranked.join(documents.select("doc_id", "url"), "doc_id", "left")
-        .select(
-            F.row_number()
-            .over(
-                # rank over the already-limited <=k rows; the single-valued
-                # partition key (non-foldable, so the optimizer keeps it) is
-                # intentional — bounded input, and no spurious "No Partition
-                # Defined" warning from an empty partition spec
-                Window.partitionBy(F.col("doc_id") % 1).orderBy(F.desc("score"), F.asc("doc_id"))
-            )
-            .alias("rank"),
-            "doc_id",
-            "url",
-            "score",
-        )
-    )
+def _micros(x: np.ndarray) -> np.ndarray:
+    """round(x*1e6) half-up, elementwise, as int64 — the integer-micros
+    contract every gate uses (same result as Spark ``F.round(col*1e6)`` /
+    DuckDB ``round(x*1e6)`` for the positive scores that occur here)."""
+    return np.floor(x * 1e6 + 0.5).astype(np.int64)
 
 
 def _exhaustive_seg_shard(
@@ -976,39 +581,30 @@ def _exhaustive_seg_shard(
     idfs: dict[str, float],
     avgdl: float,
     k: int,
-    threshold: float = float("-inf"),
-    micros: bool = False,
-) -> list[tuple[float, int, None]]:
+) -> list[tuple[int, int, None]]:
     """Exhaustive segment-served scorer: decode EVERY block of every query
     term, score all postings vectorized (numpy), one bincount aggregate,
-    top-k. The no-skipping baseline the block-max executors are measured
-    against — same decode path, same vectorized style, so the timing
-    difference is the pruning, not the execution engine."""
+    top-k. The no-skipping reference the block-max executor is checked and
+    measured against — same decode path, same vectorized style, so the
+    timing difference is the pruning, not the execution engine."""
     doc_list: list[np.ndarray] = []
     con_list: list[np.ndarray] = []
     for t, bl in term_blocks.items():
-        idf = idfs[t]
         for b in bl:
             ids, tfs, dls = codec.decode_block(b)
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            c = (idf * (tf * (codec.BM25_K1 + 1.0))) / (
-                tf + codec.BM25_K1 * (1.0 - codec.BM25_B + codec.BM25_B * dl / avgdl)
-            )
-            con_list.append(
-                np.floor(c * 1e6 + 0.5).astype(np.int64) if micros else c
-            )
+            con_list.append(_micros(codec.bm25_contrib(tfs, dls, idfs[t], avgdl)))
             doc_list.append(ids.astype(np.int64))
     if not doc_list:
         return []
-    docs = np.concatenate(doc_list)
-    cons = np.concatenate(con_list)
+    return _topk_of(np.concatenate(doc_list), np.concatenate(con_list), k)
+
+
+def _topk_of(docs: np.ndarray, cons: np.ndarray, k: int) -> list[tuple[int, int, None]]:
+    """Per-doc micros sums of (doc, contribution) pairs, top-k by score desc
+    then doc id. float64 bincount weights are exact here: micro
+    contributions are < 2^27 each and a query sums a handful of terms."""
     u, inv = np.unique(docs, return_inverse=True)
-    # float64 weights are exact here: micro contributions are < 2^27 each
-    # and a query sums a handful of terms — far below 2^53
-    sc = np.bincount(inv, weights=cons.astype(np.float64)).astype(
-        np.int64 if micros else np.float64
-    )
+    sc = np.bincount(inv, weights=cons.astype(np.float64)).astype(np.int64)
     sel = np.lexsort((u, -sc))[:k]
     return [(sc[i].item(), int(u[i]), None) for i in sel]
 
@@ -1018,9 +614,7 @@ def _blockmax_seg_shard(
     idfs: dict[str, float],
     avgdl: float,
     k: int,
-    threshold: float = float("-inf"),
-    micros: bool = False,
-) -> list[tuple[float, int, None]]:
+) -> list[tuple[int, int, None]]:
     """Vectorized block-max pruning (interval sweep): doc-at-a-time WAND
     is exact but pays an interpreted-Python loop per posting — at bench
     scale that costs more than it skips. Here pruning happens at BLOCK
@@ -1046,22 +640,14 @@ def _blockmax_seg_shard(
     fills with rare-term docs — the standard head/tail split of block-max
     pruning, done at decode granularity.
 
-    Bit-identical to the exhaustive scorer / columnar BM25 under
-    ``micros=True`` (UB comparisons use ``>= θ`` so equal-score smaller
-    doc-id ties are never pruned)."""
-    import heapq
-
+    Scores and bounds are integer micros (each contribution rounded
+    before the sum; rounding is monotone, so a rounded block max still
+    bounds the rounded contributions). Bit-identical to the exhaustive
+    scorer / columnar BM25 (UB comparisons use ``>= θ`` so equal-score
+    smaller doc-id ties are never pruned)."""
     terms = [t for t, bl in term_blocks.items() if bl]
     if not terms:
         return []
-
-    def contrib(t: str, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
-        tf = tfs.astype(np.float64)
-        dl = dls.astype(np.float64)
-        c = (idfs[t] * (tf * (codec.BM25_K1 + 1.0))) / (
-            tf + codec.BM25_K1 * (1.0 - codec.BM25_B + codec.BM25_B * dl / avgdl)
-        )
-        return np.floor(c * 1e6 + 0.5).astype(np.int64) if micros else c
 
     _EAGER_BLOCKS = 32
     eager: dict[str, tuple[np.ndarray, np.ndarray]] = {}
@@ -1073,30 +659,23 @@ def _blockmax_seg_shard(
             ids = np.concatenate([p[0] for p in parts]).astype(np.int64)
             tfs = np.concatenate([p[1] for p in parts])
             dls = np.concatenate([p[2] for p in parts])
-            eager[t] = (ids, contrib(t, tfs, dls))
+            eager[t] = (ids, _micros(codec.bm25_contrib(tfs, dls, idfs[t], avgdl)))
             continue
         his = np.array([b["skip_doc_id"] for b in bl], dtype=np.int64)
         los = np.empty_like(his)
         los[0] = -1
         los[1:] = his[:-1]  # block j owns doc range (los[j], his[j]]
-        bm = np.array(
-            [
-                _micros(b["block_max_score"]) if micros else b["block_max_score"]
-                for b in bl
-            ]
-        )
+        bm = _micros(np.array([b["block_max_score"] for b in bl], dtype=np.float64))
         binfo[t] = (los, his, bm, bl)
 
     if not binfo:
         # every term eager (small shard / rare-only query): plain
         # vectorized exhaustive over the already-decoded arrays
-        docs = np.concatenate([v[0] for v in eager.values()])
-        cons = np.concatenate([v[1] for v in eager.values()])
-        u, inv = np.unique(docs, return_inverse=True)
-        sc = np.bincount(inv, weights=cons.astype(np.float64))
-        sc = sc.astype(np.int64) if micros else sc
-        sel = np.lexsort((u, -sc))[:k]
-        return [(sc[i].item(), int(u[i]), None) for i in sel]
+        return _topk_of(
+            np.concatenate([v[0] for v in eager.values()]),
+            np.concatenate([v[1] for v in eager.values()]),
+            k,
+        )
 
     bounds = np.unique(np.concatenate([v[1] for v in binfo.values()]))
     max_eager = max((int(v[0][-1]) for v in eager.values() if len(v[0])), default=-1)
@@ -1105,7 +684,7 @@ def _blockmax_seg_shard(
     prev = np.empty_like(bounds)
     prev[0] = -1
     prev[1:] = bounds[:-1]
-    ub = np.zeros(len(bounds), dtype=np.int64 if micros else np.float64)
+    ub = np.zeros(len(bounds), dtype=np.int64)
     cover = {}
     for t, (los, his, bm, bl) in binfo.items():
         idx = np.searchsorted(his, bounds)  # block whose hi >= interval end
@@ -1124,7 +703,7 @@ def _blockmax_seg_shard(
         ub[iv[starts]] += np.maximum.reduceat(con, starts)
 
     order = np.argsort(-ub, kind="stable")
-    heap: list[tuple[float, int]] = []  # (score, -doc) min-heap of top-k
+    heap: list[tuple[int, int]] = []  # (score, -doc) min-heap of top-k
     decoded: dict[tuple[str, int], tuple] = {}
     for ii in order:
         # UB-descending: once the heap is full and this interval's UB is
@@ -1156,15 +735,16 @@ def _blockmax_seg_shard(
             e = int(np.searchsorted(ids, hi, side="right"))
             if s == e:
                 continue
-            con_list.append(contrib(t, tfs[s:e], dls[s:e]))
+            con_list.append(
+                _micros(codec.bm25_contrib(tfs[s:e], dls[s:e], idfs[t], avgdl))
+            )
             doc_list.append(ids[s:e].astype(np.int64))
         if not doc_list:
             continue
         docs = np.concatenate(doc_list)
         cons = np.concatenate(con_list)
         u, inv = np.unique(docs, return_inverse=True)
-        sc = np.bincount(inv, weights=cons.astype(np.float64))
-        sc = sc.astype(np.int64) if micros else sc
+        sc = np.bincount(inv, weights=cons.astype(np.float64)).astype(np.int64)
         for d, s_ in zip(u.tolist(), sc.tolist()):
             item = (s_, -d)
             if len(heap) < k:
@@ -1172,6 +752,23 @@ def _blockmax_seg_shard(
             elif item > heap[0]:
                 heapq.heappushpop(heap, item)
     return [(s_, -nd, None) for s_, nd in sorted(heap, reverse=True)]
+
+
+def _lookup_pruned_scan(
+    segments: DataFrame, lexicon: DataFrame, terms: list[str], n_buckets: int
+) -> tuple[dict[str, float], DataFrame]:
+    """The lookup every segment-served query starts with: one tiny |q|-row
+    lexicon collect (idf + write bucket) → the segment scan pruned to those
+    buckets' directories (partition pruning) and terms (pushed predicate).
+    Returns ({term: idf} of the query terms in the lexicon, pruned scan)."""
+    rows = (
+        lexicon.filter(F.col("term").isin(terms))
+        .select("term", "idf_bm25", F.pmod(F.hash("term"), F.lit(n_buckets)).alias("bucket"))
+        .collect()
+    )
+    idfs = {r["term"]: r["idf_bm25"] for r in rows}
+    buckets = sorted({int(r["bucket"]) for r in rows})
+    return idfs, segments.filter(F.col("bucket").isin(buckets) & F.col("term").isin(list(idfs)))
 
 
 def _pruned_topk_micros(
@@ -1184,31 +781,24 @@ def _pruned_topk_micros(
     n_buckets: int,
     shard_fn,
 ) -> DataFrame:
-    """Shared driver plan of the dynamic-pruning executors: one tiny |q|-row
-    lexicon lookup (idf + bucket) → bucket-partition-pruned segment scan →
-    per-shard integer heap (``shard_fn`` = _wand_shard or _maxscore_shard,
-    applyInPandas) → global TakeOrderedAndProject merge of ≤ k rows per
-    shard. ONE definition so a pruning-predicate or fast-path fix can never
-    apply to one executor and silently miss the other."""
+    """Shared driver plan of the segment-served top-k queries: lexicon
+    lookup + pruned scan (:func:`_lookup_pruned_scan`) → per-shard integer
+    top-k (``shard_fn(term_blocks, idfs, avgdl, k)`` in applyInPandas) →
+    global TakeOrderedAndProject merge of ≤ k rows per shard. ONE
+    definition so a pruning-predicate or fast-path fix can never apply to
+    one scorer and silently miss another."""
     terms = list(dict.fromkeys(query_terms))
     if not terms:
         return spark.createDataFrame([], "doc_id long, score_micros long")
-    idf_rows = (
-        lexicon.filter(F.col("term").isin(terms))
-        .select("term", "idf_bm25", F.pmod(F.hash("term"), F.lit(n_buckets)).alias("bucket"))
-        .collect()
-    )
-    idfs = {r["term"]: r["idf_bm25"] for r in idf_rows}
+    idfs, pruned = _lookup_pruned_scan(segments, lexicon, terms, n_buckets)
     if not idfs:
         return spark.createDataFrame([], "doc_id long, score_micros long")
-    buckets = sorted({int(r["bucket"]) for r in idf_rows})
-    pruned = segments.filter(F.col("bucket").isin(buckets) & F.col("term").isin(list(idfs)))
 
     def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         term_blocks: dict[str, list[dict]] = {}
         for row in pdf.to_dict("records"):
             term_blocks.setdefault(row["term"], []).append(row)
-        top = shard_fn(term_blocks, idfs, avgdl, k, micros=True)
+        top = shard_fn(term_blocks, idfs, avgdl, k)
         return pd.DataFrame(
             [(int(d), int(s)) for s, d, _ in top], columns=["doc_id", "score_micros"]
         ).astype({"doc_id": "int64", "score_micros": "int64"})
@@ -1217,26 +807,6 @@ def _pruned_topk_micros(
         run_shard, "doc_id long, score_micros long"
     )
     return per_shard.orderBy(F.desc("score_micros"), F.asc("doc_id")).limit(k)
-
-
-def wand_topk_micros(
-    spark: SparkSession,
-    segments: DataFrame,
-    lexicon: DataFrame,
-    query_terms: list[str],
-    avgdl: float,
-    k: int = 10,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-) -> DataFrame:
-    """Block-max WAND returning exact **bigint-micros** scores:
-    (doc_id, score_micros), bit-identical to the columnar
-    ``sum(round(contrib*1e6))`` BM25 — the compressed physical path under the
-    same DuckDB oracle as the columnar one (plan: _pruned_topk_micros)."""
-    return _pruned_topk_micros(
-        spark, segments, lexicon, query_terms, avgdl, k, n_buckets, _wand_shard
-    )
-
-
 
 
 def blockmax_topk_micros(
@@ -1248,9 +818,10 @@ def blockmax_topk_micros(
     k: int = 10,
     n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
-    """Vectorized block-max pruning (interval sweep, ``_blockmax_seg_shard``)
-    returning exact bigint-micros scores — the third dynamic-pruning
-    executor beside WAND/MaxScore, same shared plan and DuckDB oracle."""
+    """BM25 top-k over the compressed segments with vectorized block-max
+    pruning (interval sweep, ``_blockmax_seg_shard``): (doc_id,
+    score_micros), bit-identical to the columnar ``sum(round(contrib*1e6))``
+    BM25, so it answers the same DuckDB oracle."""
     return _pruned_topk_micros(
         spark, segments, lexicon, query_terms, avgdl, k, n_buckets,
         _blockmax_seg_shard,
@@ -1267,29 +838,11 @@ def seg_exhaustive_topk_micros(
     n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
     """Exhaustive segment-served BM25 (``_exhaustive_seg_shard``): decode
-    and score every block, no pruning — the same-engine baseline the
-    block-max executors are benched against (bench.py --vocab-datum)."""
+    and score every block, no pruning — the same-engine reference the
+    block-max executor is checked and benched against."""
     return _pruned_topk_micros(
         spark, segments, lexicon, query_terms, avgdl, k, n_buckets,
         _exhaustive_seg_shard,
-    )
-
-
-def maxscore_topk_micros(
-    spark: SparkSession,
-    segments: DataFrame,
-    lexicon: DataFrame,
-    query_terms: list[str],
-    avgdl: float,
-    k: int = 10,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-) -> DataFrame:
-    """MaxScore dynamic pruning returning exact **bigint-micros** scores:
-    (doc_id, score_micros) — the second early-termination serve path beside
-    block-max WAND, same shared plan (_pruned_topk_micros) and the same
-    DuckDB oracle as the columnar BM25."""
-    return _pruned_topk_micros(
-        spark, segments, lexicon, query_terms, avgdl, k, n_buckets, _maxscore_shard
     )
 
 
@@ -1496,12 +1049,13 @@ def _phrase_micros_in_shard(
     avgdl: float,
     k: int,
 ) -> list[tuple[int, int, None]]:
-    """Exact phrase top-k within one shard in **bigint micros**: the
-    _phrase_topk_in_shard candidate logic (position adjacency over decoded
-    blocks) with each term contribution rounded to micros BEFORE the sum —
-    the same integer contract as _wand_shard, so the segments-served phrase
-    ranking hash-matches the columnar phrase_topk oracle."""
-    per_term: list[dict[int, tuple]] = []
+    """Exact phrase top-k within one shard in **bigint micros**: decode
+    positions for docs present in ALL phrase terms' lists, keep the
+    position-adjacent ones (over the FULL term sequence, so a repeated term
+    must repeat adjacently), and score them with each term contribution
+    rounded to micros BEFORE the sum — the integer contract of the columnar
+    phrase_topk oracle."""
+    per_term: list[dict[int, tuple]] = []  # doc -> (positions, tf, dl)
     for t in terms:
         blocks = term_blocks.get(t)
         if not blocks:
@@ -1516,26 +1070,23 @@ def _phrase_micros_in_shard(
     cand = set(per_term[0])
     for pm in per_term[1:]:
         cand &= set(pm)
-    out: list[tuple[int, int, None]] = []
-    for d in cand:
-        first, _, _ = per_term[0][d]
+    hits = []
+    for d in sorted(cand):
+        first = per_term[0][d][0]
         rest = [set(pm[d][0].tolist()) for pm in per_term[1:]]
-        if not any(
-            all((p + i + 1) in rest[i] for i in range(len(rest)))
-            for p in first.tolist()
-        ):
-            continue
-        score = 0
-        for t in sorted(set(terms)):
-            _, tf, dl = per_term[terms.index(t)][d]
-            score += _micros(
-                idfs[t]
-                * (tf * (codec.BM25_K1 + 1.0))
-                / (tf + codec.BM25_K1 * (1.0 - codec.BM25_B + codec.BM25_B * dl / avgdl))
-            )
-        out.append((score, d, None))
-    out.sort(key=lambda x: (-x[0], x[1]))
-    return out[:k]
+        if any(all((p + i + 1) in rest[i] for i in range(len(rest))) for p in first.tolist()):
+            hits.append(d)
+    if not hits:
+        return []
+    score = np.zeros(len(hits), dtype=np.int64)
+    for t in sorted(set(terms)):
+        pm = per_term[terms.index(t)]
+        tf = np.array([pm[d][1] for d in hits], dtype=np.int64)
+        dl = np.array([pm[d][2] for d in hits], dtype=np.int64)
+        score += _micros(codec.bm25_contrib(tf, dl, idfs[t], avgdl))
+    docs = np.array(hits, dtype=np.int64)
+    sel = np.lexsort((docs, -score))[:k]
+    return [(score[i].item(), int(docs[i]), None) for i in sel]
 
 
 def phrase_topk_micros(
@@ -1550,17 +1101,28 @@ def phrase_topk_micros(
     """Scored phrase query served ENTIRELY from the compressed segments
     (positions decoded from the blobs, adjacency checked in-shard, BM25 in
     exact micros) — the physical twin of serve.phrase_topk, under the same
-    DuckDB oracle. Shares _pruned_topk_micros' driver plan with WAND and
-    MaxScore, so partition pruning and the bounded per-shard heap are one
-    definition across all three."""
+    DuckDB oracle. Shares _pruned_topk_micros' driver plan with the block-max
+    top-k, so partition pruning and the bounded per-shard heap are one
+    definition."""
     ordered = list(phrase_terms)
 
-    def shard_fn(term_blocks, idfs, avgdl_, k_, micros=True):
+    def shard_fn(term_blocks, idfs, avgdl_, k_):
         return _phrase_micros_in_shard(term_blocks, ordered, idfs, avgdl_, k_)
 
     return _pruned_topk_micros(
         spark, segments, lexicon, ordered, avgdl, k, n_buckets, shard_fn
     )
+
+
+def _positions_by_doc(pdf: pd.DataFrame, terms: list[str]) -> dict[str, dict[int, np.ndarray]]:
+    """{term: {doc_id: positions}} decoded from one shard's block rows."""
+    per_term: dict[str, dict[int, np.ndarray]] = {t: {} for t in terms}
+    for row in pdf.to_dict("records"):
+        entry = per_term[row["term"]]
+        ids, _, _ = codec.decode_block(row)
+        for d, p in zip(ids.tolist(), codec.decode_positions(row)):
+            entry[d] = p
+    return per_term
 
 
 def proximity_match_segments(
@@ -1576,30 +1138,16 @@ def proximity_match_segments(
     (doc_id, min_dist) for docs where the two terms occur within ``slop``
     raw-split positions, positions decoded from the blobs in-shard — the
     physical twin of serve.proximity_match under the same oracle. Same
-    bucket-pruned scan + per-shard Arrow group as the phrase/WAND family;
-    a doc's pair work is bounded by its two term frequencies."""
+    lookup + pruned scan (:func:`_lookup_pruned_scan`) and per-shard Arrow
+    group as the top-k paths; a doc's pair work is bounded by its two term
+    frequencies."""
     terms = list(dict.fromkeys([term_a, term_b]))
-    lex_rows = (
-        lexicon.filter(F.col("term").isin(terms))
-        .select("term", F.pmod(F.hash("term"), F.lit(n_buckets)).alias("bucket"))
-        .collect()
-    )
-    present = {r["term"] for r in lex_rows}
+    present, pruned = _lookup_pruned_scan(segments, lexicon, terms, n_buckets)
     if term_a not in present or term_b not in present:
         return spark.createDataFrame([], "doc_id long, min_dist long")
-    buckets = sorted({int(r["bucket"]) for r in lex_rows})
-    pruned = segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
 
     def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        per_term: dict[str, dict[int, np.ndarray]] = {t: {} for t in terms}
-        for row in pdf.to_dict("records"):
-            entry = per_term[row["term"]]
-            ids, _, _ = codec.decode_block(row)
-            poss = codec.decode_positions(row)
-            for d, p in zip(ids.tolist(), poss):
-                entry[d] = p
+        per_term = _positions_by_doc(pdf, terms)
         pa, pb = per_term[term_a], per_term[term_b]
         out = []
         for d in set(pa) & set(pb):
@@ -1628,27 +1176,12 @@ def ordered_proximity_segments(
     directional sibling of :func:`proximity_match_segments`, same shard
     shape, same oracle as the columnar ordered_proximity_match."""
     terms = list(dict.fromkeys([term_a, term_b]))
-    lex_rows = (
-        lexicon.filter(F.col("term").isin(terms))
-        .select("term", F.pmod(F.hash("term"), F.lit(n_buckets)).alias("bucket"))
-        .collect()
-    )
-    present = {r["term"] for r in lex_rows}
+    present, pruned = _lookup_pruned_scan(segments, lexicon, terms, n_buckets)
     if term_a not in present or term_b not in present:
         return spark.createDataFrame([], "doc_id long, min_gap long")
-    buckets = sorted({int(r["bucket"]) for r in lex_rows})
-    pruned = segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
 
     def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        per_term: dict[str, dict[int, np.ndarray]] = {t: {} for t in terms}
-        for row in pdf.to_dict("records"):
-            entry = per_term[row["term"]]
-            ids, _, _ = codec.decode_block(row)
-            poss = codec.decode_positions(row)
-            for d, p in zip(ids.tolist(), poss):
-                entry[d] = p
+        per_term = _positions_by_doc(pdf, terms)
         pa, pb = per_term[term_a], per_term[term_b]
         out = []
         for d in set(pa) & set(pb):

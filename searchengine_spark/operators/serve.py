@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BM25_K1 = 1.2
-BM25_B = 0.75
+from searchengine_spark.operators.codec import BM25_B, BM25_K1
 
 _EMPTY_TOPK = "doc_id long, score_micros long"
 
@@ -1861,34 +1860,6 @@ def hybrid_rrf_topk(
         F.row_number().over(w_final).cast("int").alias("rank"),
         "doc_id",
         "rrf_micros",
-    )
-
-
-def bm25_topk_wand(
-    spark: SparkSession, idx: dict, query_terms: list[str], k: int = 10
-) -> DataFrame:
-    """BM25 top-k via block-max WAND over the compressed segments —
-    (doc_id, score_micros), hash-identical to ``bm25_topk`` (same DuckDB
-    oracle): scoring inside WAND runs in integer micros (each term
-    contribution rounded exactly as the column expression does), so pruning
-    thresholds and final scores are exact integers on any engine."""
-    from searchengine_spark.operators.segments import wand_topk_micros
-
-    return wand_topk_micros(
-        spark, idx["segments"], idx["lexicon"], query_terms, idx["avgdl"], k=k
-    )
-
-
-def bm25_topk_maxscore(
-    spark: SparkSession, idx: dict, query_terms: list[str], k: int = 10
-) -> DataFrame:
-    """BM25 top-k via MaxScore dynamic pruning over the compressed segments
-    — the second early-termination executor beside WAND, hash-identical to
-    ``bm25_topk`` (same DuckDB oracle, same integer-micros contract)."""
-    from searchengine_spark.operators.segments import maxscore_topk_micros
-
-    return maxscore_topk_micros(
-        spark, idx["segments"], idx["lexicon"], query_terms, idx["avgdl"], k=k
     )
 
 

@@ -173,8 +173,11 @@ def build_index(
     return metrics
 
 
-def load_index(spark: SparkSession, index_dir: str) -> dict[str, DataFrame]:
+def load_index(spark: SparkSession, index_dir: str) -> dict:
+    """The index tables as DataFrames, plus ``avgdl``: the build manifest's
+    lexicon-stage scalar, so a query needs no job over documents for it."""
     out = {
+        "avgdl": lin.IndexManifest(index_dir).stage_metrics()["lexicon"]["avgdl"],
         "documents": spark.read.parquet(os.path.join(index_dir, "documents")),
         "postings": spark.read.parquet(os.path.join(index_dir, "postings")),
         "lexicon": spark.read.parquet(os.path.join(index_dir, "lexicon")),

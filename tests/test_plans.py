@@ -47,17 +47,6 @@ def test_q3_broadcasts_dimension(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_bm25_topk_plan_shape(spark):
-    from searchengine_spark.operators import ir
-    from searchengine_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = plan_of(ir.bm25_topk(spark, docs, ["spark", "hash"], k=10))
-    assert "BroadcastHashJoin" in plan  # query-term set joined broadcast
-    assert "TakeOrderedAndProject" in plan  # k-heap + driver merge
-    assert "SortMergeJoin" not in plan  # nothing big is shuffled for a query
-
-
 def test_segment_query_prunes_bucket_partitions(spark, tmp_path):
     """The compressed segment store is partitioned by term-hash bucket; a
     query for specific terms must scan only those bucket directories."""
@@ -126,7 +115,7 @@ def test_serve_wand_prunes_buckets(spark):
     from searchengine_spark.plans.gate_index import gate_index
 
     idx = gate_index(spark, SF_DIR)
-    plan = plan_of(serve.bm25_topk_wand(spark, idx, ["spark", "hash"], k=10))
+    plan = plan_of(serve.bm25_topk_blockmax(spark, idx, ["spark", "hash"], k=10))
     assert "PartitionFilters" in plan
     pf = plan.split("PartitionFilters")[1].split("\n")[0]
     assert "bucket" in pf

@@ -1,4 +1,4 @@
-"""Block-max WAND == brute-force top-k (property, SURVEY.md §5.2)."""
+"""Segment top-k executors == brute force (property, SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
@@ -7,48 +7,28 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from searchengine_spark.operators import codec
-from searchengine_spark.operators.segments import _wand_shard
+from searchengine_spark.operators.segments import (
+    _blockmax_seg_shard,
+    _exhaustive_seg_shard,
+    _micros,
+)
+
+IDFS = {"alpha": 2.3, "beta": 0.7, "gamma": 4.1, "delta": 1.0}
+AVGDL = 80.0
 
 
-def brute_force(term_postings, idfs, avgdl, k):
-    scores: dict[int, list[tuple[str, float]]] = {}
+def brute_force_micros(term_postings, k):
+    """Per-doc sum of per-term micros contributions, ordered by score desc
+    then doc id."""
+    scores: dict[int, int] = {}
     for term, posts in term_postings.items():
         for doc_id, tf, dl in posts:
-            c = codec.bm25_contrib(np.array([tf]), np.array([dl]), idfs[term], avgdl)[0]
-            scores.setdefault(doc_id, []).append((term, float(c)))
-    out = []
-    for doc_id, contribs in scores.items():
-        contribs.sort()
-        s = 0.0
-        for _, c in contribs:
-            s += c
-        out.append((s, doc_id))
-    out.sort(key=lambda t: (-t[0], t[1]))
-    return out[:k]
+            c = codec.bm25_contrib(np.array([tf]), np.array([dl]), IDFS[term], AVGDL)
+            scores[doc_id] = scores.get(doc_id, 0) + int(_micros(c)[0])
+    return sorted(((s, d) for d, s in scores.items()), key=lambda t: (-t[0], t[1]))[:k]
 
 
-@given(
-    st.dictionaries(
-        st.sampled_from(["alpha", "beta", "gamma", "delta"]),
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=3000),
-                st.integers(min_value=1, max_value=30),
-                st.integers(min_value=5, max_value=500),
-            ),
-            min_size=1,
-            max_size=300,
-            unique_by=lambda t: t[0],
-        ),
-        min_size=1,
-        max_size=4,
-    ),
-    st.integers(min_value=1, max_value=12),
-)
-@settings(max_examples=80, deadline=None)
-def test_wand_equals_bruteforce(term_postings, k):
-    idfs = {"alpha": 2.3, "beta": 0.7, "gamma": 4.1, "delta": 1.0}
-    avgdl = 80.0
+def term_blocks_of(term_postings, block_size):
     term_blocks = {}
     for term, posts in term_postings.items():
         posts = sorted(posts)
@@ -56,86 +36,53 @@ def test_wand_equals_bruteforce(term_postings, k):
         tfs = np.array([p[1] for p in posts], dtype=np.uint64)
         dls = np.array([p[2] for p in posts], dtype=np.uint64)
         blocks = codec.encode_blocks(
-            ids, tfs, dls, [[] for _ in posts], idf=idfs[term], avgdl=avgdl, block_size=16
-        )
-        for i, b in enumerate(blocks):
-            b["bucket"] = 0
-            b["shard"] = 0
-            b["term"] = term
-        term_blocks[term] = blocks
-
-    got = _wand_shard(term_blocks, idfs, avgdl, k)
-    want = brute_force(term_postings, idfs, avgdl, k)
-    assert [(d, round(s, 9)) for s, d, _ in got] == [(d, round(s, 9)) for s, d in want]
-    # scores bit-identical (same deterministic term-sorted summation)
-    assert [s for s, _, _ in got] == [s for s, _ in want]
-
-
-@given(
-    st.dictionaries(
-        st.sampled_from(["alpha", "beta", "gamma", "delta"]),
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=3000),
-                st.integers(min_value=1, max_value=30),
-                st.integers(min_value=5, max_value=500),
-            ),
-            min_size=1,
-            max_size=300,
-            unique_by=lambda t: t[0],
-        ),
-        min_size=1,
-        max_size=4,
-    ),
-    st.integers(min_value=1, max_value=12),
-)
-@settings(max_examples=80, deadline=None)
-def test_maxscore_equals_wand_and_bruteforce(term_postings, k):
-    """MaxScore == WAND == brute force, in both float and micros modes —
-    the two dynamic-pruning executors are interchangeable."""
-    from searchengine_spark.operators.segments import _maxscore_shard
-
-    idfs = {"alpha": 2.3, "beta": 0.7, "gamma": 4.1, "delta": 1.0}
-    avgdl = 80.0
-    term_blocks = {}
-    for term, posts in term_postings.items():
-        posts = sorted(posts)
-        ids = np.array([p[0] for p in posts], dtype=np.uint64)
-        tfs = np.array([p[1] for p in posts], dtype=np.uint64)
-        dls = np.array([p[2] for p in posts], dtype=np.uint64)
-        blocks = codec.encode_blocks(
-            ids, tfs, dls, [[] for _ in posts], idf=idfs[term], avgdl=avgdl, block_size=16
+            ids, tfs, dls, [[] for _ in posts], idf=IDFS[term], avgdl=AVGDL,
+            block_size=block_size,
         )
         for b in blocks:
             b["bucket"] = 0
             b["shard"] = 0
             b["term"] = term
         term_blocks[term] = blocks
+    return term_blocks
 
-    got = _maxscore_shard(term_blocks, idfs, avgdl, k)
-    want = brute_force(term_postings, idfs, avgdl, k)
-    assert [(d, s) for s, d, _ in got] == [(d, s) for s, d in want]
-    # micros mode agrees with WAND micros mode (fresh blocks — iterators
-    # mutate state, so each executor needs its own decode cursors)
-    def fresh():
-        tb = {}
-        for term, posts in term_postings.items():
-            posts = sorted(posts)
-            ids = np.array([p[0] for p in posts], dtype=np.uint64)
-            tfs = np.array([p[1] for p in posts], dtype=np.uint64)
-            dls = np.array([p[2] for p in posts], dtype=np.uint64)
-            blocks = codec.encode_blocks(
-                ids, tfs, dls, [[] for _ in posts], idf=idfs[term], avgdl=avgdl,
-                block_size=16,
-            )
-            for b in blocks:
-                b["bucket"] = 0; b["shard"] = 0; b["term"] = term
-            tb[term] = blocks
-        return tb
 
-    ms = _maxscore_shard(fresh(), idfs, avgdl, k, micros=True)
-    wd = _wand_shard(fresh(), idfs, avgdl, k, micros=True)
-    assert [(d, s) for s, d, _ in ms] == [(d, s) for s, d, _ in wd]
+def _posting_lists(min_size: int):
+    return st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=3000),
+            st.integers(min_value=1, max_value=30),
+            st.integers(min_value=5, max_value=500),
+        ),
+        min_size=min_size,
+        max_size=300,
+        unique_by=lambda t: t[0],
+    )
+
+
+@given(
+    st.dictionaries(
+        st.sampled_from(["alpha", "beta", "gamma", "delta"]),
+        # short lists, and lists long enough (> 32 blocks of 2) to take the
+        # block-bound path beside the eagerly decoded one
+        st.one_of(_posting_lists(1), _posting_lists(65)),
+        min_size=1,
+        max_size=4,
+    ),
+    st.integers(min_value=1, max_value=12),
+)
+@settings(max_examples=80, deadline=None)
+def test_blockmax_equals_exhaustive_and_bruteforce(term_postings, k):
+    """Block-max (interval sweep) == exhaustive (decode all) == brute
+    force, in exact micros: pruning never changes the answer."""
+    want = brute_force_micros(term_postings, k)
+    # block_size=16 → ≤19 blocks/term (all-eager path); block_size=2 →
+    # up to 150 blocks (block-level bounds + mixed eager/block path)
+    for bs in (16, 2):
+        bm = _blockmax_seg_shard(term_blocks_of(term_postings, bs), IDFS, AVGDL, k)
+        ex = _exhaustive_seg_shard(term_blocks_of(term_postings, bs), IDFS, AVGDL, k)
+        assert [(s, d) for s, d, _ in bm] == want, bs
+        assert [(s, d) for s, d, _ in ex] == want, bs
 
 
 def test_phrase_micros_equals_columnar(spark):
@@ -185,62 +132,3 @@ def test_span_first_topk_bounds(spark):
         .count()
     )
     assert len(out) == brute
-
-
-@given(
-    st.dictionaries(
-        st.sampled_from(["alpha", "beta", "gamma", "delta"]),
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=3000),
-                st.integers(min_value=1, max_value=30),
-                st.integers(min_value=5, max_value=500),
-            ),
-            min_size=1,
-            max_size=300,
-            unique_by=lambda t: t[0],
-        ),
-        min_size=1,
-        max_size=4,
-    ),
-    st.integers(min_value=1, max_value=12),
-)
-@settings(max_examples=80, deadline=None)
-def test_blockmax_and_seg_exhaustive_equal_wand(term_postings, k):
-    """The two vectorized executors (interval-sweep block-max, decode-all
-    exhaustive) return exactly what doc-at-a-time WAND returns, in micros
-    mode — all four segment-served scorers are interchangeable."""
-    from searchengine_spark.operators.segments import (
-        _blockmax_seg_shard,
-        _exhaustive_seg_shard,
-    )
-
-    idfs = {"alpha": 2.3, "beta": 0.7, "gamma": 4.1, "delta": 1.0}
-    avgdl = 80.0
-
-    def fresh(block_size):
-        term_blocks = {}
-        for term, posts in term_postings.items():
-            posts = sorted(posts)
-            ids = np.array([p[0] for p in posts], dtype=np.uint64)
-            tfs = np.array([p[1] for p in posts], dtype=np.uint64)
-            dls = np.array([p[2] for p in posts], dtype=np.uint64)
-            blocks = codec.encode_blocks(
-                ids, tfs, dls, [[] for _ in posts], idf=idfs[term], avgdl=avgdl,
-                block_size=block_size,
-            )
-            for b in blocks:
-                b["bucket"] = 0
-                b["shard"] = 0
-                b["term"] = term
-            term_blocks[term] = blocks
-        return term_blocks
-
-    # block_size=16 → ≤19 blocks/term (all-eager path); block_size=2 →
-    # up to 150 blocks (block-level coverage + mixed eager/block path)
-    for bs in (16, 2):
-        wd = _wand_shard(fresh(bs), idfs, avgdl, k, micros=True)
-        bm = _blockmax_seg_shard(fresh(bs), idfs, avgdl, k, micros=True)
-        ex = _exhaustive_seg_shard(fresh(bs), idfs, avgdl, k, micros=True)
-        assert [(s, d) for s, d, _ in bm] == [(s, d) for s, d, _ in wd], bs
-        assert [(s, d) for s, d, _ in ex] == [(s, d) for s, d, _ in wd], bs
