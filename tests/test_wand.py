@@ -60,28 +60,43 @@ def _posting_lists(min_size: int):
     )
 
 
-@given(
-    st.dictionaries(
+def _term_postings():
+    return st.dictionaries(
         st.sampled_from(["alpha", "beta", "gamma", "delta"]),
         # short lists, and lists long enough (> 32 blocks of 2) to take the
         # block-bound path beside the eagerly decoded one
         st.one_of(_posting_lists(1), _posting_lists(65)),
         min_size=1,
         max_size=4,
-    ),
-    st.integers(min_value=1, max_value=12),
-)
+    )
+
+
+# block_size=16 → ≤19 blocks/term (all-eager path); block_size=2 → up to
+# 150 blocks (block-level bounds + mixed eager/block path)
+BLOCK_SIZES = (16, 2)
+
+
+@given(_term_postings(), st.integers(min_value=1, max_value=12))
 @settings(max_examples=80, deadline=None)
-def test_blockmax_equals_exhaustive_and_bruteforce(term_postings, k):
-    """Block-max (interval sweep) == exhaustive (decode all) == brute
-    force, in exact micros: pruning never changes the answer."""
+def test_wand_equals_bruteforce(term_postings, k):
+    """Block-max WAND (interval sweep) == brute force, in exact micros:
+    pruning never changes the answer."""
     want = brute_force_micros(term_postings, k)
-    # block_size=16 → ≤19 blocks/term (all-eager path); block_size=2 →
-    # up to 150 blocks (block-level bounds + mixed eager/block path)
-    for bs in (16, 2):
+    for bs in BLOCK_SIZES:
+        bm = _blockmax_seg_shard(term_blocks_of(term_postings, bs), IDFS, AVGDL, k)
+        assert [(s, d) for s, d, _ in bm] == want, bs
+
+
+@given(_term_postings(), st.integers(min_value=1, max_value=12))
+@settings(max_examples=80, deadline=None)
+def test_blockmax_and_seg_exhaustive_equal_wand(term_postings, k):
+    """The no-skipping reference (decode all) returns exactly what block-max
+    WAND returns, and both equal brute force."""
+    want = brute_force_micros(term_postings, k)
+    for bs in BLOCK_SIZES:
         bm = _blockmax_seg_shard(term_blocks_of(term_postings, bs), IDFS, AVGDL, k)
         ex = _exhaustive_seg_shard(term_blocks_of(term_postings, bs), IDFS, AVGDL, k)
-        assert [(s, d) for s, d, _ in bm] == want, bs
+        assert [(s, d) for s, d, _ in ex] == [(s, d) for s, d, _ in bm], bs
         assert [(s, d) for s, d, _ in ex] == want, bs
 
 
