@@ -141,7 +141,7 @@ def _crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from searchengine_spark.operators import dedup, relational, similarity, textstats
+    from searchengine_spark.operators import dedup, relational, segments, similarity, textstats
 
     def emb(spark, sf):
         return load_table(spark, sf, "embeddings")
@@ -155,8 +155,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lexicon_stats": lambda spark, sf: serve.lexicon_stats(spark, gate_index(spark, sf)),
         # corpus-driven stopword generation (integer df-fraction boundary)
         # exact-gap phrase ("hash ? join"): wildcard-slot SpanNear pattern
-        "gap_phrase_topk": lambda spark, sf: serve.gap_phrase_topk(
-            spark, gate_index(spark, sf), PHRASE, gap=1, k=TOPK
+        "gap_phrase_topk": lambda spark, sf: serve.phrase_topk(
+            spark, gate_index(spark, sf), PHRASE, k=TOPK, gap=1
         ),
         # PhraseQuery-style scoring: phrase occurrence count drives the tf
         "phrase_freq_topk": lambda spark, sf: serve.phrase_freq_topk(
@@ -273,24 +273,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         # the same scored phrase served from the COMPRESSED segments
         # (positions decoded from blobs, in-shard adjacency + micros BM25)
-        "phrase_topk_wand": lambda spark, sf: serve.phrase_topk_wand(
-            spark, gate_index(spark, sf), PHRASE, k=TOPK
+        "phrase_topk_wand": lambda spark, sf: segments.phrase_topk_micros(
+            spark, (idx := gate_index(spark, sf))["segments"], idx["lexicon"],
+            PHRASE, idx["avgdl"], k=TOPK,
         ),
         # proximity (within-k positions) — the sloppy-phrase generalization
         "proximity_match": lambda spark, sf: serve.proximity_match(
             spark, gate_index(spark, sf), PHRASE[0], PHRASE[1], slop=3
         ),
         # the same proximity query served from the COMPRESSED segments
-        "proximity_match_wand": lambda spark, sf: serve.proximity_match_wand(
-            spark, gate_index(spark, sf), PHRASE[0], PHRASE[1], slop=3
+        "proximity_match_wand": lambda spark, sf: segments.proximity_match_segments(
+            spark, (idx := gate_index(spark, sf))["segments"], idx["lexicon"],
+            PHRASE[0], PHRASE[1], slop=3,
         ),
         # directional variant: term_a BEFORE term_b within k positions
         "proximity_ordered": lambda spark, sf: serve.ordered_proximity_match(
             spark, gate_index(spark, sf), PHRASE[0], PHRASE[1], slop=3
         ),
         # ...and its directional sibling from the segments
-        "ordered_proximity_wand": lambda spark, sf: serve.ordered_proximity_wand(
-            spark, gate_index(spark, sf), PHRASE[0], PHRASE[1], slop=3
+        "ordered_proximity_wand": lambda spark, sf: segments.ordered_proximity_segments(
+            spark, (idx := gate_index(spark, sf))["segments"], idx["lexicon"],
+            PHRASE[0], PHRASE[1], slop=3,
         ),
         # synonym-group scoring (Lucene SynonymQuery semantics: macro-term
         # tf sum, group df -> idf)

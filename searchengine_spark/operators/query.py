@@ -28,6 +28,7 @@ from searchengine_spark.functions.textproc import (
     snippet_windows,
 )
 from searchengine_spark.operators.codec import BM25_B, BM25_K1
+from searchengine_spark.operators.serve import _doc_positions, _phrase_adjacent
 from searchengine_spark.operators.scoring import (
     H1_WEIGHT,
     H2_WEIGHT,
@@ -333,10 +334,14 @@ def search_bm25(
     documents: DataFrame,
     query: str,
     k: int = 10,
-    positional_phrase: bool = True,
 ) -> DataFrame:
     """BM25 mode: (rank, doc_id, url, score). Phrase queries use correct
-    positional adjacency (our fix of quirk Q10) when ``positional_phrase``."""
+    positional adjacency (our fix of quirk Q10): the stemmed terms at
+    consecutive positions of the stored positions arrays (the index
+    positions count skipped tokens, Q4, but consecutive kept tokens still
+    differ by 1 unless a short/stopword token intervened — matching the
+    reference's *index*, not raw text), checked by the shared
+    ``serve._phrase_adjacent`` predicate."""
     phrase = query[1:-1] if is_phrase_query(query) else None
     terms = query_tokenize(phrase if phrase is not None else query)
     if not terms:
@@ -344,10 +349,10 @@ def search_bm25(
 
     matched = _candidates(postings, lexicon, spark, terms)
 
-    if phrase is not None and positional_phrase and len(terms) >= 2:
-        matched = matched.join(
-            _positional_phrase_docs(matched, terms), "doc_id", "left_semi"
-        )
+    if phrase is not None and len(terms) >= 2:
+        per_doc, pos = _doc_positions(matched, terms)
+        adjacent = per_doc.filter(_phrase_adjacent(pos, terms)).select("doc_id")
+        matched = matched.join(adjacent, "doc_id", "left_semi")
 
     # deterministic fold for the BM25 sum as well
     stats = documents.agg(F.sum("doc_len").alias("s"), F.count(F.lit(1)).alias("c")).collect()[0]
@@ -382,22 +387,3 @@ def search_bm25(
         "url",
         "score",
     )
-
-
-def _positional_phrase_docs(matched: DataFrame, terms: list[str]) -> DataFrame:
-    """Docs where the stemmed terms appear at consecutive positions —
-    adjacency over the stored positions arrays (the index positions count
-    skipped tokens, Q4, but consecutive kept tokens still differ by 1 unless
-    a short/stopword token intervened; matching the reference's *index*, not
-    raw text)."""
-    pos = matched.select("doc_id", "term", F.explode("positions").alias("p"))
-    first = pos.filter(F.col("term") == terms[0]).select("doc_id", F.col("p").alias("p0"))
-    out = first
-    for i, t in enumerate(terms[1:], start=1):
-        nxt = pos.filter(F.col("term") == t).select(
-            F.col("doc_id").alias("_d"), F.col("p").alias(f"p{i}")
-        )
-        out = out.join(
-            nxt, (out.doc_id == nxt._d) & (nxt[f"p{i}"] == out.p0 + i), "inner"
-        ).select(out.doc_id, out.p0)
-    return out.select("doc_id").distinct()

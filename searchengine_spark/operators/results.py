@@ -34,14 +34,13 @@ tests/oracle.py):
 
 The snippet is Catalyst higher-order functions over <=k rows — the
 per-element lambda interpretation cost is bounded by k, not corpus size.
-The phrase check's lambda runs over the first phrase term's positions per
-candidate doc, bounded by the phrase terms' posting mass.
+The phrase check is ``serve._phrase_adjacent`` — the adjacency predicate
+every phrase path shares — over the aggregate's per-doc positions arrays;
+its lambda runs over the first phrase term's positions per candidate doc,
+bounded by the phrase terms' posting mass.
 """
 
 from __future__ import annotations
-
-import operator
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,22 +116,6 @@ def _literal_map(pairs: dict) -> Column:
     return F.expr(f"map({entries})")
 
 
-def _phrase_adjacent(pos: dict[str, Column], phrase_terms: list[str]) -> Column:
-    """True iff some position p of the first phrase term has term i at
-    p + i for every i — exact token adjacency over the stored positions
-    arrays (the serve.phrase_match contract). ``pos`` maps each distinct
-    phrase term to its per-doc positions array (null when the doc lacks
-    the term, which makes the check null, i.e. filtered out)."""
-    def adjacent(p: Column) -> Column:
-        return reduce(
-            operator.and_,
-            [F.array_contains(pos[t], p + i) for i, t in enumerate(phrase_terms[1:], 1)],
-            F.lit(True),
-        )
-
-    return F.exists(pos[phrase_terms[0]], adjacent)
-
-
 def _topk(
     idx: dict,
     rows: list,
@@ -148,25 +131,14 @@ def _topk(
 
     idf = _literal_map({r["term"]: r["idf_bm25"] for r in rows})
     contrib = serve._bm25_contrib(idx["avgdl"])
-    aggs = [
+    top, pos = serve._doc_positions(
+        serve._pruned_postings(idx, rows).withColumn("idf_bm25", idf[F.col("term")]),
+        query_terms if phrase else [],
         F.sum(F.round(contrib * 1e6).cast("long")).alias("score_micros"),
         F.max("term").alias("term"),
-    ]
-    distinct = list(dict.fromkeys(query_terms)) if phrase else []
-    # postings are unique per (term, doc): each max() sees one non-null array
-    aggs += [
-        F.max(F.when(F.col("term") == t, F.col("positions"))).alias(f"_pos{i}")
-        for i, t in enumerate(distinct)
-    ]
-    top = (
-        serve._pruned_postings(idx, rows)
-        .withColumn("idf_bm25", idf[F.col("term")])
-        .groupBy("doc_id")
-        .agg(*aggs)
     )
     if phrase:
-        pos = {t: F.col(f"_pos{i}") for i, t in enumerate(distinct)}
-        top = top.filter(_phrase_adjacent(pos, query_terms))
+        top = top.filter(serve._phrase_adjacent(pos, query_terms))
     if doc_filter is not None:
         top = top.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
     return (
@@ -204,7 +176,8 @@ def search_results(
        then the snippet expression, the Q11 filter and the rank window.
 
     ``phrase=True`` keeps only docs holding ``query_terms`` token-adjacent
-    (the serve.phrase_match contract) BEFORE the top-k bound — the
+    (``serve._phrase_adjacent``, the predicate every phrase path shares)
+    BEFORE the top-k bound — the
     reference's filter-then-rank phrase flow
     (SearchService.handlePhraseSearch, SearchService.java:99-133) on true
     positional adjacency instead of snippet scans. ``doc_filter`` (a

@@ -21,7 +21,11 @@ contract the round-1 gates established).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import operator
+from collections.abc import Callable
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark.operators.codec import BM25_B, BM25_K1
@@ -48,6 +52,57 @@ def _pruned_postings(idx: dict, rows: list) -> DataFrame:
     return idx["postings"].filter(
         F.col("bucket").isin(buckets) & F.col("term").isin(terms)
     )
+
+
+def _doc_positions(
+    post: DataFrame, terms: list[str], *aggs: Column
+) -> tuple[DataFrame, dict[str, Column]]:
+    """The per-doc positions of ``terms``: ONE ``groupBy(doc_id)`` over a
+    term-pruned postings scan, with ``max(when(term == t, positions))`` per
+    distinct term (postings are unique per (term, doc), so each max sees
+    one non-null array; it is null when the doc lacks t) next to the
+    caller's ``aggs``. Returns the frame and the term -> positions column
+    map that :func:`_phrase_at` reads — no explode, no self-join."""
+    distinct = list(dict.fromkeys(terms))
+    per_doc = post.groupBy("doc_id").agg(
+        *aggs,
+        *[
+            F.max(F.when(F.col("term") == t, F.col("positions"))).alias(f"_pos{i}")
+            for i, t in enumerate(distinct)
+        ],
+    )
+    return per_doc, {t: F.col(f"_pos{i}") for i, t in enumerate(distinct)}
+
+
+def _phrase_at(
+    pos: dict[str, Column], phrase_terms: list[str], stride: int = 1
+) -> Callable[[Column], Column]:
+    """The adjacency predicate: ``at(p)`` holds iff phrase term i sits at
+    ``p + i*stride`` for every i (stride 1 = exact phrase; stride g+1 =
+    exactly g wildcard tokens between consecutive terms). ``pos`` maps each
+    distinct term to its per-doc positions array (:func:`_doc_positions`);
+    a missing term's null array makes ``at`` null, i.e. no match. Applied
+    to the first term's positions, ``exists`` is the phrase match and
+    ``size(filter(...))`` the number of phrase occurrences."""
+
+    def at(p: Column) -> Column:
+        return reduce(
+            operator.and_,
+            [
+                F.array_contains(pos[t], p + i * stride)
+                for i, t in enumerate(phrase_terms[1:], 1)
+            ],
+            F.lit(True),
+        )
+
+    return at
+
+
+def _phrase_adjacent(
+    pos: dict[str, Column], phrase_terms: list[str], stride: int = 1
+) -> Column:
+    """True iff the doc holds ``phrase_terms`` at stride ``stride``."""
+    return F.exists(pos[phrase_terms[0]], _phrase_at(pos, phrase_terms, stride))
 
 
 def _lex_df(spark: SparkSession, rows: list) -> DataFrame:
@@ -498,31 +553,24 @@ def term_search_except(
 
 
 def phrase_match(
-    spark: SparkSession, idx: dict, phrase_terms: list[str]
+    spark: SparkSession, idx: dict, phrase_terms: list[str], gap: int = 0
 ) -> DataFrame:
     """Exact token-adjacent phrase, served from the STORED positions arrays
     (the reference stored positions but never used them — quirk Q10; we use
-    them, and from the index rather than re-tokenizing)."""
-    assert len(phrase_terms) >= 2
+    them, and from the index rather than re-tokenizing). ``gap`` > 0 is the
+    exact-gap phrase ("hash ? join", exactly ``gap`` wildcard tokens between
+    consecutive terms — the SpanNear/wildcard-slot pattern): term i at
+    p + i·(gap+1). One per-doc positions aggregate over the phrase terms'
+    pruned postings, filtered by the shared adjacency predicate."""
+    assert len(phrase_terms) >= 2 and gap >= 0
     rows = _qlex(spark, idx, phrase_terms)
     found = {r["term"] for r in rows}
     if not set(phrase_terms) <= found:
         return spark.createDataFrame([], "doc_id long")
-    pos = _pruned_postings(idx, rows).select(
-        "doc_id", "term", F.explode("positions").alias("p")
+    per_doc, pos = _doc_positions(_pruned_postings(idx, rows), phrase_terms)
+    return per_doc.filter(_phrase_adjacent(pos, phrase_terms, gap + 1)).select(
+        "doc_id"
     )
-    first = pos.filter(F.col("term") == phrase_terms[0]).select(
-        "doc_id", F.col("p").alias("p0")
-    )
-    out = first
-    for i, t in enumerate(phrase_terms[1:], start=1):
-        nxt = pos.filter(F.col("term") == t).select(
-            F.col("doc_id").alias("_id"), F.col("p").alias(f"p{i}")
-        )
-        out = out.join(
-            nxt, (out["doc_id"] == nxt["_id"]) & (nxt[f"p{i}"] == out["p0"] + i), "inner"
-        ).select(out["doc_id"], out["p0"])
-    return out.select("doc_id").distinct()
 
 
 def phrase_freq_topk(
@@ -537,13 +585,13 @@ def phrase_freq_topk(
     ``score = (Σ idf_t) · pf·(k1+1) / (pf + k1·(1−b+b·dl/avgdl))``.
     (doc_id, phrase_freq, score_micros).
 
-    Served from the stored positions arrays: per-term position explode,
-    adjacency chain join (the :func:`phrase_match` plan), occurrences
-    counted per doc instead of collapsed to existence. The float tree is
-    textually pinned to the oracle (idf sum in phrase order, same
-    saturation expression as _bm25_contrib). Work is bounded by the
-    phrase terms' posting masses — the same pruned scan phrase_match does,
-    plus one count aggregate."""
+    Served from the stored positions arrays: the :func:`phrase_match`
+    per-doc positions aggregate (which also carries dl), with the phrase
+    starts counted (``size(filter(...))``) instead of tested for existence.
+    The float tree is textually pinned to the oracle (idf sum in phrase
+    order, same saturation expression as _bm25_contrib). Work is bounded by
+    the phrase terms' posting masses — the same pruned scan and single
+    aggregate phrase_match does."""
     assert len(phrase_terms) >= 2
     rows = _qlex(spark, idx, phrase_terms)
     by_term = {r["term"]: r for r in rows}
@@ -556,33 +604,20 @@ def phrase_freq_topk(
     idf_sum = 0.0
     for t in phrase_terms:
         idf_sum = idf_sum + float(by_term[t]["idf_bm25"])
-    post = _pruned_postings(idx, rows)
-    pos = post.select("doc_id", "term", F.explode("positions").alias("p"))
-    first = pos.filter(F.col("term") == phrase_terms[0]).select(
-        "doc_id", F.col("p").alias("p0")
+    per_doc, pos = _doc_positions(
+        _pruned_postings(idx, rows), phrase_terms, F.max("dl").alias("dl")
     )
-    out = first
-    for i, t in enumerate(phrase_terms[1:], start=1):
-        nxt = pos.filter(F.col("term") == t).select(
-            F.col("doc_id").alias("_id"), F.col("p").alias(f"p{i}")
-        )
-        out = out.join(
-            nxt,
-            (out["doc_id"] == nxt["_id"]) & (nxt[f"p{i}"] == out["p0"] + i),
-            "inner",
-        ).select(out["doc_id"], out["p0"])
-    pf = out.distinct().groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("phrase_freq")
-    )
-    dls = post.filter(F.col("term") == phrase_terms[0]).select("doc_id", "dl")
+    starts = F.filter(pos[phrase_terms[0]], _phrase_at(pos, phrase_terms))
+    pf = per_doc.select(
+        "doc_id", "dl", F.size(starts).cast("long").alias("phrase_freq")
+    ).filter(F.col("phrase_freq") > 0)
     pfd = F.col("phrase_freq").cast("double")
     dl = F.col("dl").cast("double")
     score = F.lit(idf_sum) * (pfd * (BM25_K1 + 1.0)) / (
         pfd + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / F.lit(idx["avgdl"]))
     )
     return (
-        pf.join(dls, "doc_id")
-        .select(
+        pf.select(
             "doc_id",
             "phrase_freq",
             F.round(score * 1e6).cast("long").alias("score_micros"),
@@ -971,11 +1006,11 @@ def proximity_match(
     ``term_b`` occur within ``slop`` raw-split positions — the generalized
     form of adjacency phrase match (slop >= 1 contains every phrase hit).
 
-    Served from the stored positional postings: two bucket-pruned one-term
-    scans equi-join on doc_id, then the min pairwise |pa - pb| folds
-    array-side (nested transform over the two position lists — bounded by
-    the per-doc term frequencies, no explode, no extra shuffle beyond the
-    doc_id join of two already-tiny filtered sides)."""
+    Served from the stored positional postings: the per-doc positions
+    aggregate of the two terms (one bucket-pruned scan, one
+    ``groupBy(doc_id)``), then the min pairwise |pa - pb| folds array-side
+    (nested transform over the two position lists — bounded by the per-doc
+    term frequencies, no explode, no join)."""
     rows = _qlex(spark, idx, [term_a, term_b])
     present = {r["term"] for r in rows}
     if term_a not in present or term_b not in present:
@@ -983,21 +1018,17 @@ def proximity_match(
     # term_a == term_b degenerates to "every doc containing the term"
     # (each occurrence pairs with itself, min_dist 0) — the same answer the
     # SQL twin gives, so the pair stays symmetric even at the edge
-    post = _pruned_postings(idx, rows)
-    pa = post.filter(F.col("term") == term_a).select("doc_id", F.col("positions").alias("pa"))
-    pb = post.filter(F.col("term") == term_b).select("doc_id", F.col("positions").alias("pb"))
+    per_doc, pos = _doc_positions(_pruned_postings(idx, rows), [term_a, term_b])
     min_dist = F.array_min(
         F.flatten(
             F.transform(
-                F.col("pa"),
-                lambda x: F.transform(F.col("pb"), lambda y: F.abs(x - y)),
+                pos[term_a],
+                lambda x: F.transform(pos[term_b], lambda y: F.abs(x - y)),
             )
         )
     ).cast("long")
-    return (
-        pa.join(pb, "doc_id")
-        .select("doc_id", min_dist.alias("min_dist"))
-        .filter(F.col("min_dist") <= slop)
+    return per_doc.select("doc_id", min_dist.alias("min_dist")).filter(
+        F.col("min_dist") <= slop  # also drops docs lacking either term
     )
 
 
@@ -1007,26 +1038,22 @@ def ordered_proximity_match(
     """Ordered proximity: docs where ``term_a`` occurs BEFORE ``term_b``
     within ``slop`` positions — (doc_id, min_gap), gap = pb - pa >= 1. The
     directional refinement of ``proximity_match`` (phrase queries are the
-    slop=1 special case); same physical shape: two bucket-pruned one-term
-    scans ⋈ doc_id, the min positive gap folded array-side."""
+    slop=1 special case); same physical shape: the two terms' per-doc
+    positions aggregate, the min positive gap folded array-side."""
     rows = _qlex(spark, idx, [term_a, term_b])
     present = {r["term"] for r in rows}
     if term_a not in present or term_b not in present:
         return spark.createDataFrame([], "doc_id long, min_gap long")
-    post = _pruned_postings(idx, rows)
-    pa = post.filter(F.col("term") == term_a).select("doc_id", F.col("positions").alias("pa"))
-    pb = post.filter(F.col("term") == term_b).select("doc_id", F.col("positions").alias("pb"))
+    per_doc, pos = _doc_positions(_pruned_postings(idx, rows), [term_a, term_b])
     gaps = F.filter(
         F.flatten(
-            F.transform(F.col("pa"), lambda x: F.transform(F.col("pb"), lambda y: y - x))
+            F.transform(pos[term_a], lambda x: F.transform(pos[term_b], lambda y: y - x))
         ),
         lambda v: v >= 1,
     )
-    return (
-        pa.join(pb, "doc_id")
-        .select("doc_id", F.array_min(gaps).cast("long").alias("min_gap"))
-        .filter(F.col("min_gap") <= slop)  # also drops docs with no positive gap
-    )
+    return per_doc.select(
+        "doc_id", F.array_min(gaps).cast("long").alias("min_gap")
+    ).filter(F.col("min_gap") <= slop)  # also drops docs with no positive gap
 
 
 def synonym_bm25_topk(
@@ -1414,7 +1441,10 @@ def sdm_topk(
     filter but never quadratic in doc length), and pair collection
     frequencies are 1-row in-plan aggregates of the pair-count tables
     (no driver actions). Positions are raw-split positions (quirk Q4),
-    so adjacency/window distances match the phrase/proximity family.
+    so adjacency/window distances match the phrase/proximity family; the
+    pair features COUNT windows per doc, so they keep their own position
+    explode + join rather than the phrase family's existence predicate
+    (``_phrase_adjacent``).
 
     Contract details the DuckDB twin mirrors: unigram sum over UNIQUE
     in-vocabulary terms; pairs = adjacent ORIGINAL query positions with
@@ -2621,64 +2651,15 @@ def corrected_search(
 
 
 def phrase_topk(
-    spark: SparkSession, idx: dict, phrase_terms: list[str], k: int = 10
+    spark: SparkSession, idx: dict, phrase_terms: list[str], k: int = 10, gap: int = 0
 ) -> DataFrame:
     """Ranked phrase query: exact-phrase filter (stored positional postings,
-    the phrase_match candidate set) then BM25 over the phrase's terms —
-    Lucene's PhraseQuery *scored*, not just matched. Both legs are the
-    engine's gated paths; the join keeps scoring work at |candidates|, and
-    the top-k heap runs after the filter (the limit applies to phrase hits,
-    not to the raw term candidates)."""
-    cand = phrase_match(spark, idx, phrase_terms).select("doc_id")
-    return (
-        bm25_scores(spark, idx, phrase_terms)
-        .join(cand, "doc_id")
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
-def gap_phrase_match(
-    spark: SparkSession, idx: dict, phrase_terms: list[str], gap: int = 1
-) -> DataFrame:
-    """Exact-GAP phrase filter ("hash ? join" with exactly ``gap`` wildcard
-    tokens between consecutive terms — the SpanNear/wildcard-slot pattern):
-    docs where term i occurs at position p₀ + i·(gap+1). Same stored-
-    positions adjacency-chain plan as :func:`phrase_match`, with the
-    stride widened from 1 to gap+1; work stays bounded by the phrase
-    terms' posting masses."""
-    assert len(phrase_terms) >= 2 and gap >= 0
-    rows = _qlex(spark, idx, phrase_terms)
-    found = {r["term"] for r in rows}
-    if not set(phrase_terms) <= found:
-        return spark.createDataFrame([], "doc_id long")
-    stride = gap + 1
-    pos = _pruned_postings(idx, rows).select(
-        "doc_id", "term", F.explode("positions").alias("p")
-    )
-    first = pos.filter(F.col("term") == phrase_terms[0]).select(
-        "doc_id", F.col("p").alias("p0")
-    )
-    out = first
-    for i, t in enumerate(phrase_terms[1:], start=1):
-        nxt = pos.filter(F.col("term") == t).select(
-            F.col("doc_id").alias("_id"), F.col("p").alias(f"p{i}")
-        )
-        out = out.join(
-            nxt,
-            (out["doc_id"] == nxt["_id"]) & (nxt[f"p{i}"] == out["p0"] + i * stride),
-            "inner",
-        ).select(out["doc_id"], out["p0"])
-    return out.select("doc_id").distinct()
-
-
-def gap_phrase_topk(
-    spark: SparkSession, idx: dict, phrase_terms: list[str], gap: int = 1, k: int = 10
-) -> DataFrame:
-    """Ranked exact-gap phrase: :func:`gap_phrase_match` candidates scored
-    with the constituents' BM25 (the :func:`phrase_topk` scoring contract
-    applied to the gapped pattern)."""
-    cand = gap_phrase_match(spark, idx, phrase_terms, gap).select("doc_id")
+    the :func:`phrase_match` candidate set, exact-gap when ``gap`` > 0) then
+    BM25 over the phrase's terms — Lucene's PhraseQuery *scored*, not just
+    matched. Both legs are the engine's gated paths; the join keeps scoring
+    work at |candidates|, and the top-k heap runs after the filter (the
+    limit applies to phrase hits, not to the raw term candidates)."""
+    cand = phrase_match(spark, idx, phrase_terms, gap)
     return (
         bm25_scores(spark, idx, phrase_terms)
         .join(cand, "doc_id")
@@ -3237,19 +3218,6 @@ def borda_fusion_topk(
     )
 
 
-def phrase_topk_wand(
-    spark: SparkSession, idx: dict, phrase_terms: list[str], k: int = 10
-) -> DataFrame:
-    """serve.phrase_topk's compressed-physical twin: exact-phrase BM25
-    top-k served from the segment blobs (segments.phrase_topk_micros) —
-    hash-identical to the columnar path under the same oracle."""
-    from searchengine_spark.operators.segments import phrase_topk_micros
-
-    return phrase_topk_micros(
-        spark, idx["segments"], idx["lexicon"], phrase_terms, idx["avgdl"], k=k
-    )
-
-
 def _ltr_candidate_features(
     spark: SparkSession, idx: dict, query_terms: list[str], r: int
 ):
@@ -3410,19 +3378,6 @@ def ltr_train_logistic(
         w = [w[j] - _tdiv(int(g[f"g{j}"]), n * lr_den) for j in range(4)]
     return spark.createDataFrame(
         [(j, int(w[j])) for j in range(4)], "j int, weight_micros long"
-    )
-
-
-def proximity_match_wand(
-    spark: SparkSession, idx: dict, term_a: str, term_b: str, slop: int = 3
-) -> DataFrame:
-    """serve.proximity_match's compressed-physical twin: positions decoded
-    from the segment blobs in-shard (segments.proximity_match_segments) —
-    same DuckDB oracle as the columnar path."""
-    from searchengine_spark.operators.segments import proximity_match_segments
-
-    return proximity_match_segments(
-        spark, idx["segments"], idx["lexicon"], term_a, term_b, slop=slop
     )
 
 
@@ -3594,16 +3549,4 @@ def highlight_fragments(
         F.least(F.col("end_pos"), (F.size("_t") - 1).cast("long")).alias("end_pos"),
         "n_matches",
         frag.alias("fragment"),
-    )
-
-
-def ordered_proximity_wand(
-    spark: SparkSession, idx: dict, term_a: str, term_b: str, slop: int = 3
-) -> DataFrame:
-    """ordered_proximity_match's compressed-physical twin (positions from
-    the segment blobs) — same oracle as the columnar path."""
-    from searchengine_spark.operators.segments import ordered_proximity_segments
-
-    return ordered_proximity_segments(
-        spark, idx["segments"], idx["lexicon"], term_a, term_b, slop=slop
     )

@@ -110,6 +110,27 @@ def test_serve_bm25_prunes_and_broadcasts(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_positional_matches_are_one_aggregate(spark):
+    """Phrase, phrase-freq and both proximity checks read the query terms'
+    positions from ONE groupBy(doc_id) over the pruned postings: no
+    explode (Generate), no self-join, a single shuffle."""
+    from searchengine_spark.operators import serve
+    from searchengine_spark.plans.gate_index import gate_index
+
+    idx = gate_index(spark, SF_DIR)
+    for df in (
+        serve.phrase_match(spark, idx, ["big", "order", "scan"]),
+        serve.phrase_freq_topk(spark, idx, ["hash", "join"], k=10),
+        serve.proximity_match(spark, idx, "hash", "join", slop=3),
+        serve.ordered_proximity_match(spark, idx, "hash", "join", slop=3),
+    ):
+        plan = plan_of(df)
+        tree = plan.split("\n\n")[0]
+        assert "Generate" not in plan and "Join" not in plan, tree
+        assert tree.count("Exchange") == 1, tree
+        assert "bucket" in plan.split("PartitionFilters")[1].split("\n")[0]
+
+
 def test_serve_wand_prunes_buckets(spark):
     from searchengine_spark.operators import serve
     from searchengine_spark.plans.gate_index import gate_index

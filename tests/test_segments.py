@@ -164,8 +164,7 @@ def test_wand_phrase_equals_join_path(spark, index, query):
         spark, index["segments"], index["lexicon"], phrase_terms, index["avgdl"], k=10
     ).collect()
     want = search_bm25(
-        spark, index["postings"], index["lexicon"], index["documents"], query, k=10,
-        positional_phrase=True,
+        spark, index["postings"], index["lexicon"], index["documents"], query, k=10
     ).collect()
     _assert_same_ranking(got, want, len(set(phrase_terms)))
 
@@ -198,7 +197,7 @@ def test_wand_phrase_repeated_term(spark, index):
     ).collect()
     want2 = search_bm25(
         spark, index["postings"], index["lexicon"], index["documents"],
-        '"index index"', k=5, positional_phrase=True,
+        '"index index"', k=5,
     ).collect()
     _assert_same_ranking(got2, want2, 1)
 

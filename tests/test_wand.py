@@ -11,6 +11,7 @@ from searchengine_spark.operators.segments import (
     _blockmax_seg_shard,
     _exhaustive_seg_shard,
     _micros,
+    phrase_topk_micros,
 )
 
 IDFS = {"alpha": 2.3, "beta": 0.7, "gamma": 4.1, "delta": 1.0}
@@ -107,11 +108,17 @@ def test_phrase_micros_equals_columnar(spark):
     from searchengine_spark.plans.gate_index import gate_index
 
     idx = gate_index(spark, "/root/testdata/sf0.001")
+
+    def micros(phrase):
+        return phrase_topk_micros(
+            spark, idx["segments"], idx["lexicon"], phrase, idx["avgdl"], k=10
+        )
+
     cols = serve.phrase_topk(spark, idx, ["hash", "join"], k=10).collect()
-    wand = serve.phrase_topk_wand(spark, idx, ["hash", "join"], k=10).collect()
+    wand = micros(["hash", "join"]).collect()
     assert [tuple(r) for r in cols] == [tuple(r) for r in wand] and cols
     # absent term -> unmatchable phrase, empty on both paths
-    assert serve.phrase_topk_wand(spark, idx, ["hash", "zzznope"], k=10).count() == 0
+    assert micros(["hash", "zzznope"]).count() == 0
 
 
 def test_phrase_freq_consistent_with_phrase_match(spark):
