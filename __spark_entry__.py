@@ -148,9 +148,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     out = {
         # --- inverted index / retrieval, SERVED FROM THE BUILT INDEX ---
-        # (plans/gate_index.py builds postings/lexicon/segments once per sf;
-        # every entry below is a partition-pruned index lookup, not a corpus
-        # re-tokenization — SURVEY.md §2.3-2.6, §3)
+        # (plans/gate_index.py: one build_index run per sf over the documents
+        # table; every entry below is a partition-pruned index lookup, not a
+        # corpus re-tokenization — SURVEY.md §2.3-2.6, §3)
         "postings_tf": lambda spark, sf: serve.postings_tf(spark, gate_index(spark, sf)),
         "lexicon_stats": lambda spark, sf: serve.lexicon_stats(spark, gate_index(spark, sf)),
         # corpus-driven stopword generation (integer df-fraction boundary)

@@ -993,25 +993,25 @@ def run_vocab_datum() -> None:
 
     # does block-granular skipping actually pay? Same engine (Python
     # worker, numpy scoring), same segments, so the timing gap IS the
-    # pruning — measured at the serving span (n/64 shards: short per-shard
-    # posting lists) AND at a 100 TB-shaped span (few long lists per
-    # shard: 2^20-doc shards mean thousands of blocks per hot term — the
-    # regime skipping is designed for)
+    # pruning — measured at the index's own span (build_index's shard rule)
+    # AND at a 100 TB-shaped span (few long lists per shard: 2^20-doc
+    # shards mean thousands of blocks per hot term — the regime skipping
+    # is designed for)
     from searchengine_spark.operators.segments import (
         blockmax_topk_micros,
         encode_segments,
         seg_exhaustive_topk_micros,
     )
+    from searchengine_spark.plans.lineage import IndexManifest
 
     out["blockmax_vs_exhaustive"] = {}
+    span = IndexManifest(idx["dir"]).stage_metrics()["segments"]["shard_span"]
     for label, seg in [
-        (f"span_{max(512, n_docs // 64)}", idx["segments"]),
+        (f"span_{span}", idx["segments"]),
         (
             f"span_{n_docs // 4}",
             encode_segments(
-                idx["postings"].select(
-                    "term", "doc_id", "tf", F.col("dl").alias("doc_len"), "positions"
-                ),
+                idx["postings"],
                 idx["lexicon"],
                 idx["avgdl"],
                 shard_span=n_docs // 4,

@@ -23,7 +23,7 @@ from searchengine_spark.functions.textproc import index_tokenize
 _HEADING = re.compile(r"(?m)^(#{1,3})\s*(.*)$")
 
 POSTINGS_SCHEMA = (
-    "doc_id long, term string, tf int, positions array<int>, doc_len long, "
+    "doc_id long, term string, tf int, positions array<int>, dl long, "
     "term_h1 boolean, term_h2 boolean, term_h3 boolean"
 )
 
@@ -92,7 +92,7 @@ def emit_postings_arrow(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.Rec
                 pa.array(col_h3, pa.bool_()),
             ],
             names=[
-                "doc_id", "term", "tf", "positions", "doc_len",
+                "doc_id", "term", "tf", "positions", "dl",
                 "term_h1", "term_h2", "term_h3",
             ],
         )
@@ -101,14 +101,14 @@ def emit_postings_arrow(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.Rec
 def emit_postings(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas: (doc_id, content) batches → one row per (doc, term).
 
-    tf / positions / doc_len follow computeTFWithPositions exactly (quirks
+    tf / positions / dl follow computeTFWithPositions exactly (quirks
     Q1/Q2/Q4/Q15); term_h{1,2,3} is the reference's per-term header flag —
     the *stemmed* term substring-matched against raw lowercased heading text
     (Indexer.java:257-270, quirk in SURVEY.md T5).
     """
     for pdf in batches:
         out: dict[str, list] = {
-            "doc_id": [], "term": [], "tf": [], "positions": [], "doc_len": [],
+            "doc_id": [], "term": [], "tf": [], "positions": [], "dl": [],
             "term_h1": [], "term_h2": [], "term_h3": [],
         }
         for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
@@ -122,7 +122,7 @@ def emit_postings(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             out["term"].extend(terms)
             out["tf"].extend(tf.values())
             out["positions"].extend(positions[t] for t in terms)
-            out["doc_len"].extend([total] * n)
+            out["dl"].extend([total] * n)
             # substring test against the '\n'-joined heading text is exactly
             # equivalent to any(term in line): terms never contain '\n'
             for col, lines in (("term_h1", h1), ("term_h2", h2), ("term_h3", h3)):

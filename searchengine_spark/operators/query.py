@@ -27,8 +27,7 @@ from searchengine_spark.functions.textproc import (
     query_words,
     snippet_windows,
 )
-from searchengine_spark.operators.codec import BM25_B, BM25_K1
-from searchengine_spark.operators.serve import _doc_positions, _phrase_adjacent
+from searchengine_spark.operators.serve import _bm25_contrib, _doc_positions, _phrase_adjacent
 from searchengine_spark.operators.scoring import (
     H1_WEIGHT,
     H2_WEIGHT,
@@ -180,7 +179,7 @@ def search_compat(
     rows = matched.select(
         "doc_id",
         "term",
-        ((F.col("tf").cast("double") / F.col("doc_len").cast("double")) * F.col("idf_compat")).alias("_tfidf"),
+        ((F.col("tf").cast("double") / F.col("dl").cast("double")) * F.col("idf_compat")).alias("_tfidf"),
         (
             F.when(F.col("term_h1"), H1_WEIGHT).otherwise(0.0)
             + F.when(F.col("term_h2"), H2_WEIGHT).otherwise(0.0)
@@ -357,11 +356,7 @@ def search_bm25(
     # deterministic fold for the BM25 sum as well
     stats = documents.agg(F.sum("doc_len").alias("s"), F.count(F.lit(1)).alias("c")).collect()[0]
     avgdl = (float(stats["s"]) / float(stats["c"])) if stats["c"] else 1.0
-    tf = F.col("tf").cast("double")
-    dl = F.col("doc_len").cast("double")
-    contrib = F.col("idf_bm25") * (tf * (BM25_K1 + 1.0)) / (
-        tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / F.lit(avgdl))
-    )
+    contrib = _bm25_contrib(avgdl)
 
     per_doc = (
         matched.select("doc_id", "term", contrib.alias("_c"))

@@ -12,7 +12,7 @@ Physical design (doc-sharded, term-bucketed):
   per shard, and a TakeOrderedAndProject merges the per-shard heaps.
   Hot terms split across shards automatically — no single reducer ever sees
   a whole stopword-term posting list (skew defusal at encode time).
-- **bucket** = pmod(hash(term), n_buckets) — the write partition column, so
+- **bucket** = ``postings.bucket_of()`` — the write partition column, so
   a query touches only the parquet directories of its terms' buckets
   (partition pruning ≙ the reference's Mongo point lookups,
   SearchService.java:471).
@@ -39,13 +39,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark.operators import codec
+from searchengine_spark.operators.postings import build_postings, bucket_of
 from searchengine_spark.plans.persist_registry import track as _track
-
-DEFAULT_N_BUCKETS = 64
 
 # Hash-partition key of every segment encode/re-encode. Keying on bucket
 # (not term) makes each bucket=* output directory one file per shard;
-# keeping shard in the key keeps encode parallelism at n_buckets x n_shards.
+# keeping shard in the key keeps encode parallelism at N_BUCKETS x n_shards.
 ENCODE_KEY = ("bucket", "shard")
 
 SEGMENT_SCHEMA = (
@@ -60,7 +59,6 @@ def encode_segments(
     lexicon: DataFrame,
     avgdl: float,
     shard_span: int = 1 << 20,
-    n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
     """postings + lexicon → compressed segment blocks.
 
@@ -70,9 +68,10 @@ def encode_segments(
     under executor memory at any corpus size.
     """
     enriched = (
-        postings.join(F.broadcast(lexicon.select("term", "idf_bm25")), "term")
+        postings.select("term", "doc_id", "tf", "dl", "positions")
+        .join(F.broadcast(lexicon.select("term", "idf_bm25")), "term")
         .withColumn("shard", (F.col("doc_id") / F.lit(shard_span)).cast("int"))
-        .withColumn("bucket", F.pmod(F.hash("term"), F.lit(n_buckets)).cast("int"))
+        .withColumn("bucket", bucket_of())
         .withColumn("avgdl", F.lit(avgdl))
         # explicit partition count on the grouping keys: the encode is
         # PYTHON-heavy but byte-light, and AQE's size-based coalescing
@@ -132,7 +131,7 @@ def _encode_batch_pdf(pdf: pd.DataFrame, cols: list[str]) -> pd.DataFrame:
     out = codec.encode_blocks_batch(
         pdf["doc_id"].to_numpy(),
         pdf["tf"].to_numpy(),
-        pdf["doc_len"].to_numpy(),
+        pdf["dl"].to_numpy(),
         pdf["positions"].to_numpy(),
         pdf["idf_bm25"].to_numpy(),
         float(pdf["avgdl"].iloc[0]),
@@ -356,7 +355,7 @@ def _segments_from_docs(docs: DataFrame, shard_span: int = 64) -> DataFrame:
     batch, with batch-local idf/avgdl statistics (they feed only the
     block-max upper bounds — conservative after merge, exactly a real
     rolling index whose early segments carry stale statistics)."""
-    from searchengine_spark.functions.tokenize import doc_len, exploded_tokens
+    from searchengine_spark.functions.tokenize import doc_len
     from searchengine_spark.operators.ir import idf_bm25_expr
 
     # the doc batch feeds three evaluations (stats collect job, postings,
@@ -365,17 +364,12 @@ def _segments_from_docs(docs: DataFrame, shard_span: int = 64) -> DataFrame:
     # delta-segment encode of a 40% snapshot delta cost 2× the FULL
     # corpus encode before this, purely from re-evaluating the semi-join)
     docs = _track(docs.persist())
-    toks = exploded_tokens(docs, with_pos=True)
-    dls = docs.select("doc_id", doc_len(F.col("text")).alias("doc_len"))
-    post = (
-        toks.groupBy("term", "doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("tf"),
-            F.array_sort(F.collect_list("pos")).alias("positions"),
-        )
-        .join(dls, "doc_id")
+    post = build_postings(
+        docs.select("doc_id", F.col("text").alias("content")), analyzer="simple"
     )
-    stats = dls.agg(F.sum("doc_len").alias("s"), F.count(F.lit(1)).alias("c")).collect()[0]
+    stats = docs.agg(
+        F.sum(doc_len(F.col("text"))).alias("s"), F.count(F.lit(1)).alias("c")
+    ).collect()[0]
     n = int(stats["c"] or 0)
     avgdl = (float(stats["s"]) / n) if n else 1.0
     lex = post.groupBy("term").agg(F.count(F.lit(1)).alias("df")).select(
@@ -755,7 +749,7 @@ def _blockmax_seg_shard(
 
 
 def _lookup_pruned_scan(
-    segments: DataFrame, lexicon: DataFrame, terms: list[str], n_buckets: int
+    segments: DataFrame, lexicon: DataFrame, terms: list[str]
 ) -> tuple[dict[str, float], DataFrame]:
     """The lookup every segment-served query starts with: one tiny |q|-row
     lexicon collect (idf + write bucket) → the segment scan pruned to those
@@ -763,7 +757,7 @@ def _lookup_pruned_scan(
     Returns ({term: idf} of the query terms in the lexicon, pruned scan)."""
     rows = (
         lexicon.filter(F.col("term").isin(terms))
-        .select("term", "idf_bm25", F.pmod(F.hash("term"), F.lit(n_buckets)).alias("bucket"))
+        .select("term", "idf_bm25", bucket_of().alias("bucket"))
         .collect()
     )
     idfs = {r["term"]: r["idf_bm25"] for r in rows}
@@ -778,7 +772,6 @@ def _pruned_topk_micros(
     query_terms: list[str],
     avgdl: float,
     k: int,
-    n_buckets: int,
     shard_fn,
 ) -> DataFrame:
     """Shared driver plan of the segment-served top-k queries: lexicon
@@ -790,7 +783,7 @@ def _pruned_topk_micros(
     terms = list(dict.fromkeys(query_terms))
     if not terms:
         return spark.createDataFrame([], "doc_id long, score_micros long")
-    idfs, pruned = _lookup_pruned_scan(segments, lexicon, terms, n_buckets)
+    idfs, pruned = _lookup_pruned_scan(segments, lexicon, terms)
     if not idfs:
         return spark.createDataFrame([], "doc_id long, score_micros long")
 
@@ -816,14 +809,13 @@ def blockmax_topk_micros(
     query_terms: list[str],
     avgdl: float,
     k: int = 10,
-    n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
     """BM25 top-k over the compressed segments with vectorized block-max
     pruning (interval sweep, ``_blockmax_seg_shard``): (doc_id,
     score_micros), bit-identical to the columnar ``sum(round(contrib*1e6))``
     BM25, so it answers the same DuckDB oracle."""
     return _pruned_topk_micros(
-        spark, segments, lexicon, query_terms, avgdl, k, n_buckets,
+        spark, segments, lexicon, query_terms, avgdl, k,
         _blockmax_seg_shard,
     )
 
@@ -835,13 +827,12 @@ def seg_exhaustive_topk_micros(
     query_terms: list[str],
     avgdl: float,
     k: int = 10,
-    n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
     """Exhaustive segment-served BM25 (``_exhaustive_seg_shard``): decode
     and score every block, no pruning — the same-engine reference the
     block-max executor is checked and benched against."""
     return _pruned_topk_micros(
-        spark, segments, lexicon, query_terms, avgdl, k, n_buckets,
+        spark, segments, lexicon, query_terms, avgdl, k,
         _exhaustive_seg_shard,
     )
 
@@ -1096,7 +1087,6 @@ def phrase_topk_micros(
     phrase_terms: list[str],
     avgdl: float,
     k: int = 10,
-    n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
     """Scored phrase query served ENTIRELY from the compressed segments
     (positions decoded from the blobs, adjacency checked in-shard, BM25 in
@@ -1110,7 +1100,7 @@ def phrase_topk_micros(
         return _phrase_micros_in_shard(term_blocks, ordered, idfs, avgdl_, k_)
 
     return _pruned_topk_micros(
-        spark, segments, lexicon, ordered, avgdl, k, n_buckets, shard_fn
+        spark, segments, lexicon, ordered, avgdl, k, shard_fn
     )
 
 
@@ -1132,7 +1122,6 @@ def proximity_match_segments(
     term_a: str,
     term_b: str,
     slop: int = 3,
-    n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
     """Proximity search served ENTIRELY from the compressed segments:
     (doc_id, min_dist) for docs where the two terms occur within ``slop``
@@ -1142,7 +1131,7 @@ def proximity_match_segments(
     group as the top-k paths; a doc's pair work is bounded by its two term
     frequencies."""
     terms = list(dict.fromkeys([term_a, term_b]))
-    present, pruned = _lookup_pruned_scan(segments, lexicon, terms, n_buckets)
+    present, pruned = _lookup_pruned_scan(segments, lexicon, terms)
     if term_a not in present or term_b not in present:
         return spark.createDataFrame([], "doc_id long, min_dist long")
 
@@ -1169,14 +1158,13 @@ def ordered_proximity_segments(
     term_a: str,
     term_b: str,
     slop: int = 3,
-    n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
     """Ordered proximity (a BEFORE b within ``slop``) served from the
     compressed segments — (doc_id, min_gap), gap = pb − pa ≥ 1 — the
     directional sibling of :func:`proximity_match_segments`, same shard
     shape, same oracle as the columnar ordered_proximity_match."""
     terms = list(dict.fromkeys([term_a, term_b]))
-    present, pruned = _lookup_pruned_scan(segments, lexicon, terms, n_buckets)
+    present, pruned = _lookup_pruned_scan(segments, lexicon, terms)
     if term_a not in present or term_b not in present:
         return spark.createDataFrame([], "doc_id long, min_gap long")
 

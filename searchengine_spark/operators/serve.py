@@ -1,5 +1,7 @@
 """Index-served retrieval: every gated query answered from the prebuilt
-gate index (plans/gate_index.py) instead of re-tokenizing the corpus.
+gate index (plans/gate_index.py: a ``build_index`` run over the documents
+table, plus the docvecs and impacts tables derived from it) instead of
+re-tokenizing the corpus.
 
 This is the engine's actual physical query path, mirroring the reference's
 index-served lookups (SearchService.java:464-477 — per-term fetches against
@@ -1174,7 +1176,7 @@ def compat_fixture(spark: SparkSession, sf_dir: str) -> dict:
         "term",
         "doc_id",
         "tf",
-        F.col("dl").alias("doc_len"),
+        "dl",
         "positions",
         (minpos < 5).alias("term_h1"),
         ((minpos >= 5) & (minpos < 15)).alias("term_h2"),
@@ -2605,7 +2607,7 @@ def term_vectors(
     positions_csv) for the requested documents.
 
     The inverted postings are bucketed by TERM, so a by-doc fetch against
-    them would scan every bucket; gate_index v3 therefore also stores
+    them would scan every bucket; the gate index therefore also stores
     ``docvecs`` — the same rows re-bucketed by ``pmod(doc_id, N_BUCKETS)``.
     The lookup prunes to the requested docs' bucket directories (partition
     pruning) plus a doc_id predicate pushed to parquet — a true point read,
@@ -2613,7 +2615,7 @@ def term_vectors(
     Positions are the stored raw-split-array offsets (quirk Q4 contract),
     rendered as a sorted CSV string so both engines hash identically.
     """
-    from searchengine_spark.plans.gate_index import N_BUCKETS
+    from searchengine_spark.operators.postings import N_BUCKETS
 
     uniq = sorted({int(d) for d in doc_ids})
     buckets = sorted({d % N_BUCKETS for d in uniq})
@@ -2854,7 +2856,7 @@ def bm25_impact_topk(
     """Quantized-impact serving (the Anserini/impact-index tier, the shape
     learned-sparse models like SPLADE serve through): every posting's BM25
     contribution was frozen AT INDEX TIME to an 8-bit level of the global
-    max contribution (gate_index v4 ``impacts/`` + the ``max_contrib``
+    max contribution (the gate index's ``impacts/`` + the ``max_contrib``
     manifest scalar), so query-time scoring is a pure integer sum — no
     doc-length join, no idf lookup, no float op anywhere in the plan.
 

@@ -5,14 +5,15 @@ trigram-prefilter QUERY semantics of Google Code Search (Cox, "Regular
 Expression Matching with a Trigram Index", 2012, public) and Zoekt, but
 compute the per-doc trigram set in-plan, i.e. every query re-derives the
 trigrams from the raw corpus. This module materializes the trigram
-postings ONCE — exactly the way ``plans/gate_index.py`` materializes the
-term postings — so substring/regex queries become pruned index lookups:
+postings ONCE, bucketed by the same hash rule as the term postings
+(``postings.bucket_of``) and cached by the same content-addressed
+build-or-load helper as the gate index (``gate_index.cached_index``) — so
+substring/regex queries become pruned index lookups:
 
 - ``grams/``  (bucket, gram, doc_id) parquet, **partitioned by gram-hash
   bucket** with per-file gram bloom filters, one row per DISTINCT trigram
   per document (Zoekt's ngram→docs map). A query touching g trigrams scans
   at most g of the 64 bucket directories.
-- ``meta.json``  n_docs.
 
 Query plan (identical to the reference-style term serve path):
 candidate doc_ids = the docs containing EVERY trigram of the needle
@@ -36,24 +37,15 @@ while partition pruning keeps a query's scan to its own grams.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from searchengine_spark.operators.postings import N_BUCKETS, bucket_of
 from searchengine_spark.sources.tables import load_table
 
 TRIGRAM_INDEX_VERSION = 1
-N_BUCKETS = 64
-
-# in-memory cache: (spark appId, digest) -> handles dict
-_LOADED: dict[tuple[str, str], dict] = {}
-
-
-def _cache_root() -> str:
-    return os.path.join(os.environ.get("TMPDIR", "/tmp"), "sespark_trigram_index")
 
 
 def trigrams_of(literal: str) -> list[str]:
@@ -83,7 +75,7 @@ def doc_trigrams(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     return base.select("doc_id", F.explode(grams).alias("gram")).select(
         "gram",
         "doc_id",
-        F.pmod(F.hash("gram"), F.lit(N_BUCKETS)).cast("int").alias("bucket"),
+        bucket_of("gram").alias("bucket"),
     )
 
 
@@ -91,46 +83,22 @@ def build_trigram_index(spark: SparkSession, sf_dir: str, base: str) -> None:
     """Build the trigram index into ``base`` (assumed empty/tmp)."""
     from searchengine_spark.plans.lineage import term_bloom_options
 
-    docs = load_table(spark, sf_dir, "documents")
-    grams = doc_trigrams(docs)
+    grams = doc_trigrams(load_table(spark, sf_dir, "documents"))
     grams.write.mode("overwrite").options(
         **term_bloom_options(1 << 14, column="gram")
     ).partitionBy("bucket").parquet(os.path.join(base, "grams"))
-    n_docs = docs.count()
-    with open(os.path.join(base, "meta.json"), "w") as f:
-        json.dump({"n_docs": int(n_docs)}, f)
 
 
 def trigram_index(spark: SparkSession, sf_dir: str) -> dict:
-    """Build-or-load the trigram index for ``sf_dir`` (content-addressed
-    disk cache + atomic publish, the gate_index pattern)."""
-    from searchengine_spark.plans.gate_index import _digest
+    """Build-or-load the trigram index for ``sf_dir``: {grams, dir}."""
+    from searchengine_spark.plans.gate_index import cached_index
 
-    dig = f"tri{TRIGRAM_INDEX_VERSION}-{_digest(sf_dir)}"
-    key = (spark.sparkContext.applicationId, dig)
-    if key in _LOADED:
-        return _LOADED[key]
+    def load(spark_: SparkSession, base: str) -> dict:
+        return {"grams": spark_.read.parquet(os.path.join(base, "grams")), "dir": base}
 
-    base = os.path.join(_cache_root(), dig)
-    if not os.path.exists(os.path.join(base, "meta.json")):
-        tmp = base + f".tmp{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp, exist_ok=True)
-        build_trigram_index(spark, sf_dir, tmp)
-        try:
-            os.rename(tmp, base)  # atomic publish
-        except OSError:  # lost a concurrent-build race — use the winner
-            shutil.rmtree(tmp, ignore_errors=True)
-
-    with open(os.path.join(base, "meta.json")) as f:
-        meta = json.load(f)
-    idx = {
-        "grams": spark.read.parquet(os.path.join(base, "grams")),
-        "n_docs": int(meta["n_docs"]),
-        "dir": base,
-    }
-    _LOADED[key] = idx
-    return idx
+    return cached_index(
+        spark, sf_dir, "tri", TRIGRAM_INDEX_VERSION, build_trigram_index, load
+    )
 
 
 _BUCKET_MEMO: dict[str, int] = {}
@@ -146,7 +114,7 @@ def _buckets_for(spark: SparkSession, tris: list[str]) -> list[int]:
             spark.createDataFrame([(g,) for g in missing], "gram string")
             .select(
                 "gram",
-                F.pmod(F.hash("gram"), F.lit(N_BUCKETS)).cast("int").alias("b"),
+                bucket_of("gram").alias("b"),
             )
             .collect()
         )

@@ -1,16 +1,18 @@
 """End-to-end index build (SURVEY.md §3.3 "ours"):
 
 corpus scan → ingest (sha256 invariant, dedup, deterministic doc_ids)
-→ tokenizer UDF (map-only postings) → salted lexicon agg → compressed
+→ tokenizer (map-only postings) → salted lexicon agg → compressed
 segments → edges → PageRank → documents finalize — each stage atomically
-published with lineage metrics, resumable at stage granularity.
+published with lineage metrics, resumable at stage granularity. A
+documents table skips ingest and the edges/PageRank/documents stages: its
+postings, lexicon and segments are the gate index (plans/gate_index.py).
 
 Orchestration discipline: every stage runs exactly ONE Spark action (its
 write); row counts and byte sizes come from the written parquet footers on
 the driver, lineage rows are driver-side pyarrow appends, and scalar stats
-(n_docs, avgdl) are threaded through the manifest instead of re-counted.
-At 10^12 scale the same structure holds — per-stage metadata is O(files),
-not O(rows).
+(n_docs, sum_dl, avgdl) are threaded through the manifest instead of
+re-counted. At 10^12 scale the same structure holds — per-stage metadata
+is O(files), not O(rows).
 """
 
 from __future__ import annotations
@@ -33,21 +35,32 @@ def build_index(
     with_pagerank: bool = True,
     n_salts: int | None = None,
     shard_span: int | None = None,
+    analyzer: str = "reference",
 ) -> dict:
     """Build (or resume) the full index under ``index_dir``.
+
+    ``corpus`` is a corpus (repo, path, commit, content, ...), which runs
+    through ingest, edges and PageRank, or a documents table (doc_id, text,
+    ...), indexed in place under its own doc_ids; the schema says which.
+    ``analyzer`` is the tokenizer (operators/postings.py): ``reference``
+    for rank-identity with the reference, ``simple`` for the split the
+    DuckDB oracles compute.
 
     Returns a metrics dict (per-stage wall/rows). Safe to re-run: stages
     whose input fingerprint matches the manifest are skipped, and a killed
     run resumes from the last published stage (tests/test_resume.py).
     """
     manifest = lin.IndexManifest(index_dir)
-    fp = lin.corpus_fingerprint(corpus)
+    # the analyzer is part of every stage's input: switching it rebuilds
+    fp = f"{analyzer}:{lin.corpus_fingerprint(corpus)}"
 
     def stage_path(stage: str) -> str:
         return os.path.join(index_dir, stage)
 
-    # ---- stage: documents (ingest + doc ids) --------------------------------
-    if not manifest.is_done("documents_raw", fp):
+    documents_input = "doc_id" in corpus.columns
+
+    # ---- stage: documents (ingest + doc ids; corpus input) ------------------
+    if not documents_input and not manifest.is_done("documents_raw", fp):
         with lin.StageTimer() as t:
             docs = ingest.build_documents(corpus, n_partitions)
             lin.publish_stage(docs, index_dir, "documents_raw")
@@ -58,17 +71,26 @@ def build_index(
         n_docs = sum(p["rows"] for p in parts)
         lin.append_lineage(spark, index_dir, "documents", fp, parts, 0, 0, 1.0, t.wall_ms)
         manifest.mark_done("documents_raw", fp, {"wall_ms": t.wall_ms, "n_docs": n_docs})
-    docs = spark.read.parquet(stage_path("documents_raw"))
-    n_docs = manifest.stage_metrics()["documents_raw"]["n_docs"]
+    if documents_input:
+        docs = corpus.select("doc_id", F.col("text").alias("content"))
+        n_docs = int(fp.rsplit(":", 1)[1])  # the fingerprint ends with the row count
+    else:
+        docs = spark.read.parquet(stage_path("documents_raw"))
+        n_docs = manifest.stage_metrics()["documents_raw"]["n_docs"]
 
-    # ---- stage: postings (map-only tokenizer) -------------------------------
+    # ---- stage: postings (tokenize) -----------------------------------------
     if not manifest.is_done("postings", fp):
         with lin.StageTimer() as t:
-            post = postings_ops.build_postings(docs)
-            # vocab is unknown pre-lexicon; n_docs is the standard proxy
-            # ceiling for per-file distinct terms in an unpartitioned write
+            post = postings_ops.build_postings(docs, analyzer)
+            # clustered on bucket, so each bucket=* directory is one file.
+            # The vocab is unknown pre-lexicon; n_docs is the standard proxy
+            # ceiling for it, spread over the bucket files
             lin.publish_stage(
-                post, index_dir, "postings", options=lin.term_bloom_options(n_docs)
+                post.repartition("bucket"),
+                index_dir,
+                "postings",
+                partition_by=["bucket"],
+                options=lin.term_bloom_options(n_docs // postings_ops.N_BUCKETS),
             )
         parts = lin.partition_metrics(stage_path("postings"))
         n_post = sum(p["rows"] for p in parts)
@@ -77,7 +99,7 @@ def build_index(
     post = spark.read.parquet(stage_path("postings"))
     n_post = manifest.stage_metrics()["postings"]["postings"]
 
-    # ---- stage: lexicon (salted df/idf agg) + avgdl + skew metric -----------
+    # ---- stage: lexicon (salted df/idf agg) + corpus scalars + skew ---------
     if not manifest.is_done("lexicon", fp):
         salts = n_salts or postings_ops.choose_salts(
             n_post, int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -87,27 +109,37 @@ def build_index(
             lin.publish_stage(lex, index_dir, "lexicon")
             # one tiny narrow agg over the WRITTEN lexicon for both scalars:
             # term-bucket skew (the lineage skew_ratio the north rule asks
-            # for) from the df counts, and avgdl from sum(cf) — cf rode the
+            # for) from the df counts, and sum_dl from sum(cf) — cf rode the
             # lexicon shuffle, and sum(cf) == sum(tf) over all postings ==
-            # sum(doc_len) (every kept token adds 1 to both, textproc
-            # .index_tokenize), so the stage never re-scans postings.
+            # sum(dl) (every kept token adds 1 to both, under either
+            # analyzer), so the stage never re-scans postings.
             stats = (
                 spark.read.parquet(stage_path("lexicon"))
-                .groupBy(F.pmod(F.hash("term"), F.lit(32)).alias("b"))
+                .groupBy("bucket")
                 .agg(F.sum("df").alias("n"), F.sum("cf").alias("c"))
                 .agg(
                     F.max("n").alias("mx"),
                     F.avg("n").alias("mean"),
-                    F.sum("c").alias("sum_tf"),
+                    F.sum("c").alias("sum_dl"),
                 )
                 .collect()[0]
             )
         skew = float(stats["mx"]) / float(stats["mean"]) if stats["mean"] else 1.0
-        avgdl = float(stats["sum_tf"] or 0) / n_docs if n_docs else 1.0
+        sum_dl = int(stats["sum_dl"] or 0)
+        avgdl = float(sum_dl) / n_docs if n_docs else 1.0
         parts = lin.partition_metrics(stage_path("lexicon"))
         lin.append_lineage(spark, index_dir, "lexicon", fp, parts, 0, 0, skew, t.wall_ms)
         manifest.mark_done(
-            "lexicon", fp, {"wall_ms": t.wall_ms, "n_salts": salts, "skew_ratio": skew, "avgdl": avgdl}
+            "lexicon",
+            fp,
+            {
+                "wall_ms": t.wall_ms,
+                "n_salts": salts,
+                "skew_ratio": skew,
+                "n_docs": n_docs,
+                "sum_dl": sum_dl,
+                "avgdl": avgdl,
+            },
         )
     avgdl = manifest.stage_metrics()["lexicon"]["avgdl"]
     skew = manifest.stage_metrics()["lexicon"]["skew_ratio"]
@@ -137,16 +169,20 @@ def build_index(
                 partition_by=["bucket"],
                 # encode clusters on (bucket, shard), so each bucket=* dir
                 # holds one file per shard and each file sees
-                # ~vocab/n_buckets terms
-                options=lin.term_bloom_options(n_terms // 64),
+                # ~vocab/N_BUCKETS terms
+                options=lin.term_bloom_options(n_terms // postings_ops.N_BUCKETS),
             )
         parts = lin.partition_metrics(stage_path("segments"))
         seg_bytes = sum(p["bytes"] for p in parts)
         lin.append_lineage(spark, index_dir, "segments", fp, parts, n_post, seg_bytes, skew, t.wall_ms)
-        manifest.mark_done("segments", fp, {"wall_ms": t.wall_ms, "bytes": seg_bytes, "avgdl": avgdl})
+        manifest.mark_done(
+            "segments",
+            fp,
+            {"wall_ms": t.wall_ms, "bytes": seg_bytes, "avgdl": avgdl, "shard_span": span},
+        )
 
-    # ---- stage: edges + pagerank → documents finalize ------------------------
-    if not manifest.is_done("documents_final", fp):
+    # ---- stage: edges + pagerank → documents finalize (corpus input) --------
+    if not documents_input and not manifest.is_done("documents_final", fp):
         with lin.StageTimer() as t:
             edges = extract_edges(docs)
             lin.publish_stage(edges, index_dir, "edges")
@@ -156,7 +192,7 @@ def build_index(
             else:
                 pr = docs.select("doc_id").withColumn("pagerank", F.lit(0.0))
             # doc_len comes from the postings table (Q15: kept tokens only)
-            dl = post.groupBy("doc_id").agg(F.first("doc_len").alias("doc_len"))
+            dl = post.groupBy("doc_id").agg(F.first("dl").alias("doc_len"))
             final = (
                 docs.join(pr, "doc_id", "left")
                 .join(dl, "doc_id", "left")
@@ -174,16 +210,13 @@ def build_index(
 
 
 def load_index(spark: SparkSession, index_dir: str) -> dict:
-    """The index tables as DataFrames, plus ``avgdl``: the build manifest's
-    lexicon-stage scalar, so a query needs no job over documents for it."""
-    out = {
-        "avgdl": lin.IndexManifest(index_dir).stage_metrics()["lexicon"]["avgdl"],
-        "documents": spark.read.parquet(os.path.join(index_dir, "documents")),
-        "postings": spark.read.parquet(os.path.join(index_dir, "postings")),
-        "lexicon": spark.read.parquet(os.path.join(index_dir, "lexicon")),
-        "edges": spark.read.parquet(os.path.join(index_dir, "edges")),
-    }
-    seg_path = os.path.join(index_dir, "segments")
-    if os.path.exists(seg_path):
-        out["segments"] = spark.read.parquet(seg_path)
+    """The index tables as DataFrames (those the build published: a
+    documents-table input has no ``documents`` or ``edges``), plus
+    ``avgdl``: the build manifest's lexicon-stage scalar, so a query needs
+    no job over documents for it."""
+    out: dict = {"avgdl": lin.IndexManifest(index_dir).stage_metrics()["lexicon"]["avgdl"]}
+    for table in ("documents", "postings", "lexicon", "edges", "segments"):
+        path = os.path.join(index_dir, table)
+        if os.path.exists(path):
+            out[table] = spark.read.parquet(path)
     return out

@@ -60,11 +60,14 @@ class IndexManifest:
 
 def corpus_fingerprint(corpus: DataFrame) -> str:
     """Order-insensitive content fingerprint of the input: xor of per-row
-    hashes + row count. One cheap aggregate; drives stage-skip decisions."""
-    row = corpus.agg(
-        F.bit_xor(F.xxhash64(F.sha2("content", 256), "repo", "path", "commit")).alias("x"),
-        F.count(F.lit(1)).alias("c"),
-    ).collect()[0]
+    hashes + row count. One cheap aggregate; drives stage-skip decisions.
+    A documents table (``doc_id``, ``text``) hashes each text with its id; a
+    corpus hashes each content with its (repo, path, commit) key."""
+    if "doc_id" in corpus.columns:
+        row_hash = F.xxhash64("doc_id", F.sha2("text", 256))
+    else:
+        row_hash = F.xxhash64(F.sha2("content", 256), "repo", "path", "commit")
+    row = corpus.agg(F.bit_xor(row_hash).alias("x"), F.count(F.lit(1)).alias("c")).collect()[0]
     return f"{row['x']}:{row['c']}"
 
 

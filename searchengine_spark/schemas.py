@@ -43,7 +43,8 @@ POSTINGS = T.StructType(
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("tf", T.IntegerType(), False),
         T.StructField("positions", T.ArrayType(T.IntegerType()), False),
-        T.StructField("doc_len", T.LongType(), False),
+        T.StructField("dl", T.LongType(), False),
+        T.StructField("bucket", T.IntegerType(), False),  # postings.bucket_of
     ]
 )
 
@@ -54,13 +55,14 @@ LEXICON = T.StructType(
         T.StructField("cf", T.LongType(), False),  # collection freq (sum tf)
         T.StructField("idf_compat", T.DoubleType(), False),  # ln(N/(1+df)) Q9
         T.StructField("idf_bm25", T.DoubleType(), False),  # Robertson
+        T.StructField("bucket", T.IntegerType(), False),  # postings.bucket_of
     ]
 )
 
 # field order mirrors operators/segments.py::SEGMENT_SCHEMA exactly
 SEGMENTS = T.StructType(
     [
-        T.StructField("bucket", T.IntegerType(), False),  # hash(term) % n_buckets
+        T.StructField("bucket", T.IntegerType(), False),  # postings.bucket_of
         T.StructField("shard", T.IntegerType(), False),  # doc_id // shard_span
         T.StructField("term", T.StringType(), False),
         T.StructField("block_id", T.IntegerType(), False),

@@ -100,3 +100,23 @@ def test_bitpack_beats_varint_on_small_gaps():
 
     gaps = (np.arange(1000, dtype=np.uint64) % 15) + 1
     assert len(bitpack_encode(gaps)) < len(varint_encode(gaps)) / 1.9
+
+
+def test_bm25_contrib_column_equals_numpy(spark):
+    """The two BM25 forms — ``serve._bm25_contrib`` (Column, every
+    postings-served scorer) and ``codec.bm25_contrib`` (numpy, every
+    segment-served scorer) — agree to the bit, so to the micro, over random
+    (tf, dl, idf, avgdl)."""
+    from searchengine_spark.operators.codec import bm25_contrib
+    from searchengine_spark.operators.serve import _bm25_contrib
+
+    rng = np.random.default_rng(7)
+    tf = rng.integers(1, 1000, 300)
+    dl = rng.integers(1, 100_000, 300)
+    idf = rng.uniform(0.01, 20.0, 300)
+    rows = [(int(a), int(b), float(c)) for a, b, c in zip(tf, dl, idf)]
+    df = spark.createDataFrame(rows, "tf int, dl long, idf_bm25 double")
+    for avgdl in (1.0, 37.5, float(rng.uniform(1.0, 5000.0))):
+        got = [r["c"] for r in df.select(_bm25_contrib(avgdl).alias("c")).collect()]
+        want = [float(bm25_contrib(np.array([a]), np.array([b]), c, avgdl)[0]) for a, b, c in rows]
+        assert got == want

@@ -58,8 +58,8 @@ def test_doc_ids_match_oracle(spark, index, oracle):
 
 
 def test_doc_len_and_postings_match(spark, index, oracle):
-    rows = index["postings"].select("term", "doc_id", "tf", "doc_len").collect()
-    got = {(r["term"], r["doc_id"]): (r["tf"], r["doc_len"]) for r in rows}
+    rows = index["postings"].select("term", "doc_id", "tf", "dl").collect()
+    got = {(r["term"], r["doc_id"]): (r["tf"], r["dl"]) for r in rows}
     want = {}
     for term, posts in oracle.postings.items():
         for doc_id, tf in posts.items():

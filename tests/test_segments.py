@@ -135,14 +135,16 @@ def test_one_file_per_bucket_shard(spark, index, tmp_path_factory):
     assert max(n_shards) > 1
 
 
-def test_gate_index_one_file_per_bucket(spark):
-    """The gate index's segments and docvecs directories hold one parquet
-    file per bucket (one shard at this size)."""
+def test_gate_index_one_file_per_bucket(spark, index):
+    """The gate index's postings, segments and docvecs directories hold one
+    parquet file per bucket (one shard at this size), and so do the
+    postings build_index publishes from a corpus."""
     from searchengine_spark.plans.gate_index import gate_index
 
     base = gate_index(spark, "/root/testdata/sf0.001")["dir"]
-    for table in ("segments", "docvecs"):
-        files = _parquet_files_per_dir(os.path.join(base, table))
+    tables = [os.path.join(base, t) for t in ("postings", "segments", "docvecs")]
+    for table in tables + [os.path.join(index["dir"], "postings")]:
+        files = _parquet_files_per_dir(table)
         assert files and {len(f) for f in files.values()} == {1}, (table, files)
 
 

@@ -26,7 +26,7 @@ def test_stream_corpus_to_postings(spark, tmp_path):
     assert batches
     post = spark.read.parquet(os.path.join(out_dir, "*"))
     assert post.count() > 0
-    assert set(post.columns) >= {"doc_id", "term", "tf", "positions", "doc_len"}
+    assert set(post.columns) >= {"doc_id", "term", "tf", "positions", "dl"}
     # same tokenizer as batch: spot-check one term exists
     assert post.filter(F.col("term") == "spark").count() > 0
 
