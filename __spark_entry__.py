@@ -110,12 +110,6 @@ def _codestats():
     return codestats
 
 
-def _corpusstats():
-    from searchengine_spark.operators import corpusstats
-
-    return corpusstats
-
-
 def _docid_reorder_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from searchengine_spark.operators.layout import docid_reorder_gain
 
@@ -141,7 +135,7 @@ def _crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from searchengine_spark.operators import dedup, relational, segments, similarity, textstats
+    from searchengine_spark.operators import corpusstats, dedup, segments, similarity, textstats
 
     def emb(spark, sf):
         return load_table(spark, sf, "embeddings")
@@ -711,27 +705,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # scalar int8 quantization (SQ8): per-dimension corpus min/max +
         # integer scaling — 4× smaller vectors, pure codegen
         "embedding_sq8": lambda spark, sf: similarity.sq8_codes(emb(spark, sf)),
-        # --- multimodal plumbing (deterministic-fake decode; the Spark-side
-        # schema/partitioning/Arrow machinery is real, the media libs are
-        # stubbed — SURVEY/VERDICT multimodal row) ---
-        # REAL stdlib media decode (VERDICT r03 ask #4): spec-valid WAV/BMP
-        # container bytes built JVM-side, genuinely parsed by wave/struct;
-        # oracle recomputes the decoded stats from the synthesis closed form
-        "audio_decode_stats": lambda spark, sf: _decode_stats(spark, sf, "audio"),
-        "image_decode_stats": lambda spark, sf: _decode_stats(spark, sf, "image"),
-        "video_decode_stats": lambda spark, sf: _decode_stats(spark, sf, "video"),
-        # decode NEGATIVE paths (VERDICT r04 ask #7): valid + truncated +
-        # bad-magic + unsupported-codec blobs per kind, each flagged
-        # ok/malformed/unsupported deterministically — a 100 TB crawl's
-        # media column is mostly malformed bytes, and a truncated container
-        # must flag, not silently mis-parse into plausible stats
-        "media_decode_validate": lambda spark, sf: _media_decode_validate(spark, sf),
-        "image_features": lambda spark, sf: _media_features(spark, sf, "image"),
-        # CLIP-shape cross-modal retrieval: fake image tower -> joint space
-        # -> cosine top-k against the text-embedding corpus
-        "crossmodal_topk": lambda spark, sf: _crossmodal_topk(spark, sf),
-        "audio_features": lambda spark, sf: _media_features(spark, sf, "audio"),
-        "video_frame_sample": lambda spark, sf: _video_frames(spark, sf),
         # --- crawl-side plumbing (S2/F12 analogs) ---
         # distributed fetch with host-partitioned politeness; deterministic
         # fake transport (sandbox has no network), oracle-recomputed content
@@ -789,7 +762,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # set over the synthetic link graph (depth = min hops from seeds)
         "crawl_frontier_bfs": lambda spark, sf: _frontier_bfs(spark, sf),
         # bigram-model next-word autocomplete
-        "next_word_suggest": lambda spark, sf: relational.next_word_suggest(
+        "next_word_suggest": lambda spark, sf: serve.next_word_suggest(
             spark, sf, "hash", k=5
         ),
         # fixed-size overlapping token-window chunking (pre-packing step)
@@ -848,49 +821,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "winnowing_fingerprints": lambda spark, sf: dedup.winnowing_fingerprints(
             _docs(spark, sf)
         ),
-        # --- relational coverage (joins/aggs/windows/rollup/events) ---
-        "q1_pricing_summary": relational.q1_pricing_summary,
-        "q3_top_orders": relational.q3_top_orders,
-        "top_orders_per_customer": relational.top_orders_per_customer,
-        "customers_without_orders": relational.customers_without_orders,
-        "suppliers_with_shipments": relational.suppliers_with_shipments,
-        "orders_rollup": relational.orders_rollup,
-        "events_hourly": relational.events_hourly,
-        "events_sessionize": relational.events_sessionize,
-        # first-touch conversion funnel view -> click -> purchase
-        "events_funnel": relational.events_funnel,
-        # weekly signup-cohort retention matrix
-        "retention_cohorts": relational.retention_cohorts,
-        # schema-on-read JSON property extraction + exact histogram
-        "events_json_stats": relational.events_json_stats,
-        "events_asof_prior": relational.events_asof_prior,
-        # interval (time-bounded) join: multi-touch click→purchase
-        # attribution; the streaming twin runs the identical join as a
-        # watermarked stream-stream join (streaming==batch pytest-pinned)
-        "events_attribution": lambda spark, sf: relational.events_attribution(
-            spark, sf, window_min=360
-        ),
-        "events_quantiles": relational.events_quantiles,
-        # mergeable equi-width histogram sketch + interpolated quantiles
-        # (the distributed alternative to the exact sort-based gate above)
-        "hist_quantiles": lambda spark, sf: _hist_quantiles(spark, sf),
-        "events_pivot_by_type": relational.events_pivot_by_type,
-        "heavy_hitter_terms": relational.heavy_hitter_terms,
-        "lineitem_moments": relational.lineitem_moments,
-        "orders_cube": relational.orders_cube,
-        "doc_length_histogram": relational.doc_length_histogram,
-        "top_bigrams": relational.top_bigrams,
-        "user_daily_activity": relational.user_daily_activity,
-        "events_hopping_window": relational.events_hopping_window,
-        # trending detection: per-sliding-window top-k event types — the
-        # batch twin of streaming/ingest.stream_trending (same window spec;
-        # streaming==batch equality is pytest-enforced)
-        "trending_topk": lambda spark, sf: relational.trending_topk(
-            spark, sf, window_min=360, slide_min=60, k=3
-        ),
-        # trailing time-RANGE frame (value-based window bounds): per-event
-        # count/sum/mean of the user's preceding hour
-        "events_moving_avg": relational.events_moving_avg,
+        "heavy_hitter_terms": corpusstats.heavy_hitter_terms,
+        "doc_length_histogram": corpusstats.doc_length_histogram,
+        "top_bigrams": corpusstats.top_bigrams,
         # collocation mining: bigram PMI (association), next to top_bigrams
         # (frequency)
         "pmi_top_pairs": lambda spark, sf: textstats.pmi_top_pairs(
@@ -910,17 +843,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         # per-source unigram KL divergence vs the corpus — the domain-drift
         # / mixing-weight diagnostic (integer-nanos fixed-point sums)
-        "domain_kl_drift": lambda spark, sf: _corpusstats().domain_kl_drift(
+        "domain_kl_drift": lambda spark, sf: corpusstats.domain_kl_drift(
             _docs(spark, sf)
         ),
         # Zipf-exponent OLS fit over the top-1000 term frequencies — the
         # corpus-health statistic (exact integer sums → identical doubles)
-        "zipf_slope": lambda spark, sf: _corpusstats().zipf_slope(
+        "zipf_slope": lambda spark, sf: corpusstats.zipf_slope(
             _docs(spark, sf), top_n=1000
         ),
         # Heaps'-law V = K·N^β vocabulary-growth fit over doc-id prefix
         # checkpoints — predicts lexicon growth for capacity planning
-        "heaps_law": lambda spark, sf: _corpusstats().heaps_law(
+        "heaps_law": lambda spark, sf: corpusstats.heaps_law(
             _docs(spark, sf), n_checkpoints=10
         ),
         # Z-order (Morton) clustering key + file group over (user, time) —
@@ -936,11 +869,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # never been driver-checked (plus everything changed this round) to the
     # front; the rest keep their original order. Rotation log: COVERAGE.md.
     rotate_front = [
-        # r05 window (VERDICT r04 ask #1): the FINAL 50 gates never driver-
-        # checked in any of CORRECTNESS_r01-r04 — all 50 rows below are
-        # first-time driver checks; with them, every one of the 209 gates
-        # has appeared in a driver window across rounds. knn_graph leads
-        # (ADVICE r04: it was entry #51 last round and silently dropped).
+        # r05 window (VERDICT r04 ask #1): the 50 gates never driver-checked
+        # in CORRECTNESS_r01-r04, less the 11 that left with the TPC-H/event
+        # and media-decode families. knn_graph leads (ADVICE r04: it was
+        # entry #51 last round and silently dropped).
         "knn_graph",
         "kmeans_centroids",
         "ann_lsh_multiprobe_topk",
@@ -948,9 +880,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_pq_topk",
         "embedding_rp_project",
         "embedding_sq8",
-        "image_features",
-        "audio_features",
-        "video_frame_sample",
         "fetch_pages",
         "strip_html",
         "ascii_fold",
@@ -977,13 +906,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cms_term_counters",
         "bloom_visited",
         "winnowing_fingerprints",
-        "events_funnel",
-        "retention_cohorts",
-        "events_json_stats",
-        "events_attribution",
-        "hist_quantiles",
-        "trending_topk",
-        "events_moving_avg",
         "pmi_top_pairs",
         "bigram_logprob",
         "kn_bigram_logprob",
@@ -1031,70 +953,9 @@ def _regex_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _decode_stats(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    """Real-decode gates: one spec-valid WAV/BMP blob per documents row
-    (size scales with sf); stats from a genuine stdlib container parse,
-    recomputed closed-form by the DuckDB oracle."""
-    from searchengine_spark.operators import multimodal
-
-    n = _docs(spark, sf_dir).count()
-    if kind == "audio":
-        return multimodal.wav_decode_stats(multimodal.make_wav_media(spark, n))
-    if kind == "video":
-        return multimodal.avi_decode_stats(multimodal.make_avi_media(spark, n))
-    return multimodal.bmp_decode_stats(multimodal.make_bmp_media(spark, n))
-
-
-def _media_decode_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Negative-path decode gate: one (valid|truncated|bad-magic|
-    unsupported-codec) blob per documents row per kind (corruption class =
-    media_id % 4, synthesized/corrupted JVM-side), classified by the REAL
-    hardened stdlib decoders; the oracle recomputes the expected flag
-    closed-form from the id arithmetic."""
-    from searchengine_spark.operators import multimodal
-
-    n = _docs(spark, sf_dir).count()
-    return multimodal.media_decode_validate(multimodal.make_corrupt_media(spark, n))
-
-
-def _media_features(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    """Fake-media feature gates: one media row per documents row (size scales
-    with sf), features recomputed bit-for-bit by the DuckDB oracle."""
-    from searchengine_spark.operators import multimodal
-
-    n = _docs(spark, sf_dir).count()
-    media = multimodal.make_fake_media(spark, n)
-    fn = multimodal.image_features if kind == "image" else multimodal.audio_features
-    return fn(media, deterministic_fake=True)
-
-
 # stop-shingle cap (dedup_ngram_jaccard gate): integer-exact in both engines
 NGRAM_DF_CAP_MIN = 16
 NGRAM_DF_CAP_DEN = 100  # cap = max(16, ceil_div(n_docs, 100))
-
-
-def _crossmodal_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators import multimodal
-
-    n = _docs(spark, sf_dir).count()
-    return multimodal.crossmodal_topk(
-        spark,
-        multimodal.make_fake_media(spark, n),
-        load_table(spark, sf_dir, "embeddings"),
-        n_query_media=4,
-        k=5,
-    )
-
-
-def _video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling plan gate: JVM-side sequence explode over the
-    duration metadata of the deterministic fake media table."""
-    from searchengine_spark.operators import multimodal
-
-    n = _docs(spark, sf_dir).count()
-    return multimodal.frame_sample_plan(
-        multimodal.make_fake_media(spark, n), every_n_seconds=5
-    )
 
 
 def _ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1160,12 +1021,6 @@ def _hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from searchengine_spark.operators.sketches import hll_registers
 
     return hll_registers(_docs(spark, sf_dir))
-
-
-def _hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators.sketches import hist_quantiles
-
-    return hist_quantiles(load_table(spark, sf_dir, "events"))
 
 
 def _bloom_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1649,7 +1504,6 @@ def oracle_sql() -> dict[str, str]:
         "domain_kl_drift": oracles.domain_kl_drift_sql(),
         "zipf_slope": oracles.zipf_slope_sql(top_n=1000),
         "heaps_law": oracles.heaps_law_sql(n_checkpoints=10),
-        "trending_topk": oracles.trending_topk_sql(window_min=360, slide_min=60, k=3),
         "weighted_sample": oracles.weighted_sample_topn_sql(n=100),
         "crawl_schedule": oracles.crawl_schedule_sql(n_hosts=7, delay_ms=500),
         "knn_graph": oracles.knn_graph_sql(
@@ -1721,14 +1575,6 @@ def oracle_sql() -> dict[str, str]:
         # bit-packed encode->decode must reproduce the corpus tokenization
         "bitpacked_postings": oracles.postings_sql(),
         "ann_cosine_topk": oracles.ann_bruteforce_sql(n_queries=8, k=5),
-        "audio_decode_stats": oracles.audio_decode_stats_sql(),
-        "image_decode_stats": oracles.image_decode_stats_sql(),
-        "video_decode_stats": oracles.video_decode_stats_sql(),
-        "media_decode_validate": oracles.media_decode_validate_sql(),
-        "image_features": oracles.image_features_sql(),
-        "crossmodal_topk": oracles.crossmodal_topk_sql(n_query_media=4, k=5),
-        "audio_features": oracles.audio_features_sql(),
-        "video_frame_sample": oracles.video_frame_sample_sql(every_n_seconds=5),
         "fetch_pages": oracles.fetch_pages_sql(n_hosts=7),
         "robots_rules": oracles.robots_rules_sql(n_hosts=7),
         "robots_filtered_fetch": oracles.robots_filtered_fetch_sql(n_hosts=7),
@@ -1762,28 +1608,7 @@ def oracle_sql() -> dict[str, str]:
         "bloom_visited": oracles.bloom_visited_sql(),
         "doc_fingerprints": oracles.doc_fingerprints_sql(),
         "winnowing_fingerprints": oracles.winnowing_sql(),
-        "q1_pricing_summary": oracles.q1_pricing_sql(),
-        "q3_top_orders": oracles.q3_top_orders_sql(),
-        "top_orders_per_customer": oracles.top_orders_per_customer_sql(),
-        "customers_without_orders": oracles.customers_without_orders_sql(),
-        "suppliers_with_shipments": oracles.suppliers_with_shipments_sql(),
-        "orders_rollup": oracles.orders_rollup_sql(),
-        "events_hourly": oracles.events_hourly_sql(),
-        "events_sessionize": oracles.events_sessionize_sql(),
-        "events_funnel": oracles.events_funnel_sql(),
-        "retention_cohorts": oracles.retention_cohorts_sql(),
-        "events_json_stats": oracles.events_json_stats_sql(bucket_width=10),
-        "events_asof_prior": oracles.events_asof_prior_sql(),
-        "events_attribution": oracles.events_attribution_sql(window_min=360),
-        "events_quantiles": oracles.events_quantiles_sql(),
-        "hist_quantiles": oracles.hist_quantiles_sql(),
-        "events_pivot_by_type": oracles.events_pivot_sql(),
         "heavy_hitter_terms": oracles.heavy_hitter_terms_sql(),
-        "lineitem_moments": oracles.lineitem_moments_sql(),
-        "orders_cube": oracles.orders_cube_sql(),
         "doc_length_histogram": oracles.doc_length_histogram_sql(),
         "top_bigrams": oracles.top_bigrams_sql(),
-        "user_daily_activity": oracles.user_daily_activity_sql(),
-        "events_hopping_window": oracles.events_hopping_window_sql(),
-        "events_moving_avg": oracles.events_moving_avg_sql(hours=1),
     }

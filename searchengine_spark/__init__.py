@@ -14,7 +14,7 @@ Modules
 - ``sources``       corpus generation/IO (Iceberg-shaped, parquet fallback)
 - ``functions``     tokenizers (quirk-faithful + simple), Porter stemmer, hashing
 - ``operators``     ingest, postings, codec, segments, pagerank, scoring,
-                    query, dedup, similarity, textstats, multimodal
+                    query, serve, dedup, similarity, textstats, corpusstats
 - ``plans``         end-to-end jobs (build_index) + lineage/resume protocol
 - ``streaming``     Structured Streaming ingest extension
 """

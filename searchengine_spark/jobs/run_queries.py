@@ -42,8 +42,12 @@ def main(argv: list[str] | None = None) -> int:
     idx = load_index(spark, args.index)
 
     if args.mode in ("bm25", "compat"):
-        search = search_bm25 if args.mode == "bm25" else search_compat
-        df = search(spark, idx["postings"], idx["lexicon"], idx["documents"], args.query, args.k)
+        if args.mode == "bm25":
+            df = search_bm25(spark, idx, args.query, args.k)
+        else:
+            df = search_compat(
+                spark, idx["postings"], idx["lexicon"], idx["documents"], args.query, args.k
+            )
         rows = [r.asDict() for r in df.collect()]
     else:
         is_phrase = is_phrase_query(args.query)

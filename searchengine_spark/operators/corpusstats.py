@@ -11,7 +11,10 @@ Two operators a 100 TB data-mixing pipeline runs over the whole corpus:
   slope −1; a pipeline bug — boilerplate explosion, tokenizer regression —
   moves it) and the input to lexicon/posting-skew capacity planning.
 
-Both are expressed with Spark built-ins only and integer fixed-point
+Beside them sit the plain corpus-text counts: ``heavy_hitter_terms``,
+``doc_length_histogram`` and ``top_bigrams``.
+
+All are expressed with Spark built-ins only and integer fixed-point
 accumulation so the DuckDB oracle reproduces them bit-exactly: every
 per-row double is rounded to an integer BEFORE any cross-row sum, because
 floating-point addition order differs across partitionings but integer
@@ -21,10 +24,15 @@ operators/serve.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from searchengine_spark.functions.tokenize import exploded_tokens
+from searchengine_spark.functions.tokenize import (
+    adjacent_token_pairs,
+    doc_len,
+    exploded_tokens,
+)
+from searchengine_spark.sources.tables import load_table
 
 
 def domain_kl_drift(docs: DataFrame, source_col: str = "source") -> DataFrame:
@@ -192,3 +200,43 @@ def heaps_law(docs: DataFrame, n_checkpoints: int = 10) -> DataFrame:
         F.round(F.log(F.col("v").cast("double")) * 1e3).cast("long").alias("y"),
     )
     return _ols_fixed_point(xy)
+
+
+def heavy_hitter_terms(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+    """Exact heavy hitters: top-k terms by total occurrences across the
+    corpus (ties by term asc) — the A-series hot-key detector feeding the
+    salted-agg decision."""
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        exploded_tokens(docs)
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("occurrences"), F.countDistinct("doc_id").alias("df"))
+        .orderBy(F.desc("occurrences"), F.asc("term"))
+        .limit(k)
+    )
+
+
+def doc_length_histogram(spark: SparkSession, sf_dir: str, bucket_width: int = 10) -> DataFrame:
+    """Token-count histogram over documents (width-10 buckets) — the
+    doc-length distribution every BM25 tuning session starts from."""
+    docs = load_table(spark, sf_dir, "documents")
+    bucket = (doc_len(F.col("text")) / bucket_width).cast("long") * bucket_width
+    return (
+        docs.select(bucket.alias("len_bucket"))
+        .groupBy("len_bucket")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+    )
+
+
+def top_bigrams(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+    """Top-k token bigrams by occurrence (ties by bigram asc) — n-gram
+    statistics over the corpus (position-adjacent pairs, empties skipped)."""
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = adjacent_token_pairs(exploded_tokens(docs, with_pos=True))
+    return (
+        pairs.select(F.concat_ws(" ", "t0", "t1").alias("bigram"))
+        .groupBy("bigram")
+        .agg(F.count(F.lit(1)).alias("occurrences"))
+        .orderBy(F.desc("occurrences"), F.asc("bigram"))
+        .limit(k)
+    )

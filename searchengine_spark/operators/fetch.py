@@ -3,9 +3,8 @@
 The reference fetches each page twice with jsoup, a 10 s timeout, and a
 fixed User-Agent (Crawler.java:66-69; Indexer.java:207-210 re-fetches — the
 double-fetch anti-pattern our batch design removes by materializing content
-once). Round 1 marked S2 N/A because this sandbox has no network; this
-module makes the Spark-side plumbing real — the same treatment the
-multimodal decode family got:
+once). This module makes the Spark-side plumbing real and testable without
+network access:
 
 - **host-partitioned politeness**: URLs repartition by host so each host's
   requests land in one task and are issued sequentially with ``delay_s``
@@ -269,8 +268,7 @@ def synth_robots_bodies(spark, n_hosts: int = 7) -> DataFrame:
     RobotsTxtHandler.java:56-58 leaves the denylist empty on fetch error).
 
     Real mode is ``fetch_pages(hosts + '/robots.txt')`` — same downstream
-    parse; this synthesizer replaces only the transport, like
-    make_fake_media does for the decode family.
+    parse; this synthesizer replaces only the transport.
     """
     i = F.col("id")
     s = i.cast("string")

@@ -326,15 +326,10 @@ def search_compat(
 # ---------------------------------------------------------------- BM25 search
 
 
-def search_bm25(
-    spark: SparkSession,
-    postings: DataFrame,
-    lexicon: DataFrame,
-    documents: DataFrame,
-    query: str,
-    k: int = 10,
-) -> DataFrame:
-    """BM25 mode: (rank, doc_id, url, score). Phrase queries use correct
+def search_bm25(spark: SparkSession, idx: dict, query: str, k: int = 10) -> DataFrame:
+    """BM25 mode over a ``load_index`` dict: (rank, doc_id, url, score).
+    avgdl is the manifest's ``idx["avgdl"]``, so a query runs no job over
+    the documents table for it. Phrase queries use correct
     positional adjacency (our fix of quirk Q10): the stemmed terms at
     consecutive positions of the stored positions arrays (the index
     positions count skipped tokens, Q4, but consecutive kept tokens still
@@ -346,24 +341,21 @@ def search_bm25(
     if not terms:
         return spark.createDataFrame([], "rank int, doc_id long, url string, score double")
 
-    matched = _candidates(postings, lexicon, spark, terms)
+    matched = _candidates(idx["postings"], idx["lexicon"], spark, terms)
 
     if phrase is not None and len(terms) >= 2:
         per_doc, pos = _doc_positions(matched, terms)
         adjacent = per_doc.filter(_phrase_adjacent(pos, terms)).select("doc_id")
         matched = matched.join(adjacent, "doc_id", "left_semi")
 
-    # deterministic fold for the BM25 sum as well
-    stats = documents.agg(F.sum("doc_len").alias("s"), F.count(F.lit(1)).alias("c")).collect()[0]
-    avgdl = (float(stats["s"]) / float(stats["c"])) if stats["c"] else 1.0
-    contrib = _bm25_contrib(avgdl)
+    contrib = _bm25_contrib(idx["avgdl"])
 
     per_doc = (
         matched.select("doc_id", "term", contrib.alias("_c"))
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list(F.struct("term", "_c"))).alias("_contribs"))
         .select("doc_id", _det_sum(F.col("_contribs"), "_c").alias("score"))
-        .join(documents.select("doc_id", "url"), "doc_id")
+        .join(idx["documents"].select("doc_id", "url"), "doc_id")
     )
     from pyspark.sql import Window
 

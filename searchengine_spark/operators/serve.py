@@ -679,6 +679,25 @@ def prefix_suggest(
     )
 
 
+def next_word_suggest(spark: SparkSession, sf_dir: str, word: str, k: int = 5) -> DataFrame:
+    """Bigram-model autocomplete: the top-k words FOLLOWING ``word`` in the
+    corpus, by occurrence — the next-word analog of the prefix suggester.
+    The word filter is pushed below the position-adjacency self-join, so
+    the joined left side is only the query word's occurrences."""
+    from searchengine_spark.functions.tokenize import adjacent_token_pairs, exploded_tokens
+    from searchengine_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = adjacent_token_pairs(exploded_tokens(docs, with_pos=True))
+    return (
+        pairs.filter(F.col("t0") == word)
+        .groupBy(F.col("t1").alias("term"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.desc("n"), F.asc("term"))
+        .limit(k)
+    )
+
+
 def synth_query_log(spark: SparkSession, n: int = 64) -> DataFrame:
     """Deterministic synthetic query-history log — (seq, query), built
     DISTRIBUTED (spark.range + JVM expressions; oracle twin recomputes it

@@ -206,57 +206,3 @@ def bloom_probe(
         F.min(F.coalesce(F.col("hit"), F.lit(0))).cast("long").alias("maybe_present")
     )
 
-
-def hist_quantiles(
-    events: DataFrame,
-    bin_micros: int = 10_000_000,
-    q_ppms: tuple[int, ...] = (250_000, 500_000, 900_000, 990_000),
-    value_col: str = "value",
-) -> DataFrame:
-    """Mergeable equi-width histogram quantile sketch — the streaming/
-    distributed alternative to the exact sort-based quantiles gate: one
-    map-side-combined bin count per partition (sketches union by ADDING
-    counts, like CMS), then quantiles interpolate inside the hit bin.
-
-    Exact integer contract: values freeze to micros, the target rank is
-    ``ceil(q·total)`` in pure integer arithmetic, and only the final
-    within-bin interpolation is a float op with an identical expression
-    tree in the DuckDB twin. The bin table is tiny (range/width), so the
-    cumulative window runs over a bounded frame with a constant non-
-    foldable partition key (never an unkeyed window over real data).
-
-    Output: (q_ppm, est_micros)."""
-    from pyspark.sql import Window
-
-    v = F.round(F.col(value_col) * 1e6).cast("long")
-    bins = (
-        events.select(v.alias("v"))
-        .select(F.expr(f"v div {bin_micros}").alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.partitionBy(F.pmod(F.col("bin"), F.lit(1))).orderBy("bin")
-    cum = bins.withColumn("cum", F.sum("n").over(w)).withColumn(
-        "cum_before", F.col("cum") - F.col("n")
-    )
-    tot = bins.agg(F.sum("n").cast("long").alias("total"))
-    qdf = events.sparkSession.createDataFrame(
-        [(q,) for q in q_ppms], "q_ppm long"
-    )
-    targets = qdf.crossJoin(F.broadcast(tot)).select(
-        "q_ppm",
-        F.expr("(q_ppm * total + 999999) div 1000000").alias("r"),
-    )
-    est = (
-        F.col("bin") * F.lit(bin_micros)
-        + F.round(
-            F.lit(float(bin_micros))
-            * (F.col("r") - F.col("cum_before")).cast("double")
-            / F.col("n").cast("double")
-        ).cast("long")
-    )
-    return (
-        cum.crossJoin(F.broadcast(targets))
-        .filter((F.col("cum") >= F.col("r")) & (F.col("cum_before") < F.col("r")))
-        .select("q_ppm", est.alias("est_micros"))
-    )

@@ -1264,113 +1264,7 @@ FROM toksarr
 """
 
 
-# ------------------------------------------------------------------ relational
-
-def q1_pricing_sql() -> str:
-    return """
-SELECT l_returnflag, l_linestatus,
-       sum(CAST(round(l_quantity) AS BIGINT))::BIGINT AS sum_qty,
-       sum(CAST(round(l_extendedprice * 100) AS BIGINT))::BIGINT AS sum_base_cents,
-       sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-           * (100 - CAST(round(l_discount * 100) AS BIGINT)))::BIGINT AS revenue_c4,
-       count(*)::BIGINT AS count_order,
-       count(DISTINCT l_orderkey)::BIGINT AS n_orders,
-       max(CAST(round(l_quantity) AS BIGINT))::BIGINT AS max_qty
-FROM lineitem
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-def q3_top_orders_sql(k: int = 10) -> str:
-    return f"""
-SELECT l.l_orderkey,
-       strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate,
-       o.o_orderpriority,
-       sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
-           * (100 - CAST(round(l.l_discount * 100) AS BIGINT)))::BIGINT AS revenue_c4
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-GROUP BY 1, 2, 3
-ORDER BY revenue_c4 DESC, l.l_orderkey ASC
-LIMIT {k}
-"""
-
-
-def top_orders_per_customer_sql(k: int = 2) -> str:
-    return f"""
-SELECT o_custkey, rn, o_orderkey, price_c FROM (
-  SELECT o_custkey, o_orderkey,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS price_c,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY CAST(round(o_totalprice * 100) AS BIGINT) DESC,
-                                     o_orderkey ASC)::INT AS rn
-  FROM orders
-) WHERE rn <= {k}
-"""
-
-
-def customers_without_orders_sql(since: str = "1998-01-01") -> str:
-    return f"""
-SELECT c_custkey FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_orderdate >= DATE '{since}')
-"""
-
-
-def suppliers_with_shipments_sql() -> str:
-    return """
-SELECT s_suppkey, s_name FROM supplier
-WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey)
-"""
-
-
-def orders_rollup_sql() -> str:
-    return """
-SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-       coalesce(o_orderstatus, 'ALL') AS status,
-       count(*)::BIGINT AS n,
-       sum(CAST(round(o_totalprice * 100) AS BIGINT))::BIGINT AS total_cents
-FROM orders
-GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
-"""
-
-
-def events_hourly_sql() -> str:
-    return """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00:00') AS hour,
-       event_type,
-       count(*)::BIGINT AS n,
-       sum(CAST(round(value * 1e6) AS BIGINT))::BIGINT AS value_micros
-FROM events
-GROUP BY 1, 2
-"""
-
-
-def events_sessionize_sql(gap_minutes: int = 30) -> str:
-    return f"""
-WITH flagged AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN epoch(ts) - lag(epoch(ts)) OVER w IS NULL
-                OR epoch(ts) - lag(epoch(ts)) OVER w > {gap_minutes * 60}
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sid AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING)::BIGINT AS session_id
-  FROM flagged
-)
-SELECT user_id, session_id,
-       count(*)::BIGINT AS n_events,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS first_ts,
-       strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS last_ts
-FROM sid GROUP BY 1, 2
-"""
-
+# ------------------------------------------------------------------ corpus text
 
 def term_search_any_sql(terms: list[str]) -> str:
     """Union-of-term-results semantics (the reference's handleTermSearch
@@ -1383,63 +1277,6 @@ FROM terms JOIN q ON terms.term = q.term
 """
 
 
-def events_asof_prior_sql(anchor_type: str = "purchase", ref_type: str = "click") -> str:
-    return f"""
-WITH marked AS (
-  SELECT event_id, user_id, ts, event_type,
-         last_value(CASE WHEN event_type = '{ref_type}' THEN ts END IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS UNBOUNDED PRECEDING) AS asof_ref_ts
-  FROM events
-)
-SELECT event_id, user_id,
-       strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
-       strftime(asof_ref_ts, '%Y-%m-%d %H:%M:%S') AS asof_ref_ts
-FROM marked WHERE event_type = '{anchor_type}'
-"""
-
-
-def events_attribution_sql(window_min: int = 30) -> str:
-    """Twin of relational.events_attribution: the user-keyed interval join,
-    gap in exact microseconds."""
-    return f"""
-WITH c AS (
-  SELECT event_id AS click_id, user_id, ts AS cts FROM events
-  WHERE event_type = 'click'
-),
-p AS (
-  SELECT event_id AS purchase_id, user_id, ts AS pts FROM events
-  WHERE event_type = 'purchase'
-)
-SELECT click_id, purchase_id, user_id,
-       date_diff('microsecond', cts, pts)::BIGINT AS gap_micros
-FROM c JOIN p USING (user_id)
-WHERE pts >= cts AND pts <= cts + INTERVAL {window_min} MINUTE
-"""
-
-
-def events_quantiles_sql() -> str:
-    # nearest-rank (value at row ceil(q*n)) — same definition as the Spark
-    # side; interpolating quantile functions differ across engines by ULPs
-    return """
-WITH v AS (
-  SELECT event_type, CAST(round(value * 1e6) AS BIGINT) AS v FROM events
-),
-ranked AS (
-  SELECT event_type, v,
-         row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM v
-)
-SELECT event_type,
-       max(CASE WHEN rn = CAST(ceil(n * 0.5) AS BIGINT) THEN v END) AS p50_micros,
-       max(CASE WHEN rn = CAST(ceil(n * 0.95) AS BIGINT) THEN v END) AS p95_micros,
-       min(v) AS min_micros,
-       max(v) AS max_micros
-FROM ranked GROUP BY event_type
-"""
-
-
 def heavy_hitter_terms_sql(k: int = 20) -> str:
     return f"""
 WITH {_TOKENS_CTE}
@@ -1447,53 +1284,6 @@ SELECT term, count(*)::BIGINT AS occurrences, count(DISTINCT doc_id)::BIGINT AS 
 FROM terms GROUP BY term
 ORDER BY occurrences DESC, term ASC
 LIMIT {k}
-"""
-
-
-def events_pivot_sql() -> str:
-    return """
-SELECT user_id,
-       count(*) FILTER (event_type = 'click')::BIGINT AS n_click,
-       count(*) FILTER (event_type = 'view')::BIGINT AS n_view,
-       count(*) FILTER (event_type = 'purchase')::BIGINT AS n_purchase
-FROM events GROUP BY user_id
-"""
-
-
-def lineitem_moments_sql() -> str:
-    return """
-WITH m AS (
-  SELECT l_returnflag,
-         CAST(round(l_quantity) AS BIGINT) AS q,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS p
-  FROM lineitem
-),
-agg AS (
-  SELECT l_returnflag,
-         count(*)::BIGINT AS n,
-         sum(q)::BIGINT AS sum_q, sum(p)::BIGINT AS sum_p,
-         sum(q*q)::BIGINT AS sum_qq, sum(p*p)::BIGINT AS sum_pp,
-         sum(q*p)::BIGINT AS sum_qp
-  FROM m GROUP BY 1
-)
-SELECT l_returnflag, n, sum_q, sum_p, sum_qq, sum_pp, sum_qp,
-       CAST(round(
-         (CAST(sum_qp AS DOUBLE)/n - (CAST(sum_q AS DOUBLE)/n) * (CAST(sum_p AS DOUBLE)/n))
-         / (sqrt(CAST(sum_qq AS DOUBLE)/n - (CAST(sum_q AS DOUBLE)/n) * (CAST(sum_q AS DOUBLE)/n))
-            * sqrt(CAST(sum_pp AS DOUBLE)/n - (CAST(sum_p AS DOUBLE)/n) * (CAST(sum_p AS DOUBLE)/n)))
-         * 1e6) AS BIGINT) AS corr_micros
-FROM agg
-"""
-
-
-def orders_cube_sql() -> str:
-    return """
-SELECT coalesce(o_orderstatus, 'ALL') AS status,
-       coalesce(o_orderpriority, 'ALL') AS priority,
-       count(*)::BIGINT AS n,
-       sum(CAST(round(o_totalprice * 100) AS BIGINT))::BIGINT AS total_cents
-FROM orders
-GROUP BY CUBE(o_orderstatus, o_orderpriority)
 """
 
 
@@ -1524,123 +1314,6 @@ WHERE a.term <> '' AND b.term <> ''
 GROUP BY 1
 ORDER BY occurrences DESC, bigram ASC
 LIMIT {k}
-"""
-
-
-def events_funnel_sql() -> str:
-    """Twin of relational.events_funnel: first-touch min-timestamp chain
-    view -> click -> purchase."""
-    return """
-WITH v AS (
-  SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'view'
-  GROUP BY 1
-),
-c AS (
-  SELECT e.user_id, min(e.ts) AS t2
-  FROM events e JOIN v ON e.user_id = v.user_id
-  WHERE e.event_type = 'click' AND e.ts >= v.t1 GROUP BY 1
-),
-p AS (
-  SELECT e.user_id, min(e.ts) AS t3
-  FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase' AND e.ts >= c.t2 GROUP BY 1
-)
-SELECT 1::BIGINT AS step, 'view' AS step_name,
-       (SELECT count(*) FROM v)::BIGINT AS n_users
-UNION ALL
-SELECT 2::BIGINT, 'click', (SELECT count(*) FROM c)::BIGINT
-UNION ALL
-SELECT 3::BIGINT, 'purchase', (SELECT count(*) FROM p)::BIGINT
-"""
-
-
-def hist_quantiles_sql(
-    bin_micros: int = 10_000_000,
-    q_ppms: tuple[int, ...] = (250_000, 500_000, 900_000, 990_000),
-) -> str:
-    """Twin of sketches.hist_quantiles: equi-width micro-bins, integer
-    ceil-rank targets, within-bin interpolation."""
-    qvals = ", ".join(f"({q})" for q in q_ppms)
-    return f"""
-WITH bins AS (
-  SELECT CAST(round(value * 1e6) AS BIGINT) // {bin_micros} AS bin,
-         count(*)::BIGINT AS n
-  FROM events GROUP BY 1
-),
-cum AS (
-  SELECT bin, n,
-         sum(n) OVER (ORDER BY bin)::BIGINT AS cum,
-         (sum(n) OVER (ORDER BY bin) - n)::BIGINT AS cum_before
-  FROM bins
-),
-tot AS (SELECT sum(n)::BIGINT AS total FROM bins),
-q(q_ppm) AS (VALUES {qvals}),
-targets AS (
-  SELECT q_ppm::BIGINT AS q_ppm,
-         ((q_ppm * tot.total + 999999) // 1000000)::BIGINT AS r
-  FROM q CROSS JOIN tot
-)
-SELECT targets.q_ppm,
-       (cum.bin * {bin_micros}
-        + CAST(round({float(bin_micros)} * (targets.r - cum.cum_before)
-                     / cum.n::DOUBLE) AS BIGINT))::BIGINT AS est_micros
-FROM cum CROSS JOIN targets
-WHERE cum.cum >= targets.r AND cum.cum_before < targets.r
-"""
-
-
-def events_json_stats_sql(bucket_width: int = 10) -> str:
-    """Twin of relational.events_json_stats: JSON $.k extraction + exact
-    per-(type, bucket) integer histogram."""
-    return f"""
-WITH ks AS (
-  SELECT event_type,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-  FROM events
-)
-SELECT event_type,
-       (k - (k % {bucket_width}))::BIGINT AS k_bucket,
-       count(*)::BIGINT AS n,
-       sum(k)::BIGINT AS sum_k
-FROM ks WHERE k IS NOT NULL GROUP BY 1, 2
-"""
-
-
-def retention_cohorts_sql() -> str:
-    """Twin of relational.retention_cohorts: signup-week cohorts, distinct
-    active (user, week), Monday-truncated day-diff // 7 offsets."""
-    return """
-WITH su AS (
-  SELECT user_id, min(date_trunc('week', ts)) AS cw FROM events
-  WHERE event_type = 'signup' GROUP BY 1
-),
-act AS (
-  SELECT DISTINCT e.user_id,
-         strftime(su.cw, '%Y-%m-%d') AS cohort_week,
-         (date_diff('day', su.cw::DATE, date_trunc('week', e.ts)::DATE) // 7)::BIGINT
-           AS week_offset
-  FROM events e JOIN su USING (user_id)
-  WHERE date_trunc('week', e.ts) >= su.cw
-)
-SELECT cohort_week, week_offset, count(*)::BIGINT AS n_users
-FROM act GROUP BY 1, 2
-"""
-
-
-def user_daily_activity_sql() -> str:
-    return """
-WITH daily AS (
-  SELECT user_id,
-         strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-         count(*)::BIGINT AS n_events
-  FROM events GROUP BY 1, 2
-)
-SELECT user_id, day, n_events,
-       coalesce(
-         lead(day) OVER (PARTITION BY user_id ORDER BY day)
-           = strftime(CAST(day AS DATE) + INTERVAL 1 DAY, '%Y-%m-%d'),
-         false) AS returned_next_day
-FROM daily
 """
 
 
@@ -2030,195 +1703,6 @@ SELECT query_id, rank, neighbor_id, cosine_micros FROM (
 """
 
 
-# shared CTE: the deterministic fake media table (multimodal.make_fake_media,
-# n = |documents|), reconstructed byte-for-byte in SQL. A blob's lowercase
-# hex is repeat(sha256('media'||i), 4 + i%7); all fake features derive from
-# sha256 of that hex string (multimodal._fake_digest — DuckDB's sha256 only
-# hashes VARCHAR, which is why the fake path fingerprints hex, not bytes).
-_MEDIA_CTE = """
-ids AS (SELECT row_number() OVER () - 1 AS i FROM documents),
-blobhex AS (
-  SELECT i, i % 3 AS kind_id,
-         repeat(sha256('media' || i::VARCHAR), (4 + i % 7)::INT) AS bh
-  FROM ids
-),
-feats AS (
-  SELECT i AS media_id, kind_id, sha256(bh) AS hx,
-         (length(bh) // 2)::BIGINT AS n_bytes
-  FROM blobhex
-)
-"""
-
-
-def _hexbyte(k: int) -> str:
-    """SQL int value of digest byte k (0-based) from the hex column hx."""
-    return f"CAST(('0x' || substr(hx, {2 * k + 1}, 2)) AS INT)"
-
-
-def image_features_sql() -> str:
-    """Twin of multimodal.image_features(make_fake_media(n_docs),
-    deterministic_fake=True): kind 'image' = i % 3 == 0."""
-    return f"""
-WITH {_MEDIA_CTE}
-SELECT media_id::BIGINT AS media_id,
-       (16 + {_hexbyte(0)} % 240)::INT AS width,
-       (16 + {_hexbyte(1)} % 240)::INT AS height,
-       n_bytes,
-       hx AS sha256,
-       {_hexbyte(2)} / 255.0 AS mean_r,
-       {_hexbyte(3)} / 255.0 AS mean_g,
-       {_hexbyte(4)} / 255.0 AS mean_b
-FROM feats WHERE kind_id = 0
-"""
-
-
-def audio_features_sql() -> str:
-    """Twin of multimodal.audio_features(...): kind 'audio' = i % 3 == 1."""
-    return f"""
-WITH {_MEDIA_CTE}
-SELECT media_id::BIGINT AS media_id,
-       (CASE {_hexbyte(0)} % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-             WHEN 2 THEN 44100 ELSE 48000 END)::INT AS sample_rate,
-       (500 + CAST(('0x' || substr(hx, 3, 4)) AS INT) % 60000)::BIGINT AS duration_ms,
-       n_bytes,
-       {_hexbyte(3)} / 255.0 AS rms
-FROM feats WHERE kind_id = 1
-"""
-
-
-def audio_decode_stats_sql() -> str:
-    """Twin of multimodal.wav_decode_stats(make_wav_media(n_docs)): the
-    Spark side REALLY decodes the RIFF/WAVE container with stdlib ``wave``;
-    this side recomputes every stat from the synthesis closed form —
-    sample_rate = [8000,16000,22050,44100][i%4], n_samples = 100+(i·37)%400,
-    stored u16(t) = (i·7919 + t·104729) % 65536, signed via the 32768
-    threshold. A writer or decoder bug in any header field or the LE
-    sample packing hash-mismatches."""
-    return """
-WITH ids AS (SELECT row_number() OVER () - 1 AS i FROM documents),
-m AS (
-  SELECT i::BIGINT AS media_id,
-         CASE (i % 4) WHEN 0 THEN 8000 WHEN 1 THEN 16000
-              WHEN 2 THEN 22050 ELSE 44100 END AS sample_rate,
-         (100 + (i * 37) % 400)::BIGINT AS n_samples
-  FROM ids
-),
-s AS (
-  SELECT m.media_id, m.sample_rate, m.n_samples,
-         CASE WHEN u < 32768 THEN u ELSE u - 65536 END AS sv
-  FROM m
-  JOIN (SELECT unnest(range(0, 499))::BIGINT AS t) ts ON ts.t < m.n_samples,
-  LATERAL (SELECT (m.media_id * 7919 + ts.t * 104729) % 65536 AS u) z
-)
-SELECT media_id,
-       sample_rate::INT AS sample_rate,
-       n_samples,
-       (44 + 2 * n_samples)::BIGINT AS n_bytes,
-       SUM(ABS(sv))::BIGINT AS sum_abs,
-       SUM(sv * sv)::BIGINT AS sum_sq,
-       MAX(sv)::INT AS max_s,
-       MIN(sv)::INT AS min_s
-FROM s
-GROUP BY media_id, sample_rate, n_samples
-"""
-
-
-def image_decode_stats_sql() -> str:
-    """Twin of multimodal.bmp_decode_stats(make_bmp_media(n_docs)): the
-    Spark side REALLY parses the BMP header + bottom-up padded pixel rows
-    with stdlib ``struct``; this side recomputes the channel sums from the
-    pixel closed form (R=(i·3+x·7+y·11)%256 etc., y=0 the logical top row)
-    and n_bytes from the 4-byte row-padding formula. wsum_r = Σ y·R is
-    orientation-SENSITIVE — a decoder ignoring bottom-up storage fails it."""
-    return """
-WITH ids AS (SELECT row_number() OVER () - 1 AS i FROM documents),
-m AS (
-  SELECT i::BIGINT AS media_id,
-         (4 + i % 5)::BIGINT AS w,
-         (3 + i % 4)::BIGINT AS h
-  FROM ids
-),
-px AS (
-  SELECT m.media_id, m.w, m.h, y.y,
-         (m.media_id * 3 + x.x * 7 + y.y * 11) % 256 AS r,
-         (m.media_id * 5 + x.x * 11 + y.y * 3) % 256 AS g,
-         (m.media_id * 7 + x.x * 3 + y.y * 5) % 256 AS b
-  FROM m
-  JOIN (SELECT unnest(range(0, 8))::BIGINT AS x) x ON x.x < m.w
-  JOIN (SELECT unnest(range(0, 6))::BIGINT AS y) y ON y.y < m.h
-)
-SELECT media_id,
-       w::INT AS width,
-       h::INT AS height,
-       (54 + ((3 * w + 3) // 4) * 4 * h)::BIGINT AS n_bytes,
-       SUM(r)::BIGINT AS sum_r,
-       SUM(g)::BIGINT AS sum_g,
-       SUM(b)::BIGINT AS sum_b,
-       SUM(y * r)::BIGINT AS wsum_r
-FROM px
-GROUP BY media_id, w, h
-"""
-
-
-def media_decode_validate_sql() -> str:
-    """Twin of multimodal.media_decode_validate(make_corrupt_media(n_docs)):
-    the Spark side genuinely decodes valid/truncated/bad-magic/unsupported
-    container bytes with the hardened stdlib decoders; this side recomputes
-    the expected flag from the corruption-class arithmetic (class = i % 4:
-    0 valid → ok, 1 truncated / 2 bad magic → malformed, 3 unsupported
-    codec → unsupported), per kind."""
-    return """
-WITH ids AS (SELECT row_number() OVER () - 1 AS i FROM documents),
-kinds AS (SELECT * FROM (VALUES ('audio'), ('image'), ('video')) AS t(kind))
-SELECT i::BIGINT AS media_id, kind,
-       CASE (i % 4) WHEN 0 THEN 'ok' WHEN 3 THEN 'unsupported'
-            ELSE 'malformed' END AS status
-FROM ids CROSS JOIN kinds
-"""
-
-
-def video_decode_stats_sql() -> str:
-    """Twin of multimodal.avi_decode_stats(make_avi_media(n_docs)): the
-    Spark side REALLY walks the RIFF/LIST chunk tree and decodes the
-    bottom-up padded 24-bit DIB frames; this side recomputes the stats
-    from the pixel closed form (R=(i·3+x·7+y·11+f·19)%256 etc.) and
-    n_bytes from the container layout (224 fixed header bytes + one
-    '00db' chunk per frame). fsum_r = Σ f·R pins frame ORDER; wsum_r =
-    Σ y·R pins row order."""
-    return """
-WITH ids AS (SELECT row_number() OVER () - 1 AS i FROM documents),
-m AS (
-  SELECT i::BIGINT AS media_id,
-         (4 + i % 3)::BIGINT AS w,
-         (3 + i % 2)::BIGINT AS h,
-         (2 + i % 3)::BIGINT AS nf
-  FROM ids
-),
-px AS (
-  SELECT m.media_id, m.w, m.h, m.nf, y.y, f.f,
-         (m.media_id * 3 + x.x * 7 + y.y * 11 + f.f * 19) % 256 AS r,
-         (m.media_id * 5 + x.x * 11 + y.y * 3 + f.f * 13) % 256 AS g,
-         (m.media_id * 7 + x.x * 3 + y.y * 5 + f.f * 17) % 256 AS b
-  FROM m
-  JOIN (SELECT unnest(range(0, 6))::BIGINT AS x) x ON x.x < m.w
-  JOIN (SELECT unnest(range(0, 4))::BIGINT AS y) y ON y.y < m.h
-  JOIN (SELECT unnest(range(0, 4))::BIGINT AS f) f ON f.f < m.nf
-)
-SELECT media_id,
-       w::INT AS width,
-       h::INT AS height,
-       nf::INT AS n_frames,
-       (224 + nf * (((3 * w + 3) // 4) * 4 * h + 8))::BIGINT AS n_bytes,
-       SUM(r)::BIGINT AS sum_r,
-       SUM(g)::BIGINT AS sum_g,
-       SUM(b)::BIGINT AS sum_b,
-       SUM(y * r)::BIGINT AS wsum_r,
-       SUM(f * r)::BIGINT AS fsum_r
-FROM px
-GROUP BY media_id, w, h, nf
-"""
-
-
 def compat_topk_sql(terms: list[str], query: str, k: int = 10) -> str:
     """DuckDB twin of serve.compat_topk / query.search_compat — the
     reference's Ranker.java:74-97 formula:
@@ -2446,43 +1930,6 @@ FROM post WHERE term LIKE '{prefix}%' GROUP BY doc_id
 """
 
 
-def events_moving_avg_sql(hours: int = 1) -> str:
-    """Twin of relational.events_moving_avg: micros-quantized values summed
-    in an epoch-microsecond RANGE frame; integer-division mean."""
-    span = hours * 3_600_000_000
-    return f"""
-WITH base AS (
-  SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-         CAST(round(value * 1e6) AS BIGINT) AS v
-  FROM events
-)
-SELECT event_id, user_id,
-       count(*) OVER w::BIGINT AS n_trailing,
-       sum(v) OVER w::BIGINT AS sum_micros,
-       (sum(v) OVER w // count(*) OVER w)::BIGINT AS avg_micros
-FROM base
-WINDOW w AS (PARTITION BY user_id ORDER BY ts_us
-             RANGE BETWEEN {span} PRECEDING AND CURRENT ROW)
-"""
-
-
-def events_hopping_window_sql(window_min: int = 60, slide_min: int = 15) -> str:
-    return f"""
-WITH hops AS (
-  SELECT event_type,
-         unnest(generate_series(
-             time_bucket(INTERVAL {slide_min} MINUTE, ts)
-               - INTERVAL {window_min - slide_min} MINUTE,
-             time_bucket(INTERVAL {slide_min} MINUTE, ts),
-             INTERVAL {slide_min} MINUTE)) AS wstart
-  FROM events
-)
-SELECT strftime(wstart, '%Y-%m-%d %H:%M:%S') AS wstart, event_type,
-       count(*)::BIGINT AS n
-FROM hops GROUP BY 1, 2
-"""
-
-
 def search_results_sql(terms: list[str], k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
     """Result-assembly oracle (operators/results.py::search_results): BM25
     top-k re-ranked into the reference's response shape
@@ -2575,24 +2022,6 @@ SELECT row_number() OVER (ORDER BY t.score_micros DESC, t.doc_id ASC) AS rank,
 FROM topk t
 JOIN snip USING (doc_id)
 JOIN documents d USING (doc_id)
-"""
-
-
-def video_frame_sample_sql(every_n_seconds: int = 5) -> str:
-    """Twin of multimodal.frame_sample_plan(make_fake_media(n_docs)): kind
-    'video' = i % 3 == 2, duration_sec = 10 + i % 50, one row per planned
-    frame timestamp (generate_series is end-inclusive, matching Spark's
-    sequence(0, dur-1, step))."""
-    return f"""
-WITH ids AS (SELECT row_number() OVER () - 1 AS i FROM documents),
-vids AS (
-  SELECT i AS media_id, (10 + i % 50)::INT AS dur
-  FROM ids WHERE i % 3 = 2
-)
-SELECT media_id::BIGINT AS media_id,
-       unnest(generate_series(0, greatest(dur - 1, 0), {every_n_seconds}))::INT
-         AS frame_ts_sec
-FROM vids
 """
 
 
@@ -4537,34 +3966,6 @@ FROM z
 """
 
 
-def trending_topk_sql(window_min: int = 360, slide_min: int = 60, k: int = 3) -> str:
-    """Twin of relational.trending_topk: epoch-aligned hopping-window counts
-    per event type, ranked top-k per window (ties by event_type ASC)."""
-    return f"""
-WITH hops AS (
-  SELECT event_type,
-         unnest(generate_series(
-             time_bucket(INTERVAL {slide_min} MINUTE, ts)
-               - INTERVAL {window_min - slide_min} MINUTE,
-             time_bucket(INTERVAL {slide_min} MINUTE, ts),
-             INTERVAL {slide_min} MINUTE)) AS wstart
-  FROM events
-),
-counts AS (
-  SELECT strftime(wstart, '%Y-%m-%d %H:%M:%S') AS wstart, event_type,
-         count(*)::BIGINT AS n
-  FROM hops GROUP BY 1, 2
-),
-ranked AS (
-  SELECT wstart, event_type, n,
-         row_number() OVER (PARTITION BY wstart
-                            ORDER BY n DESC, event_type ASC) AS rank
-  FROM counts
-)
-SELECT wstart, rank::INT AS rank, event_type, n FROM ranked WHERE rank <= {k}
-"""
-
-
 def crawl_schedule_sql(n_hosts: int = 7, delay_ms: int = 500) -> str:
     """Twin of fetch.crawl_schedule: per-host fetch queue in md5 shuffle
     order, slot = per-host row_number (the oracle ranks directly; the Spark
@@ -4820,41 +4221,6 @@ grouped AS (
 )
 SELECT tier, merge_seq, segment_id, size_tokens, merge_total
 FROM grouped WHERE n_members = {merge_factor}
-"""
-
-
-def crossmodal_topk_sql(n_query_media: int = 4, k: int = 5) -> str:
-    """Twin of multimodal.crossmodal_topk: joint image vector = 32 digest
-    bytes + 32 re-hash bytes, shared integer-micros cosine vs the quantized
-    embeddings."""
-    jv = (
-        "list_transform(range(0, 64), i -> CASE WHEN i < 32 "
-        "THEN CAST(('0x' || substr(hx, 2*i+1, 2)) AS BIGINT) "
-        "ELSE CAST(('0x' || substr(sha256(hx), 2*(i-32)+1, 2)) AS BIGINT) END)"
-    )
-    return f"""
-WITH {_MEDIA_CTE},
-imgq AS (
-  -- structural twin of the Spark side's query-set derivation: first
-  -- n_query_media image rows ordered by media_id (no kind-cycle arithmetic)
-  SELECT media_id, hx FROM feats
-  WHERE kind_id = 0
-  ORDER BY media_id
-  LIMIT {n_query_media}
-),
-jv AS (SELECT media_id, {jv} AS v FROM imgq),
-emb AS (SELECT vec_id, {_QUANT_EMB} AS e FROM embeddings),
-scored AS (
-  SELECT jv.media_id AS query_media_id, emb.vec_id AS neighbor_id,
-         {_cos_micros_sql('jv.v', 'emb.e')} AS cosine_micros
-  FROM jv CROSS JOIN emb
-)
-SELECT query_media_id, rank, neighbor_id, cosine_micros FROM (
-  SELECT query_media_id, neighbor_id, cosine_micros,
-         row_number() OVER (PARTITION BY query_media_id
-                            ORDER BY cosine_micros DESC, neighbor_id ASC)::INT AS rank
-  FROM scored
-) WHERE rank <= {k}
 """
 
 

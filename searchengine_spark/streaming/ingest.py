@@ -9,13 +9,12 @@ Two streaming operators:
   postings appended via ``foreachBatch`` (each micro-batch is an idempotent
   segment publish keyed by batch id — exactly-once via the same
   write-tmp/rename protocol as the batch build).
-- ``stream_events_hourly``: watermarked tumbling-window aggregate over the
-  ``events`` table shape — the streaming twin of
-  operators/relational.events_hourly.
+- ``stream_dedup_pages``: the crawler's fingerprint dedup as a watermarked
+  stream (``dropDuplicatesWithinWatermark``).
 
-Tested with the file source + ``processAllAvailable`` (synchronous drain) in
-tests/test_streaming.py — no Kafka in the sandbox; on a cluster the source
-swaps to kafka/iceberg-cdc without touching the transforms.
+Tested with the file source and an ``availableNow`` trigger (synchronous
+drain) in tests/test_streaming.py; on a cluster the source swaps to
+kafka/iceberg-cdc without touching the transforms.
 """
 
 from __future__ import annotations
@@ -67,46 +66,6 @@ def stream_corpus_to_postings(
     )
 
 
-def stream_events_hourly(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    queryName: str = "events_hourly_stream",
-    output_mode: str = "complete",
-):
-    """Tumbling-window count+sum over streaming events.
-
-    Output-mode semantics matter here: in the default ``complete`` mode
-    (used by the bounded smoke test — every window re-emitted to the memory
-    sink) Spark retains ALL window state and the watermark does NOT drop
-    late rows. For an unbounded production stream pass
-    ``output_mode="append"``: finalized windows emit once the 2-hour
-    watermark passes them, later rows are dropped, and state stays bounded."""
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 1e6).cast("long")).alias("value_micros"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:00:00").alias("hour"),
-            "event_type",
-            "n",
-            "value_micros",
-        )
-    )
-    return (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def stream_dedup_pages(
     spark: SparkSession,
     pages_dir: str,
@@ -137,111 +96,5 @@ def stream_dedup_pages(
         .queryName(queryName)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_attribution(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    queryName: str = "attribution_stream",
-    window_min: int = 30,
-):
-    """Watermarked stream-stream interval join — the streaming twin of
-    operators/relational.events_attribution: clicks joined to same-user
-    purchases that land within ``window_min`` minutes of the click.
-
-    This is the one join class batch DataFrames can't model online: BOTH
-    sides arrive continuously, so each side buffers state and the
-    time-interval condition + watermarks bound it — a click's state is
-    droppable once the watermark passes click_ts + window (no purchase can
-    match it anymore), a purchase's once it passes purchase_ts. Append mode
-    emits each matched pair exactly once. Output schema and every value are
-    identical to the batch twin (tests pin streaming == batch)."""
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-
-    def side(event_type: str, idc: str, tsc: str):
-        return (
-            spark.readStream.schema(schema)
-            .parquet(events_dir)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("event_id").alias(idc),
-                "user_id",
-                F.col("ts").alias(tsc),
-            )
-            .withWatermark(tsc, "2 hours")
-        )
-
-    clicks = side("click", "click_id", "cts")
-    purchases = side("purchase", "purchase_id", "pts")
-    joined = (
-        clicks.alias("c")
-        .join(
-            purchases.alias("p"),
-            F.expr(
-                f"""c.user_id = p.user_id AND
-                    pts >= cts AND pts <= cts + INTERVAL {window_min} MINUTES"""
-            ),
-        )
-        .select(
-            "click_id",
-            "purchase_id",
-            F.col("c.user_id").alias("user_id"),
-            F.expr("timestampdiff(MICROSECOND, cts, pts)").alias("gap_micros"),
-        )
-    )
-    return (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def stream_trending(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    queryName: str = "trending_stream",
-    window_min: int = 360,
-    slide_min: int = 60,
-    output_mode: str = "complete",
-):
-    """Streaming trending detection: watermarked sliding (hopping) window
-    counts per event type — the streaming twin of
-    operators/relational.trending_topk. The stream emits window COUNTS
-    (rank is not a streaming-aggregable operator); the consumer applies
-    relational.rank_windows over the drained table, which is byte-equal to
-    the batch gate by construction (same F.window spec, same rank — the
-    equality is enforced in tests/test_streaming.py).
-
-    Same output-mode semantics as stream_events_hourly: ``complete`` for
-    the bounded smoke test (all windows re-emitted to the memory sink);
-    ``append`` + the 2-hour watermark for unbounded production streams
-    (finalized windows emit once, state stays bounded by the watermark
-    horizon × slide count)."""
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(
-            F.window("ts", f"{window_min} minutes", f"{slide_min} minutes").alias("w"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("wstart"),
-            "event_type",
-            "n",
-        )
-    )
-    return (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint_dir)
         .start()
     )

@@ -94,9 +94,7 @@ def test_compat_rank_identity(spark, index, oracle, query):
 
 @pytest.mark.parametrize("query", QUERIES)
 def test_bm25_rank_identity(spark, index, oracle, query):
-    got = search_bm25(
-        spark, index["postings"], index["lexicon"], index["documents"], query, k=10
-    ).collect()
+    got = search_bm25(spark, index, query, k=10).collect()
     want = oracle.search_bm25(query, k=10)
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], (
         query,

@@ -829,15 +829,6 @@ def test_triangle_count_matches_bruteforce(spark):
     assert row["n_triangles"] == tri and tri > 0
 
 
-def test_events_funnel_monotone(spark):
-    from searchengine_spark.operators.relational import events_funnel
-
-    rows = {r["step"]: r for r in events_funnel(spark, SF_SMALL).collect()}
-    assert [rows[s]["step_name"] for s in (1, 2, 3)] == ["view", "click", "purchase"]
-    assert rows[1]["n_users"] >= rows[2]["n_users"] >= rows[3]["n_users"]
-    assert rows[1]["n_users"] > 0 and rows[3]["n_users"] > 0
-
-
 def test_mask_spans_rate_and_islands(spark):
     from searchengine_spark.operators.textstats import mask_spans, token_stats
 
@@ -864,40 +855,6 @@ def test_mask_spans_rate_and_islands(spark):
         for r in mask_spans(docs.repartition(9), mask_ppm=150_000).collect()
     )
     assert again == sorted((r["doc_id"], r["start_pos"], r["span_len"]) for r in spans)
-
-
-def test_retention_cohorts_week_zero_covers_signups(spark):
-    from searchengine_spark.operators.relational import retention_cohorts
-
-    rows = retention_cohorts(spark, SF_SMALL).collect()
-    assert rows
-    assert all(r["week_offset"] >= 0 for r in rows)
-    by_cohort = {}
-    for r in rows:
-        by_cohort.setdefault(r["cohort_week"], {})[r["week_offset"]] = r["n_users"]
-    for cw, m in by_cohort.items():
-        # signup week itself is activity -> offset 0 exists and is the max
-        # (retention can only shrink or equal the cohort size)
-        assert 0 in m
-        assert all(n <= m[0] for n in m.values())
-
-
-def test_hist_quantiles_bounded_error_and_monotone(spark):
-    from searchengine_spark.operators.sketches import hist_quantiles
-
-    ev = load_table(spark, SF_SMALL, "events")
-    W = 10_000_000
-    got = {r["q_ppm"]: r["est_micros"] for r in hist_quantiles(ev, bin_micros=W).collect()}
-    assert set(got) == {250_000, 500_000, 900_000, 990_000}
-    # estimates are monotone in q
-    qs = sorted(got)
-    assert all(got[a] <= got[b] for a, b in zip(qs, qs[1:]))
-    # each estimate is within one bin width of the exact quantile
-    vals = sorted(round(v * 1e6) for (v,) in ev.select("value").collect())
-    import math
-    for q, est in got.items():
-        exact = vals[min(len(vals) - 1, math.ceil(q * len(vals) / 1e6) - 1)]
-        assert abs(est - exact) <= W, (q, est, exact)
 
 
 def test_percolate_equals_term_search_all(spark):

@@ -38,15 +38,6 @@ def test_scan_pushdown_and_column_pruning(spark):
     assert "o_orderkey" in read_schema and "o_comment" not in read_schema
 
 
-def test_q3_broadcasts_dimension(spark):
-    from searchengine_spark.operators import relational
-
-    plan = plan_of(relational.q3_top_orders(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    # top-k is a bounded heap, not a global sort of the aggregate
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_segment_query_prunes_bucket_partitions(spark, tmp_path):
     """The compressed segment store is partitioned by term-hash bucket; a
     query for specific terms must scan only those bucket directories."""
@@ -710,17 +701,6 @@ def test_pl2_topk_plan_shape(spark):
     assert "TakeOrderedAndProject" in plan
     assert "Window" not in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-
-
-def test_events_attribution_plan_no_range_explosion(spark):
-    """The interval join must be the user-keyed equi-join with the range
-    predicate evaluated inside partitions — never a time-range cross
-    join (BroadcastNestedLoopJoin / CartesianProduct)."""
-    from searchengine_spark.operators.relational import events_attribution
-
-    plan = plan_of(events_attribution(spark, SF_DIR, window_min=360))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_mmr_topk_corpus_side_is_bounded(spark):

@@ -49,9 +49,7 @@ def test_wand_equals_join_path(spark, index, query):
     got = blockmax_topk_micros(
         spark, index["segments"], index["lexicon"], terms, index["avgdl"], k=10
     ).collect()
-    want = search_bm25(
-        spark, index["postings"], index["lexicon"], index["documents"], query, k=10
-    ).collect()
+    want = search_bm25(spark, index, query, k=10).collect()
     assert got
     _assert_same_ranking(got, want, len(set(terms)))
 
@@ -165,9 +163,7 @@ def test_wand_phrase_equals_join_path(spark, index, query):
     got = phrase_topk_micros(
         spark, index["segments"], index["lexicon"], phrase_terms, index["avgdl"], k=10
     ).collect()
-    want = search_bm25(
-        spark, index["postings"], index["lexicon"], index["documents"], query, k=10
-    ).collect()
+    want = search_bm25(spark, index, query, k=10).collect()
     _assert_same_ranking(got, want, len(set(phrase_terms)))
 
 
@@ -197,10 +193,7 @@ def test_wand_phrase_repeated_term(spark, index):
     got2 = phrase_topk_micros(
         spark, index["segments"], index["lexicon"], ["index", "index"], index["avgdl"], k=5
     ).collect()
-    want2 = search_bm25(
-        spark, index["postings"], index["lexicon"], index["documents"],
-        '"index index"', k=5,
-    ).collect()
+    want2 = search_bm25(spark, index, '"index index"', k=5).collect()
     _assert_same_ranking(got2, want2, 1)
 
 
