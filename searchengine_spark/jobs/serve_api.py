@@ -53,6 +53,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
+from searchengine_spark.operators.literals import local_frame
+
 MAX_K = 100
 
 
@@ -207,7 +209,7 @@ class SearchAPI:
         if not prefix:
             return []
         if self._history:
-            log = self.spark.createDataFrame(self._history, "seq long, query string")
+            log = local_frame(self.spark, self._history, "seq long, query string")
         else:
             log = serve.synth_query_log(self.spark, 64)
         rows = serve.history_suggest(self.spark, log, prefix, k=k).collect()

@@ -34,6 +34,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from searchengine_spark.operators.literals import local_frame
 from searchengine_spark.operators.serve import _pruned_postings, _qlex
 
 _TOKEN_RE = re.compile(r"\(|\)|[a-z0-9]+", re.IGNORECASE)
@@ -168,7 +169,7 @@ def boolean_query(spark: SparkSession, idx: dict, query: str | tuple) -> DataFra
     terms = sorted(leaf_terms(ast))
     rows = _qlex(spark, idx, terms)
     posts = _pruned_postings(idx, rows).select("term", "doc_id") if rows else None
-    empty = spark.createDataFrame([], "doc_id long")
+    empty = local_frame(spark, [], "doc_id long")
 
     def leaf(t: str) -> DataFrame:
         if posts is None:

@@ -13,8 +13,13 @@ exactly that reason, SURVEY.md §4.2-5).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from searchengine_spark.operators.literals import literal_map, local_frame
 
 SORT_KEY = ["repo", "path", "commit"]
 
@@ -99,20 +104,22 @@ def _sample_boundaries(
     return bounds
 
 
+@contextmanager
 def assign_doc_ids(
     docs: DataFrame,
     n_partitions: int | None = None,
     sample_from: DataFrame | None = None,
-) -> DataFrame:
-    """Dense, deterministic doc_id = rank in the global (repo,path,commit)
-    order — two-phase assignment with a *data-derived* range bucket:
+) -> Iterator[DataFrame]:
+    """Yields ``docs`` with a dense, deterministic doc_id = rank in the
+    global (repo,path,commit) order — two-phase assignment with a
+    *data-derived* range bucket:
 
     1. bucket = #(sampled boundaries <= key): a pure, order-preserving
        function of the row, computed map-side (no range exchange, no
        reliance on physical partition ids — so nothing needs checkpointing
        to stay stable across re-evaluation);
     2. per-bucket counts (one tiny agg on the persisted slim rows) →
-       cumulative offsets, broadcast back;
+       cumulative offsets, inlined as one literal map (bucket-count sized);
     3. doc_id = offset(bucket) + row_number within bucket ordered by key —
        one hash exchange total.
 
@@ -128,6 +135,11 @@ def assign_doc_ids(
     parallelism. At cluster scale use n_partitions ~ executors·4; the O(B)
     per-row boundary scan is a vectorized struct-compare (swap in a binary
     search via a sorted-array higher-order expr if B grows past ~10^3).
+
+    The persisted slim rows serve exactly two consumers (the counts agg and
+    the yielded plan), so they live as long as the ``with`` block: consume
+    the frame inside it. On exit — a failed or killed write too — they are
+    released, so no build pins a slim-table copy in a long-lived session.
     """
     from pyspark import StorageLevel
 
@@ -155,36 +167,34 @@ def assign_doc_ids(
     bucketed = docs.withColumn("_bucket", bucket.cast("int")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    counts = {
-        r["_bucket"]: r["cnt"]
-        for r in bucketed.groupBy("_bucket").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets = {}
-    acc = 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    offset_df = F.broadcast(
-        spark.createDataFrame(
-            [(b, off) for b, off in offsets.items()], "_bucket int, _offset long"
+    try:
+        counts = {
+            r["_bucket"]: r["cnt"]
+            for r in bucketed.groupBy("_bucket").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        }
+        offsets = {}
+        acc = 0
+        for b in sorted(counts):
+            offsets[b] = acc
+            acc += counts[b]
+        offset = literal_map(offsets)
+        w = Window.partitionBy("_bucket").orderBy(*SORT_KEY)
+        yield (
+            bucketed.withColumn("_rn", F.row_number().over(w))
+            .withColumn(
+                "doc_id",
+                (offset[F.col("_bucket").cast("long")] + F.col("_rn") - 1).cast("long"),
+            )
+            .drop("_bucket", "_rn")
         )
-    )
-    w = Window.partitionBy("_bucket").orderBy(*SORT_KEY)
-    out = (
-        bucketed.withColumn("_rn", F.row_number().over(w))
-        .join(offset_df, "_bucket")
-        .withColumn("doc_id", (F.col("_offset") + F.col("_rn") - 1).cast("long"))
-        .drop("_bucket", "_rn", "_offset")
-    )
-    # the cache serves exactly two consumers (the counts agg above and the
-    # returned plan); callers release it after materializing — otherwise
-    # every build in a long-lived session pins another slim-table copy
-    out._sespark_persisted = bucketed
-    return out
+    finally:
+        bucketed.unpersist()
 
 
-def build_documents(corpus: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """corpus → documents (without doc_len/pagerank, added by later stages).
+@contextmanager
+def build_documents(corpus: DataFrame, n_partitions: int | None = None) -> Iterator[DataFrame]:
+    """Yields corpus → documents (without doc_len/pagerank, added by later
+    stages); consume it inside the ``with`` block (see assign_doc_ids).
 
     The dedup windows + doc_id bucket/ordinal passes all run over a SLIM
     projection (keys + derived metadata, no content) — at 10^12-file scale
@@ -198,12 +208,10 @@ def build_documents(corpus: DataFrame, n_partitions: int | None = None) -> DataF
     slim = with_invariants(corpus).drop("content", "lang")
     # boundary sampling reads keys straight off the (column-pruned) corpus
     # scan — never through the fingerprint/dedup pipeline above
-    ids = assign_doc_ids(
+    with assign_doc_ids(
         dedup(slim), n_partitions, sample_from=corpus.select(*SORT_KEY)
-    )
-    out = ids.join(corpus.select(*SORT_KEY, "lang", "content"), list(SORT_KEY))
-    out._sespark_persisted = getattr(ids, "_sespark_persisted", None)
-    return out
+    ) as ids:
+        yield ids.join(corpus.select(*SORT_KEY, "lang", "content"), list(SORT_KEY))
 
 
 def verify_sha256_invariant(corpus: DataFrame, documents: DataFrame) -> int:
@@ -232,7 +240,8 @@ def apply_exclusions(corpus: DataFrame, rules: list[dict]) -> DataFrame:
     spark = corpus.sparkSession
     if not rules:
         return corpus
-    deny = spark.createDataFrame(
+    deny = local_frame(
+        spark,
         [
             (r.get("repo_prefix"), r.get("path_prefix"), r.get("lang"))
             for r in rules

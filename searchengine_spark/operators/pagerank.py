@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from searchengine_spark.operators.literals import local_frame
+
 DAMPING = 0.85
 MAX_ITERATIONS = 50
 CONVERGENCE = 1e-4
@@ -63,7 +65,7 @@ def pagerank(
     nodes = documents.select("doc_id")
     n = nodes.count()
     if n == 0:
-        return spark.createDataFrame([], "doc_id long, pagerank double")
+        return local_frame(spark, [], "doc_id long, pagerank double")
 
     outdeg = edges.groupBy("src_doc_id").agg(F.count(F.lit(1)).alias("outdeg"))
     # edges with per-src outdegree attached, reused every iteration

@@ -27,6 +27,7 @@ from searchengine_spark.functions.textproc import (
     query_words,
     snippet_windows,
 )
+from searchengine_spark.operators.literals import local_frame
 from searchengine_spark.operators.serve import _bm25_contrib, _doc_positions, _phrase_adjacent
 from searchengine_spark.operators.scoring import (
     H1_WEIGHT,
@@ -149,7 +150,8 @@ def search_compat(
     terms = query_tokenize(phrase if phrase is not None else query)
     qwords = query_words(query)  # Q3: raw query incl. quotes
     if not terms:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "rank int, doc_id long, url string, title string, score double, snippet string"
         )
 
@@ -279,8 +281,10 @@ def search_compat(
         todo = [r for r in frontier if r["doc_id"] not in checked]
         if todo:
             ids = [int(r["doc_id"]) for r in todo]
-            pairs = spark.createDataFrame(
-                [(int(r["doc_id"]), r["last_term"]) for r in todo], "doc_id long, term string"
+            pairs = local_frame(
+                spark,
+                [(int(r["doc_id"]), r["last_term"]) for r in todo],
+                "doc_id long, term string",
             )
             if len(ids) <= 10_000:
                 pruned_docs = documents.filter(F.col("doc_id").isin(ids))
@@ -320,7 +324,7 @@ def search_compat(
         (i + 1, int(r["doc_id"]), s["url"], s["title"], float(r["score"]), text)
         for i, (r, s, text) in enumerate(survivors[:k])
     ]
-    return spark.createDataFrame(rows, out_schema)
+    return local_frame(spark, rows, out_schema)
 
 
 # ---------------------------------------------------------------- BM25 search
@@ -339,7 +343,7 @@ def search_bm25(spark: SparkSession, idx: dict, query: str, k: int = 10) -> Data
     phrase = query[1:-1] if is_phrase_query(query) else None
     terms = query_tokenize(phrase if phrase is not None else query)
     if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, url string, score double")
+        return local_frame(spark, [], "rank int, doc_id long, url string, score double")
 
     matched = _candidates(idx["postings"], idx["lexicon"], spark, terms)
 

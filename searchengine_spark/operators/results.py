@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark.functions.tokenize import TOKEN_SPLIT_RE
+from searchengine_spark.operators.literals import literal_map, local_frame
 
 SNIPPET_WORDS = 60
 _RESULT_SCHEMA = (
@@ -96,26 +97,6 @@ def snippet_expr(words: Column, term: Column, n_words: int = SNIPPET_WORDS) -> C
     )
 
 
-def _sql_literal(x: str | int | float) -> str:
-    """``x`` as a Spark SQL literal of its exact value: a string, a bigint,
-    or a double parsed back from its round-trip ``repr``."""
-    if isinstance(x, str):
-        return "'" + x.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    if isinstance(x, float):
-        return f"CAST('{x!r}' AS DOUBLE)"
-    return f"{int(x)}L"
-
-
-def _literal_map(pairs: dict) -> Column:
-    """A driver dict inlined into the plan as one literal map: the request's
-    few idf values and <=k winner fields ride in the expression instead of
-    a driver-built frame behind a broadcast join. Built as one SQL
-    expression — one JVM call, where a ``lit`` per entry costs a round trip
-    each."""
-    entries = ", ".join(f"{_sql_literal(k)}, {_sql_literal(v)}" for k, v in pairs.items())
-    return F.expr(f"map({entries})")
-
-
 def _topk(
     idx: dict,
     rows: list,
@@ -129,7 +110,7 @@ def _topk(
     query term (Q12) and, for a phrase, only docs holding it adjacently."""
     from searchengine_spark.operators import serve
 
-    idf = _literal_map({r["term"]: r["idf_bm25"] for r in rows})
+    idf = literal_map({r["term"]: r["idf_bm25"] for r in rows})
     contrib = serve._bm25_contrib(idx["avgdl"])
     top, pos = serve._doc_positions(
         serve._pruned_postings(idx, rows).withColumn("idf_bm25", idf[F.col("term")]),
@@ -190,14 +171,14 @@ def search_results(
 
     rows = serve._qlex(spark, idx, query_terms)
     if not rows or (phrase and not set(query_terms) <= {r["term"] for r in rows}):
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return local_frame(spark, [], _RESULT_SCHEMA)
     # the <=k winners are collected so their doc_ids PUSH DOWN into the
     # documents scan (parquet row-group pruning on the doc_id-clustered
     # files) — a join key never reaches the reader, so without this every
     # request would decode the whole corpus's text column
     top_rows = _topk(idx, rows, query_terms, k, doc_filter, phrase).collect()
     if not top_rows:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return local_frame(spark, [], _RESULT_SCHEMA)
     score = {int(r["doc_id"]): int(r["score_micros"]) for r in top_rows}
     term = {int(r["doc_id"]): r["term"] for r in top_rows}
     # url/title derived exactly as the compat fixture does (documents.parquet
@@ -206,12 +187,12 @@ def search_results(
     doc_id = F.col("doc_id")
     barrier = documents.filter(doc_id.isin(list(score))).select(
         "doc_id",
-        _literal_map(term)[doc_id].alias("term"),
+        literal_map(term)[doc_id].alias("term"),
         F.concat(
             F.lit("doc://"), F.col("source"), F.lit("/"), doc_id.cast("string")
         ).alias("url"),
         F.substring("text", 1, 48).alias("title"),
-        _literal_map(score)[doc_id].alias("score_micros"),
+        literal_map(score)[doc_id].alias("score_micros"),
         # Generate barrier: the word array becomes a real attribute,
         # evaluated once per row, before the per-word snippet lambdas touch it
         F.explode(F.array(F.split(F.col("text"), r"\s+"))).alias("_words"),

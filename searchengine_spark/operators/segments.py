@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark.operators import codec
+from searchengine_spark.operators.literals import local_frame
 from searchengine_spark.operators.postings import build_postings, bucket_of
 from searchengine_spark.plans.persist_registry import track as _track
 
@@ -175,28 +176,51 @@ def merge_segments(
     broadcasts into a map-side semi over ``a`` — the surviving keys are
     delta-bounded, so the overlap set itself broadcasts into the hot/cold
     splits and the whole merge is ONE in-memory pass over ``a`` plus the
-    reencode of the delta-bounded hot groups. Default mode keeps the
-    symmetric distinct-join (both sides can be half the index; AQE picks
-    the join strategy from runtime sizes)."""
+    reencode of the delta-bounded hot groups. Default mode is the one-step
+    merge of ``_merge_all`` (both sides can be half the index; AQE picks
+    the join strategies from runtime sizes)."""
+    if not small_b:
+        return _merge_all([a, b])
     # each input feeds THREE consumers (overlap keys, hot semi, cold anti);
     # persist both so an in-plan segment encode runs once, not 3× (measured:
     # the unpersisted split tripled the gate's full-corpus encode)
     a = _track(a.persist())
     b = _track(b.persist())
-    if small_b:
-        kb = F.broadcast(b.select("shard", "term").distinct())
-        overlap = F.broadcast(
-            a.select("shard", "term")
-            .join(kb, ["shard", "term"], "left_semi")
-            .distinct()
-        )
-    else:
-        overlap = (
-            a.select("shard", "term")
-            .distinct()
-            .join(b.select("shard", "term").distinct(), ["shard", "term"])
-        )
+    kb = F.broadcast(b.select("shard", "term").distinct())
+    overlap = F.broadcast(
+        a.select("shard", "term").join(kb, ["shard", "term"], "left_semi").distinct()
+    )
     both = a.unionByName(b)
+    hot = both.join(overlap, ["shard", "term"], "left_semi")
+    cold = both.join(overlap, ["shard", "term"], "left_anti")
+    return cold.unionByName(_reencode(hot))
+
+
+def _merge_all(parts: list[DataFrame]) -> DataFrame:
+    """Merge k segment sets in ONE step: their union, tagged by input, is
+    persisted once (it feeds the overlap keys, the hot semi and the cold
+    anti); only (shard, term) groups held by two or more inputs decode →
+    concat → re-encode, and every other block passes through untouched.
+    Folding k inputs through k-1 nested pairwise merges instead grew the
+    plan geometrically (each merge reads its input three times), and with
+    it every plan string Spark renders per AQE stage: compacting four
+    quarter-corpus generations took ~2 min on 4 cores and ran a 2 GiB
+    driver heap out of memory rendering those strings."""
+    from functools import reduce
+
+    tagged = _track(
+        reduce(
+            DataFrame.unionByName,
+            [p.withColumn("_part", F.lit(i)) for i, p in enumerate(parts)],
+        ).persist()
+    )
+    overlap = (
+        tagged.groupBy("shard", "term")
+        .agg((F.min("_part") < F.max("_part")).alias("_shared"))
+        .filter("_shared")
+        .select("shard", "term")
+    )
+    both = tagged.drop("_part")
     hot = both.join(overlap, ["shard", "term"], "left_semi")
     cold = both.join(overlap, ["shard", "term"], "left_anti")
     return cold.unionByName(_reencode(hot))
@@ -782,10 +806,10 @@ def _pruned_topk_micros(
     one scorer and silently miss another."""
     terms = list(dict.fromkeys(query_terms))
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score_micros long")
+        return local_frame(spark, [], "doc_id long, score_micros long")
     idfs, pruned = _lookup_pruned_scan(segments, lexicon, terms)
     if not idfs:
-        return spark.createDataFrame([], "doc_id long, score_micros long")
+        return local_frame(spark, [], "doc_id long, score_micros long")
 
     def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         term_blocks: dict[str, list[dict]] = {}
@@ -880,17 +904,15 @@ def plan_compaction(
 
 
 def compact_generations(generations: dict[str, DataFrame], plan: list[list[str]]):
-    """Execute a compaction plan: each group folds through
-    ``merge_segments`` into one generation (decode → concat → re-encode per
+    """Execute a compaction plan: each group merges in one step into one
+    generation (``_merge_all``: decode → concat → re-encode per shared
     (shard, term) group — cost linear in the group's blocks); generations
     outside any group pass through untouched. Returns the new
     name → segments mapping."""
-    from functools import reduce
-
     merged: dict[str, DataFrame] = {}
     grouped = {name for group in plan for name in group}
     for group in plan:
-        merged["+".join(group)] = reduce(merge_segments, [generations[g] for g in group])
+        merged["+".join(group)] = _merge_all([generations[g] for g in group])
     for name, df in generations.items():
         if name not in grouped:
             merged[name] = df
@@ -1133,7 +1155,7 @@ def proximity_match_segments(
     terms = list(dict.fromkeys([term_a, term_b]))
     present, pruned = _lookup_pruned_scan(segments, lexicon, terms)
     if term_a not in present or term_b not in present:
-        return spark.createDataFrame([], "doc_id long, min_dist long")
+        return local_frame(spark, [], "doc_id long, min_dist long")
 
     def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         per_term = _positions_by_doc(pdf, terms)
@@ -1166,7 +1188,7 @@ def ordered_proximity_segments(
     terms = list(dict.fromkeys([term_a, term_b]))
     present, pruned = _lookup_pruned_scan(segments, lexicon, terms)
     if term_a not in present or term_b not in present:
-        return spark.createDataFrame([], "doc_id long, min_gap long")
+        return local_frame(spark, [], "doc_id long, min_gap long")
 
     def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         per_term = _positions_by_doc(pdf, terms)

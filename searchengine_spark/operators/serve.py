@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark.operators.codec import BM25_B, BM25_K1
+from searchengine_spark.operators.literals import local_frame
 
 _EMPTY_TOPK = "doc_id long, score_micros long"
 
@@ -108,7 +109,8 @@ def _phrase_adjacent(
 
 
 def _lex_df(spark: SparkSession, rows: list) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r["term"], r["df"], r["idf_bm25"], r["idf_compat"]) for r in rows],
         "term string, df long, idf_bm25 double, idf_compat double",
     )
@@ -180,7 +182,7 @@ def bm25_scores(
     the limit applies AFTER their filter."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     post = _pruned_postings(idx, rows)
     contrib = _bm25_contrib(idx["avgdl"])
     return (
@@ -219,7 +221,8 @@ def bm25_explain(
     contribution rows. Zero corpus scans."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "doc_id long, term string, tf long, df long, "
             "contrib_micros long, score_micros long",
@@ -283,7 +286,7 @@ def bm25_page(
     for _ in range(page - 1):
         rows = bm25_search_after(spark, idx, query_terms, cursor, k=k).collect()
         if len(rows) < k:  # ranking exhausted — later pages are empty
-            return spark.createDataFrame([], _EMPTY_TOPK)
+            return local_frame(spark, [], _EMPTY_TOPK)
         last = rows[-1]
         cursor = (int(last["score_micros"]), int(last["doc_id"]))
     return bm25_search_after(spark, idx, query_terms, cursor, k=k)
@@ -313,7 +316,7 @@ def bm25_topk_pruned(
 
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     post = _pruned_postings(idx, rows)
     order = [F.desc("tf"), F.asc("doc_id")]
     partial = Window.partitionBy("term", F.pmod(F.col("doc_id"), F.lit(salts))).orderBy(
@@ -366,7 +369,7 @@ def bm25_topk_tiered(
 
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     post = _pruned_postings(idx, rows)
     order = [F.desc("tf"), F.asc("doc_id")]
     partial = Window.partitionBy("term", F.pmod(F.col("doc_id"), F.lit(salts))).orderBy(
@@ -421,7 +424,8 @@ def bm25_batch_topk(
     single-query ``bm25_topk`` output."""
     scored = _batch_scores(spark, idx, queries)
     if scored is None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "query_id string, rank int, doc_id long, score_micros long"
         )
     return _grouped_topk(scored, k, salts)
@@ -442,7 +446,7 @@ def _batch_scores(
     if not rows:
         return None
     post = _pruned_postings(idx, rows)
-    qdf = spark.createDataFrame(qmap, "query_id string, term string")
+    qdf = local_frame(spark, qmap, "query_id string, term string")
     contrib = _bm25_contrib(idx["avgdl"])
     return (
         post.join(F.broadcast(_lex_df(spark, rows)), "term")
@@ -482,7 +486,7 @@ def tfidf_topk(
     Q15/Q9) served from the index."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     post = _pruned_postings(idx, rows)
     contrib = (F.col("tf").cast("double") / F.col("dl").cast("double")) * F.col(
         "idf_compat"
@@ -504,7 +508,7 @@ def term_search_all(
     uniq = list(dict.fromkeys(query_terms))
     rows = _qlex(spark, idx, uniq)
     if len(rows) < len(uniq):  # a term with no postings → empty intersection
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     return (
         _pruned_postings(idx, rows)
         .groupBy("doc_id")
@@ -520,7 +524,7 @@ def term_search_any(
     """Posting-list union (O4)."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     return _pruned_postings(idx, rows).select("doc_id").distinct()
 
 
@@ -536,8 +540,9 @@ def term_search_except(
     rows = _qlex(spark, idx, sorted(inc | exc))
     found = {r["term"] for r in rows}
     if not inc <= found:  # an include term with no postings → empty
-        return spark.createDataFrame([], "doc_id long")
-    flags = spark.createDataFrame(
+        return local_frame(spark, [], "doc_id long")
+    flags = local_frame(
+        spark,
         [(t, t in inc, t in exc) for t in sorted(inc | exc)],
         "term string, is_inc boolean, is_exc boolean",
     )
@@ -568,7 +573,7 @@ def phrase_match(
     rows = _qlex(spark, idx, phrase_terms)
     found = {r["term"] for r in rows}
     if not set(phrase_terms) <= found:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     per_doc, pos = _doc_positions(_pruned_postings(idx, rows), phrase_terms)
     return per_doc.filter(_phrase_adjacent(pos, phrase_terms, gap + 1)).select(
         "doc_id"
@@ -598,7 +603,8 @@ def phrase_freq_topk(
     rows = _qlex(spark, idx, phrase_terms)
     by_term = {r["term"]: r for r in rows}
     if not set(phrase_terms) <= set(by_term):
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "doc_id long, phrase_freq long, score_micros long"
         )
     # idf sum in PHRASE order — the oracle adds the same scalar subqueries
@@ -646,7 +652,8 @@ def span_first_topk(
     array head filter → bounded top-k heap."""
     rows = _qlex(spark, idx, [term])
     if not rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "doc_id long, first_pos long, score_micros long"
         )
     post = _pruned_postings(idx, rows)
@@ -791,7 +798,7 @@ def facet_counts(
     means |facets| histograms cost one shuffle, not |facets| passes."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], "facet string, value string, n_docs long")
+        return local_frame(spark, [], "facet string, value string, n_docs long")
     cands = _pruned_postings(idx, rows).select("doc_id").distinct()
     pairs = ", ".join(f"'{c}', {c}" for c in facets)
     return (
@@ -889,7 +896,7 @@ def wildcard_search(
     doc: (doc_id, n_terms, total_tf)."""
     rows = expand_prefix(idx, prefix, max_expansions)
     if not rows:
-        return spark.createDataFrame([], "doc_id long, n_terms long, total_tf long")
+        return local_frame(spark, [], "doc_id long, n_terms long, total_tf long")
     return (
         _pruned_postings(idx, rows)
         .groupBy("doc_id")
@@ -961,8 +968,8 @@ def fuzzy_suggest_multi(
         for key in dict.fromkeys([w] + [w[:i] + w[i + 1 :] for i in range(len(w))]):
             pairs.append((key, w))
     if not pairs:
-        return spark.createDataFrame([], "word string, term string, dist int, n long")
-    kdf = spark.createDataFrame(pairs, "key string, word string")
+        return local_frame(spark, [], "word string, term string, dist int, n long")
+    kdf = local_frame(spark, pairs, "key string, word string")
     cand = (
         idx["lexicon"]
         .select("term", "cf", F.explode(_deletion_keys()).alias("key"))
@@ -1035,7 +1042,7 @@ def proximity_match(
     rows = _qlex(spark, idx, [term_a, term_b])
     present = {r["term"] for r in rows}
     if term_a not in present or term_b not in present:
-        return spark.createDataFrame([], "doc_id long, min_dist long")
+        return local_frame(spark, [], "doc_id long, min_dist long")
     # term_a == term_b degenerates to "every doc containing the term"
     # (each occurrence pairs with itself, min_dist 0) — the same answer the
     # SQL twin gives, so the pair stays symmetric even at the edge
@@ -1064,7 +1071,7 @@ def ordered_proximity_match(
     rows = _qlex(spark, idx, [term_a, term_b])
     present = {r["term"] for r in rows}
     if term_a not in present or term_b not in present:
-        return spark.createDataFrame([], "doc_id long, min_gap long")
+        return local_frame(spark, [], "doc_id long, min_gap long")
     per_doc, pos = _doc_positions(_pruned_postings(idx, rows), [term_a, term_b])
     gaps = F.filter(
         F.flatten(
@@ -1095,9 +1102,10 @@ def synonym_bm25_topk(
     all_terms = sorted({t for ts in groups.values() for t in ts})
     rows = _qlex(spark, idx, all_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     post = _pruned_postings(idx, rows)
-    gmap = spark.createDataFrame(
+    gmap = local_frame(
+        spark,
         [(t, g) for g, ts in sorted(groups.items()) for t in sorted(set(ts))],
         "term string, grp string",
     )
@@ -1290,11 +1298,12 @@ def qld_topk(
     Output: (doc_id, score_micros) top-k, ties by doc_id."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     nq = float(len(rows))
     total = float(idx["sum_dl"])
     post = _pruned_postings(idx, rows)
-    cfmap = spark.createDataFrame(
+    cfmap = local_frame(
+        spark,
         [(r["term"], r["cf"]) for r in rows], "term string, cf long"
     )
     term_c = F.round(
@@ -1341,11 +1350,12 @@ def qld_jm_topk(
     Output: (doc_id, score_micros) top-k, ties by doc_id."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     total = float(idx["sum_dl"])
     ratio = (1.0 - lam) / lam
     post = _pruned_postings(idx, rows)
-    cfmap = spark.createDataFrame(
+    cfmap = local_frame(
+        spark,
         [(r["term"], r["cf"]) for r in rows], "term string, cf long"
     )
     term_c = F.round(
@@ -1401,11 +1411,12 @@ def pl2_topk(
     Output: (doc_id, score_micros) top-k, ties by doc_id."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     n_docs = float(idx["n_docs"])
     avgdl = float(idx["avgdl"])
     post = _pruned_postings(idx, rows)
-    lam_map = spark.createDataFrame(
+    lam_map = local_frame(
+        spark,
         [(r["term"], float(r["cf"]) / n_docs) for r in rows],
         "term string, lam double",
     )
@@ -1475,7 +1486,7 @@ def sdm_topk(
     Output: (doc_id, score_micros) top-k, ties by doc_id."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     vocab = {r["term"] for r in rows}
     uni = [t for t in dict.fromkeys(query_terms) if t in vocab]
     pairs = list(
@@ -1487,7 +1498,8 @@ def sdm_topk(
     )
     total = float(idx["sum_dl"])
     post = _pruned_postings(idx, rows)
-    cfmap = spark.createDataFrame(
+    cfmap = local_frame(
+        spark,
         [(r["term"], r["cf"]) for r in rows], "term string, cf long"
     )
     uni_c = F.round(
@@ -1609,7 +1621,7 @@ def bm25f_topk(
     Output: (doc_id, score_micros) top-k."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     post = _pruned_postings(idx, rows)
     tf_h = F.size(
         F.filter(F.col("positions"), lambda p: p < F.lit(head_positions))
@@ -1664,7 +1676,8 @@ def bm25_maxp_topk(
     Output: (doc_id, passage_id, score_micros) top-k."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "doc_id long, passage_id long, score_micros long"
         )
     post = _pruned_postings(idx, rows)
@@ -1732,7 +1745,8 @@ def ltr_features(
     across engines and partition counts."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "doc_id long, n_matched long, sum_tf long, dl long, "
             "min_pos long, bm25_micros long, tfidf_micros long",
@@ -1826,9 +1840,10 @@ def prf_expansion_topk(
                 weights[t] = expand_weight
     rows = _qlex(spark, idx, sorted(weights))
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     post = _pruned_postings(idx, rows)
-    wlex = spark.createDataFrame(
+    wlex = local_frame(
+        spark,
         [(r["term"], r["idf_bm25"], weights[r["term"]]) for r in rows],
         "term string, idf_bm25 double, w double",
     )
@@ -1954,7 +1969,7 @@ def shard_selection(
     broadcast cross join. No corpus scan, no hot keys."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], "shard_id long, score_micros long")
+        return local_frame(spark, [], "shard_id long, score_micros long")
     post = _pruned_postings(idx, rows)
     shard = F.pmod(F.col("doc_id"), F.lit(n_shards)).alias("shard_id")
     dfs = post.groupBy(shard, "term").agg(F.count(F.lit(1)).alias("df_s"))
@@ -1968,7 +1983,7 @@ def shard_selection(
     )
     avg_cw = float(idx["sum_dl"]) / float(n_shards)
     spine = spark.range(n_shards).select(F.col("id").alias("shard_id"))
-    qterms = spark.createDataFrame([(r["term"],) for r in rows], "term string")
+    qterms = local_frame(spark, [(r["term"],) for r in rows], "term string")
     grid = spine.crossJoin(F.broadcast(qterms))
     d = grid.join(dfs, ["shard_id", "term"], "left").select(
         "shard_id", "term", F.coalesce("df_s", F.lit(0)).cast("long").alias("df_s")
@@ -2012,7 +2027,7 @@ def _conjunctive_positives(
     ]
     rows = _qlex(spark, idx, [t for _, t in qmap])
     post = _pruned_postings(idx, rows)
-    qdf = spark.createDataFrame(qmap, "query_id string, term string")
+    qdf = local_frame(spark, qmap, "query_id string, term string")
     n_req = qdf.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_req"))
     matched = (
         post.select("term", "doc_id")
@@ -2054,7 +2069,8 @@ def hard_negatives(
     Output: (query_id, rank, doc_id, score_micros)."""
     scored = _batch_scores(spark, idx, queries)
     if scored is None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "query_id string, rank int, doc_id long, score_micros long"
         )
     positives = _conjunctive_positives(spark, idx, queries)
@@ -2083,7 +2099,8 @@ def rank_metrics(
     every query gets exactly one row.
 
     Output: (query_id, hit, rr_micros, ndcg_micros)."""
-    spine = spark.createDataFrame(
+    spine = local_frame(
+        spark,
         [(qid,) for qid in sorted(queries)], "query_id string"
     )
     scored = _batch_scores(spark, idx, queries)
@@ -2140,7 +2157,8 @@ def qpp_predictors(
         for qid, terms in sorted(queries.items())
         for t in dict.fromkeys(terms)
     ]
-    spine = spark.createDataFrame(
+    spine = local_frame(
+        spark,
         [(qid,) for qid in sorted(queries)], "query_id string"
     )
     if not qmap:
@@ -2157,7 +2175,7 @@ def qpp_predictors(
                 )
             ],
         )
-    qdf = spark.createDataFrame(qmap, "query_id string, term string")
+    qdf = local_frame(spark, qmap, "query_id string, term string")
     total = F.lit(float(idx["sum_dl"]))
     # term predicate pushed into the lexicon scan; the |Q·terms| query map
     # is the broadcast side (never the dictionary)
@@ -2274,7 +2292,7 @@ def more_like_this(
         .collect()
     )
     if not src_tf:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     tf_map = {r["term"]: int(r["tf"]) for r in src_tf}
     lex = _qlex(spark, idx, sorted(tf_map))
 
@@ -2290,7 +2308,7 @@ def more_like_this(
     )[:max_query_terms]
     terms = [t for _, t in ranked]
     if not terms:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     return (
         bm25_scores(spark, idx, terms)
         .filter(F.col("doc_id") != src_doc_id)
@@ -2348,8 +2366,8 @@ def compound_split(
     word = word.strip().lower()
     pairs = [(word[:i], word[i:]) for i in range(1, len(word))]
     if not pairs:
-        return spark.createDataFrame([], "p1 string, p2 string, cf_min long")
-    cand = spark.createDataFrame(pairs, "p1 string, p2 string")
+        return local_frame(spark, [], "p1 string, p2 string, cf_min long")
+    cand = local_frame(spark, pairs, "p1 string, p2 string")
     lex = idx["lexicon"].select("term", "cf")
     l1 = (
         lex.filter(F.col("term").isin([p for p, _ in pairs]))
@@ -2500,7 +2518,8 @@ def rerank_ce_topk(
     )
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "doc_id long, ce_micros long, bm25_micros long"
         )
     post = _pruned_postings(idx, rows).select("term", "doc_id", "tf")
@@ -2584,7 +2603,8 @@ def significant_terms(
     """
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "term string, fg_df long, bg_df long, score_micros long"
         )
     hits = _pruned_postings(idx, rows).select("doc_id").distinct()
@@ -2667,7 +2687,7 @@ def corrected_search(
     corr = fuzzy_suggest_multi(spark, idx, words, k=1).collect()
     corrected = list(dict.fromkeys(r["term"] for r in corr))
     if not corrected:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     return bm25_topk(spark, idx, corrected, k=k)
 
 
@@ -2797,7 +2817,8 @@ def cluster_results(
     bycid: dict[int, dict[int, int]] = {}
     for row in crows:
         bycid.setdefault(row["cid"], {})[row["i"]] = row["val"]
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [
             (cid, [vals[i] for i in range(len(vals))])
             for cid, vals in sorted(bycid.items())
@@ -2885,7 +2906,7 @@ def bm25_impact_topk(
     bounded top-k heap."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], "doc_id long, impact_score long")
+        return local_frame(spark, [], "doc_id long, impact_score long")
     buckets = sorted({int(r["bucket"]) for r in rows})
     terms = [r["term"] for r in rows]
     imp = idx["impacts"].filter(
@@ -2910,9 +2931,10 @@ def bm25_boosted_topk(
     terms = list(boosts.keys())
     rows = _qlex(spark, idx, terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     post = _pruned_postings(idx, rows)
-    lex = spark.createDataFrame(
+    lex = local_frame(
+        spark,
         [
             (r["term"], r["df"], r["idf_bm25"], float(boosts[r["term"]]))
             for r in rows
@@ -2987,8 +3009,9 @@ def nrt_two_tier_topk(
     )
     terms_present = sorted(set(sealed_df) | set(delta_df))
     if not terms_present:
-        return spark.createDataFrame([], _EMPTY_TOPK)
-    merged_lex = spark.createDataFrame(
+        return local_frame(spark, [], _EMPTY_TOPK)
+    merged_lex = local_frame(
+        spark,
         [(t, sealed_df.get(t, 0) + delta_df.get(t, 0)) for t in terms_present],
         "term string, df long",
     ).select("term", idf_bm25_expr(n_merged).alias("idf_bm25"))
@@ -3035,7 +3058,7 @@ def common_terms_topk(
     scoring. All-common queries degenerate to plain bm25_topk."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     n_docs = int(idx["n_docs"])
     required = [
         r for r in rows if int(r["df"]) * 1_000_000 <= cutoff_ppm * n_docs
@@ -3083,7 +3106,8 @@ def rbo_rankings(
         "doc_id", F.row_number().over(one).alias("br")
     )
     pairs = a.join(b, "doc_id").select("ar", "br")
-    depths = spark.createDataFrame(
+    depths = local_frame(
+        spark,
         [(d, 9 ** (d - 1), 10**d) for d in range(1, k + 1)],
         "d int, p9 long, p10 long",
     )
@@ -3167,7 +3191,7 @@ def bm25plus_topk(
     multiply."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame([], _EMPTY_TOPK)
+        return local_frame(spark, [], _EMPTY_TOPK)
     post = _pruned_postings(idx, rows)
     tf = F.col("tf").cast("double")
     dl = F.col("dl").cast("double")
@@ -3310,7 +3334,8 @@ def ltr_rerank_topk(
     }
     feats = _ltr_candidate_features(spark, idx, query_terms, r)
     if not wts or feats is None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "rank int, doc_id long, ltr_score_micros long"
         )
     z = (
@@ -3370,7 +3395,7 @@ def ltr_train_logistic(
     """
     feats = _ltr_candidate_features(spark, idx, query_terms, r)
     if feats is None:
-        return spark.createDataFrame([], "j int, weight_micros long")
+        return local_frame(spark, [], "j int, weight_micros long")
     n = feats.count()
     w = [0, 0, 0, 0]
     xs = [F.lit(1_000_000).cast("long"), F.col("x1"), F.col("x2"), F.col("x3")]
@@ -3397,7 +3422,8 @@ def ltr_train_logistic(
             return -q if a < 0 else q
 
         w = [w[j] - _tdiv(int(g[f"g{j}"]), n * lr_den) for j in range(4)]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(j, int(w[j])) for j in range(4)], "j int, weight_micros long"
     )
 
@@ -3425,7 +3451,7 @@ def ltr_train_pairwise(
     map-side-combinable aggregate over it."""
     feats = _ltr_candidate_features(spark, idx, query_terms, r)
     if feats is None:
-        return spark.createDataFrame([], "j int, weight_micros long")
+        return local_frame(spark, [], "j int, weight_micros long")
     pos = feats.filter(F.col("y") == 1).select(
         F.col("x1").alias("px1"), F.col("x2").alias("px2"), F.col("x3").alias("px3")
     )
@@ -3443,7 +3469,8 @@ def ltr_train_pairwise(
     )
     n_pairs = pairs.count()
     if n_pairs == 0:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(j, 0) for j in range(4)], "j int, weight_micros long"
         )
     w = [0, 0, 0, 0]
@@ -3472,7 +3499,8 @@ def ltr_train_pairwise(
         g = pairs.agg(*aggs).collect()[0]
         for j in (1, 2, 3):
             w[j] = w[j] - _tdiv(int(g[f"g{j}"]), n_pairs * lr_den)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(j, int(w[j])) for j in range(4)], "j int, weight_micros long"
     )
 
@@ -3505,7 +3533,8 @@ def highlight_fragments(
 
     rows = _qlex(spark, idx, query_terms)
     if not rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "doc_id long, frag_seq int, start_pos long, end_pos long, "
             "n_matches long, fragment string",

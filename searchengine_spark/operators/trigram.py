@@ -42,6 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from searchengine_spark.operators.literals import local_frame
 from searchengine_spark.operators.postings import N_BUCKETS, bucket_of
 from searchengine_spark.sources.tables import load_table
 
@@ -111,7 +112,7 @@ def _buckets_for(spark: SparkSession, tris: list[str]) -> list[int]:
     missing = [g for g in tris if g not in _BUCKET_MEMO]
     if missing:
         rows = (
-            spark.createDataFrame([(g,) for g in missing], "gram string")
+            local_frame(spark, [(g,) for g in missing], "gram string")
             .select(
                 "gram",
                 bucket_of("gram").alias("b"),

@@ -62,11 +62,8 @@ def build_index(
     # ---- stage: documents (ingest + doc ids; corpus input) ------------------
     if not documents_input and not manifest.is_done("documents_raw", fp):
         with lin.StageTimer() as t:
-            docs = ingest.build_documents(corpus, n_partitions)
-            lin.publish_stage(docs, index_dir, "documents_raw")
-            cached = getattr(docs, "_sespark_persisted", None)
-            if cached is not None:  # the id-assignment cache is now dead weight
-                cached.unpersist()
+            with ingest.build_documents(corpus, n_partitions) as docs:
+                lin.publish_stage(docs, index_dir, "documents_raw")
         parts = lin.partition_metrics(stage_path("documents_raw"))
         n_docs = sum(p["rows"] for p in parts)
         lin.append_lineage(spark, index_dir, "documents", fp, parts, 0, 0, 1.0, t.wall_ms)

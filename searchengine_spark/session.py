@@ -1,8 +1,8 @@
 """SparkSession factory.
 
-Defaults are sized from the host (local[cores], driver heap from free
-memory) but every knob is the one you would also set on a 1000-executor
-cluster:
+Defaults are sized from the host (local[cores], a driver heap ceiling from
+free memory, committed as the work needs it) but every knob is the one you
+would also set on a 1000-executor cluster:
 
 - AQE on (runtime coalesce + skew-join splitting),
 - shuffle partitions sized to parallelism (not the 200 default),
@@ -56,15 +56,31 @@ _PYFILE_SENT: set[str] = set()
 
 
 def _default_driver_memory() -> str:
-    """About 60% of the host's MemAvailable, in whole GiB, 1g-16g: the
-    driver heap starts at its full size (-Xms below), so a fixed 16g fails
-    to start the JVM on a host with less memory free."""
+    """About 60% of the host's MemAvailable, in whole GiB, 1g-16g. This is
+    the heap's ceiling (-Xmx), not a reservation: the JVM commits heap as
+    the work needs it (see :func:`driver_java_options`), so a small build
+    stays small on a large host."""
     try:
         with open("/proc/meminfo") as f:
             kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:"))
     except (OSError, StopIteration, ValueError):
         return "16g"
     return f"{max(1, min(16, kb * 6 // 10 >> 20))}g"
+
+
+def driver_java_options(driver_mem: str) -> str:
+    """The driver JVM's options. THP-madvise the heap so the kernel serves
+    it with 2 MB pages (fewer faults, smaller TLB). By default the heap
+    grows on demand up to ``driver_mem``: committing it all at start-up
+    made a 1.5k-doc build hold the whole 2 GiB heap resident. With
+    ``SPARK_PRETOUCH`` set, -Xms == -Xmx + AlwaysPreTouch fault the whole
+    heap in at session start-up (untimed) instead of per stage: 32 task
+    threads first-touching fresh heap pages mid-build showed up as 60-90%
+    SYS time (page-fault + TLB-shootdown storm) at local[32]."""
+    opts = "-XX:+UseTransparentHugePages"
+    if os.environ.get("SPARK_PRETOUCH"):
+        opts = f"-Xms{driver_mem} -XX:+AlwaysPreTouch " + opts
+    return opts
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -128,16 +144,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
         )
         .config("spark.driver.memory", driver_mem)
-        # -Xms == -Xmx + AlwaysPreTouch: fault the whole heap in at session
-        # startup (untimed) instead of per-stage — 32 task threads first-
-        # touching fresh heap pages mid-build showed up as 60-90% SYS time
-        # (page-fault + TLB-shootdown storm). THP-madvise the heap so the
-        # kernel serves it with 2 MB pages (fewer faults, smaller TLB).
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{driver_mem} -XX:+UseTransparentHugePages"
-            + (" -XX:+AlwaysPreTouch" if os.environ.get("SPARK_PRETOUCH") else ""),
-        )
+        .config("spark.driver.extraJavaOptions", driver_java_options(driver_mem))
         # Sandbox corpora are ~100 MB, so the default 128 MB split size packs
         # a whole table into 1-2 scan partitions and forces a content shuffle
         # to fan work out. 16 MB keeps scans >= core count here; at real

@@ -51,7 +51,8 @@ def test_doc_ids_equal_global_rank_at_any_bucket_count(spark):
         )
     }
     for n_buckets in (1, 3, 16):
-        got = assign_doc_ids(corpus, n_partitions=n_buckets).collect()
+        with assign_doc_ids(corpus, n_partitions=n_buckets) as ids:
+            got = ids.collect()
         assert len(got) == len(expected)
         for r in got:
             assert r["doc_id"] == expected[(r["repo"], r["path"], r["commit"])], n_buckets
