@@ -44,11 +44,13 @@ Run:
 from __future__ import annotations
 
 import argparse
+import itertools
 import json
 import re
 import sys
 import threading
 import urllib.parse
+from collections import deque
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
@@ -56,6 +58,9 @@ from pyspark.sql import SparkSession
 from searchengine_spark.operators.literals import local_frame
 
 MAX_K = 100
+# the history suggester ranks the most recent searches only: the log is
+# inlined into each suggestion's plan, so its size is that plan's size
+HISTORY_WINDOW = 500
 
 
 class SearchAPI:
@@ -69,7 +74,9 @@ class SearchAPI:
         self.spark = spark
         self.idx = gate_index(spark, sf_dir)
         self.documents = load_table(spark, sf_dir, "documents")
-        self._history: list[tuple[int, str]] = []  # (seq, query) saveQuery log
+        # (seq, query) saveQuery log, the last HISTORY_WINDOW searches
+        self._history: deque[tuple[int, str]] = deque(maxlen=HISTORY_WINDOW)
+        self._seq = itertools.count()
         try:
             self.embeddings = load_table(spark, sf_dir, "embeddings")
         except Exception:  # corpus dirs without an embeddings table
@@ -194,9 +201,10 @@ class SearchAPI:
     def record_query(self, query: str) -> None:
         """saveQuery twin (suggestionService.js:16-30): append to the
         in-process query log; blank queries are never saved. The log is the
-        localStorage analog — a real deployment swaps in a log table."""
+        localStorage analog — a real deployment swaps in a log table. The
+        oldest entry drops out once the log holds HISTORY_WINDOW."""
         if query.strip():
-            self._history.append((len(self._history), query))
+            self._history.append((next(self._seq), query))
 
     def suggest_history(self, prefix: str, k: int = 5) -> list[dict]:
         """History-ranked autocomplete (getSuggestions twin): queries the

@@ -177,7 +177,8 @@ def assign_doc_ids(
         for b in sorted(counts):
             offsets[b] = acc
             acc += counts[b]
-        offset = literal_map(offsets)
+        # typed, so an empty corpus (no buckets) still resolves the lookup
+        offset = literal_map(offsets, "map<bigint,bigint>")
         w = Window.partitionBy("_bucket").orderBy(*SORT_KEY)
         yield (
             bucketed.withColumn("_rn", F.row_number().over(w))

@@ -70,6 +70,10 @@ _SNIPPET_SCHEMA = (
     "phrase_snippet string, url string, title string"
 )
 
+# search_compat frontiers up to this many rows enter the snippet plan as
+# literals (ids for row-group pruning); larger ones stay in the JVM
+_LITERAL_FRONTIER = 1_000
+
 
 def _snippets_udf(phrase: str | None):
     """mapInPandas over (doc_id, term, content, url, title): compute the
@@ -273,34 +277,51 @@ def search_compat(
     # The previous shape — snippets for EVERY candidate of a hot term —
     # scanned all content and was the 20-30 s tail at 1.6M docs; this loop
     # touches O(k) docs and one pruned scan per round.
+    # A frontier past _LITERAL_FRONTIER rows stays in the JVM: it is cached
+    # as it is collected, and the documents scan semi-joins it, instead of
+    # carrying its ids and terms into the plan as literals.
     out_schema = "rank int, doc_id long, url string, title string, score double, snippet string"
     n = max(4 * k, 50)
     checked: dict[int, object] = {}  # doc_id -> snippet Row (carries url/title) | None
     while True:
-        frontier = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(n).collect()
-        todo = [r for r in frontier if r["doc_id"] not in checked]
-        if todo:
-            ids = [int(r["doc_id"]) for r in todo]
-            pairs = local_frame(
-                spark,
-                [(int(r["doc_id"]), r["last_term"]) for r in todo],
-                "doc_id long, term string",
-            )
-            if len(ids) <= 10_000:
-                pruned_docs = documents.filter(F.col("doc_id").isin(ids))
-            else:  # pathological widening: avoid a giant IN expression
-                pruned_docs = documents.join(F.broadcast(pairs.select("doc_id")), "doc_id", "left_semi")
-            # ONE pruned scan + ONE job per round: snippets and url/title
-            # metadata come back together (the UDF passes url/title through)
-            snips = (
-                pruned_docs.select("doc_id", "content", "url", "title")
-                .join(F.broadcast(pairs), "doc_id")
-                .mapInPandas(_snippets_udf(phrase), _SNIPPET_SCHEMA)
-                .collect()
-            )
-            smap = {r["doc_id"]: r for r in snips}
-            for r in todo:
-                checked[r["doc_id"]] = smap.get(r["doc_id"])
+        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(n)
+        wide = n > _LITERAL_FRONTIER
+        if wide:
+            top = top.persist()
+        try:
+            frontier = top.collect()
+            todo = [r for r in frontier if r["doc_id"] not in checked]
+            if todo:
+                if wide:
+                    # snippet the whole cached frontier: the docs already
+                    # checked come out the same, and no id list enters the plan
+                    pairs = top.select("doc_id", F.col("last_term").alias("term"))
+                    pruned_docs = documents.join(
+                        F.broadcast(pairs.select("doc_id")), "doc_id", "left_semi"
+                    )
+                else:
+                    pairs = local_frame(
+                        spark,
+                        [(int(r["doc_id"]), r["last_term"]) for r in todo],
+                        "doc_id long, term string",
+                    )
+                    pruned_docs = documents.filter(
+                        F.col("doc_id").isin([int(r["doc_id"]) for r in todo])
+                    )
+                # ONE pruned scan + ONE job per round: snippets and url/title
+                # metadata come back together (the UDF passes url/title through)
+                snips = (
+                    pruned_docs.select("doc_id", "content", "url", "title")
+                    .join(F.broadcast(pairs), "doc_id")
+                    .mapInPandas(_snippets_udf(phrase), _SNIPPET_SCHEMA)
+                    .collect()
+                )
+                smap = {r["doc_id"]: r for r in snips}
+                for r in todo:
+                    checked[r["doc_id"]] = smap.get(r["doc_id"])
+        finally:
+            if wide:
+                top.unpersist()
         survivors: list[tuple] = []
         for r in frontier:  # frontier is already in final (score, doc_id) order
             s = checked.get(r["doc_id"])

@@ -92,6 +92,24 @@ def test_compat_rank_identity(spark, index, oracle, query):
         assert g["url"] == w["url"]
 
 
+@pytest.mark.parametrize("query", ["spark", '"inverted index build"', "the is in at of"])
+def test_compat_rank_identity_jvm_frontier(spark, index, oracle, query, monkeypatch):
+    """The frontier path for wide frontiers (cached, semi-joined, no
+    literal id list) ranks and snippets exactly as the literal path."""
+    from searchengine_spark.operators import query as query_ops
+
+    monkeypatch.setattr(query_ops, "_LITERAL_FRONTIER", 0)
+    got = search_compat(
+        spark, index["postings"], index["lexicon"], index["documents"], query, k=10
+    ).collect()
+    want = oracle.search_compat(query, k=10)
+    assert [(g["rank"], g["doc_id"], g["snippet"], g["url"]) for g in got] == [
+        (w["rank"], w["doc_id"], w["snippet"], w["url"]) for w in want
+    ]
+    for g, w in zip(got, want):
+        assert abs(g["score"] - w["score"]) <= 1e-9, (query, g["score"], w["score"])
+
+
 @pytest.mark.parametrize("query", QUERIES)
 def test_bm25_rank_identity(spark, index, oracle, query):
     got = search_bm25(spark, index, query, k=10).collect()

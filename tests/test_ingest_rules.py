@@ -27,6 +27,17 @@ def test_apply_exclusions(spark):
     assert apply_exclusions(corpus, []).count() == total
 
 
+def test_documents_from_fully_excluded_corpus(spark):
+    """Rules that drop every file leave an empty documents frame, not an
+    analysis error: the doc-id offsets map is typed even with no buckets."""
+    from searchengine_spark.operators.ingest import build_documents
+
+    corpus = apply_exclusions(generate_corpus(spark, 20, seed=3), [{"repo_prefix": ""}])
+    with build_documents(corpus) as docs:
+        assert "doc_id" in docs.columns
+        assert docs.collect() == []
+
+
 def test_fingerprint_whitespace_insensitive(spark):
     df = spark.createDataFrame(
         [("r", "a", "c1", "txt", "hello   world"), ("r", "b", "c2", "txt", "hello world")],

@@ -70,16 +70,50 @@ def test_no_python_rows_frames():
         ),
         ([(3, [1, 2, 3]), (4, [])], "cid int, _cent array<bigint>"),
         ([(2, 0.5)], "j int, lam double"),
+        (
+            [
+                ("${x}", float("nan"), -(2**63)),
+                ("${env:HOME} ${spark.app.name} $ $$ \\${x}", float("inf"), 2**63 - 1),
+                ("a\nb\tc\r\x00'\\u0024", float("-inf"), 0),
+                ("${sparkconf:spark.app.name}", -0.0, -1),
+            ],
+            "s string, d double, n long",
+        ),
     ],
-    ids=["empty", "scalars_and_nulls", "arrays", "int_and_double"],
+    ids=["empty", "scalars_and_nulls", "arrays", "int_and_double", "edge_values"],
 )
 def test_local_frame_equals_create_dataframe(spark, rows, schema):
+    """Same schema and rows; ``repr`` compares NaN and -0.0 exactly, and no
+    ``${...}`` in a string is expanded by the SQL parser."""
     from searchengine_spark.operators.literals import local_frame
 
     got = local_frame(spark, rows, schema)
     want = spark.createDataFrame(rows, schema)
     assert got.schema == want.schema
-    assert got.collect() == want.collect()
+    assert list(map(repr, got.collect())) == list(map(repr, want.collect()))
+
+
+def test_local_frame_refuses_past_max_rows(spark, monkeypatch):
+    from searchengine_spark.operators import literals
+
+    monkeypatch.setattr(literals, "MAX_LOCAL_ROWS", 2)
+    assert literals.local_frame(spark, [(1,), (2,)], "x long").count() == 2
+    with pytest.raises(ValueError, match="MAX_LOCAL_ROWS"):
+        literals.local_frame(spark, [(1,), (2,), (3,)], "x long")
+
+
+def test_literal_map_typed_empty(spark):
+    """An empty typed map resolves a lookup (null); ``$`` keys come back
+    verbatim."""
+    from pyspark.sql import functions as F
+
+    from searchengine_spark.operators.literals import literal_map
+
+    empty = literal_map({}, "map<bigint,bigint>")
+    assert [r[0] for r in spark.range(2).select(empty[F.col("id")]).collect()] == [None, None]
+    m = literal_map({"${env:HOME}": "${spark.app.name}"})
+    got = spark.range(1).select(m[F.lit("${env:HOME}")]).collect()[0][0]
+    assert got == "${spark.app.name}"
 
 
 def test_failed_documents_write_releases_ingest_cache(spark, tmp_path, monkeypatch):

@@ -284,3 +284,29 @@ def test_history_suggest_route(api_server):
     ]
     assert [s["count"] for s in body["suggestions"]] == [2, 1]
     api._history.clear()  # leave the module-scoped server clean
+
+
+def test_history_suggest_returns_queries_verbatim(api_server):
+    """A recorded query holding ``${...}`` comes back as typed: the SQL
+    parser's variable pass never sees it (no conf or environment leaks)."""
+    api, base = api_server
+    api._history.clear()
+    queries = ["zz${env:HOME}", "zz${spark.app.name}", "zz$x"]
+    for q in queries:
+        _get(base, "/api/search?query=" + urllib.parse.quote(q))
+    status, body = _get(base, "/api/suggest?prefix=zz&source=history")
+    assert status == 200
+    assert [s["query"] for s in body["suggestions"]] == queries
+    api._history.clear()
+
+
+def test_history_log_keeps_the_last_window(api_server):
+    from searchengine_spark.jobs.serve_api import HISTORY_WINDOW
+
+    api, _ = api_server
+    api._history.clear()
+    for i in range(HISTORY_WINDOW + 3):
+        api.record_query(f"q{i}")
+    assert len(api._history) == HISTORY_WINDOW
+    assert api._history[0][1] == "q3" and api._history[-1][1] == f"q{HISTORY_WINDOW + 2}"
+    api._history.clear()
