@@ -233,27 +233,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_batch_topk": lambda spark, sf: serve.bm25_batch_topk(
             spark, gate_index(spark, sf), BATCH_QUERIES, k=TOPK
         ),
-        # DPR-style hard-negative mining: per-query BM25 top-k minus the
-        # deterministic positive (lowest doc matching all query terms)
-        "hard_negatives": lambda spark, sf: serve.hard_negatives(
-            spark, gate_index(spark, sf), BATCH_QUERIES, k=TOPK
-        ),
-        # TREC-style offline evaluation: hit@k / MRR / nDCG per query
-        # against the same deterministic conjunctive-positive qrels
-        # (k=1000 so the positive's actual rank shows up in the metrics —
-        # at k=10 every row is zero and the gate would prove nothing)
-        "rank_metrics": lambda spark, sf: serve.rank_metrics(
-            spark, gate_index(spark, sf), BATCH_QUERIES, k=1000
-        ),
-        # pre-retrieval query difficulty prediction from lexicon stats only
-        "qpp_predictors": lambda spark, sf: serve.qpp_predictors(
-            spark, gate_index(spark, sf), BATCH_QUERIES
-        ),
-        # rank-biased overlap between the engine's BM25 and QLD rankings —
-        # exact-integer truncated RBO@k (no libm pow)
-        "rbo_rankings": lambda spark, sf: serve.rbo_rankings(
-            spark, gate_index(spark, sf), BM25_TERMS, k=TOPK
-        ),
         "term_search_all": lambda spark, sf: serve.term_search_all(
             spark, gate_index(spark, sf), ALL_TERMS
         ),
@@ -303,29 +282,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # windows regrouped from the STORED positions, best passage wins
         "bm25_maxp_topk": lambda spark, sf: serve.bm25_maxp_topk(
             spark, gate_index(spark, sf), BM25_TERMS, k=TOPK
-        ),
-        # LETOR-style per-(query, doc) ranking-feature export — the
-        # feature-join step of an LTR training pipeline, one index pass
-        "ltr_features": lambda spark, sf: serve.ltr_features(
-            spark, gate_index(spark, sf), BM25_TERMS
-        ),
-        # the TRAINING step those features feed: full-batch logistic GD in
-        # fixed-point integers (per-row nano-rounded gradients, exact
-        # truncating-division updates) — unrolled-GD DuckDB twin
-        # trained on the rare+common query so the candidate set carries
-        # BOTH classes (conjunctive positives need the rare "dup")
-        "ltr_train": lambda spark, sf: serve.ltr_train_logistic(
-            spark, gate_index(spark, sf), COMMON_TERMS_QUERY, r=50
-        ),
-        # the pairwise (RankNet) objective beside the pointwise trainer;
-        # bias cancels in every pair difference (provably stays 0)
-        "ltr_train_pairwise": lambda spark, sf: serve.ltr_train_pairwise(
-            spark, gate_index(spark, sf), COMMON_TERMS_QUERY, r=50
-        ),
-        # ...and SERVE with that model: integer logit rank over the shared
-        # feature table (sigmoid monotone -> no float at serve time)
-        "ltr_rerank_topk": lambda spark, sf: serve.ltr_rerank_topk(
-            spark, gate_index(spark, sf), COMMON_TERMS_QUERY, k=TOPK, r=50
         ),
         # CORI resource ranking over doc_id-mod shards — the shard router
         # of selective search (query only the most promising shards)
@@ -386,12 +342,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # nearest corpus-trained k-means centroid
         "cluster_results": lambda spark, sf: serve.cluster_results(
             spark, gate_index(spark, sf), emb(spark, sf), BM25_TERMS, r=50
-        ),
-        # retrieve-then-rerank: BM25 top-50 recall, Arrow-batched surrogate
-        # cross-encoder (hashed frozen weights) re-ranks the bounded
-        # candidate set — the neural-serving shape with a deterministic model
-        "rerank_ce_topk": lambda spark, sf: serve.rerank_ce_topk(
-            spark, gate_index(spark, sf), BM25_TERMS, k=TOPK, n_candidates=50
         ),
         "term_search_any": lambda spark, sf: serve.term_search_any(
             spark, gate_index(spark, sf), ALL_TERMS
@@ -1409,10 +1359,6 @@ def oracle_sql() -> dict[str, str]:
         "bm25_explain": oracles.bm25_explain_sql(BM25_TERMS, k=TOPK),
         "tfidf_topk": oracles.tfidf_topk_sql(TFIDF_TERMS, k=TOPK),
         "bm25_batch_topk": oracles.bm25_batch_topk_sql(BATCH_QUERIES, k=TOPK),
-        "hard_negatives": oracles.hard_negatives_sql(BATCH_QUERIES, k=TOPK),
-        "rank_metrics": oracles.rank_metrics_sql(BATCH_QUERIES, k=1000),
-        "qpp_predictors": oracles.qpp_predictors_sql(BATCH_QUERIES),
-        "rbo_rankings": oracles.rbo_rankings_sql(BM25_TERMS, k=TOPK),
         "term_search_all": oracles.term_search_all_sql(ALL_TERMS),
         "hybrid_rrf_topk": oracles.hybrid_rrf_sql(BM25_TERMS, k=TOPK, r=50),
         "qld_topk": oracles.qld_topk_sql(BM25_TERMS, k=TOPK),
@@ -1424,14 +1370,6 @@ def oracle_sql() -> dict[str, str]:
         "prf_expansion_topk": oracles.prf_expansion_sql(BM25_TERMS, k=TOPK),
         "bm25f_topk": oracles.bm25f_topk_sql(BM25_TERMS, k=TOPK),
         "bm25_maxp_topk": oracles.bm25_maxp_topk_sql(BM25_TERMS, k=TOPK),
-        "ltr_features": oracles.ltr_features_sql(BM25_TERMS),
-        "ltr_train": oracles.ltr_train_logistic_sql(COMMON_TERMS_QUERY, r=50),
-        "ltr_rerank_topk": oracles.ltr_rerank_topk_sql(
-            COMMON_TERMS_QUERY, k=TOPK, r=50
-        ),
-        "ltr_train_pairwise": oracles.ltr_train_pairwise_sql(
-            COMMON_TERMS_QUERY, r=50
-        ),
         "shard_selection": oracles.shard_selection_sql(BM25_TERMS, n_shards=8),
         "term_search_any": oracles.term_search_any_sql(ALL_TERMS),
         "significant_terms": oracles.significant_terms_sql(BM25_TERMS, k=20),
@@ -1511,7 +1449,6 @@ def oracle_sql() -> dict[str, str]:
         ),
         "docid_reorder_gain": oracles.docid_reorder_gain_sql(),
         "zorder_layout": oracles.zorder_layout_sql(bits=16, n_groups=64),
-        "rerank_ce_topk": oracles.rerank_ce_topk_sql(BM25_TERMS, k=TOPK, n_candidates=50),
         "mmr_topk": oracles.mmr_topk_sql(BM25_TERMS, k=TOPK, r=50),
         "compat_topk": oracles.compat_topk_sql(COMPAT_TERMS, COMPAT_QUERY, k=TOPK),
         "search_results": oracles.search_results_sql(BM25_TERMS, k=TOPK),

@@ -42,9 +42,6 @@ HEADLINE = [
     "bm25_topk_tiered",
     "bm25_batch_topk",
     "bm25_explain",
-    "hard_negatives",
-    "rank_metrics",
-    "qpp_predictors",
     "compat_topk",
     "search_results",
     "highlight_fragments",
@@ -58,13 +55,8 @@ HEADLINE = [
     "hybrid_rrf_topk",
     "borda_fusion_topk",
     "bm25plus_topk",
-    "rerank_ce_topk",
     "mmr_topk",
     "bm25_maxp_topk",
-    "ltr_features",
-    "ltr_train",
-    "ltr_rerank_topk",
-    "ltr_train_pairwise",
     "shard_selection",
     "phrase_match",
     "phrase_topk",
@@ -83,7 +75,6 @@ HEADLINE = [
     "bm25_boosted_topk",
     "common_terms_topk",
     "nrt_two_tier_topk",
-    "rbo_rankings",
     "index_stats",
     "stopword_list",
     "span_first_topk",

@@ -9,9 +9,10 @@ index, then url/title lookup and a 60-word centered snippet rendered at
 query time for the <=k candidate docs.
 
 A request is three Spark executions (``search_results``): one lexicon
-lookup; one ``groupBy(doc_id)`` over the pruned postings that computes the
-score, the snippet term and, for a quoted phrase, the positional adjacency
-check together, then keeps the bounded top-k; one documents scan that
+lookup; one ``groupBy(doc_id)`` over the pruned postings — the
+``serve._scored`` core every ranker shares — that computes the score, the
+snippet term and, for a quoted phrase, the positional adjacency check
+together, then keeps the bounded top-k; one documents scan that
 reads the <=k winners by pushed-down id and takes their scores and terms
 from literal maps — no broadcast join and no second postings pass.
 
@@ -98,6 +99,7 @@ def snippet_expr(words: Column, term: Column, n_words: int = SNIPPET_WORDS) -> C
 
 
 def _topk(
+    spark: SparkSession,
     idx: dict,
     rows: list,
     query_terms: list[str],
@@ -105,28 +107,27 @@ def _topk(
     doc_filter: DataFrame | None,
     phrase: bool,
 ) -> DataFrame:
-    """The request's one top-k aggregate over the pruned postings:
+    """The request's one top-k aggregate — the ``serve._scored`` core over
+    the looked-up ``rows``, with ``serve._topk`` as its tail:
     ``(doc_id, score_micros, term)`` with ``term`` the doc's last matched
     query term (Q12) and, for a phrase, only docs holding it adjacently."""
     from searchengine_spark.operators import serve
 
-    idf = literal_map({r["term"]: r["idf_bm25"] for r in rows})
-    contrib = serve._bm25_contrib(idx["avgdl"])
-    top, pos = serve._doc_positions(
-        serve._pruned_postings(idx, rows).withColumn("idf_bm25", idf[F.col("term")]),
-        query_terms if phrase else [],
-        F.sum(F.round(contrib * 1e6).cast("long")).alias("score_micros"),
+    pos_aggs, pos = serve._positions(query_terms if phrase else [])
+    top = serve._scored(
+        spark,
+        idx,
+        query_terms,
+        serve._bm25_contrib(idx["avgdl"]),
         F.max("term").alias("term"),
+        *pos_aggs,
+        rows=rows,
     )
     if phrase:
         top = top.filter(serve._phrase_adjacent(pos, query_terms))
     if doc_filter is not None:
         top = top.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
-    return (
-        top.select("doc_id", "score_micros", "term")
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return serve._topk(top.select("doc_id", "score_micros", "term"), k)
 
 
 def search_results(
@@ -147,9 +148,11 @@ def search_results(
     1. one lexicon point lookup (``serve._qlex``) — its rows give the
        bucket pruning, the idf values and, for a phrase, the
        all-terms-present check;
-    2. one top-k aggregate over the pruned postings: ``groupBy(doc_id)``
-       computes the BM25 score (the shared ``serve._bm25_contrib``, idf
-       from a literal term→idf map), the Q12 snippet term ``max(term)``
+    2. one top-k aggregate, the scoring core every ranker shares
+       (``serve._scored`` over the looked-up rows, ``serve._topk`` as its
+       tail): ``groupBy(doc_id)`` over the pruned postings computes the
+       BM25 score (``serve._bm25_contrib``, the lexicon statistics read
+       from literal term → value maps), the Q12 snippet term ``max(term)``
        and, for a phrase, each phrase term's positions, checked for
        adjacency in the same pass; the bounded top-k is collected;
     3. one results scan: the documents scan with the <=k winner ids
@@ -176,7 +179,7 @@ def search_results(
     # documents scan (parquet row-group pruning on the doc_id-clustered
     # files) — a join key never reaches the reader, so without this every
     # request would decode the whole corpus's text column
-    top_rows = _topk(idx, rows, query_terms, k, doc_filter, phrase).collect()
+    top_rows = _topk(spark, idx, rows, query_terms, k, doc_filter, phrase).collect()
     if not top_rows:
         return local_frame(spark, [], _RESULT_SCHEMA)
     score = {int(r["doc_id"]): int(r["score_micros"]) for r in top_rows}

@@ -5,16 +5,20 @@ re-tokenizing the corpus.
 
 This is the engine's actual physical query path, mirroring the reference's
 index-served lookups (SearchService.java:464-477 — per-term fetches against
-the prebuilt ``Terms`` collection; our analog is a partition-pruned scan of
-the term-bucketed postings/segments parquet):
+the prebuilt ``Terms`` collection, then one TF-IDF sum). Every lexical
+ranker that sums per-posting contributions, REST's included, scores through
+ONE core, :func:`_scored` (the few that cannot say why in their docstrings):
 
 - ONE tiny driver job per query collects the |q| lexicon rows (term, df,
-  idf, bucket) — the point-lookup step;
+  cf, idf, bucket) — the point-lookup step (:func:`_qlex`);
 - the postings scan is pruned to the query terms' bucket directories
-  (partition pruning) plus a term predicate pushed to parquet;
-- scoring joins the broadcast |q|-row lexicon back — no corpus scan, no
-  per-query aggregate over the vocabulary, no driver-side avgdl job (avgdl
-  is a manifest scalar).
+  (partition pruning) plus a term predicate pushed to parquet; a ranker
+  may narrow it further (champion lists, candidate sets, tombstones);
+- the |q| rows' statistics ride into the scan as literal term -> value
+  maps (:func:`_lex_stats`) — no join on lexicon rows, no corpus scan, no
+  driver-side avgdl job (avgdl is a manifest scalar);
+- each posting's contribution, a ranker-supplied Column, is rounded to
+  bigint micros and summed per doc; :func:`_topk` is the one bounded tail.
 
 Scores are bigint micros (round(score*1e6)) summed in integer space — exact,
 associative, bit-identical across partition counts and engines (the same
@@ -23,6 +27,7 @@ contract the round-1 gates established).
 
 from __future__ import annotations
 
+import math
 import operator
 from collections.abc import Callable
 from functools import reduce
@@ -31,9 +36,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark.operators.codec import BM25_B, BM25_K1
-from searchengine_spark.operators.literals import local_frame
+from searchengine_spark.operators.literals import literal_map, local_frame
 
 _EMPTY_TOPK = "doc_id long, score_micros long"
+# the lexicon statistics _scored can attach, with their SQL types
+_LEX_STATS = {"df": "bigint", "cf": "bigint", "idf_bm25": "double", "idf_compat": "double"}
 
 
 def _qlex(spark: SparkSession, idx: dict, terms: list[str]) -> list:
@@ -57,24 +64,81 @@ def _pruned_postings(idx: dict, rows: list) -> DataFrame:
     )
 
 
+def _lex_stats(rows: list, names: tuple[str, ...]) -> dict[str, Column]:
+    """The lexicon rows' statistics ``names`` as columns of a scan's
+    ``term``: one literal term -> value map per statistic, looked up in the
+    plan instead of a join. Typed, so an empty ``rows`` still resolves."""
+    return {
+        c: literal_map({r["term"]: r[c] for r in rows}, f"map<string,{_LEX_STATS[c]}>")[
+            F.col("term")
+        ]
+        for c in names
+    }
+
+
+def _scored(
+    spark: SparkSession,
+    idx: dict,
+    terms: list[str],
+    contrib: Column,
+    *aggs: Column,
+    stats: tuple[str, ...] = ("idf_bm25",),
+    rows: list | None = None,
+    narrow: Callable[[DataFrame], DataFrame] | None = None,
+    by: tuple[str, ...] = ("doc_id",),
+) -> DataFrame:
+    """The scoring core every lexical ranker goes through: lexicon point
+    lookup (:func:`_qlex`, skipped when the caller passes the ``rows`` it
+    already holds) → bucket/term-pruned postings scan, which ``narrow``
+    may cut further → the lexicon ``stats`` the ranker reads, attached from
+    literal maps (:func:`_lex_stats`) → ``sum(round(contrib * 1e6))`` per
+    ``by`` group as ``score_micros``, beside the caller's ``aggs``.
+
+    ``contrib`` is the ranker's per-posting expression over the scan's
+    columns (tf, dl, positions) and ``stats`` (any of df, cf, idf_bm25,
+    idf_compat). A query with no lexicon term yields an empty frame of the
+    same shape. :func:`_topk` is the bounded tail."""
+    if rows is None:
+        rows = _qlex(spark, idx, terms)
+    post = _pruned_postings(idx, rows)
+    if narrow is not None:
+        post = narrow(post)
+    return (
+        post.withColumns(_lex_stats(rows, stats))
+        .groupBy(*by)
+        .agg(F.sum(F.round(contrib * 1e6).cast("long")).alias("score_micros"), *aggs)
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The bounded top-k tail (TakeOrderedAndProject): score_micros desc,
+    doc_id asc."""
+    return scored.orderBy(F.desc("score_micros"), F.asc("doc_id")).limit(k)
+
+
+def _positions(terms: list[str]) -> tuple[list[Column], dict[str, Column]]:
+    """Per-doc positions aggregates of ``terms``: ``max(when(term == t,
+    positions))`` per distinct term (postings are unique per (term, doc),
+    so each max sees one non-null array; it is null when the doc lacks t),
+    and the term -> positions column map that :func:`_phrase_at` reads."""
+    distinct = list(dict.fromkeys(terms))
+    return (
+        [
+            F.max(F.when(F.col("term") == t, F.col("positions"))).alias(f"_pos{i}")
+            for i, t in enumerate(distinct)
+        ],
+        {t: F.col(f"_pos{i}") for i, t in enumerate(distinct)},
+    )
+
+
 def _doc_positions(
     post: DataFrame, terms: list[str], *aggs: Column
 ) -> tuple[DataFrame, dict[str, Column]]:
     """The per-doc positions of ``terms``: ONE ``groupBy(doc_id)`` over a
-    term-pruned postings scan, with ``max(when(term == t, positions))`` per
-    distinct term (postings are unique per (term, doc), so each max sees
-    one non-null array; it is null when the doc lacks t) next to the
-    caller's ``aggs``. Returns the frame and the term -> positions column
-    map that :func:`_phrase_at` reads — no explode, no self-join."""
-    distinct = list(dict.fromkeys(terms))
-    per_doc = post.groupBy("doc_id").agg(
-        *aggs,
-        *[
-            F.max(F.when(F.col("term") == t, F.col("positions"))).alias(f"_pos{i}")
-            for i, t in enumerate(distinct)
-        ],
-    )
-    return per_doc, {t: F.col(f"_pos{i}") for i, t in enumerate(distinct)}
+    term-pruned postings scan with the :func:`_positions` aggregates next
+    to the caller's ``aggs`` — no explode, no self-join."""
+    pos_aggs, pos = _positions(terms)
+    return post.groupBy("doc_id").agg(*aggs, *pos_aggs), pos
 
 
 def _phrase_at(
@@ -106,14 +170,6 @@ def _phrase_adjacent(
 ) -> Column:
     """True iff the doc holds ``phrase_terms`` at stride ``stride``."""
     return F.exists(pos[phrase_terms[0]], _phrase_at(pos, phrase_terms, stride))
-
-
-def _lex_df(spark: SparkSession, rows: list) -> DataFrame:
-    return local_frame(
-        spark,
-        [(r["term"], r["df"], r["idf_bm25"], r["idf_compat"]) for r in rows],
-        "term string, df long, idf_bm25 double, idf_compat double",
-    )
 
 
 def postings_tf(spark: SparkSession, idx: dict) -> DataFrame:
@@ -159,9 +215,9 @@ def stopword_list(
 
 def _bm25_contrib(avgdl: float) -> F.Column:
     """The per-posting BM25 contribution expression. ONE definition shared
-    by the single-query and batch paths: the float op ORDER is load-bearing
-    (micros parity with the DuckDB oracle and batch==single equality), so
-    it must never exist in two copies."""
+    by every BM25 path: the float op ORDER is load-bearing (micros parity
+    with the DuckDB oracle and batch==single equality), so it must never
+    exist in two copies."""
     tf = F.col("tf").cast("double")
     dl = F.col("dl").cast("double")
     return F.col("idf_bm25") * (tf * (BM25_K1 + 1.0)) / (
@@ -173,24 +229,12 @@ def bm25_scores(
     spark: SparkSession, idx: dict, query_terms: list[str]
 ) -> DataFrame:
     """Un-limited BM25 candidate scores served from the index:
-    (doc_id, score_micros) for every doc matching ≥1 query term.
-
-    Plan: pruned postings scan → broadcast join of the |q|-row lexicon →
-    per-doc bigint aggregate. Zero corpus scans, zero per-query driver
-    aggregates. ``bm25_topk`` adds the bounded top-k; callers that filter
-    candidates first (e.g. the REST phrase path) consume this directly so
-    the limit applies AFTER their filter."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    post = _pruned_postings(idx, rows)
-    contrib = _bm25_contrib(idx["avgdl"])
-    return (
-        post.join(F.broadcast(_lex_df(spark, rows)), "term")
-        .select("doc_id", F.round(contrib * 1e6).cast("long").alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-    )
+    (doc_id, score_micros) for every doc matching ≥1 query term — the
+    :func:`_scored` core with the BM25 contribution. ``bm25_topk`` adds the
+    bounded top-k; callers that filter candidates first (e.g.
+    :func:`phrase_topk`) consume this directly so the limit applies AFTER
+    their filter."""
+    return _scored(spark, idx, query_terms, _bm25_contrib(idx["avgdl"]))
 
 
 def bm25_topk(
@@ -198,11 +242,7 @@ def bm25_topk(
 ) -> DataFrame:
     """BM25 top-k served from the index: (doc_id, score_micros) — the
     bounded-heap (TakeOrderedAndProject) tail over ``bm25_scores``."""
-    return (
-        bm25_scores(spark, idx, query_terms)
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _topk(bm25_scores(spark, idx, query_terms), k)
 
 
 def bm25_explain(
@@ -214,35 +254,26 @@ def bm25_explain(
     relevance-debugging surface every production engine ships beside its
     ranker; a row's contribs sum exactly to its score by construction.
 
-    Plan shape: the SAME pruned-postings scan + broadcast lexicon join as
-    :func:`bm25_scores` (one shared `_bm25_contrib` expression, so explain
-    can never drift from the ranking it explains), a bounded top-k heap on
-    the per-doc sums, and a broadcast semi-join back onto the ≤ k·|q|
-    contribution rows. Zero corpus scans."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(
-            spark,
-            [],
-            "doc_id long, term string, tf long, df long, "
-            "contrib_micros long, score_micros long",
-        )
-    post = _pruned_postings(idx, rows)
-    contrib = _bm25_contrib(idx["avgdl"])
-    scored = post.join(F.broadcast(_lex_df(spark, rows)), "term").select(
-        "doc_id",
-        "term",
-        F.col("tf").cast("long").alias("tf"),
-        "df",
-        F.round(contrib * 1e6).cast("long").alias("contrib_micros"),
+    Plan shape: the :func:`_scored` core grouped by (doc_id, term) — one
+    posting per group, so each group's sum is that posting's contribution
+    (the shared `_bm25_contrib` expression, so explain can never drift from
+    the ranking it explains) — then a bounded top-k heap on the per-doc
+    sums and a broadcast semi-join back onto the ≤ k·|q| contribution rows.
+    Zero corpus scans."""
+    contribs = _scored(
+        spark,
+        idx,
+        query_terms,
+        _bm25_contrib(idx["avgdl"]),
+        F.max("tf").cast("long").alias("tf"),
+        F.max("df").alias("df"),
+        stats=("idf_bm25", "df"),
+        by=("doc_id", "term"),
+    ).withColumnRenamed("score_micros", "contrib_micros")
+    top = _topk(
+        contribs.groupBy("doc_id").agg(F.sum("contrib_micros").alias("score_micros")), k
     )
-    topk = (
-        scored.groupBy("doc_id")
-        .agg(F.sum("contrib_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return scored.join(F.broadcast(topk), "doc_id").select(
+    return contribs.join(F.broadcast(top), "doc_id").select(
         "doc_id", "term", "tf", "df", "contrib_micros", "score_micros"
     )
 
@@ -273,7 +304,7 @@ def bm25_search_after(
             (F.col("score_micros") < cs)
             | ((F.col("score_micros") == cs) & (F.col("doc_id") > cd))
         )
-    return scores.orderBy(F.desc("score_micros"), F.asc("doc_id")).limit(k)
+    return _topk(scores, k)
 
 
 def bm25_page(
@@ -292,6 +323,27 @@ def bm25_page(
     return bm25_search_after(spark, idx, query_terms, cursor, k=k)
 
 
+def _champions(post: DataFrame, max_postings: int, salts: int) -> DataFrame:
+    """Each term's top ``max_postings`` postings by impact proxy (tf desc,
+    doc_id asc): the two-phase salted grouped top-k (rank within (term,
+    doc_id mod salts) slots first), so no single partition ever holds a
+    hot term's full posting list."""
+    from pyspark.sql import Window
+
+    order = [F.desc("tf"), F.asc("doc_id")]
+    partial = Window.partitionBy("term", F.pmod(F.col("doc_id"), F.lit(salts))).orderBy(
+        *order
+    )
+    final = Window.partitionBy("term").orderBy(*order)
+    return (
+        post.withColumn("_pr", F.row_number().over(partial))
+        .filter(F.col("_pr") <= max_postings)
+        .withColumn("_r", F.row_number().over(final))
+        .filter(F.col("_r") <= max_postings)
+        .drop("_pr", "_r")
+    )
+
+
 def bm25_topk_pruned(
     spark: SparkSession,
     idx: dict,
@@ -307,37 +359,19 @@ def bm25_topk_pruned(
     tier ships — at 10^12 docs a stopword's posting list is bounded to a
     constant instead of scanned.
 
-    The per-term truncation is the two-phase salted grouped top-k from
-    :func:`bm25_batch_topk` (no single partition ever holds a hot term's
-    full posting list). Scoring/tie-breaks share the single-definition
+    The per-term truncation (:func:`_champions`) narrows the :func:`_scored`
+    scan; scoring/tie-breaks share the single-definition
     :func:`_bm25_contrib` micros contract, so the DuckDB oracle replicates
     the pruned ranking bit-for-bit."""
-    from pyspark.sql import Window
-
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    post = _pruned_postings(idx, rows)
-    order = [F.desc("tf"), F.asc("doc_id")]
-    partial = Window.partitionBy("term", F.pmod(F.col("doc_id"), F.lit(salts))).orderBy(
-        *order
-    )
-    final = Window.partitionBy("term").orderBy(*order)
-    pruned = (
-        post.withColumn("_pr", F.row_number().over(partial))
-        .filter(F.col("_pr") <= max_postings)
-        .withColumn("_r", F.row_number().over(final))
-        .filter(F.col("_r") <= max_postings)
-        .drop("_pr", "_r")
-    )
-    contrib = _bm25_contrib(idx["avgdl"])
-    return (
-        pruned.join(F.broadcast(_lex_df(spark, rows)), "term")
-        .select("doc_id", F.round(contrib * 1e6).cast("long").alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
+    return _topk(
+        _scored(
+            spark,
+            idx,
+            query_terms,
+            _bm25_contrib(idx["avgdl"]),
+            narrow=lambda post: _champions(post, max_postings, salts),
+        ),
+        k,
     )
 
 
@@ -351,48 +385,27 @@ def bm25_topk_tiered(
 ) -> DataFrame:
     """Two-phase tiered retrieval (the Lucene/production refinement of
     static pruning): phase 1 generates CANDIDATES from each query term's
-    champion list (top ``max_postings`` postings by tf desc, doc_id asc —
-    the :func:`bm25_topk_pruned` truncation); phase 2 re-scores the
-    candidate union with the EXACT full-fidelity BM25 over ALL the
-    candidates' query-term postings. Unlike champion-only scoring, a doc
-    reached through one term's champion list still gets credit for its
-    non-champion postings on the other terms — the standard
-    accuracy/latency middle tier between pruned and exhaustive.
+    champion list (:func:`_champions`, the :func:`bm25_topk_pruned`
+    truncation); phase 2 re-scores the candidate union with the EXACT
+    full-fidelity BM25 over ALL the candidates' query-term postings. Unlike
+    champion-only scoring, a doc reached through one term's champion list
+    still gets credit for its non-champion postings on the other terms —
+    the standard accuracy/latency middle tier between pruned and exhaustive.
 
     Scale shape: phase 1 is the salted grouped top-k (bounded per term —
     a stopword costs a constant, not its posting list); phase 2's scan is
     the same bucket-pruned postings read semi-joined down to
-    ≤ |q|·max_postings candidate docs before any scoring work. Both
-    phases share the single-definition :func:`_bm25_contrib` micros
-    contract."""
-    from pyspark.sql import Window
+    ≤ |q|·max_postings candidate docs before any scoring work."""
 
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    post = _pruned_postings(idx, rows)
-    order = [F.desc("tf"), F.asc("doc_id")]
-    partial = Window.partitionBy("term", F.pmod(F.col("doc_id"), F.lit(salts))).orderBy(
-        *order
-    )
-    final = Window.partitionBy("term").orderBy(*order)
-    cands = (
-        post.withColumn("_pr", F.row_number().over(partial))
-        .filter(F.col("_pr") <= max_postings)
-        .withColumn("_r", F.row_number().over(final))
-        .filter(F.col("_r") <= max_postings)
-        .select("doc_id")
-        .distinct()
-    )
-    contrib = _bm25_contrib(idx["avgdl"])
-    return (
-        post.join(cands, "doc_id", "left_semi")
-        .join(F.broadcast(_lex_df(spark, rows)), "term")
-        .select("doc_id", F.round(contrib * 1e6).cast("long").alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
+    def candidates_only(post: DataFrame) -> DataFrame:
+        cands = _champions(post, max_postings, salts).select("doc_id").distinct()
+        return post.join(cands, "doc_id", "left_semi")
+
+    return _topk(
+        _scored(
+            spark, idx, query_terms, _bm25_contrib(idx["avgdl"]), narrow=candidates_only
+        ),
+        k,
     )
 
 
@@ -411,52 +424,28 @@ def bm25_batch_topk(
     right shape for offline evaluation / relevance sweeps is to score all
     queries in one job: ONE pruned postings scan over the union of the
     queries' terms, a broadcast (query_id, term) map fanning each posting
-    to the queries that want it, and one (query_id, doc_id) aggregate.
-    Per-posting cost is unchanged; the scan and shuffle amortize across
-    |Q| queries.
+    to the queries that want it, and one (query_id, doc_id) aggregate —
+    the :func:`_scored` core grouped by (query_id, doc_id). Per-posting
+    cost is unchanged; the scan and shuffle amortize across |Q| queries.
 
-    The grouped top-k is two-phase so no single partition ever holds a hot
-    query's full candidate set (the round-1 unpartitioned-window lesson):
-    rank within (query_id, doc_id mod salts) slots first — a partial,
-    map-sided cut to <= salts*k rows per query — then rank the survivors
-    per query_id. Scores are the same bigint-micros contract as
-    :func:`bm25_scores`, so the batch output row for a query equals the
-    single-query ``bm25_topk`` output."""
-    scored = _batch_scores(spark, idx, queries)
-    if scored is None:
-        return local_frame(
-            spark,
-            [], "query_id string, rank int, doc_id long, score_micros long"
-        )
-    return _grouped_topk(scored, k, salts)
-
-
-def _batch_scores(
-    spark: SparkSession, idx: dict, queries: dict[str, list[str]]
-) -> DataFrame | None:
-    """(query_id, doc_id, score_micros) for the whole query set in one
-    pruned index pass — the shared scoring core of bm25_batch_topk and
-    hard_negatives. None when no query term exists in the lexicon."""
+    The grouped top-k is two-phase (:func:`_grouped_topk`). Scores are the
+    same bigint-micros contract as :func:`bm25_scores`, so the batch output
+    row for a query equals the single-query ``bm25_topk`` output."""
     qmap = [
         (qid, t)
         for qid, terms in sorted(queries.items())
         for t in dict.fromkeys(terms)
     ]
-    rows = _qlex(spark, idx, [t for _, t in qmap])
-    if not rows:
-        return None
-    post = _pruned_postings(idx, rows)
     qdf = local_frame(spark, qmap, "query_id string, term string")
-    contrib = _bm25_contrib(idx["avgdl"])
-    return (
-        post.join(F.broadcast(_lex_df(spark, rows)), "term")
-        .join(F.broadcast(qdf), "term")
-        .select(
-            "query_id", "doc_id", F.round(contrib * 1e6).cast("long").alias("c_micros")
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
+    scored = _scored(
+        spark,
+        idx,
+        [t for _, t in qmap],
+        _bm25_contrib(idx["avgdl"]),
+        narrow=lambda post: post.join(F.broadcast(qdf), "term"),
+        by=("query_id", "doc_id"),
     )
+    return _grouped_topk(scored, k, salts)
 
 
 def _grouped_topk(scored: DataFrame, k: int, salts: int = 8) -> DataFrame:
@@ -484,22 +473,10 @@ def tfidf_topk(
 ) -> DataFrame:
     """Reference-style TF-IDF top-k (tf/totalTerms · ln(N/(1+df)), quirks
     Q15/Q9) served from the index."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    post = _pruned_postings(idx, rows)
     contrib = (F.col("tf").cast("double") / F.col("dl").cast("double")) * F.col(
         "idf_compat"
     )
-    return (
-        post.join(F.broadcast(_lex_df(spark, rows)), "term")
-        .select("doc_id", F.round(contrib * 1e6).cast("long").alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
-
+    return _topk(_scored(spark, idx, query_terms, contrib, stats=("idf_compat",)), k)
 
 def term_search_all(
     spark: SparkSession, idx: dict, query_terms: list[str]
@@ -541,18 +518,13 @@ def term_search_except(
     found = {r["term"] for r in rows}
     if not inc <= found:  # an include term with no postings → empty
         return local_frame(spark, [], "doc_id long")
-    flags = local_frame(
-        spark,
-        [(t, t in inc, t in exc) for t in sorted(inc | exc)],
-        "term string, is_inc boolean, is_exc boolean",
-    )
+    term = F.col("term")
     return (
         _pruned_postings(idx, rows)
-        .join(F.broadcast(flags), "term")
         .groupBy("doc_id")
         .agg(
-            F.count_distinct(F.when(F.col("is_inc"), F.col("term"))).alias("n_inc"),
-            F.max(F.col("is_exc").cast("int")).alias("any_exc"),
+            F.count_distinct(F.when(term.isin(sorted(inc)), term)).alias("n_inc"),
+            F.max(term.isin(sorted(exc)).cast("int")).alias("any_exc"),
         )
         .filter((F.col("n_inc") == len(inc)) & (F.col("any_exc") == 0))
         .select("doc_id")
@@ -598,7 +570,9 @@ def phrase_freq_topk(
     The float tree is textually pinned to the oracle (idf sum in phrase
     order, same saturation expression as _bm25_contrib). Work is bounded by
     the phrase terms' posting masses — the same pruned scan and single
-    aggregate phrase_match does."""
+    aggregate phrase_match does. Not through :func:`_scored`: the scored
+    unit is the doc's phrase count, known only after the positions
+    aggregate, not a per-posting contribution."""
     assert len(phrase_terms) >= 2
     rows = _qlex(spark, idx, phrase_terms)
     by_term = {r["term"]: r for r in rows}
@@ -624,14 +598,13 @@ def phrase_freq_topk(
     score = F.lit(idf_sum) * (pfd * (BM25_K1 + 1.0)) / (
         pfd + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / F.lit(idx["avgdl"]))
     )
-    return (
+    return _topk(
         pf.select(
             "doc_id",
             "phrase_freq",
             F.round(score * 1e6).cast("long").alias("score_micros"),
-        )
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
+        ),
+        k,
     )
 
 
@@ -648,28 +621,20 @@ def span_first_topk(
     row for the term carries its sorted positions, so the first occurrence
     is ``element_at(positions, 1)`` — no corpus pass, no explode; scoring
     shares the single-definition :func:`_bm25_contrib` tree with full-index
-    idf. Plan: |1-term| lexicon lookup → bucket-pruned postings scan →
-    array head filter → bounded top-k heap."""
-    rows = _qlex(spark, idx, [term])
-    if not rows:
-        return local_frame(
-            spark,
-            [], "doc_id long, first_pos long, score_micros long"
-        )
-    post = _pruned_postings(idx, rows)
-    contrib = _bm25_contrib(idx["avgdl"])
-    return (
-        post.withColumn("first_pos", F.element_at("positions", 1).cast("long"))
-        .filter(F.col("first_pos") < max_pos)
-        .join(F.broadcast(_lex_df(spark, rows)), "term")
-        .select(
-            "doc_id",
-            "first_pos",
-            F.round(contrib * 1e6).cast("long").alias("score_micros"),
-        )
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
+    idf. Plan: the :func:`_scored` core with the array head filter as its
+    narrowed scan → bounded top-k heap."""
+    first_pos = F.element_at("positions", 1).cast("long")
+    scored = _scored(
+        spark,
+        idx,
+        [term],
+        _bm25_contrib(idx["avgdl"]),
+        F.max("first_pos").alias("first_pos"),
+        narrow=lambda post: post.withColumn("first_pos", first_pos).filter(
+            F.col("first_pos") < max_pos
+        ),
     )
+    return _topk(scored.select("doc_id", "first_pos", "score_micros"), k)
 
 
 def prefix_suggest(
@@ -845,7 +810,7 @@ def search_diversified(
         .withColumn("hr", F.row_number().over(w_host))
         .filter(F.col("hr") <= per_host)
     )
-    top = capped.orderBy(*order).limit(k)
+    top = _topk(capped, k)
     w_all = Window.partitionBy(F.col("doc_id") % 1).orderBy(*order)
     return top.select(
         F.row_number().over(w_all).cast("int").alias("rank"),
@@ -998,7 +963,9 @@ def unigram_logprob(spark: SparkSession, idx: dict) -> DataFrame:
     at scale this is a co-partitioned join with no corpus scan; the total
     token count is the manifest's ``sum_dl`` scalar (every kept token adds 1
     to exactly one tf). Contributions round to bigint micros before the
-    per-doc sum, so the result is exact and partition-count-invariant."""
+    per-doc sum, so the result is exact and partition-count-invariant.
+    Not a query ranker, so not through :func:`_scored`: it reads every
+    posting against the whole lexicon, where the core serves |q| terms."""
     total = F.lit(float(idx["sum_dl"]))
     contrib = (
         idx["postings"]
@@ -1093,40 +1060,39 @@ def synonym_bm25_topk(
     semantics (Lucene's SynonymQuery), not a bag of independent terms (which
     would double-count near-duplicate vocabulary).
 
-    Plan: one pruned postings pass for the union of member terms, a
-    broadcast term→group map, a (group, doc) aggregate, a |groups|-row df
-    aggregate broadcast back for idf, then the usual bigint-micros fold and
-    bounded top-k. Output: (doc_id, score_micros)."""
+    Plan: the :func:`_scored` core over the union of member terms, its scan
+    narrowed to macro-term postings: a broadcast term→group map, a (group,
+    doc) aggregate and a |groups|-row df aggregate broadcast back for the
+    group idf, which the narrowed rows carry in place of the lexicon's.
+    Then the usual bigint-micros fold and bounded top-k. Output: (doc_id,
+    score_micros)."""
     from searchengine_spark.operators.ir import idf_bm25_expr
 
-    all_terms = sorted({t for ts in groups.values() for t in ts})
-    rows = _qlex(spark, idx, all_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    post = _pruned_postings(idx, rows)
     gmap = local_frame(
         spark,
         [(t, g) for g, ts in sorted(groups.items()) for t in sorted(set(ts))],
         "term string, grp string",
     )
-    gposts = (
-        post.join(F.broadcast(gmap), "term")
-        .groupBy("grp", "doc_id")
-        .agg(F.sum("tf").alias("tf"), F.max("dl").alias("dl"))
-    )
-    glex = (
-        gposts.groupBy("grp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .select("grp", idf_bm25_expr(idx["n_docs"]).alias("idf_bm25"))
-    )
-    contrib = _bm25_contrib(idx["avgdl"])
-    return (
-        gposts.join(F.broadcast(glex), "grp")
-        .select("doc_id", F.round(contrib * 1e6).cast("long").alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
+
+    def macro_terms(post: DataFrame) -> DataFrame:
+        gposts = (
+            post.join(F.broadcast(gmap), "term")
+            .groupBy("grp", "doc_id")
+            .agg(F.sum("tf").alias("tf"), F.max("dl").alias("dl"))
+        )
+        glex = (
+            gposts.groupBy("grp")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .select("grp", idf_bm25_expr(idx["n_docs"]).alias("idf_bm25"))
+        )
+        return gposts.join(F.broadcast(glex), "grp").withColumnRenamed("grp", "term")
+
+    all_terms = sorted({t for ts in groups.values() for t in ts})
+    return _topk(
+        _scored(
+            spark, idx, all_terms, _bm25_contrib(idx["avgdl"]), stats=(), narrow=macro_terms
+        ),
+        k,
     )
 
 
@@ -1287,45 +1253,31 @@ def qld_topk(
     (the rank-equivalent decomposition of ``Σ ln((tf + μ·p(t|C))/(dl+μ))``
     with the doc-independent ``Σ ln p(t|C)`` dropped).
 
-    Physical shape is identical to :func:`bm25_scores`: the |q|-row lexicon
-    point lookup supplies cf, the postings scan is bucket-pruned, |C| is
-    the manifest's ``sum_dl`` scalar, and contributions round to bigint
-    micros before the per-doc sum (the doc-level dl term rounds separately,
-    added once) — exact and partition-count-invariant. Query terms missing
-    from the lexicon are OOV-dropped (they'd contribute the same
-    -inf-background to every doc), matching retrieval practice.
+    Physical shape is :func:`bm25_scores`': the :func:`_scored` core with
+    cf from the |q| lexicon rows and |C| the manifest's ``sum_dl`` scalar;
+    contributions round to bigint micros before the per-doc sum (the
+    doc-level dl term rounds separately, added once) — exact and
+    partition-count-invariant. Query terms missing from the lexicon are
+    OOV-dropped (they'd contribute the same -inf-background to every doc),
+    matching retrieval practice.
 
     Output: (doc_id, score_micros) top-k, ties by doc_id."""
     rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    nq = float(len(rows))
     total = float(idx["sum_dl"])
-    post = _pruned_postings(idx, rows)
-    cfmap = local_frame(
-        spark,
-        [(r["term"], r["cf"]) for r in rows], "term string, cf long"
+    term_c = F.log(
+        F.lit(1.0)
+        + (F.col("tf").cast("double") * F.lit(total))
+        / (F.lit(mu) * F.col("cf").cast("double"))
     )
-    term_c = F.round(
-        F.log(
-            F.lit(1.0)
-            + (F.col("tf").cast("double") * F.lit(total))
-            / (F.lit(mu) * F.col("cf").cast("double"))
-        )
+    doc_c = F.round(
+        F.lit(float(len(rows)))
+        * F.log(F.lit(mu) / (F.col("dl").cast("double") + F.lit(mu)))
         * F.lit(1e6)
     ).cast("long")
-    doc_c = F.round(
-        F.lit(nq) * F.log(F.lit(mu) / (F.col("dl").cast("double") + F.lit(mu))) * F.lit(1e6)
-    ).cast("long")
-    return (
-        post.join(F.broadcast(cfmap), "term")
-        .select("doc_id", "dl", term_c.alias("c_micros"))
-        .groupBy("doc_id", "dl")
-        .agg(F.sum("c_micros").alias("s"))
-        .select("doc_id", (F.col("s") + doc_c).alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
+    scored = _scored(
+        spark, idx, query_terms, term_c, F.max("dl").alias("dl"), stats=("cf",), rows=rows
     )
+    return _topk(scored.select("doc_id", (F.col("score_micros") + doc_c).alias("score_micros")), k)
 
 
 def qld_jm_topk(
@@ -1342,39 +1294,20 @@ def qld_jm_topk(
     with the doc-independent ``Σ ln(λ·p(t|C))`` dropped. Unlike Dirichlet
     there is no per-doc background term, so only matched postings score.
 
-    Physical shape is qld_topk's exactly: |q|-row lexicon point lookup for
-    cf, bucket-pruned postings scan, manifest ``sum_dl`` scalar, per-posting
-    contribution rounded to bigint micros before the per-doc sum (exact,
-    partition-count-invariant). OOV query terms drop.
+    Physical shape is qld_topk's: the :func:`_scored` core with cf from the
+    |q| lexicon rows and the manifest ``sum_dl`` scalar. OOV query terms
+    drop.
 
     Output: (doc_id, score_micros) top-k, ties by doc_id."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
     total = float(idx["sum_dl"])
     ratio = (1.0 - lam) / lam
-    post = _pruned_postings(idx, rows)
-    cfmap = local_frame(
-        spark,
-        [(r["term"], r["cf"]) for r in rows], "term string, cf long"
+    contrib = F.log(
+        F.lit(1.0)
+        + F.lit(ratio)
+        * (F.col("tf").cast("double") * F.lit(total))
+        / (F.col("dl").cast("double") * F.col("cf").cast("double"))
     )
-    term_c = F.round(
-        F.log(
-            F.lit(1.0)
-            + F.lit(ratio)
-            * (F.col("tf").cast("double") * F.lit(total))
-            / (F.col("dl").cast("double") * F.col("cf").cast("double"))
-        )
-        * F.lit(1e6)
-    ).cast("long")
-    return (
-        post.join(F.broadcast(cfmap), "term")
-        .select("doc_id", term_c.alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _topk(_scored(spark, idx, query_terms, contrib, stats=("cf",)), k)
 
 
 # log2(e) and 2π as fixed double literals: both engines must parse the SAME
@@ -1400,46 +1333,25 @@ def pl2_topk(
         score_t = (tfn·log2(tfn/λ_t) + (λ_t − tfn)·log2 e
                    + 0.5·log2(2π·tfn)) / (tfn + 1)      λ_t = cf_t / N
 
-    Physical shape is :func:`qld_topk`'s exactly: |q|-row lexicon point
-    lookup supplies cf (λ is a per-term Python scalar — same IEEE division
-    the oracle performs in SQL), bucket-pruned postings scan, avgdl/N from
-    the manifest, per-posting contribution rounded to bigint micros before
-    the per-doc sum (exact, partition-count-invariant). log2 is spelled
+    Physical shape is :func:`qld_topk`'s: the :func:`_scored` core with cf
+    from the |q| lexicon rows (λ is one IEEE division, the same the oracle
+    performs in SQL), avgdl/N from the manifest. log2 is spelled
     ``ln(x)·log2(e)`` with the constant as a fixed literal on BOTH engines
     so the trees match bit-for-bit. OOV query terms drop.
 
     Output: (doc_id, score_micros) top-k, ties by doc_id."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    n_docs = float(idx["n_docs"])
-    avgdl = float(idx["avgdl"])
-    post = _pruned_postings(idx, rows)
-    lam_map = local_frame(
-        spark,
-        [(r["term"], float(r["cf"]) / n_docs) for r in rows],
-        "term string, lam double",
-    )
     inv, two_pi = F.lit(PL2_INV_LN2), F.lit(PL2_TWO_PI)
     dl_d = F.col("dl").cast("double")
     tfn = F.col("tf").cast("double") * (
-        F.log(F.lit(1.0) + (F.lit(c) * F.lit(avgdl)) / dl_d) * inv
+        F.log(F.lit(1.0) + (F.lit(c) * F.lit(float(idx["avgdl"]))) / dl_d) * inv
     )
-    lam = F.col("lam")
+    lam = F.col("cf").cast("double") / F.lit(float(idx["n_docs"]))
     score = (
         tfn * (F.log(tfn / lam) * inv)
         + (lam - tfn) * inv
         + F.lit(0.5) * (F.log(two_pi * tfn) * inv)
     ) / (tfn + F.lit(1.0))
-    c_micros = F.round(score * F.lit(1e6)).cast("long")
-    return (
-        post.join(F.broadcast(lam_map), "term")
-        .select("doc_id", c_micros.alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _topk(_scored(spark, idx, query_terms, score, stats=("cf",)), k)
 
 
 def sdm_topk(
@@ -1478,6 +1390,10 @@ def sdm_topk(
     explode + join rather than the phrase family's existence predicate
     (``_phrase_adjacent``).
 
+    Only the unigram feature goes through the :func:`_scored` core: a pair
+    feature's tf is a per-doc window count and its cf an aggregate over
+    those counts, neither a per-posting contribution with lexicon stats.
+
     Contract details the DuckDB twin mirrors: unigram sum over UNIQUE
     in-vocabulary terms; pairs = adjacent ORIGINAL query positions with
     both terms in vocabulary, a≠b, deduplicated; every feature
@@ -1485,8 +1401,6 @@ def sdm_topk(
 
     Output: (doc_id, score_micros) top-k, ties by doc_id."""
     rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
     vocab = {r["term"] for r in rows}
     uni = [t for t in dict.fromkeys(query_terms) if t in vocab]
     pairs = list(
@@ -1498,22 +1412,14 @@ def sdm_topk(
     )
     total = float(idx["sum_dl"])
     post = _pruned_postings(idx, rows)
-    cfmap = local_frame(
-        spark,
-        [(r["term"], r["cf"]) for r in rows], "term string, cf long"
+    uni_c = F.lit(lam_t) * F.log(
+        F.lit(1.0)
+        + (F.col("tf").cast("double") * F.lit(total))
+        / (F.lit(mu) * F.col("cf").cast("double"))
     )
-    uni_c = F.round(
-        F.lit(lam_t)
-        * F.log(
-            F.lit(1.0)
-            + (F.col("tf").cast("double") * F.lit(total))
-            / (F.lit(mu) * F.col("cf").cast("double"))
-        )
-        * F.lit(1e6)
-    ).cast("long")
     contribs = [
-        post.join(F.broadcast(cfmap), "term").select(
-            "doc_id", uni_c.alias("c_micros")
+        _scored(spark, idx, query_terms, uni_c, stats=("cf",), rows=rows).select(
+            "doc_id", F.col("score_micros").alias("c_micros")
         )
     ]
     # one length penalty per candidate doc (docs matching >= 1 query term)
@@ -1585,15 +1491,8 @@ def sdm_topk(
                         .alias("c_micros"),
                     )
                 )
-    out = contribs[0]
-    for c in contribs[1:]:
-        out = out.unionByName(c)
-    return (
-        out.groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    out = reduce(DataFrame.unionByName, contribs)
+    return _topk(out.groupBy("doc_id").agg(F.sum("c_micros").alias("score_micros")), k)
 
 
 def bm25f_topk(
@@ -1615,14 +1514,10 @@ def bm25f_topk(
 
     Served ENTIRELY from the index: the stored positional postings give
     per-field tfs as ``size(filter(positions, p < H))`` — no corpus scan,
-    no per-field index. Same pruned-scan + broadcast-lexicon shape and
-    bigint-micros contract as :func:`bm25_scores`.
+    no per-field index. The :func:`_scored` core and bigint-micros contract
+    of :func:`bm25_scores`.
 
     Output: (doc_id, score_micros) top-k."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    post = _pruned_postings(idx, rows)
     tf_h = F.size(
         F.filter(F.col("positions"), lambda p: p < F.lit(head_positions))
     ).cast("double")
@@ -1631,17 +1526,8 @@ def bm25f_topk(
     tfw = (F.lit(w_head) * tf_h + F.lit(w_body) * tf_b) / (
         F.lit(1.0 - BM25_B) + F.lit(BM25_B) * dl / F.lit(idx["avgdl"])
     )
-    c = F.round(
-        F.col("idf_bm25") * (tfw / (F.lit(BM25_K1) + tfw)) * F.lit(1e6)
-    ).cast("long")
-    return (
-        post.join(F.broadcast(_lex_df(spark, rows)), "term")
-        .select("doc_id", c.alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    contrib = F.col("idf_bm25") * (tfw / (F.lit(BM25_K1) + tfw))
+    return _topk(_scored(spark, idx, query_terms, contrib), k)
 
 
 def bm25_maxp_topk(
@@ -1662,9 +1548,10 @@ def bm25_maxp_topk(
     dense region.
 
     Served ENTIRELY from the stored positional postings: passage tf is a
-    regrouping of the positions array (``floor(pos / P)``), no corpus scan.
-    Fixed-length windows make BM25's length normalization a constant, so the
-    per-passage contribution reduces to the saturation form
+    regrouping of the positions array (``floor(pos / P)``), no corpus scan —
+    the :func:`_scored` core over that narrowed scan, grouped by (doc_id,
+    passage_id). Fixed-length windows make BM25's length normalization a
+    constant, so the per-passage contribution reduces to the saturation form
     ``idf · tf(k1+1)/(tf+k1)``. The per-(doc,term,passage) contribution is
     rounded to micros BEFORE the passage sum and the per-doc max — integer
     space end-to-end, bit-identical to the DuckDB oracle. Ties between a
@@ -1674,110 +1561,44 @@ def bm25_maxp_topk(
     across docs (no single-reducer risk at scale).
 
     Output: (doc_id, passage_id, score_micros) top-k."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(
-            spark,
-            [], "doc_id long, passage_id long, score_micros long"
+
+    def passages(post: DataFrame) -> DataFrame:
+        return (
+            post.select("doc_id", "term", F.explode("positions").alias("pos"))
+            .groupBy(
+                "doc_id",
+                "term",
+                F.floor(F.col("pos") / passage_size).cast("long").alias("passage_id"),
+            )
+            .agg(F.count("*").alias("ptf"))
         )
-    post = _pruned_postings(idx, rows)
-    ptf = (
-        post.select("doc_id", "term", F.explode("positions").alias("pos"))
-        .groupBy(
-            "doc_id",
-            "term",
-            F.floor(F.col("pos") / passage_size).cast("long").alias("passage_id"),
-        )
-        .agg(F.count("*").alias("ptf"))
-    )
+
     tf = F.col("ptf").cast("double")
     contrib = F.col("idf_bm25") * (tf * F.lit(BM25_K1 + 1.0)) / (tf + F.lit(BM25_K1))
-    pscores = (
-        ptf.join(F.broadcast(_lex_df(spark, rows)), "term")
-        .select(
-            "doc_id",
-            "passage_id",
-            F.round(contrib * 1e6).cast("long").alias("c_micros"),
-        )
-        .groupBy("doc_id", "passage_id")
-        .agg(F.sum("c_micros").alias("s"))
+    pscores = _scored(
+        spark, idx, query_terms, contrib, narrow=passages, by=("doc_id", "passage_id")
     )
     # deterministic per-doc argmax: max score, earliest passage on ties —
     # a struct max in one hash aggregate (no window, no single partition)
     best = pscores.groupBy("doc_id").agg(
         F.max(
-            F.struct(F.col("s").alias("s"), (-F.col("passage_id")).alias("np"))
+            F.struct(F.col("score_micros").alias("s"), (-F.col("passage_id")).alias("np"))
         ).alias("m")
     )
-    return (
+    return _topk(
         best.select(
             "doc_id",
             (-F.col("m.np")).cast("long").alias("passage_id"),
             F.col("m.s").alias("score_micros"),
-        )
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
+        ),
+        k,
     )
 
 
-def ltr_features(
-    spark: SparkSession, idx: dict, query_terms: list[str]
-) -> DataFrame:
-    """Per-(query, candidate-doc) ranking-feature export — the feature-join
-    step of a learning-to-rank training pipeline (LETOR-style feature
-    vectors): for every doc matching >=1 query term, the classic lexical
-    features a downstream ranker trains on, all from ONE pruned postings
-    scan + broadcast lexicon join + ONE per-doc aggregate:
-
-    - n_matched      distinct query terms present (coordination),
-    - sum_tf         total matched-term frequency,
-    - dl             doc length (kept tokens),
-    - min_pos        earliest raw-split position of any matched term
-                     (title/lead-proximity proxy, cf. the reference's
-                     title boost Ranker.java:52-57),
-    - bm25_micros    the bm25_scores contract (same _bm25_contrib),
-    - tfidf_micros   the reference-compat tf/dl * ln(N/(1+df)) sum.
-
-    The reference computes ad-hoc per-page components at query time
-    (Ranker.aggregatePageData, Ranker.java:30-72); this is that accumulator
-    re-expressed as a distributed feature materialization whose output IS
-    training data. Integer-micros columns keep the export bit-identical
-    across engines and partition counts."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(
-            spark,
-            [],
-            "doc_id long, n_matched long, sum_tf long, dl long, "
-            "min_pos long, bm25_micros long, tfidf_micros long",
-        )
-    post = _pruned_postings(idx, rows)
-    bm25_c = F.round(_bm25_contrib(idx["avgdl"]) * 1e6).cast("long")
-    tfidf_c = F.round(
-        (F.col("tf").cast("double") / F.col("dl").cast("double"))
-        * F.col("idf_compat")
-        * 1e6
-    ).cast("long")
-    return (
-        post.join(F.broadcast(_lex_df(spark, rows)), "term")
-        .select(
-            "doc_id",
-            "tf",
-            "dl",
-            F.element_at("positions", 1).cast("long").alias("first_pos"),
-            bm25_c.alias("bm25_c"),
-            tfidf_c.alias("tfidf_c"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_matched"),  # postings are unique per (term, doc)
-            F.sum("tf").cast("long").alias("sum_tf"),
-            F.max("dl").cast("long").alias("dl"),
-            F.min("first_pos").alias("min_pos"),
-            F.sum("bm25_c").alias("bm25_micros"),
-            F.sum("tfidf_c").alias("tfidf_micros"),
-        )
-    )
+def _micros(x: float) -> int:
+    """round(x) half away from zero — Spark's ``round`` and DuckDB's, not
+    Python's banker's rounding — for driver-side selection keys."""
+    return int(math.copysign(math.floor(abs(x) + 0.5), x))
 
 
 def prf_expansion_topk(
@@ -1801,10 +1622,10 @@ def prf_expansion_topk(
     term vectors come from a doc_id-pruned fetch of the <= fb_docs
     documents re-tokenized (bounded driver rows — at scale this is the
     same step class as the lexicon point lookup, never an index scan by
-    doc); pass 2 is one pruned postings scan over |q| + fb_terms terms
-    with a broadcast per-term weight. All selection keys are bigint micros
-    (round-half-away-from-zero), so the expansion choice and the final
-    ranking are bit-identical to the SQL twin.
+    doc); pass 2 is the :func:`_scored` core over |q| + fb_terms terms
+    with a literal per-term weight map. All selection keys are bigint
+    micros (round-half-away-from-zero), so the expansion choice and the
+    final ranking are bit-identical to the SQL twin.
 
     Output: (doc_id, score_micros) top-k."""
     from searchengine_spark.functions.tokenize import exploded_tokens
@@ -1825,40 +1646,15 @@ def prf_expansion_topk(
         if fb_tf:
             tf_map = {r["term"]: int(r["sum_tf"]) for r in fb_tf}
             lex = _qlex(spark, idx, sorted(tf_map))
-            import math
-
-            def _micros(x: float) -> int:
-                return int(math.copysign(math.floor(abs(x) + 0.5), x))
-
             scored = sorted(
-                (
-                    (-_micros(tf_map[r["term"]] * r["idf_bm25"] * 1e6), r["term"])
-                    for r in lex
-                ),
+                (-_micros(tf_map[r["term"]] * r["idf_bm25"] * 1e6), r["term"])
+                for r in lex
             )[:fb_terms]
             for _, t in scored:
                 weights[t] = expand_weight
-    rows = _qlex(spark, idx, sorted(weights))
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    post = _pruned_postings(idx, rows)
-    wlex = local_frame(
-        spark,
-        [(r["term"], r["idf_bm25"], weights[r["term"]]) for r in rows],
-        "term string, idf_bm25 double, w double",
-    )
-    contrib = _bm25_contrib(idx["avgdl"])
-    return (
-        post.join(F.broadcast(wlex), "term")
-        .select(
-            "doc_id",
-            F.round(F.col("w") * contrib * F.lit(1e6)).cast("long").alias("c_micros"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    w = literal_map(weights, "map<string,double>")[F.col("term")]
+    contrib = w * _bm25_contrib(idx["avgdl"])
+    return _topk(_scored(spark, idx, sorted(weights), contrib), k)
 
 
 def hybrid_rrf_topk(
@@ -1893,14 +1689,9 @@ def hybrid_rrf_topk(
 
     order = [F.desc("score_micros"), F.asc("doc_id")]
     w1 = Window.partitionBy(F.col("doc_id") % 1)  # single-valued, non-foldable
-    lex = (
-        bm25_scores(spark, idx, query_terms)
-        .orderBy(*order)
-        .limit(r)
-        .select(
-            "doc_id",
-            F.row_number().over(w1.orderBy(*order)).alias("lrank"),
-        )
+    bm25 = _topk(bm25_scores(spark, idx, query_terms), r).select(
+        "doc_id",
+        F.row_number().over(w1.orderBy(*order)).alias("lrank"),
     )
     vec = ann_bruteforce_topk(embeddings, k=r, query_ids=[query_vec_id]).select(
         F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("vrank")
@@ -1911,9 +1702,9 @@ def hybrid_rrf_topk(
     # outer-union fusion as id-union + two broadcast LEFT joins: Spark
     # cannot broadcast a FULL OUTER join (it planned a sort-merge exchange
     # even for these <= r-row sides), while left joins build-right broadcast
-    ids = lex.select("doc_id").union(vec.select("doc_id")).distinct()
+    ids = bm25.select("doc_id").union(vec.select("doc_id")).distinct()
     fused = (
-        ids.join(F.broadcast(lex), "doc_id", "left")
+        ids.join(F.broadcast(bm25), "doc_id", "left")
         .join(F.broadcast(vec), "doc_id", "left")
         .select("doc_id", (contrib("lrank") + contrib("vrank")).alias("rrf_micros"))
         .orderBy(F.desc("rrf_micros"), F.asc("doc_id"))
@@ -1936,7 +1727,9 @@ def bm25_topk_blockmax(
     the compressed segments — doc-at-a-time WAND pays an interpreted loop
     per posting, so in a Python executor pruning must happen at block
     granularity with numpy scoring to actually pay off. Hash-identical to
-    ``bm25_topk`` (same oracle, same integer-micros contract)."""
+    ``bm25_topk`` (same oracle, same integer-micros contract). Not through
+    :func:`_scored`: it decodes the segment blobs, not the columnar
+    postings."""
     from searchengine_spark.operators.segments import blockmax_topk_micros
 
     return blockmax_topk_micros(
@@ -1965,8 +1758,9 @@ def shard_selection(
     the shard collection sizes cw_s are one full pass over per-doc lengths
     — at scale that is an index-BUILD-time statistic published with the
     manifest, recomputed here per query only because the gate index stores
-    no shard stats table; S and |q| are tiny, so the belief grid is a
-    broadcast cross join. No corpus scan, no hot keys."""
+    no shard stats table; S and |q| are tiny, so the belief grid is the
+    shard spine exploded over the literal term list. No corpus scan, no hot
+    keys."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
         return local_frame(spark, [], "shard_id long, score_micros long")
@@ -1983,8 +1777,9 @@ def shard_selection(
     )
     avg_cw = float(idx["sum_dl"]) / float(n_shards)
     spine = spark.range(n_shards).select(F.col("id").alias("shard_id"))
-    qterms = local_frame(spark, [(r["term"],) for r in rows], "term string")
-    grid = spine.crossJoin(F.broadcast(qterms))
+    grid = spine.select(
+        "shard_id", F.explode(F.array(*[F.lit(r["term"]) for r in rows])).alias("term")
+    )
     d = grid.join(dfs, ["shard_id", "term"], "left").select(
         "shard_id", "term", F.coalesce("df_s", F.lit(0)).cast("long").alias("df_s")
     )
@@ -2011,207 +1806,6 @@ def shard_selection(
         .groupBy("shard_id")
         .agg(F.sum("b_micros").alias("score_micros"))
         .orderBy(F.desc("score_micros"), F.asc("shard_id"))
-    )
-
-
-def _conjunctive_positives(
-    spark: SparkSession, idx: dict, queries: dict[str, list[str]]
-) -> DataFrame:
-    """(query_id, doc_id) deterministic pseudo-qrels: per query, the lowest
-    doc_id matching ALL requested terms (queries with a corpus-absent term
-    have no positive). Shared by hard_negatives and rank_metrics."""
-    qmap = [
-        (qid, t)
-        for qid, terms in sorted(queries.items())
-        for t in dict.fromkeys(terms)
-    ]
-    rows = _qlex(spark, idx, [t for _, t in qmap])
-    post = _pruned_postings(idx, rows)
-    qdf = local_frame(spark, qmap, "query_id string, term string")
-    n_req = qdf.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_req"))
-    matched = (
-        post.select("term", "doc_id")
-        .join(F.broadcast(qdf), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))  # postings unique per (term, doc)
-    )
-    return (
-        matched.join(F.broadcast(n_req), "query_id")
-        .filter(F.col("n_hit") == F.col("n_req"))
-        .groupBy("query_id")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
-
-
-def hard_negatives(
-    spark: SparkSession,
-    idx: dict,
-    queries: dict[str, list[str]],
-    k: int = 10,
-    salts: int = 8,
-) -> DataFrame:
-    """BM25 hard-negative mining — the negative-sampling pass of a
-    dense-retriever / LTR training pipeline (as in public DPR-style
-    recipes: the strongest lexically-matching non-relevant docs make the
-    best training negatives): for every query, the top-k BM25 candidates
-    EXCLUDING the query's positive document.
-
-    The positive is derived deterministically (no external labels in this
-    sandbox): the lowest doc_id matching ALL the query's requested terms
-    (conjunctive semantics; if any term is corpus-absent the query has no
-    positive and its top-k is unfiltered — mirrored by the oracle).
-
-    One pruned index pass serves the whole query set: the shared
-    :func:`_batch_scores` aggregate, a per-query 1-row positive aggregate
-    broadcast into an anti-join, and the salted two-phase grouped top-k —
-    no corpus scan, no single-reducer hot spots.
-
-    Output: (query_id, rank, doc_id, score_micros)."""
-    scored = _batch_scores(spark, idx, queries)
-    if scored is None:
-        return local_frame(
-            spark,
-            [], "query_id string, rank int, doc_id long, score_micros long"
-        )
-    positives = _conjunctive_positives(spark, idx, queries)
-    negatives = scored.join(
-        F.broadcast(positives), ["query_id", "doc_id"], "left_anti"
-    )
-    return _grouped_topk(negatives, k, salts)
-
-
-def rank_metrics(
-    spark: SparkSession,
-    idx: dict,
-    queries: dict[str, list[str]],
-    k: int = 10,
-) -> DataFrame:
-    """Offline ranking evaluation — the relevance-sweep step a search team
-    runs on every ranker change (TREC-style hit@k / MRR@k / nDCG@k): score
-    the whole query set in one index pass (:func:`_batch_scores`), find
-    each query's relevant doc in the top-k, and emit per-query metrics.
-
-    Qrels are the deterministic :func:`_conjunctive_positives` pseudo-
-    labels (one relevant doc per query), so with a single positive
-    ``rr = 1/rank`` and ``ndcg = ln(2)/ln(rank+1)`` (ideal DCG = 1); both
-    freeze to bigint micros. Queries whose positive misses the top-k (or
-    that have no positive) emit zeros — the spine is the query list, so
-    every query gets exactly one row.
-
-    Output: (query_id, hit, rr_micros, ndcg_micros)."""
-    spine = local_frame(
-        spark,
-        [(qid,) for qid in sorted(queries)], "query_id string"
-    )
-    scored = _batch_scores(spark, idx, queries)
-    if scored is None:
-        return spine.select(
-            "query_id",
-            F.lit(0).cast("long").alias("hit"),
-            F.lit(0).cast("long").alias("rr_micros"),
-            F.lit(0).cast("long").alias("ndcg_micros"),
-        )
-    ranked = _grouped_topk(scored, k)
-    positives = _conjunctive_positives(spark, idx, queries)
-    hits = ranked.join(F.broadcast(positives), ["query_id", "doc_id"]).select(
-        "query_id",
-        F.lit(1).cast("long").alias("hit"),
-        F.round(F.lit(1e6) / F.col("rank").cast("double"))
-        .cast("long")
-        .alias("rr_micros"),
-        F.round(
-            (F.log(F.lit(2.0)) / F.log(F.col("rank").cast("double") + F.lit(1.0)))
-            * F.lit(1e6)
-        )
-        .cast("long")
-        .alias("ndcg_micros"),
-    )
-    return spine.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce("hit", F.lit(0)).cast("long").alias("hit"),
-        F.coalesce("rr_micros", F.lit(0)).cast("long").alias("rr_micros"),
-        F.coalesce("ndcg_micros", F.lit(0)).cast("long").alias("ndcg_micros"),
-    )
-
-
-def qpp_predictors(
-    spark: SparkSession, idx: dict, queries: dict[str, list[str]]
-) -> DataFrame:
-    """Pre-retrieval query performance prediction (the QPP literature's
-    dictionary-statistics predictors — avgIDF, maxIDF, avgICTF, SCQ): score
-    how hard each query looks BEFORE running it, from lexicon statistics
-    alone. A serving tier uses this to route queries (easy → pruned/tier-1
-    index, hard → full index + feedback), so the predictor must cost one
-    dictionary point lookup — this one touches |Q·terms| lexicon rows and
-    nothing else (no postings, no corpus).
-
-    Per present term: ``idf`` is the BM25 idf, ``ictf = ln(total/cf)``,
-    ``scq = (1 + ln(cf)) · idf``; each freezes to micros before the
-    per-query aggregates (integer sums/avgs, ``div`` floor). Queries whose
-    terms are all corpus-absent emit a zero row (n_terms = 0).
-
-    Output: (query_id, n_terms, avg_idf_micros, max_idf_micros,
-    avg_ictf_micros, scq_sum_micros)."""
-    qmap = [
-        (qid, t)
-        for qid, terms in sorted(queries.items())
-        for t in dict.fromkeys(terms)
-    ]
-    spine = local_frame(
-        spark,
-        [(qid,) for qid in sorted(queries)], "query_id string"
-    )
-    if not qmap:
-        return spine.select(
-            "query_id",
-            *[
-                F.lit(0).cast("long").alias(c)
-                for c in (
-                    "n_terms",
-                    "avg_idf_micros",
-                    "max_idf_micros",
-                    "avg_ictf_micros",
-                    "scq_sum_micros",
-                )
-            ],
-        )
-    qdf = local_frame(spark, qmap, "query_id string, term string")
-    total = F.lit(float(idx["sum_dl"]))
-    # term predicate pushed into the lexicon scan; the |Q·terms| query map
-    # is the broadcast side (never the dictionary)
-    lex = (
-        idx["lexicon"]
-        .filter(F.col("term").isin([t for _, t in qmap]))
-        .select("term", "cf", "idf_bm25")
-    )
-    cf = F.col("cf").cast("double")
-    per_term = lex.join(F.broadcast(qdf), "term").select(
-        "query_id",
-        F.round(F.col("idf_bm25") * 1e6).cast("long").alias("idf_m"),
-        F.round(F.log(total / cf) * 1e6).cast("long").alias("ictf_m"),
-        F.round((F.lit(1.0) + F.log(cf)) * F.col("idf_bm25") * 1e6)
-        .cast("long")
-        .alias("scq_m"),
-    )
-    agg = per_term.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_terms"),
-        F.expr("sum(idf_m) div count(*)").alias("avg_idf_micros"),
-        F.max("idf_m").alias("max_idf_micros"),
-        F.expr("sum(ictf_m) div count(*)").alias("avg_ictf_micros"),
-        F.sum("scq_m").alias("scq_sum_micros"),
-    )
-    return spine.join(F.broadcast(agg), "query_id", "left").select(
-        "query_id",
-        *[
-            F.coalesce(c, F.lit(0)).cast("long").alias(c)
-            for c in (
-                "n_terms",
-                "avg_idf_micros",
-                "max_idf_micros",
-                "avg_ictf_micros",
-                "scq_sum_micros",
-            )
-        ],
     )
 
 
@@ -2253,7 +1847,7 @@ def collapse_topk(
             F.col("w.score_micros").alias("score_micros"),
         )
     )
-    return best.orderBy(F.desc("score_micros"), F.asc("doc_id")).limit(k)
+    return _topk(best, k)
 
 
 def more_like_this(
@@ -2281,8 +1875,6 @@ def more_like_this(
     final ranking — is bit-identical to the SQL twin.
 
     Output: (doc_id, score_micros) top-k over the rest of the corpus."""
-    import math
-
     from searchengine_spark.functions.tokenize import exploded_tokens
 
     src_tf = (
@@ -2295,10 +1887,6 @@ def more_like_this(
         return local_frame(spark, [], _EMPTY_TOPK)
     tf_map = {r["term"]: int(r["tf"]) for r in src_tf}
     lex = _qlex(spark, idx, sorted(tf_map))
-
-    def _micros(x: float) -> int:
-        return int(math.copysign(math.floor(abs(x) + 0.5), x))
-
     ranked = sorted(
         (
             (-_micros(tf_map[r["term"]] * r["idf_bm25"] * 1e6), r["term"])
@@ -2309,12 +1897,7 @@ def more_like_this(
     terms = [t for _, t in ranked]
     if not terms:
         return local_frame(spark, [], _EMPTY_TOPK)
-    return (
-        bm25_scores(spark, idx, terms)
-        .filter(F.col("doc_id") != src_doc_id)
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _topk(bm25_scores(spark, idx, terms).filter(F.col("doc_id") != src_doc_id), k)
 
 
 def federated_topk(
@@ -2343,11 +1926,7 @@ def federated_topk(
         "query_id", route_expr(F.col("doc_id"), n_shards).cast("string")
     )
     local = _grouped_topk(scored, k)  # per-shard bounded lists
-    return (
-        local.orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", "score_micros")
-    )
+    return _topk(local, k).select("doc_id", "score_micros")
 
 
 def compound_split(
@@ -2359,35 +1938,22 @@ def compound_split(
     ranked by the weaker half's corpus frequency (least(cf1, cf2) — a rare
     half makes the whole segmentation implausible), ties by p1 asc.
 
-    The |word|-1 split candidates are a driver constant; each side is one
-    isin-pruned lexicon point lookup joined back broadcast — the same
-    bounded dictionary-step class as fuzzy_suggest's deletion keys. No
-    corpus access at all. Output: (p1, p2, cf_min) top-k."""
+    The |word|-1 split candidates are a driver constant; their halves are
+    ONE isin-pruned lexicon point lookup (the :func:`_qlex` step class), and
+    the ≤ |word|-1 candidates rank on the driver. No corpus access at all.
+    Output: (p1, p2, cf_min) top-k."""
     word = word.strip().lower()
     pairs = [(word[:i], word[i:]) for i in range(1, len(word))]
-    if not pairs:
-        return local_frame(spark, [], "p1 string, p2 string, cf_min long")
-    cand = local_frame(spark, pairs, "p1 string, p2 string")
-    lex = idx["lexicon"].select("term", "cf")
-    l1 = (
-        lex.filter(F.col("term").isin([p for p, _ in pairs]))
-        .withColumnRenamed("term", "p1")
-        .withColumnRenamed("cf", "cf1")
-    )
-    l2 = (
-        lex.filter(F.col("term").isin([s for _, s in pairs]))
-        .withColumnRenamed("term", "p2")
-        .withColumnRenamed("cf", "cf2")
-    )
-    return (
-        cand.join(F.broadcast(l1), "p1")
-        .join(F.broadcast(l2), "p2")
-        .select(
-            "p1", "p2", F.least("cf1", "cf2").cast("long").alias("cf_min")
-        )
-        .orderBy(F.desc("cf_min"), F.asc("p1"))
-        .limit(k)
-    )
+    parts = sorted({p for pair in pairs for p in pair})
+    cf = {
+        r["term"]: int(r["cf"])
+        for r in idx["lexicon"].filter(F.col("term").isin(parts)).select("term", "cf").collect()
+    }
+    ranked = sorted(
+        ((p1, p2, min(cf[p1], cf[p2])) for p1, p2 in pairs if p1 in cf and p2 in cf),
+        key=lambda row: (-row[2], row[0]),
+    )[:k]
+    return local_frame(spark, ranked, "p1 string, p2 string, cf_min long")
 
 
 def mmr_topk(
@@ -2416,9 +1982,8 @@ def mmr_topk(
 
     Scale shape: the corpus is touched only by the stage-1 pruned-postings
     bounded heap; the greedy loop sees ≤ r rows in ONE Arrow group
-    (O(r²) sims, r=50 → 2,450 pairs), exactly the bounded-candidate shape
-    of :func:`rerank_ce_topk` — per-query cost is constant in corpus size,
-    and a multi-query batch parallelizes across groups.
+    (O(r²) sims, r=50 → 2,450 pairs) — per-query cost is constant in
+    corpus size, and a multi-query batch parallelizes across groups.
 
     Output: (rank, doc_id, mmr_score, bm25_micros), k rows."""
     import numpy as np
@@ -2475,100 +2040,6 @@ def mmr_topk(
         )
         .orderBy("rank")
     )
-
-
-def rerank_ce_topk(
-    spark: SparkSession,
-    idx: dict,
-    query_terms: list[str],
-    k: int = 10,
-    n_candidates: int = 50,
-) -> DataFrame:
-    """Two-stage retrieve-then-rerank: BM25 recalls ``n_candidates`` from
-    the index, then an Arrow-batched scorer re-ranks them — the
-    cross-encoder serving shape (retrieve cheap, rerank expensive on a
-    bounded candidate set) every neural search stack runs. Output
-    (doc_id, ce_micros, bm25_micros), top-k by (ce DESC, doc_id ASC).
-
-    The "model" here is a frozen hashed-weights surrogate so the gate stays
-    deterministic and DuckDB-reproducible: per query term t,
-    w_t = int(md5(t)[:6], 16) / 16^6 ∈ [0,1), and the pair score is
-    Σ_t round(1e6 · w_t · tf_t/(tf_t+1)) + round(5e5 · n_hit/|q|) — term
-    saturation features under a fixed random projection, integer-rounded
-    per feature BEFORE summation (partition-order independent). A real
-    cross-encoder slots in at exactly this point: same bounded candidate
-    batches, same Arrow transfer, the numpy expression replaced by a
-    forward pass over the same batches.
-
-    Scale shape: stage 1 is the ordinary pruned-postings BM25 top-N (a
-    bounded heap); stage 2 touches only N rows per query — the expensive
-    scorer NEVER sees the corpus. Candidate features (per-term tf) arrive
-    as one small join of the candidate set against the already-pruned
-    postings (both sides ≤ N·|q| rows); a GPU-backed scorer would pin its
-    batch size via ``spark.sql.execution.arrow.maxRecordsPerBatch`` (the
-    candidate set here is already ≤ n_candidates rows per batch). The
-    final top-k is a bounded heap over N rows."""
-    import hashlib
-    import math
-
-    import pandas as pd
-
-    cand = bm25_topk(spark, idx, query_terms, k=n_candidates).withColumnRenamed(
-        "score_micros", "bm25_micros"
-    )
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(
-            spark,
-            [], "doc_id long, ce_micros long, bm25_micros long"
-        )
-    post = _pruned_postings(idx, rows).select("term", "doc_id", "tf")
-    feats = (
-        cand.join(post, "doc_id")
-        .groupBy("doc_id", "bm25_micros")
-        .agg(
-            F.collect_list(F.struct("term", "tf")).alias("hits"),
-        )
-    )
-    uniq = list(dict.fromkeys(query_terms))
-    n_q = len(uniq)
-    weights = {
-        t: int(hashlib.md5(t.encode()).hexdigest()[:6], 16) / float(16**6)
-        for t in uniq
-    }
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out_ids, out_ce, out_bm = [], [], []
-            for doc_id, bm, hits in zip(
-                pdf["doc_id"], pdf["bm25_micros"], pdf["hits"]
-            ):
-                ce = 0
-                n_hit = 0
-                for h in hits:
-                    w = weights.get(h["term"])
-                    if w is None:
-                        continue
-                    n_hit += 1
-                    tf = float(h["tf"])
-                    # round half-away-from-zero (all contributions ≥ 0):
-                    # matches Spark F.round / DuckDB round, NOT Python's
-                    # banker's round
-                    ce += int(math.floor(1e6 * w * (tf / (tf + 1.0)) + 0.5))
-                ce += int(math.floor(5e5 * (float(n_hit) / float(n_q)) + 0.5))
-                out_ids.append(int(doc_id))
-                out_ce.append(ce)
-                out_bm.append(int(bm))
-            yield pd.DataFrame(
-                {"doc_id": out_ids, "ce_micros": out_ce, "bm25_micros": out_bm}
-            ).astype("int64")
-
-    scored = feats.mapInPandas(
-        score, "doc_id long, ce_micros long, bm25_micros long"
-    )
-    return scored.orderBy(F.desc("ce_micros"), F.asc("doc_id")).limit(k)
 
 
 def significant_terms(
@@ -2686,8 +2157,6 @@ def corrected_search(
     words = [w for w in query.lower().split() if w]
     corr = fuzzy_suggest_multi(spark, idx, words, k=1).collect()
     corrected = list(dict.fromkeys(r["term"] for r in corr))
-    if not corrected:
-        return local_frame(spark, [], _EMPTY_TOPK)
     return bm25_topk(spark, idx, corrected, k=k)
 
 
@@ -2701,12 +2170,7 @@ def phrase_topk(
     work at |candidates|, and the top-k heap runs after the filter (the
     limit applies to phrase hits, not to the raw term candidates)."""
     cand = phrase_match(spark, idx, phrase_terms, gap)
-    return (
-        bm25_scores(spark, idx, phrase_terms)
-        .join(cand, "doc_id")
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _topk(bm25_scores(spark, idx, phrase_terms).join(cand, "doc_id"), k)
 
 
 def hybrid_combmnz_topk(
@@ -2732,7 +2196,7 @@ def hybrid_combmnz_topk(
     from searchengine_spark.operators.similarity import ann_bruteforce_topk
 
     order = [F.desc("score_micros"), F.asc("doc_id")]
-    lex = bm25_scores(spark, idx, query_terms).orderBy(*order).limit(r)
+    bm25 = _topk(bm25_scores(spark, idx, query_terms), r)
     vec = ann_bruteforce_topk(embeddings, k=r, query_ids=[query_vec_id]).select(
         F.col("neighbor_id").alias("doc_id"),
         F.col("cosine_micros").alias("score_micros"),
@@ -2751,14 +2215,14 @@ def hybrid_combmnz_topk(
         )
         return df.crossJoin(F.broadcast(mm)).select("doc_id", nrm.alias(out))
 
-    lexn, vecn = norm(lex, "lnorm"), norm(vec, "vnorm")
-    ids = lexn.select("doc_id").union(vecn.select("doc_id")).distinct()
+    bm25n, vecn = norm(bm25, "lnorm"), norm(vec, "vnorm")
+    ids = bm25n.select("doc_id").union(vecn.select("doc_id")).distinct()
     nz = (
         F.col("lnorm").isNotNull().cast("long")
         + F.col("vnorm").isNotNull().cast("long")
     )
     fused = (
-        ids.join(F.broadcast(lexn), "doc_id", "left")
+        ids.join(F.broadcast(bm25n), "doc_id", "left")
         .join(F.broadcast(vecn), "doc_id", "left")
         .select(
             "doc_id",
@@ -2807,8 +2271,7 @@ def cluster_results(
         kmeans_centroids,
     )
 
-    order = [F.desc("score_micros"), F.asc("doc_id")]
-    cand = bm25_scores(spark, idx, query_terms).orderBy(*order).limit(r).select("doc_id")
+    cand = _topk(bm25_scores(spark, idx, query_terms), r).select("doc_id")
     vecs = embeddings.join(
         F.broadcast(cand), embeddings["vec_id"] == cand["doc_id"]
     ).select("doc_id", "embedding")
@@ -2903,7 +2366,9 @@ def bm25_impact_topk(
     The price is score resolution (ties are common at 8 bits; doc_id breaks
     them deterministically) — the classic efficiency/fidelity trade this
     tier makes. Plan: bucket-pruned impacts scan → one hash aggregate →
-    bounded top-k heap."""
+    bounded top-k heap. Not through :func:`_scored`: it sums levels frozen
+    into the impacts table at build time, with no lexicon statistic and no
+    per-posting expression left to evaluate."""
     rows = _qlex(spark, idx, query_terms)
     if not rows:
         return local_frame(spark, [], "doc_id long, impact_score long")
@@ -2926,30 +2391,11 @@ def bm25_boosted_topk(
     """Per-term query boosting (Lucene ``term^boost`` / ES query weights):
     BM25 with each term's contribution scaled by its query-side boost —
     contribution tree unchanged, one extra multiply before the micros
-    rounding. Same pruned-index plan as bm25_topk; the boost map rides in
-    the |q|-row broadcast lexicon frame."""
-    terms = list(boosts.keys())
-    rows = _qlex(spark, idx, terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    post = _pruned_postings(idx, rows)
-    lex = local_frame(
-        spark,
-        [
-            (r["term"], r["df"], r["idf_bm25"], float(boosts[r["term"]]))
-            for r in rows
-        ],
-        "term string, df long, idf_bm25 double, boost double",
-    )
-    contrib = F.col("boost") * _bm25_contrib(idx["avgdl"])
-    return (
-        post.join(F.broadcast(lex), "term")
-        .select("doc_id", F.round(contrib * 1e6).cast("long").alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    rounding. Same :func:`_scored` plan as bm25_topk; the boosts ride in a
+    literal term -> boost map."""
+    boost = literal_map({t: float(b) for t, b in boosts.items()}, "map<string,double>")
+    contrib = boost[F.col("term")] * _bm25_contrib(idx["avgdl"])
+    return _topk(_scored(spark, idx, list(boosts), contrib), k)
 
 
 def nrt_two_tier_topk(
@@ -2976,7 +2422,9 @@ def nrt_two_tier_topk(
     Scale shape: the sealed side stays the pruned postings scan; the delta
     side tokenizes only the delta batch (the "in-memory segment" — bounded
     by the refresh interval, not the corpus); the stats merge costs two
-    bounded aggregates (|q| rows + 1 row). No sealed-index rewrite."""
+    bounded aggregates (|q| rows + 1 row). No sealed-index rewrite. Both
+    tiers' postings are the :func:`_scored` core's narrowed scan, carrying
+    the merged df (a literal map) and its idf in place of the lexicon's."""
     from searchengine_spark.functions.tokenize import doc_len, exploded_tokens
     from searchengine_spark.operators.ir import idf_bm25_expr
 
@@ -3007,32 +2455,28 @@ def nrt_two_tier_topk(
         if n_merged
         else 1.0
     )
-    terms_present = sorted(set(sealed_df) | set(delta_df))
-    if not terms_present:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    merged_lex = local_frame(
-        spark,
-        [(t, sealed_df.get(t, 0) + delta_df.get(t, 0)) for t in terms_present],
-        "term string, df long",
-    ).select("term", idf_bm25_expr(n_merged).alias("idf_bm25"))
-
-    sealed_rows = [r for r in rows]  # postings pruned by the sealed lexicon
-    sealed_post = (
-        _pruned_postings(idx, sealed_rows).select("term", "doc_id", "tf", "dl")
-        if sealed_rows
-        else None
+    merged_df = literal_map(
+        {
+            t: sealed_df.get(t, 0) + delta_df.get(t, 0)
+            for t in sorted(set(sealed_df) | set(delta_df))
+        },
+        "map<string,bigint>",
     )
-    union = dpost.select("term", "doc_id", "tf", "dl")
-    if sealed_post is not None:
-        union = sealed_post.unionByName(union)
-    contrib = _bm25_contrib(avgdl)
-    return (
-        union.join(F.broadcast(merged_lex), "term")
-        .select("doc_id", F.round(contrib * 1e6).cast("long").alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
+
+    def with_delta(sealed: DataFrame) -> DataFrame:
+        cols = ["term", "doc_id", "tf", "dl"]
+        return (
+            sealed.select(*cols)
+            .unionByName(dpost.select(*cols))
+            .withColumn("df", merged_df[F.col("term")])
+            .withColumn("idf_bm25", idf_bm25_expr(n_merged))
+        )
+
+    return _topk(
+        _scored(
+            spark, idx, uniq, _bm25_contrib(avgdl), stats=(), rows=rows, narrow=with_delta
+        ),
+        k,
     )
 
 
@@ -3057,76 +2501,21 @@ def common_terms_topk(
     postings are doc_id-semi-joined down to the candidate set before
     scoring. All-common queries degenerate to plain bm25_topk."""
     rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
     n_docs = int(idx["n_docs"])
     required = [
         r for r in rows if int(r["df"]) * 1_000_000 <= cutoff_ppm * n_docs
     ]
-    if not required:
-        return bm25_topk(spark, idx, query_terms, k=k)
-    cand = _pruned_postings(idx, required).select("doc_id").distinct()
-    post = _pruned_postings(idx, rows).join(cand, "doc_id")
-    contrib = _bm25_contrib(idx["avgdl"])
-    return (
-        post.join(F.broadcast(_lex_df(spark, rows)), "term")
-        .select("doc_id", F.round(contrib * 1e6).cast("long").alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    narrow = None
+    if required:
+        cand = _pruned_postings(idx, required).select("doc_id").distinct()
 
+        def narrow(post: DataFrame) -> DataFrame:
+            return post.join(cand, "doc_id")
 
-def rbo_rankings(
-    spark: SparkSession, idx: dict, query_terms: list[str], k: int = 10
-) -> DataFrame:
-    """Rank-Biased Overlap (Webber et al. 2010) between two of the engine's
-    own rankers (BM25 vs Dirichlet QLD) on the same query — the top-weighted
-    ranking-similarity metric used to compare retrieval systems when no
-    qrels exist (the complement of rank_metrics, which needs judgments).
-
-    Truncated RBO@k with persistence p = 9/10, computed EXACTLY in integer
-    arithmetic: p^(d-1) = 9^(d-1)/10^(d-1), so each depth's contribution is
-    (1e9 · 9^(d-1) · X_d) div (10^d · d) nanos with X_d = |A_{1..d} ∩
-    B_{1..d}| — no libm pow anywhere, hence no cross-engine ulp drift.
-    Output: one row (pair, rbo_nanos, overlap_at_k).
-
-    Scale shape: both inputs are bounded k-row rankings; everything after
-    them is driver-scale (k² comparisons)."""
-    from pyspark.sql import Window
-
-    one = Window.partitionBy(F.col("doc_id") % 1).orderBy(
-        F.desc("score_micros"), F.asc("doc_id")
+    scored = _scored(
+        spark, idx, query_terms, _bm25_contrib(idx["avgdl"]), rows=rows, narrow=narrow
     )
-    a = bm25_topk(spark, idx, query_terms, k=k).select(
-        "doc_id", F.row_number().over(one).alias("ar")
-    )
-    b = qld_topk(spark, idx, query_terms, k=k).select(
-        "doc_id", F.row_number().over(one).alias("br")
-    )
-    pairs = a.join(b, "doc_id").select("ar", "br")
-    depths = local_frame(
-        spark,
-        [(d, 9 ** (d - 1), 10**d) for d in range(1, k + 1)],
-        "d int, p9 long, p10 long",
-    )
-    xd = (
-        depths.join(
-            pairs, (pairs["ar"] <= depths["d"]) & (pairs["br"] <= depths["d"]), "left"
-        )
-        .groupBy("d", "p9", "p10")
-        .agg(F.count("ar").alias("xd"))
-    )
-    contrib = F.expr("(1000000000 * p9 * xd) div (p10 * d)")
-    return xd.select(
-        F.lit("bm25_vs_qld").alias("pair"),
-        contrib.alias("c"),
-        F.when(F.col("d") == k, F.col("xd")).otherwise(F.lit(0)).alias("ov"),
-    ).groupBy("pair").agg(
-        F.sum("c").cast("long").alias("rbo_nanos"),
-        F.sum("ov").cast("long").alias("overlap_at_k"),
-    )
+    return _topk(scored, k)
 
 
 def index_stats(spark: SparkSession, idx: dict) -> DataFrame:
@@ -3168,11 +2557,16 @@ def bm25_topk_tombstoned(
     The tombstone set here is doc_id % tombstoned_mod == 0 (synthesized
     in-query, the oracle replicates it); at scale it is the broadcast
     side of a LEFT ANTI join — deletes are rare relative to the corpus.
+    Here it narrows the :func:`_scored` scan, so dead postings never score.
     Composes with compaction_plan: the merge that policy schedules is
     exactly where tombstones and stats reconcile."""
-    scores = bm25_scores(spark, idx, query_terms)
-    live = scores.filter(F.pmod(F.col("doc_id"), F.lit(tombstoned_mod)) != 0)
-    return live.orderBy(F.desc("score_micros"), F.asc("doc_id")).limit(k)
+
+    def live(post: DataFrame) -> DataFrame:
+        return post.filter(F.pmod(F.col("doc_id"), F.lit(tombstoned_mod)) != 0)
+
+    return _topk(
+        _scored(spark, idx, query_terms, _bm25_contrib(idx["avgdl"]), narrow=live), k
+    )
 
 
 def bm25plus_topk(
@@ -3186,13 +2580,9 @@ def bm25plus_topk(
     every matched term contributes at least ``idf·δ``, fixing plain BM25's
     over-penalization of very long documents (where tf/(tf+k1·norm) → 0 and
     a long doc containing the term can score below a short doc not
-    containing it at all). Same pruned-index plan as bm25_topk; the only
+    containing it at all). Same :func:`_scored` plan as bm25_topk; the only
     change is ``+ δ`` inside the shared contribution tree before the idf
     multiply."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], _EMPTY_TOPK)
-    post = _pruned_postings(idx, rows)
     tf = F.col("tf").cast("double")
     dl = F.col("dl").cast("double")
     contrib = F.col("idf_bm25") * (
@@ -3200,14 +2590,7 @@ def bm25plus_topk(
         / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / F.lit(idx["avgdl"])))
         + F.lit(float(delta))
     )
-    return (
-        post.join(F.broadcast(_lex_df(spark, rows)), "term")
-        .select("doc_id", F.round(contrib * 1e6).cast("long").alias("c_micros"))
-        .groupBy("doc_id")
-        .agg(F.sum("c_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _topk(_scored(spark, idx, query_terms, contrib), k)
 
 
 def borda_fusion_topk(
@@ -3230,19 +2613,16 @@ def borda_fusion_topk(
 
     order = [F.desc("score_micros"), F.asc("doc_id")]
     one = Window.partitionBy(F.col("doc_id") % 1).orderBy(*order)
-    lex = (
-        bm25_scores(spark, idx, query_terms)
-        .orderBy(*order)
-        .limit(r)
-        .select("doc_id", (F.lit(r) - F.row_number().over(one) + 1).alias("lpts"))
+    bm25 = _topk(bm25_scores(spark, idx, query_terms), r).select(
+        "doc_id", (F.lit(r) - F.row_number().over(one) + 1).alias("lpts")
     )
     vec = ann_bruteforce_topk(embeddings, k=r, query_ids=[query_vec_id]).select(
         F.col("neighbor_id").alias("doc_id"),
         (F.lit(r) - F.col("rank") + 1).cast("long").alias("vpts"),
     )
-    ids = lex.select("doc_id").union(vec.select("doc_id")).distinct()
+    ids = bm25.select("doc_id").union(vec.select("doc_id")).distinct()
     fused = (
-        ids.join(F.broadcast(lex), "doc_id", "left")
+        ids.join(F.broadcast(bm25), "doc_id", "left")
         .join(F.broadcast(vec), "doc_id", "left")
         .select(
             "doc_id",
@@ -3263,248 +2643,6 @@ def borda_fusion_topk(
     )
 
 
-def _ltr_candidate_features(
-    spark: SparkSession, idx: dict, query_terms: list[str], r: int
-):
-    """ONE definition of the LTR candidate feature table shared by the
-    trainer and the model server (so a feature change can never apply to
-    training and silently miss serving): BM25 top-r candidates with
-    integer-micros features x1 = minmax score, x2 = coordination ppm,
-    x3 = minmax doc length, and the deterministic conjunctive label y.
-    Returns a localCheckpointed r-row frame (doc_id, x1, x2, x3, y), or
-    None when no query term exists."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return None
-    # distinct terms IN THE QUERY LITERAL (not just lexicon hits) — the
-    # oracle twins (oracles.py ltr_*) define n_q the same way, so an
-    # out-of-vocabulary query term lowers x2/y identically on both sides
-    n_q = len(dict.fromkeys(query_terms))
-    order = [F.desc("score_micros"), F.asc("doc_id")]
-    cand = bm25_scores(spark, idx, query_terms).orderBy(*order).limit(r)
-    matched = (
-        _pruned_postings(idx, rows)
-        .groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("nm"), F.max("dl").alias("dl"))
-    )
-    base = cand.join(matched, "doc_id")
-    mm = base.agg(
-        F.max("score_micros").alias("smax"), F.max("dl").alias("dlmax")
-    )
-    x1 = F.round(
-        F.lit(1e6) * F.col("score_micros").cast("double") / F.col("smax").cast("double")
-    ).cast("long")
-    x3 = F.round(
-        F.lit(1e6) * F.col("dl").cast("double") / F.col("dlmax").cast("double")
-    ).cast("long")
-    return (
-        base.crossJoin(F.broadcast(mm))
-        .select(
-            "doc_id",
-            x1.alias("x1"),
-            F.expr(f"(nm * 1000000) div {n_q}").alias("x2"),
-            x3.alias("x3"),
-            F.when(F.col("nm") == n_q, F.lit(1)).otherwise(F.lit(0)).alias("y"),
-        )
-        .localCheckpoint()  # tiny (r rows); freeze so iterations share it
-    )
-
-
-def ltr_rerank_topk(
-    spark: SparkSession,
-    idx: dict,
-    query_terms: list[str],
-    k: int = 10,
-    r: int = 50,
-    iterations: int = 3,
-    lr_den: int = 4000,
-) -> DataFrame:
-    """Serve with the model ltr_train_logistic just trained — the
-    train-then-rank loop closed inside the engine. The sigmoid is monotone,
-    so ranking by the raw integer logit z = w·x needs NO float at serve
-    time: z is an exact int64 (micros·micros scale), reported as
-    z div 1e6 micros. Output: (rank, doc_id, ltr_score_micros)."""
-    from pyspark.sql import Window
-
-    wts = {
-        row["j"]: int(row["weight_micros"])
-        for row in ltr_train_logistic(
-            spark, idx, query_terms, r=r, iterations=iterations, lr_den=lr_den
-        ).collect()
-    }
-    feats = _ltr_candidate_features(spark, idx, query_terms, r)
-    if not wts or feats is None:
-        return local_frame(
-            spark,
-            [], "rank int, doc_id long, ltr_score_micros long"
-        )
-    z = (
-        F.lit(wts[0]).cast("long") * F.lit(1_000_000).cast("long")
-        + F.lit(wts[1]).cast("long") * F.col("x1")
-        + F.lit(wts[2]).cast("long") * F.col("x2")
-        + F.lit(wts[3]).cast("long") * F.col("x3")
-    )
-    scored = (
-        feats.select("doc_id", z.alias("_z"))
-        .select("doc_id", F.expr("_z div 1000000").alias("ltr_score_micros"))
-        .orderBy(F.desc("ltr_score_micros"), F.asc("doc_id"))
-        .limit(k)
-    )
-    w_final = Window.partitionBy(F.col("doc_id") % 1).orderBy(
-        F.desc("ltr_score_micros"), F.asc("doc_id")
-    )
-    return scored.select(
-        F.row_number().over(w_final).cast("int").alias("rank"),
-        "doc_id",
-        "ltr_score_micros",
-    )
-
-
-def ltr_train_logistic(
-    spark: SparkSession,
-    idx: dict,
-    query_terms: list[str],
-    r: int = 50,
-    iterations: int = 3,
-    lr_den: int = 4000,
-) -> DataFrame:
-    """Learning-to-rank model TRAINING inside the engine: pointwise
-    logistic regression over the BM25 top-r candidates' ranking features —
-    the training step that consumes what ``ltr_features`` exports. Labels
-    are deterministic conjunctive relevance (doc matches ALL query terms);
-    features are integer-micros normalized (bias, minmax BM25 score,
-    coordination ppm, minmax doc length).
-
-    Determinism contract (the k-means/HITS pattern applied to gradient
-    descent): weights live in integer MICROS; each row's per-feature
-    gradient contribution is rounded to integer nanos BEFORE the sum, so
-    the gradient is an exact associative integer total on any engine and
-    any partition count; the update w -= trunc(grad_nanos / (n·lr_den)) is
-    exact truncate-toward-zero division in both engines (DuckDB's ``//``
-    truncates; Python's floors, so the driver matches DuckDB explicitly).
-    The only floats are each row's fixed
-    4-term dot product and one sigmoid — identical expression trees in
-    Spark and the unrolled DuckDB oracle.
-
-    Scale shape: one candidate generation (bounded r per query), then per
-    iteration ONE map-side-combinable 4-column aggregate over the feature
-    table — full-batch GD over 10^9 candidate rows is iterations × one
-    aggregate scan, no driver-side data beyond the 4 weight integers.
-
-    Output: (j, weight_micros) for j = 0(bias), 1(score), 2(coord), 3(dl).
-    """
-    feats = _ltr_candidate_features(spark, idx, query_terms, r)
-    if feats is None:
-        return local_frame(spark, [], "j int, weight_micros long")
-    n = feats.count()
-    w = [0, 0, 0, 0]
-    xs = [F.lit(1_000_000).cast("long"), F.col("x1"), F.col("x2"), F.col("x3")]
-    for _ in range(iterations):
-        z_int = (
-            F.lit(w[0]).cast("long") * F.lit(1_000_000).cast("long")
-            + F.lit(w[1]).cast("long") * F.col("x1")
-            + F.lit(w[2]).cast("long") * F.col("x2")
-            + F.lit(w[3]).cast("long") * F.col("x3")
-        )
-        sig = F.lit(1.0) / (F.lit(1.0) + F.exp(-(z_int.cast("double") / F.lit(1e12))))
-        aggs = [
-            F.sum(
-                F.round((sig - F.col("y").cast("double")) * xj.cast("double") * F.lit(1000.0)).cast(
-                    "long"
-                )
-            ).alias(f"g{j}")
-            for j, xj in enumerate(xs)
-        ]
-        g = feats.agg(*aggs).collect()[0]
-
-        def _tdiv(a: int, b: int) -> int:  # truncate toward zero = DuckDB //
-            q = abs(a) // b
-            return -q if a < 0 else q
-
-        w = [w[j] - _tdiv(int(g[f"g{j}"]), n * lr_den) for j in range(4)]
-    return local_frame(
-        spark,
-        [(j, int(w[j])) for j in range(4)], "j int, weight_micros long"
-    )
-
-
-def ltr_train_pairwise(
-    spark: SparkSession,
-    idx: dict,
-    query_terms: list[str],
-    r: int = 50,
-    iterations: int = 3,
-    lr_den: int = 4000,
-) -> DataFrame:
-    """Pairwise learning-to-rank training (the RankNet objective with a
-    linear scorer): minimize −log σ(s(pos) − s(neg)) over all
-    (positive, negative) candidate pairs — the ranking-native loss beside
-    the pointwise trainer, sharing its feature table, integer-exactness
-    contract (per-pair gradient contributions rounded to nanos before the
-    associative sum; truncating-division updates) and its unrolled-GD
-    DuckDB twin. The bias feature cancels in every pair difference, so its
-    weight provably stays 0 — the pairwise objective is translation-
-    invariant, which the gate exhibits rather than hides.
-
-    Scale shape: the pair table is |pos|·|neg| ≤ r² rows PER QUERY (never
-    corpus-scale — candidates were already cut to r); each iteration is one
-    map-side-combinable aggregate over it."""
-    feats = _ltr_candidate_features(spark, idx, query_terms, r)
-    if feats is None:
-        return local_frame(spark, [], "j int, weight_micros long")
-    pos = feats.filter(F.col("y") == 1).select(
-        F.col("x1").alias("px1"), F.col("x2").alias("px2"), F.col("x3").alias("px3")
-    )
-    neg = feats.filter(F.col("y") == 0).select(
-        F.col("x1").alias("nx1"), F.col("x2").alias("nx2"), F.col("x3").alias("nx3")
-    )
-    pairs = (
-        pos.crossJoin(neg)
-        .select(
-            (F.col("px1") - F.col("nx1")).alias("d1"),
-            (F.col("px2") - F.col("nx2")).alias("d2"),
-            (F.col("px3") - F.col("nx3")).alias("d3"),
-        )
-        .localCheckpoint()
-    )
-    n_pairs = pairs.count()
-    if n_pairs == 0:
-        return local_frame(
-            spark,
-            [(j, 0) for j in range(4)], "j int, weight_micros long"
-        )
-    w = [0, 0, 0, 0]
-
-    def _tdiv(a: int, b: int) -> int:  # truncate toward zero = DuckDB //
-        q = abs(a) // b
-        return -q if a < 0 else q
-
-    for _ in range(iterations):
-        zd_int = (
-            F.lit(w[1]).cast("long") * F.col("d1")
-            + F.lit(w[2]).cast("long") * F.col("d2")
-            + F.lit(w[3]).cast("long") * F.col("d3")
-        )
-        sig = F.lit(1.0) / (
-            F.lit(1.0) + F.exp(-(zd_int.cast("double") / F.lit(1e12)))
-        )
-        aggs = [
-            F.sum(
-                F.round(
-                    (sig - F.lit(1.0)) * F.col(f"d{j}").cast("double") * F.lit(1000.0)
-                ).cast("long")
-            ).alias(f"g{j}")
-            for j in (1, 2, 3)
-        ]
-        g = pairs.agg(*aggs).collect()[0]
-        for j in (1, 2, 3):
-            w[j] = w[j] - _tdiv(int(g[f"g{j}"]), n_pairs * lr_den)
-    return local_frame(
-        spark,
-        [(j, int(w[j])) for j in range(4)], "j int, weight_micros long"
-    )
-
-
 def highlight_fragments(
     spark: SparkSession,
     idx: dict,
@@ -3520,7 +2658,8 @@ def highlight_fragments(
     overlapping windows merged gaps-and-islands style, fragments ranked by
     match count (ties: earliest first).
 
-    Plan: the winners come from the gated bm25_topk; their match positions
+    Plan: the winners are bm25_topk's, scored by the :func:`_scored` core
+    over the one lexicon lookup the fragments reuse; their match positions
     come from the PRUNED postings' stored position lists (no corpus
     re-scan); islands build with per-doc windows (bounded by matches per
     doc); only the ≤ k winning docs' raw text is fetched, and the fragment
@@ -3539,7 +2678,9 @@ def highlight_fragments(
             "doc_id long, frag_seq int, start_pos long, end_pos long, "
             "n_matches long, fragment string",
         )
-    winners = bm25_topk(spark, idx, query_terms, k=k).select("doc_id")
+    winners = _topk(
+        _scored(spark, idx, query_terms, _bm25_contrib(idx["avgdl"]), rows=rows), k
+    ).select("doc_id")
     hits = (
         _pruned_postings(idx, rows)
         .join(F.broadcast(winners), "doc_id")

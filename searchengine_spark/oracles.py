@@ -78,7 +78,7 @@ def _bm25_scores_cte(
     q_body = q_cte or f"SELECT term FROM {_terms_values(terms)}"
     return f"""n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents),
 avg_dl AS (SELECT sum(dl)::DOUBLE / count(*) AS avgdl FROM dls),
-q AS ({q_body}),
+q AS (SELECT DISTINCT term FROM ({q_body})),
 lex AS (
   SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM post GROUP BY 1
 ),
@@ -292,55 +292,6 @@ ORDER BY score_micros DESC, shard_id ASC
 """
 
 
-def ltr_features_sql(terms: list[str], k1: float = 1.2, b: float = 0.75) -> str:
-    """Twin of serve.ltr_features: per-candidate LETOR-style feature row
-    from the recomputed postings — n_matched / sum_tf / dl / min_pos /
-    bm25_micros / tfidf_micros, micros rounded per (doc, term) before the
-    per-doc sums."""
-    return f"""
-WITH {_TOKENS_CTE},
-pos AS (
-  SELECT doc_id, unnest(t) AS term, generate_subscripts(t, 1) - 1 AS pos
-  FROM toks
-),
-n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents),
-avg_dl AS (SELECT sum(dl)::DOUBLE / count(*) AS avgdl FROM dls),
-q AS (SELECT term FROM {_terms_values(terms)}),
-lex AS (SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM post GROUP BY 1),
-idf AS (
-  SELECT lex.term,
-         ln(1.0 + (n.n_docs - lex.df + 0.5) / (lex.df + 0.5)) AS idf_bm25,
-         ln(n.n_docs / (lex.df + 1.0)) AS idf_compat
-  FROM lex, n WHERE lex.term IN (SELECT term FROM q)
-),
-firstpos AS (
-  SELECT doc_id, term, min(pos)::BIGINT AS first_pos
-  FROM pos WHERE term IN (SELECT term FROM q) GROUP BY 1, 2
-),
-feat AS (
-  SELECT post.doc_id, post.tf, dls.dl, firstpos.first_pos,
-         CAST(round(idf.idf_bm25 * (post.tf * {k1 + 1.0})
-                    / (post.tf + {k1} * (1.0 - {b} + {b} * dls.dl / avg_dl.avgdl))
-                    * 1e6) AS BIGINT) AS bm25_c,
-         CAST(round((post.tf::DOUBLE / dls.dl::DOUBLE) * idf.idf_compat * 1e6)
-              AS BIGINT) AS tfidf_c
-  FROM post
-  JOIN idf ON post.term = idf.term
-  JOIN dls ON post.doc_id = dls.doc_id
-  JOIN firstpos ON post.doc_id = firstpos.doc_id AND post.term = firstpos.term
-  CROSS JOIN avg_dl
-)
-SELECT doc_id,
-       count(*)::BIGINT AS n_matched,
-       sum(tf)::BIGINT AS sum_tf,
-       max(dl)::BIGINT AS dl,
-       min(first_pos)::BIGINT AS min_pos,
-       sum(bm25_c)::BIGINT AS bm25_micros,
-       sum(tfidf_c)::BIGINT AS tfidf_micros
-FROM feat GROUP BY doc_id
-"""
-
-
 def line_dedup_sql(line_tokens: int = 8) -> str:
     """Twin of dedup.line_dedup: fixed token windows as synthetic lines, a
     line survives only at its globally first (doc_id, line_id) occurrence."""
@@ -436,7 +387,7 @@ def tfidf_topk_sql(terms: list[str], k: int = 10) -> str:
     return f"""
 WITH {_TOKENS_CTE},
 n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents),
-q AS (SELECT term FROM {_terms_values(terms)}),
+q AS (SELECT DISTINCT term FROM {_terms_values(terms)}),
 lex AS (SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM post GROUP BY 1),
 idf AS (
   SELECT lex.term, ln(n.n_docs / (lex.df + 1.0)) AS idf_compat
@@ -1942,7 +1893,7 @@ def search_results_sql(terms: list[str], k: int = 10, k1: float = 1.2, b: float 
 WITH {_TOKENS_CTE},
 n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents),
 avg_dl AS (SELECT sum(dl)::DOUBLE / count(*) AS avgdl FROM dls),
-q AS (SELECT term FROM {_terms_values(terms)}),
+q AS (SELECT DISTINCT term FROM {_terms_values(terms)}),
 lex AS (
   SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM post GROUP BY 1
 ),
@@ -2514,202 +2465,6 @@ CROSS JOIN n1 CROSS JOIN n2
 WHERE cxy >= {min_count}
 ORDER BY pmi_micros DESC, bigram ASC
 LIMIT {k}
-"""
-
-
-def hard_negatives_sql(
-    queries: dict[str, list[str]], k: int = 10, k1: float = 1.2, b: float = 0.75
-) -> str:
-    """Twin of serve.hard_negatives: the bm25_batch scoring block, minus
-    each query's deterministic positive (lowest doc_id matching ALL the
-    query's terms), re-ranked per query."""
-    esc = lambda s: s.replace("'", "''")
-    pairs = ", ".join(
-        f"('{esc(qid)}', '{esc(t)}')"
-        for qid, terms in sorted(queries.items())
-        for t in dict.fromkeys(terms)
-    )
-    return f"""
-WITH {_TOKENS_CTE},
-n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents),
-avg_dl AS (SELECT sum(dl)::DOUBLE / count(*) AS avgdl FROM dls),
-qmap(query_id, term) AS (VALUES {pairs}),
-nreq AS (SELECT query_id, count(*)::BIGINT AS n_req FROM qmap GROUP BY 1),
-lex AS (
-  SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM post GROUP BY 1
-),
-idf AS (
-  SELECT lex.term,
-         ln(1.0 + (n.n_docs - lex.df + 0.5) / (lex.df + 0.5)) AS idf_bm25
-  FROM lex, n
-  WHERE lex.term IN (SELECT term FROM qmap)
-),
-matched AS (
-  SELECT qmap.query_id, post.doc_id, count(*)::BIGINT AS n_hit
-  FROM post JOIN qmap ON post.term = qmap.term GROUP BY 1, 2
-),
-pos AS (
-  SELECT matched.query_id, min(matched.doc_id)::BIGINT AS doc_id
-  FROM matched JOIN nreq USING (query_id)
-  WHERE matched.n_hit = nreq.n_req GROUP BY 1
-),
-scored AS (
-  SELECT qmap.query_id, post.doc_id,
-         CAST(round(idf.idf_bm25 * (post.tf * {k1 + 1.0})
-                    / (post.tf + {k1} * (1.0 - {b} + {b} * dls.dl / avg_dl.avgdl))
-                    * 1e6) AS BIGINT) AS c_micros
-  FROM post
-  JOIN qmap ON post.term = qmap.term
-  JOIN idf ON post.term = idf.term
-  JOIN dls ON post.doc_id = dls.doc_id
-  CROSS JOIN avg_dl
-),
-agg AS (
-  SELECT query_id, doc_id, sum(c_micros)::BIGINT AS score_micros
-  FROM scored GROUP BY 1, 2
-),
-neg AS (
-  SELECT agg.query_id, agg.doc_id, agg.score_micros
-  FROM agg LEFT JOIN pos
-    ON agg.query_id = pos.query_id AND agg.doc_id = pos.doc_id
-  WHERE pos.doc_id IS NULL
-),
-ranked AS (
-  SELECT query_id,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY score_micros DESC, doc_id ASC) AS INT)
-           AS rank,
-         doc_id, score_micros
-  FROM neg
-)
-SELECT query_id, rank, doc_id, score_micros FROM ranked WHERE rank <= {k}
-"""
-
-
-def qpp_predictors_sql(queries: dict[str, list[str]]) -> str:
-    """Twin of serve.qpp_predictors: per-term micros frozen before the
-    per-query integer aggregates; absent-only queries emit a zero row."""
-    esc = lambda s: s.replace("'", "''")
-    pairs = ", ".join(
-        f"('{esc(qid)}', '{esc(t)}')"
-        for qid, terms in sorted(queries.items())
-        for t in dict.fromkeys(terms)
-    )
-    spine = ", ".join(f"('{esc(qid)}')" for qid in sorted(queries))
-    return f"""
-WITH {_TOKENS_CTE},
-n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents),
-tot AS (SELECT sum(dl)::DOUBLE AS t FROM dls),
-qmap(query_id, term) AS (VALUES {pairs}),
-spine(query_id) AS (VALUES {spine}),
-lex AS (
-  SELECT term, count(DISTINCT doc_id)::BIGINT AS df, sum(tf)::BIGINT AS cf
-  FROM post GROUP BY 1
-),
-per_term AS (
-  SELECT qmap.query_id,
-         CAST(round(ln(1.0 + (n.n_docs - lex.df + 0.5) / (lex.df + 0.5)) * 1e6)
-              AS BIGINT) AS idf_m,
-         CAST(round(ln(tot.t / lex.cf::DOUBLE) * 1e6) AS BIGINT) AS ictf_m,
-         CAST(round((1.0 + ln(lex.cf::DOUBLE))
-                    * ln(1.0 + (n.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-                    * 1e6) AS BIGINT) AS scq_m
-  FROM qmap JOIN lex USING (term) CROSS JOIN n CROSS JOIN tot
-),
-agg AS (
-  SELECT query_id, count(*)::BIGINT AS n_terms,
-         (sum(idf_m) // count(*))::BIGINT AS avg_idf_micros,
-         max(idf_m)::BIGINT AS max_idf_micros,
-         (sum(ictf_m) // count(*))::BIGINT AS avg_ictf_micros,
-         sum(scq_m)::BIGINT AS scq_sum_micros
-  FROM per_term GROUP BY 1
-)
-SELECT spine.query_id,
-       coalesce(agg.n_terms, 0)::BIGINT AS n_terms,
-       coalesce(agg.avg_idf_micros, 0)::BIGINT AS avg_idf_micros,
-       coalesce(agg.max_idf_micros, 0)::BIGINT AS max_idf_micros,
-       coalesce(agg.avg_ictf_micros, 0)::BIGINT AS avg_ictf_micros,
-       coalesce(agg.scq_sum_micros, 0)::BIGINT AS scq_sum_micros
-FROM spine LEFT JOIN agg USING (query_id)
-"""
-
-
-def rank_metrics_sql(
-    queries: dict[str, list[str]], k: int = 10, k1: float = 1.2, b: float = 0.75
-) -> str:
-    """Twin of serve.rank_metrics: the bm25_batch ranked CTE, the
-    conjunctive-positive qrels, and per-query hit/MRR/nDCG micros with a
-    zero row for queries whose positive misses the top-k."""
-    esc = lambda s: s.replace("'", "''")
-    pairs = ", ".join(
-        f"('{esc(qid)}', '{esc(t)}')"
-        for qid, terms in sorted(queries.items())
-        for t in dict.fromkeys(terms)
-    )
-    spine = ", ".join(f"('{esc(qid)}')" for qid in sorted(queries))
-    return f"""
-WITH {_TOKENS_CTE},
-n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents),
-avg_dl AS (SELECT sum(dl)::DOUBLE / count(*) AS avgdl FROM dls),
-qmap(query_id, term) AS (VALUES {pairs}),
-spine(query_id) AS (VALUES {spine}),
-nreq AS (SELECT query_id, count(*)::BIGINT AS n_req FROM qmap GROUP BY 1),
-lex AS (
-  SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM post GROUP BY 1
-),
-idf AS (
-  SELECT lex.term,
-         ln(1.0 + (n.n_docs - lex.df + 0.5) / (lex.df + 0.5)) AS idf_bm25
-  FROM lex, n
-  WHERE lex.term IN (SELECT term FROM qmap)
-),
-matched AS (
-  SELECT qmap.query_id, post.doc_id, count(*)::BIGINT AS n_hit
-  FROM post JOIN qmap ON post.term = qmap.term GROUP BY 1, 2
-),
-pos AS (
-  SELECT matched.query_id, min(matched.doc_id)::BIGINT AS doc_id
-  FROM matched JOIN nreq USING (query_id)
-  WHERE matched.n_hit = nreq.n_req GROUP BY 1
-),
-scored AS (
-  SELECT qmap.query_id, post.doc_id,
-         CAST(round(idf.idf_bm25 * (post.tf * {k1 + 1.0})
-                    / (post.tf + {k1} * (1.0 - {b} + {b} * dls.dl / avg_dl.avgdl))
-                    * 1e6) AS BIGINT) AS c_micros
-  FROM post
-  JOIN qmap ON post.term = qmap.term
-  JOIN idf ON post.term = idf.term
-  JOIN dls ON post.doc_id = dls.doc_id
-  CROSS JOIN avg_dl
-),
-agg AS (
-  SELECT query_id, doc_id, sum(c_micros)::BIGINT AS score_micros
-  FROM scored GROUP BY 1, 2
-),
-ranked AS (
-  SELECT query_id,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY score_micros DESC, doc_id ASC) AS INT)
-           AS rank,
-         doc_id
-  FROM agg
-),
-hits AS (
-  SELECT ranked.query_id,
-         1::BIGINT AS hit,
-         CAST(round(1e6 / ranked.rank::DOUBLE) AS BIGINT) AS rr_micros,
-         CAST(round((ln(2.0) / ln(ranked.rank + 1.0)) * 1e6) AS BIGINT)
-           AS ndcg_micros
-  FROM ranked JOIN pos
-    ON ranked.query_id = pos.query_id AND ranked.doc_id = pos.doc_id
-  WHERE ranked.rank <= {k}
-)
-SELECT spine.query_id,
-       coalesce(hits.hit, 0)::BIGINT AS hit,
-       coalesce(hits.rr_micros, 0)::BIGINT AS rr_micros,
-       coalesce(hits.ndcg_micros, 0)::BIGINT AS ndcg_micros
-FROM spine LEFT JOIN hits USING (query_id)
 """
 
 
@@ -3844,58 +3599,6 @@ WHERE CAST(round(1e6 * i / sa.sz) AS BIGINT) >= {threshold_ppm}
 """
 
 
-def rerank_ce_topk_sql(
-    terms: list[str],
-    k: int = 10,
-    n_candidates: int = 50,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> str:
-    """Twin of serve.rerank_ce_topk: BM25 top-N candidates re-ranked by the
-    hashed-weights surrogate scorer — w_t = int(md5(t)[:6],16)/16^6, per-term
-    contribution round(1e6·w_t·tf/(tf+1)) integer-summed, plus the coverage
-    feature round(5e5·n_hit/|q|)."""
-    import hashlib
-
-    uniq = list(dict.fromkeys(terms))
-    n_q = len(uniq)
-    esc = lambda s: s.replace("'", "''")
-    wrows = ", ".join(
-        f"('{esc(t)}', {int(hashlib.md5(t.encode()).hexdigest()[:6], 16)})"
-        for t in uniq
-    )
-    return f"""
-WITH {_TOKENS_CTE},
-{_bm25_scores_cte(uniq, k1, b)},
-cand AS (
-  SELECT doc_id, score_micros AS bm25_micros FROM scores
-  ORDER BY score_micros DESC, doc_id ASC LIMIT {n_candidates}
-),
-wmap(term, h) AS (VALUES {wrows}),
-contrib AS (
-  SELECT cand.doc_id, cand.bm25_micros,
-         CAST(round(1e6 * (wmap.h / 16777216.0)
-                    * (post.tf::DOUBLE / (post.tf::DOUBLE + 1.0))) AS BIGINT)
-           AS c
-  FROM cand
-  JOIN post ON post.doc_id = cand.doc_id
-  JOIN wmap ON post.term = wmap.term
-),
-agg AS (
-  SELECT doc_id, bm25_micros,
-         sum(c)::BIGINT AS s, count(*)::BIGINT AS n_hit
-  FROM contrib GROUP BY 1, 2
-)
-SELECT doc_id,
-       (s + CAST(round(5e5 * (n_hit::DOUBLE / {n_q}::DOUBLE)) AS BIGINT))::BIGINT
-         AS ce_micros,
-       bm25_micros
-FROM agg
-ORDER BY ce_micros DESC, doc_id ASC
-LIMIT {k}
-"""
-
-
 def heaps_law_sql(n_checkpoints: int = 10) -> str:
     """Twin of corpusstats.heaps_law: V = K·N^β fit over doc-id-ordered
     prefix checkpoints, milli fixed-point OLS on exact integer sums."""
@@ -4583,42 +4286,6 @@ LIMIT {k}
 """
 
 
-def rbo_rankings_sql(terms: list[str], k: int = 10) -> str:
-    """Twin of serve.rbo_rankings: both rankings embedded as isolated
-    subselects (the gated bm25/qld oracles verbatim), truncated RBO@k in
-    exact integer arithmetic over an injected (d, 9^(d-1), 10^d) table."""
-    depth_vals = ", ".join(
-        f"({d}, {9 ** (d - 1)}, {10 ** d})" for d in range(1, k + 1)
-    )
-    return f"""
-WITH a AS (
-  SELECT doc_id,
-         row_number() OVER (ORDER BY score_micros DESC, doc_id ASC) AS ar
-  FROM ({bm25_topk_sql(terms, k)})
-),
-b AS (
-  SELECT doc_id,
-         row_number() OVER (ORDER BY score_micros DESC, doc_id ASC) AS br
-  FROM ({qld_topk_sql(terms, k)})
-),
-pairs AS (SELECT a.ar, b.br FROM a JOIN b USING (doc_id)),
-depths AS (SELECT d, p9::BIGINT AS p9, p10::BIGINT AS p10
-           FROM (VALUES {depth_vals}) AS v(d, p9, p10)),
-x AS (
-  SELECT depths.d, depths.p9, depths.p10,
-         count(pairs.ar)::BIGINT AS xd
-  FROM depths
-  LEFT JOIN pairs ON pairs.ar <= depths.d AND pairs.br <= depths.d
-  GROUP BY 1, 2, 3
-)
-SELECT 'bm25_vs_qld' AS pair,
-       sum((1000000000::BIGINT * p9 * xd) // (p10 * d))::BIGINT AS rbo_nanos,
-       sum(CASE WHEN d = {k} THEN xd ELSE 0 END)::BIGINT AS overlap_at_k
-FROM x
-GROUP BY 1
-"""
-
-
 def index_stats_sql() -> str:
     return f"""
 WITH {_TOKENS_CTE},
@@ -4707,7 +4374,7 @@ def bm25plus_topk_sql(
 WITH {_TOKENS_CTE},
 n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents),
 avg_dl AS (SELECT sum(dl)::DOUBLE / count(*) AS avgdl FROM dls),
-q AS (SELECT term FROM {_terms_values(terms)}),
+q AS (SELECT DISTINCT term FROM {_terms_values(terms)}),
 lex AS (
   SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM post GROUP BY 1
 ),
@@ -4791,200 +4458,6 @@ SELECT sum(n)::BIGINT AS total_words,
        ((1000000 * sum(n * len(string_split(segmented, ' ')))) // sum(n))::BIGINT
          AS fertility_micros
 FROM enc
-"""
-
-
-def ltr_train_logistic_sql(
-    terms: list[str],
-    r: int = 50,
-    iterations: int = 3,
-    lr_den: int = 4000,
-) -> str:
-    """Unrolled twin of serve.ltr_train_logistic (the k-means/HITS pattern
-    applied to gradient descent): integer-micros features, per-row gradient
-    contributions rounded to nanos before the sum, weight updates via
-    DuckDB's truncate-toward-zero // division."""
-    uniq = list(dict.fromkeys(terms))
-    n_q = len(uniq)
-    parts = [
-        f"""cand AS (
-  SELECT doc_id, score_micros FROM (
-    SELECT doc_id, score_micros,
-           row_number() OVER (ORDER BY score_micros DESC, doc_id ASC) AS rn
-    FROM scores
-  ) WHERE rn <= {r}
-),
-matched AS (
-  SELECT post.doc_id, count(DISTINCT post.term)::BIGINT AS nm,
-         max(dls.dl)::BIGINT AS dl
-  FROM post JOIN q ON post.term = q.term JOIN dls ON post.doc_id = dls.doc_id
-  GROUP BY 1
-),
-mm AS (
-  SELECT max(c.score_micros)::BIGINT AS smax, max(m.dl)::BIGINT AS dlmax
-  FROM cand c JOIN matched m ON c.doc_id = m.doc_id
-),
-feats AS (
-  SELECT c.doc_id,
-         CAST(round(1e6 * CAST(c.score_micros AS DOUBLE)
-                    / CAST(mm.smax AS DOUBLE)) AS BIGINT) AS x1,
-         ((m.nm * 1000000) // {n_q})::BIGINT AS x2,
-         CAST(round(1e6 * CAST(m.dl AS DOUBLE)
-                    / CAST(mm.dlmax AS DOUBLE)) AS BIGINT) AS x3,
-         (CASE WHEN m.nm = {n_q} THEN 1 ELSE 0 END)::BIGINT AS y
-  FROM cand c JOIN matched m ON c.doc_id = m.doc_id CROSS JOIN mm
-),
-nr AS (SELECT count(*)::BIGINT AS n FROM feats),
-w0 AS (SELECT 0::BIGINT AS w0, 0::BIGINT AS w1, 0::BIGINT AS w2, 0::BIGINT AS w3)"""
-    ]
-    for t in range(iterations):
-        w, g, nw = f"w{t}", f"g{t}", f"w{t + 1}"
-        parts.append(
-            f"""{g} AS (
-  SELECT
-    sum(CAST(round((sig - y) * 1000000.0 * 1000.0) AS BIGINT))::BIGINT AS g0,
-    sum(CAST(round((sig - y) * CAST(x1 AS DOUBLE) * 1000.0) AS BIGINT))::BIGINT AS g1,
-    sum(CAST(round((sig - y) * CAST(x2 AS DOUBLE) * 1000.0) AS BIGINT))::BIGINT AS g2,
-    sum(CAST(round((sig - y) * CAST(x3 AS DOUBLE) * 1000.0) AS BIGINT))::BIGINT AS g3
-  FROM (
-    SELECT f.x1, f.x2, f.x3, f.y,
-           1.0 / (1.0 + exp(-(CAST({w}.w0 * 1000000 + {w}.w1 * f.x1
-                                   + {w}.w2 * f.x2 + {w}.w3 * f.x3 AS DOUBLE)
-                              / 1e12))) AS sig
-    FROM feats f CROSS JOIN {w}
-  )
-),
-{nw} AS (
-  SELECT {w}.w0 - ({g}.g0 // (nr.n * {lr_den})) AS w0,
-         {w}.w1 - ({g}.g1 // (nr.n * {lr_den})) AS w1,
-         {w}.w2 - ({g}.g2 // (nr.n * {lr_den})) AS w2,
-         {w}.w3 - ({g}.g3 // (nr.n * {lr_den})) AS w3
-  FROM {w} CROSS JOIN {g} CROSS JOIN nr
-)"""
-        )
-    chain = ",\n".join(parts)
-    wf = f"w{iterations}"
-    return f"""
-WITH {_TOKENS_CTE},
-{_bm25_scores_cte(uniq)},
-{chain}
-SELECT 0 AS j, w0::BIGINT AS weight_micros FROM {wf}
-UNION ALL SELECT 1, w1::BIGINT FROM {wf}
-UNION ALL SELECT 2, w2::BIGINT FROM {wf}
-UNION ALL SELECT 3, w3::BIGINT FROM {wf}
-"""
-
-
-def ltr_rerank_topk_sql(
-    terms: list[str],
-    k: int = 10,
-    r: int = 50,
-    iterations: int = 3,
-    lr_den: int = 4000,
-) -> str:
-    """Twin of serve.ltr_rerank_topk: the unrolled trainer's final weights
-    applied as the integer logit z = w·x (sigmoid is monotone, so no float
-    at serve time), z // 1e6 micros, bounded top-k."""
-    train = ltr_train_logistic_sql(terms, r=r, iterations=iterations, lr_den=lr_den)
-    # reuse the trainer's WITH chain: strip its final SELECT, keep the CTEs
-    chain = train[: train.rindex("SELECT 0 AS j")]
-    wf = f"w{iterations}"
-    return f"""{chain}
-SELECT rank, doc_id, ltr_score_micros FROM (
-  SELECT row_number() OVER (
-           ORDER BY ltr_score_micros DESC, doc_id ASC)::INT AS rank,
-         doc_id, ltr_score_micros
-  FROM (
-    SELECT f.doc_id,
-           ((w.w0 * 1000000 + w.w1 * f.x1 + w.w2 * f.x2 + w.w3 * f.x3)
-            // 1000000)::BIGINT AS ltr_score_micros
-    FROM feats f CROSS JOIN {wf} w
-  )
-) WHERE rank <= {k}
-"""
-
-
-def ltr_train_pairwise_sql(
-    terms: list[str],
-    r: int = 50,
-    iterations: int = 3,
-    lr_den: int = 4000,
-) -> str:
-    """Unrolled twin of serve.ltr_train_pairwise: RankNet pairwise logistic
-    over (positive, negative) feature differences, nanos-rounded per-pair
-    gradients, truncating-division updates; the bias weight stays 0."""
-    uniq = list(dict.fromkeys(terms))
-    n_q = len(uniq)
-    head = f"""cand AS (
-  SELECT doc_id, score_micros FROM (
-    SELECT doc_id, score_micros,
-           row_number() OVER (ORDER BY score_micros DESC, doc_id ASC) AS rn
-    FROM scores
-  ) WHERE rn <= {r}
-),
-matched AS (
-  SELECT post.doc_id, count(DISTINCT post.term)::BIGINT AS nm,
-         max(dls.dl)::BIGINT AS dl
-  FROM post JOIN q ON post.term = q.term JOIN dls ON post.doc_id = dls.doc_id
-  GROUP BY 1
-),
-mm AS (
-  SELECT max(c.score_micros)::BIGINT AS smax, max(m.dl)::BIGINT AS dlmax
-  FROM cand c JOIN matched m ON c.doc_id = m.doc_id
-),
-feats AS (
-  SELECT c.doc_id,
-         CAST(round(1e6 * CAST(c.score_micros AS DOUBLE)
-                    / CAST(mm.smax AS DOUBLE)) AS BIGINT) AS x1,
-         ((m.nm * 1000000) // {n_q})::BIGINT AS x2,
-         CAST(round(1e6 * CAST(m.dl AS DOUBLE)
-                    / CAST(mm.dlmax AS DOUBLE)) AS BIGINT) AS x3,
-         (CASE WHEN m.nm = {n_q} THEN 1 ELSE 0 END)::BIGINT AS y
-  FROM cand c JOIN matched m ON c.doc_id = m.doc_id CROSS JOIN mm
-),
-pairs AS (
-  SELECT (p.x1 - n.x1)::BIGINT AS d1, (p.x2 - n.x2)::BIGINT AS d2,
-         (p.x3 - n.x3)::BIGINT AS d3
-  FROM feats p JOIN feats n ON p.y = 1 AND n.y = 0
-),
-np AS (SELECT count(*)::BIGINT AS n FROM pairs),
-w0 AS (SELECT 0::BIGINT AS w1, 0::BIGINT AS w2, 0::BIGINT AS w3)"""
-    parts = [head]
-    for t in range(iterations):
-        w, g, nw = f"w{t}", f"g{t}", f"w{t + 1}"
-        parts.append(
-            f"""{g} AS (
-  SELECT
-    sum(CAST(round((sig - 1.0) * CAST(d1 AS DOUBLE) * 1000.0) AS BIGINT))::BIGINT AS g1,
-    sum(CAST(round((sig - 1.0) * CAST(d2 AS DOUBLE) * 1000.0) AS BIGINT))::BIGINT AS g2,
-    sum(CAST(round((sig - 1.0) * CAST(d3 AS DOUBLE) * 1000.0) AS BIGINT))::BIGINT AS g3
-  FROM (
-    SELECT d1, d2, d3,
-           1.0 / (1.0 + exp(-(CAST({w}.w1 * d1 + {w}.w2 * d2
-                                   + {w}.w3 * d3 AS DOUBLE) / 1e12))) AS sig
-    FROM pairs CROSS JOIN {w}
-  )
-),
-{nw} AS (
-  -- zero-pair edge: empty pairs CTE yields NULL gradients and np.n = 0;
-  -- coalesce/greatest keep the weights at 0 exactly as the Spark side's
-  -- n_pairs == 0 short-circuit does
-  SELECT {w}.w1 - (coalesce({g}.g1, 0) // (greatest(np.n, 1) * {lr_den})) AS w1,
-         {w}.w2 - (coalesce({g}.g2, 0) // (greatest(np.n, 1) * {lr_den})) AS w2,
-         {w}.w3 - (coalesce({g}.g3, 0) // (greatest(np.n, 1) * {lr_den})) AS w3
-  FROM {w} CROSS JOIN {g} CROSS JOIN np
-)"""
-        )
-    chain = ",\n".join(parts)
-    wf = f"w{iterations}"
-    return f"""
-WITH {_TOKENS_CTE},
-{_bm25_scores_cte(uniq)},
-{chain}
-SELECT 0 AS j, 0::BIGINT AS weight_micros
-UNION ALL SELECT 1, w1::BIGINT FROM {wf}
-UNION ALL SELECT 2, w2::BIGINT FROM {wf}
-UNION ALL SELECT 3, w3::BIGINT FROM {wf}
 """
 
 

@@ -22,9 +22,29 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from searchengine_spark import schemas
 from searchengine_spark.operators import ingest, postings as postings_ops
 from searchengine_spark.operators.pagerank import extract_edges, pagerank
 from searchengine_spark.plans import lineage as lin
+
+_STAGE_SCHEMAS = {
+    "documents_raw": schemas.DOCUMENTS_RAW,
+    "lexicon": schemas.LEXICON,
+    "segments": schemas.SEGMENTS,
+    "edges": schemas.EDGES,
+    "documents": schemas.DOCUMENTS,
+}
+
+
+def read_stage(spark: SparkSession, index_dir: str, stage: str, analyzer: str) -> DataFrame:
+    """A published stage, read with its schema from schemas.py (the postings'
+    depends on the ``analyzer``): a stage published with no rows may hold no
+    parquet file to infer one from, and still reads as a typed, empty table."""
+    if stage == "postings":
+        schema = schemas.POSTINGS_REFERENCE if analyzer == "reference" else schemas.POSTINGS
+    else:
+        schema = _STAGE_SCHEMAS[stage]
+    return spark.read.schema(schema).parquet(os.path.join(index_dir, stage))
 
 
 def build_index(
@@ -57,6 +77,9 @@ def build_index(
     def stage_path(stage: str) -> str:
         return os.path.join(index_dir, stage)
 
+    def read(stage: str) -> DataFrame:
+        return read_stage(spark, index_dir, stage, analyzer)
+
     documents_input = "doc_id" in corpus.columns
 
     # ---- stage: documents (ingest + doc ids; corpus input) ------------------
@@ -72,7 +95,7 @@ def build_index(
         docs = corpus.select("doc_id", F.col("text").alias("content"))
         n_docs = int(fp.rsplit(":", 1)[1])  # the fingerprint ends with the row count
     else:
-        docs = spark.read.parquet(stage_path("documents_raw"))
+        docs = read("documents_raw")
         n_docs = manifest.stage_metrics()["documents_raw"]["n_docs"]
 
     # ---- stage: postings (tokenize) -----------------------------------------
@@ -93,7 +116,7 @@ def build_index(
         n_post = sum(p["rows"] for p in parts)
         lin.append_lineage(spark, index_dir, "postings", fp, parts, n_post, 0, 1.0, t.wall_ms)
         manifest.mark_done("postings", fp, {"wall_ms": t.wall_ms, "postings": n_post})
-    post = spark.read.parquet(stage_path("postings"))
+    post = read("postings")
     n_post = manifest.stage_metrics()["postings"]["postings"]
 
     # ---- stage: lexicon (salted df/idf agg) + corpus scalars + skew ---------
@@ -111,7 +134,7 @@ def build_index(
             # sum(dl) (every kept token adds 1 to both, under either
             # analyzer), so the stage never re-scans postings.
             stats = (
-                spark.read.parquet(stage_path("lexicon"))
+                read("lexicon")
                 .groupBy("bucket")
                 .agg(F.sum("df").alias("n"), F.sum("cf").alias("c"))
                 .agg(
@@ -145,7 +168,7 @@ def build_index(
     if not manifest.is_done("segments", fp):
         from searchengine_spark.operators.segments import encode_segments
 
-        lex = spark.read.parquet(stage_path("lexicon"))
+        lex = read("lexicon")
         # shard_span = docs per index shard. A deterministic layout constant
         # derived from CORPUS size only (never cluster size — rank-identity
         # across N/4N executors depends on that): aim for >=256 shards so the
@@ -183,7 +206,7 @@ def build_index(
         with lin.StageTimer() as t:
             edges = extract_edges(docs)
             lin.publish_stage(edges, index_dir, "edges")
-            edges = spark.read.parquet(stage_path("edges"))
+            edges = read("edges")
             if with_pagerank:
                 pr = pagerank(docs, edges)
             else:
@@ -208,12 +231,13 @@ def build_index(
 
 def load_index(spark: SparkSession, index_dir: str) -> dict:
     """The index tables as DataFrames (those the build published: a
-    documents-table input has no ``documents`` or ``edges``), plus
-    ``avgdl``: the build manifest's lexicon-stage scalar, so a query needs
-    no job over documents for it."""
-    out: dict = {"avgdl": lin.IndexManifest(index_dir).stage_metrics()["lexicon"]["avgdl"]}
+    documents-table input has no ``documents`` or ``edges``), each read with
+    its schema (:func:`read_stage`), plus ``avgdl``: the build manifest's
+    lexicon-stage scalar, so a query needs no job over documents for it."""
+    manifest = lin.IndexManifest(index_dir)
+    analyzer = manifest.analyzer()
+    out: dict = {"avgdl": manifest.stage_metrics()["lexicon"]["avgdl"]}
     for table in ("documents", "postings", "lexicon", "edges", "segments"):
-        path = os.path.join(index_dir, table)
-        if os.path.exists(path):
-            out[table] = spark.read.parquet(path)
+        if os.path.exists(os.path.join(index_dir, table)):
+            out[table] = read_stage(spark, index_dir, table, analyzer)
     return out

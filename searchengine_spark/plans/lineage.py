@@ -57,6 +57,11 @@ class IndexManifest:
     def stage_metrics(self) -> dict:
         return {s: i.get("metrics", {}) for s, i in self._data["stages"].items()}
 
+    def analyzer(self) -> str:
+        """The analyzer the postings were built with: the head of their
+        input fingerprint (``<analyzer>:<corpus fingerprint>``)."""
+        return self._data["stages"]["postings"]["input_fingerprint"].split(":", 1)[0]
+
 
 def corpus_fingerprint(corpus: DataFrame) -> str:
     """Order-insensitive content fingerprint of the input: xor of per-row

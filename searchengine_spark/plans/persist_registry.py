@@ -22,7 +22,12 @@ drop (per-gate locals, so GC-bounded), and they are few and small
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 _TRACKED: list[DataFrame] = []
 
@@ -36,13 +41,18 @@ def track(df: DataFrame) -> DataFrame:
 def release_tracked(blocking: bool = False) -> int:
     """Unpersist every tracked frame (safe: unpersist only drops the cache;
     any still-lazy dependent recomputes from source).  Returns the number
-    of frames released."""
+    of frames released. A frame whose session was stopped has nothing
+    cached left and is dropped silently; any other unpersist failure is
+    logged, and the remaining frames are still released."""
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()
         try:
             df.unpersist(blocking)
             n += 1
-        except Exception:
-            pass  # session already stopped — nothing to release
+        except Py4JError:
+            # a stopped session fails inside the JVM; pyspark marks it by
+            # dropping the context's Java handle
+            if df.sparkSession.sparkContext._jsc is not None:
+                log.exception("release_tracked: unpersist failed")
     return n

@@ -89,24 +89,6 @@ def test_containment_df_cap_drops_hot_shingles(spark):
     assert out == []
 
 
-def test_rerank_ce_topk_bounds_and_order(spark):
-    from searchengine_spark.operators import serve
-    from searchengine_spark.plans.gate_index import gate_index
-
-    idx = gate_index(spark, "/root/testdata/sf0.001")
-    terms = ["spark", "hash", "join"]
-    cand = serve.bm25_topk(spark, idx, terms, k=50).collect()
-    cand_ids = {r["doc_id"] for r in cand}
-    out = serve.rerank_ce_topk(spark, idx, terms, k=10, n_candidates=50).collect()
-    assert len(out) == min(10, len(cand_ids))
-    assert {r["doc_id"] for r in out} <= cand_ids  # rerank never leaves recall set
-    ces = [(r["ce_micros"], -r["doc_id"]) for r in out]
-    assert ces == sorted(ces, reverse=True)  # total order (ce DESC, id ASC)
-    # the coverage feature binds: every returned doc matches ≥ 1 term, and
-    # ce is within the max possible: |q|·1e6 (w<1, f<1) + 5e5
-    assert all(0 < r["ce_micros"] < 3_500_000 for r in out)
-
-
 def test_heaps_law_sublinear_growth(spark):
     # doc i introduces exactly ONE new term plus i repeats of a common one:
     # V grows linearly in docs while N grows quadratically → β ≈ 0.5

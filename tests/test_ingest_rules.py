@@ -27,15 +27,32 @@ def test_apply_exclusions(spark):
     assert apply_exclusions(corpus, []).count() == total
 
 
-def test_documents_from_fully_excluded_corpus(spark):
+def test_documents_from_fully_excluded_corpus(spark, tmp_path):
     """Rules that drop every file leave an empty documents frame, not an
-    analysis error: the doc-id offsets map is typed even with no buckets."""
+    analysis error: the doc-id offsets map is typed even with no buckets.
+    The whole build then publishes typed, empty stages (a partitioned write
+    of no rows leaves no parquet file, so each stage is read with its
+    schema), and a query over the index finds nothing."""
+    from searchengine_spark import schemas
+    from searchengine_spark.operators import serve
     from searchengine_spark.operators.ingest import build_documents
+    from searchengine_spark.plans.build_index import build_index, load_index
 
     corpus = apply_exclusions(generate_corpus(spark, 20, seed=3), [{"repo_prefix": ""}])
     with build_documents(corpus) as docs:
         assert "doc_id" in docs.columns
         assert docs.collect() == []
+
+    # no PageRank: its eager localCheckpoints would outlive the test and be
+    # released by Spark's ContextCleaner at an arbitrary later moment
+    metrics = build_index(spark, corpus, str(tmp_path / "idx"), with_pagerank=False)
+    assert metrics["n_docs"] == 0 and metrics["n_postings"] == 0
+    idx = load_index(spark, str(tmp_path / "idx"))
+    assert [f.name for f in idx["postings"].schema] == schemas.POSTINGS_REFERENCE.names
+    assert [f.name for f in idx["documents"].schema] == schemas.DOCUMENTS.names
+    for table in ("documents", "postings", "lexicon", "edges", "segments"):
+        assert idx[table].count() == 0, table
+    assert serve.bm25_topk(spark, idx, ["spark", "join"]).collect() == []
 
 
 def test_fingerprint_whitespace_insensitive(spark):

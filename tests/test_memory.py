@@ -138,3 +138,32 @@ def test_failed_documents_write_releases_ingest_cache(spark, tmp_path, monkeypat
         build_index(spark, corpus, str(tmp_path / "idx"), with_pagerank=False)
     assert written == [before + 1]  # the id assignment's slim rows were cached
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def test_release_tracked_logs_only_live_session_failures(caplog, monkeypatch):
+    """A frame of a stopped session is dropped silently; an unpersist that
+    fails on a live session is logged, and the frames after it are still
+    released."""
+    from types import SimpleNamespace
+
+    from py4j.protocol import Py4JError
+
+    from searchengine_spark.plans import persist_registry as reg
+
+    def frame(live: bool, fails: bool):
+        def unpersist(blocking):
+            if fails:
+                raise Py4JError("unpersist failed")
+
+        ctx = SimpleNamespace(_jsc=object() if live else None)
+        return SimpleNamespace(
+            unpersist=unpersist, sparkSession=SimpleNamespace(sparkContext=ctx)
+        )
+
+    monkeypatch.setattr(reg, "_TRACKED", [])
+    for f in (frame(True, False), frame(True, True), frame(False, True)):
+        reg.track(f)
+    with caplog.at_level("ERROR", logger=reg.__name__):
+        assert reg.release_tracked() == 1
+    assert len(caplog.records) == 1 and "unpersist failed" in caplog.text
+    assert reg.release_tracked() == 0

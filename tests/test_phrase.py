@@ -46,11 +46,6 @@ def test_phrase_family_vs_oracle(spark, con, idx, phrase):
             sql = oracles.gap_phrase_topk_sql(terms, gap=gap, k=K)
         else:
             sql = oracles.phrase_topk_sql(terms, k=K)
-        if len(set(terms)) < len(terms):
-            # serve.bm25_scores scores each distinct term once, the oracle's
-            # BM25 CTE once per query occurrence: a repeated-term phrase
-            # compares hit sets only (K is above every hit count)
-            got, sql = got.select("doc_id"), f"SELECT doc_id FROM ({sql})"
         compare_spark_duck(got, con, sql)
     compare_spark_duck(
         serve.phrase_freq_topk(spark, idx, terms, k=K),

@@ -86,8 +86,8 @@ def test_ann_bruteforce_is_one_scan_no_join(spark):
 
 def test_serve_bm25_prunes_and_broadcasts(spark):
     """Index-served BM25: postings scan pruned to the query terms' bucket
-    directories (PartitionFilters), lexicon rows broadcast, bounded top-k,
-    and nothing big shuffled."""
+    directories (PartitionFilters), lexicon statistics read from literal
+    maps (no join at all), bounded top-k, and nothing big shuffled."""
     from searchengine_spark.operators import serve
     from searchengine_spark.plans.gate_index import gate_index
 
@@ -96,7 +96,7 @@ def test_serve_bm25_prunes_and_broadcasts(spark):
     assert "PartitionFilters" in plan
     pf = plan.split("PartitionFilters")[1].split("\n")[0]
     assert "bucket" in pf
-    assert "BroadcastHashJoin" in plan
+    assert "Join" not in plan
     assert "TakeOrderedAndProject" in plan
     assert "SortMergeJoin" not in plan
 
@@ -177,7 +177,7 @@ def test_stratified_sample_is_scan_only(spark):
 
 
 def test_batch_topk_two_phase_windows(spark):
-    """bm25_batch_topk must (a) broadcast the lexicon and query map, (b)
+    """bm25_batch_topk must (a) broadcast the query map, (b)
     run the partial rank keyed by (query_id, salt) BEFORE the per-query
     rank — never a single window over an unreduced candidate set — and
     (c) keep the postings side a pruned scan (no sort-merge join)."""
@@ -308,8 +308,8 @@ def test_synonym_topk_broadcasts_and_bounds(spark):
 
 def test_bm25f_and_qld_share_the_pruned_serving_shape(spark):
     """BM25F and QLD are per-posting expression swaps inside the SAME
-    pruned-scan + broadcast-lexicon plan as BM25: bucket partition pruning,
-    broadcast join, bounded top-k, no sort-merge join, no corpus scan."""
+    ``serve._scored`` plan as BM25: bucket partition pruning, lexicon
+    statistics from literal maps (no join), bounded top-k, no corpus scan."""
     from searchengine_spark.operators import serve
     from searchengine_spark.plans.gate_index import gate_index
 
@@ -321,7 +321,7 @@ def test_bm25f_and_qld_share_the_pruned_serving_shape(spark):
         plan = plan_of(df)
         assert "PartitionFilters" in plan
         assert "bucket" in plan.split("PartitionFilters")[1].split("\n")[0]
-        assert "BroadcastHashJoin" in plan
+        assert "Join" not in plan
         assert "TakeOrderedAndProject" in plan
         assert "SortMergeJoin" not in plan
         assert "documents" not in plan  # index-served: no corpus scan
@@ -374,9 +374,9 @@ def test_exact_substring_spans_windows_by_doc_only(spark):
 
 
 def test_maxp_serves_from_pruned_postings_no_window(spark):
-    """Passage MaxP: bucket-pruned postings scan, broadcast lexicon, the
-    per-doc best passage via hash aggregate (struct max) — no corpus scan,
-    no window, bounded top-k."""
+    """Passage MaxP: bucket-pruned postings scan, lexicon statistics from
+    literal maps, the per-doc best passage via hash aggregate (struct max)
+    — no corpus scan, no join, no window, bounded top-k."""
     from searchengine_spark.operators import serve
     from searchengine_spark.plans.gate_index import gate_index
 
@@ -386,21 +386,8 @@ def test_maxp_serves_from_pruned_postings_no_window(spark):
     assert "PartitionFilters" in plan
     assert "bucket" in plan.split("PartitionFilters")[1].split("\n")[0]
     assert "Window" not in plan
+    assert "Join" not in plan
     assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_ltr_features_one_pass_no_corpus(spark):
-    """LTR export: one pruned postings pass + broadcast lexicon + one
-    per-doc aggregate; the corpus is never scanned."""
-    from searchengine_spark.operators import serve
-    from searchengine_spark.plans.gate_index import gate_index
-
-    idx = gate_index(spark, SF_DIR)
-    plan = plan_of(serve.ltr_features(spark, idx, ["spark", "hash"]))
-    assert "documents.parquet" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "Window" not in plan
     assert "SortMergeJoin" not in plan
 
 
@@ -614,20 +601,6 @@ def test_domain_kl_joins_aggregates_only(spark):
     assert "InMemoryTableScan" in plan
 
 
-def test_rerank_stage2_bounded_to_candidates(spark):
-    """Stage 2 (the Arrow scorer) must sit above the bounded candidate
-    heap: the plan contains the Python batch eval AND TakeOrderedAndProject
-    below it — the scorer never touches a corpus-sized relation."""
-    from searchengine_spark.operators import serve
-    from searchengine_spark.plans.gate_index import gate_index
-
-    idx = gate_index(spark, SF_DIR)
-    plan = plan_of(serve.rerank_ce_topk(spark, idx, ["spark", "hash"], k=5, n_candidates=20))
-    assert "MapInPandas" in plan or "ArrowEval" in plan
-    assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan  # candidate⋈postings stays broadcast
-
-
 def test_zorder_is_map_only_plus_broadcast_bounds(spark):
     """The Z-order key is ONE 4-value bounds aggregate broadcast back (a
     1-row cross join) over a map-only projection: no SortMergeJoin, no
@@ -690,14 +663,14 @@ def test_knn_graph_co_keyed_join_no_cartesian(spark):
 
 
 def test_pl2_topk_plan_shape(spark):
-    """PL2 must share the BM25 serving shape: broadcast lambda-map join,
-    bounded top-k heap, no window, no corpus-side shuffle join."""
+    """PL2 must share the BM25 serving shape: λ from the literal cf map
+    (no join), bounded top-k heap, no window."""
     from searchengine_spark.operators import serve
     from searchengine_spark.plans.gate_index import gate_index
 
     idx = gate_index(spark, SF_DIR)
     plan = plan_of(serve.pl2_topk(spark, idx, ["spark", "hash", "join"], k=10))
-    assert "BroadcastHashJoin" in plan
+    assert "Join" not in plan
     assert "TakeOrderedAndProject" in plan
     assert "Window" not in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan

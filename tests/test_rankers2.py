@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
 TERMS = ["spark", "hash", "join"]
-LTR_TERMS = ["dup", "spark", "join"]  # rare driver term -> both label classes
 
 
 @pytest.fixture(scope="module")
@@ -223,33 +222,6 @@ def test_maxp_score_at_most_whole_doc_saturation(spark, idx):
     assert all(r["score_micros"] <= whole[r["doc_id"]] for r in split)
 
 
-def test_ltr_features_consistent_with_bm25_and_postings(spark, idx):
-    """The feature export's bm25_micros column must equal bm25_scores for
-    every candidate, and n_matched/sum_tf must match the stored postings."""
-    from searchengine_spark.operators import serve
-
-    feats = {r["doc_id"]: r for r in serve.ltr_features(spark, idx, TERMS).collect()}
-    scores = serve.bm25_scores(spark, idx, TERMS).collect()
-    assert len(feats) == len(scores)
-    assert all(feats[r["doc_id"]]["bm25_micros"] == r["score_micros"] for r in scores)
-
-    post = (
-        idx["postings"]
-        .filter(F.col("term").isin(TERMS))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("tf").cast("long").alias("s"),
-        )
-        .collect()
-    )
-    assert all(
-        feats[r["doc_id"]]["n_matched"] == r["n"]
-        and feats[r["doc_id"]]["sum_tf"] == r["s"]
-        for r in post
-    )
-
-
 def test_shard_selection_beliefs_bounded_and_ranked(spark, idx):
     from searchengine_spark.operators import serve
 
@@ -274,88 +246,6 @@ def test_shard_selection_beliefs_bounded_and_ranked(spark, idx):
     )
     hottest = max(dfs, key=lambda r: (r["n"], -r["shard_id"]))["shard_id"]
     assert out[-1]["shard_id"] != hottest
-
-
-def test_hard_negatives_is_batch_minus_positive(spark, idx):
-    from searchengine_spark.operators import serve
-
-    queries = {"qa": TERMS, "qb": ["spark", "stream"]}
-    full = serve.bm25_batch_topk(spark, idx, queries, k=100000).collect()
-    # independent positive derivation: lowest doc matching ALL query terms
-    positives = {}
-    for qid, terms in queries.items():
-        matched = (
-            idx["postings"]
-            .filter(F.col("term").isin(terms))
-            .groupBy("doc_id")
-            .agg(F.countDistinct("term").alias("n"))
-            .filter(F.col("n") == len(set(terms)))
-            .agg(F.min("doc_id").alias("d"))
-            .collect()[0]["d"]
-        )
-        positives[qid] = matched
-    assert all(v is not None for v in positives.values())
-    expected = {}
-    for qid in queries:
-        rows = [r for r in full if r["query_id"] == qid and r["doc_id"] != positives[qid]]
-        rows.sort(key=lambda r: (-r["score_micros"], r["doc_id"]))
-        expected[qid] = [(i + 1, r["doc_id"], r["score_micros"]) for i, r in enumerate(rows[:10])]
-    got = serve.hard_negatives(spark, idx, queries, k=10).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], r["score_micros"])
-        )
-    for qid in queries:
-        assert sorted(by_q[qid]) == expected[qid]
-        assert positives[qid] not in {d for _, d, _ in by_q[qid]}
-
-
-def test_rank_metrics_consistent_with_batch_rank(spark, idx):
-    from searchengine_spark.operators import serve
-    import math
-
-    queries = {"qa": TERMS, "qb": ["spark", "stream"]}
-    run = serve.bm25_batch_topk(spark, idx, queries, k=100000).collect()
-    positives = {
-        r["query_id"]: r["doc_id"]
-        for r in serve._conjunctive_positives(spark, idx, queries).collect()
-    }
-    got = {r["query_id"]: r for r in serve.rank_metrics(spark, idx, queries, k=10).collect()}
-    assert set(got) == set(queries)
-    for qid in queries:
-        rank = next(
-            (r["rank"] for r in run if r["query_id"] == qid and r["doc_id"] == positives[qid]),
-            None,
-        )
-        if rank is not None and rank <= 10:
-            assert got[qid]["hit"] == 1
-            assert got[qid]["rr_micros"] == round(1e6 / rank)
-            assert got[qid]["ndcg_micros"] == round(
-                math.log(2.0) / math.log(rank + 1.0) * 1e6
-            )
-        else:
-            assert got[qid]["hit"] == 0 and got[qid]["rr_micros"] == 0
-
-
-def test_qpp_rare_terms_predict_harder_than_stopword_terms(spark, idx):
-    from searchengine_spark.operators import serve
-
-    # a query of rarer terms must show higher avgIDF than one of the
-    # corpus's most frequent terms
-    lex = idx["lexicon"].orderBy("df").collect()
-    rare = [r["term"] for r in lex[:2]]
-    common = [r["term"] for r in lex[-2:]]
-    out = {
-        r["query_id"]: r
-        for r in serve.qpp_predictors(
-            spark, idx, {"q_rare": rare, "q_common": common, "q_absent": ["zzzq"]}
-        ).collect()
-    }
-    assert out["q_rare"]["avg_idf_micros"] > out["q_common"]["avg_idf_micros"]
-    assert out["q_rare"]["n_terms"] == 2 and out["q_common"]["n_terms"] == 2
-    # absent-only query emits the zero row, not nothing
-    assert out["q_absent"]["n_terms"] == 0 and out["q_absent"]["scq_sum_micros"] == 0
 
 
 def test_search_after_pages_partition_ranking(spark):
@@ -512,52 +402,3 @@ def test_tombstoned_filters_but_keeps_scores(spark, idx):
     for r in rows:
         assert r["doc_id"] % 7 != 0
         assert base[r["doc_id"]] == r["score_micros"]
-
-
-def test_ltr_train_learns_separation(spark, idx):
-    """After 3 GD iterations the trained weights must score the positive
-    class (docs matching ALL query terms) above the negatives on average —
-    the minimal learning-happened check on top of the exact-parity gate."""
-    from searchengine_spark.operators import serve
-
-    w = {
-        r["j"]: r["weight_micros"]
-        for r in serve.ltr_train_logistic(spark, idx, LTR_TERMS, r=50).collect()
-    }
-    rows = _ltr_feature_rows(spark, idx, LTR_TERMS, r=50)
-    zs = {0: [], 1: []}
-    for x1, x2, x3, y in rows:
-        z = w[0] * 1_000_000 + w[1] * x1 + w[2] * x2 + w[3] * x3
-        zs[y].append(z)
-    assert zs[0] and zs[1]
-    assert sum(zs[1]) / len(zs[1]) > sum(zs[0]) / len(zs[0])
-
-
-def _ltr_feature_rows(spark, idx, terms, r):
-    """Recompute the gate's integer feature rows (mirrors the operator)."""
-    from pyspark.sql import functions as F
-
-    from searchengine_spark.operators import serve
-
-    lex_rows = serve._qlex(spark, idx, terms)
-    n_q = len({x["term"] for x in lex_rows})
-    cand = (
-        serve.bm25_scores(spark, idx, terms)
-        .orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(r)
-    )
-    matched = (
-        serve._pruned_postings(idx, lex_rows)
-        .groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("nm"), F.max("dl").alias("dl"))
-    )
-    base = cand.join(matched, "doc_id").collect()
-    smax = max(x["score_micros"] for x in base)
-    dlmax = max(x["dl"] for x in base)
-    out = []
-    for x in base:
-        x1 = round(1e6 * x["score_micros"] / smax)
-        x2 = (x["nm"] * 1_000_000) // n_q
-        x3 = round(1e6 * x["dl"] / dlmax)
-        out.append((x1, x2, x3, 1 if x["nm"] == n_q else 0))
-    return out
