@@ -49,8 +49,6 @@ BOOL_QUERY = "(spark AND stream) OR (hash AND NOT join)"
 SYNONYM_GROUPS = {"g_sortmerge": ["sort", "merge"], "g_streamwin": ["stream", "window"]}
 # MoreLikeThis gate: any corpus doc works; 3 exists at every sf
 MLT_DOC = 3
-# term-vectors gate: a handful of point-lookup docs spanning buckets
-TV_DOCS = [3, 10, 41]
 # per-term query boosts (Lucene term^boost) — exact binary doubles
 BOOSTS = {"spark": 2.0, "hash": 1.0, "join": 0.5}
 # common-terms gate: one rare driver term ("dup", df≈5%) + two
@@ -167,16 +165,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "index_stats": lambda spark, sf: serve.index_stats(
             spark, gate_index(spark, sf)
         ),
-        # tombstone-aware serving (Lucene liveDocs): deletes filter results
-        # immediately, stats stay stale until compaction
-        "bm25_topk_tombstoned": lambda spark, sf: serve.bm25_topk_tombstoned(
-            spark, gate_index(spark, sf), BM25_TERMS, tombstoned_mod=7, k=TOPK
-        ),
-        # prefix-compressed term dictionary (Lucene front coding): per-block
-        # (prefix_len, suffix) relative to the predecessor term
-        "front_coded_dictionary": lambda spark, sf: serve.front_coded_dictionary(
-            spark, gate_index(spark, sf), block=8, n_buckets=4
-        ),
         "bm25_topk": lambda spark, sf: serve.bm25_topk(
             spark, gate_index(spark, sf), BM25_TERMS, k=TOPK
         ),
@@ -195,24 +183,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # per-term query boosting (term^boost), same pruned-index plan
         "bm25_boosted_topk": lambda spark, sf: serve.bm25_boosted_topk(
             spark, gate_index(spark, sf), BOOSTS, k=TOPK
-        ),
-        # near-real-time two-tier serve: sealed index + fresh delta batch,
-        # query-time stats merge; must hash-equal a full rebuild
-        "nrt_two_tier_topk": lambda spark, sf: _nrt_two_tier(spark, sf),
-        # quantized-impact serving tier (Anserini impact index / SPLADE
-        # shape): 8-bit index-time impacts, pure integer query-time sum
-        "bm25_impact_topk": lambda spark, sf: serve.bm25_impact_topk(
-            spark, gate_index(spark, sf), BM25_TERMS, k=TOPK
-        ),
-        # STATIC index pruning (impact-ordered per-term posting truncation,
-        # full-index idf) — the lossy serving-tier variant beside the two
-        # lossless dynamic-pruning paths above
-        # two-phase tiered serving: champion-list candidates -> exact rerank
-        "bm25_topk_tiered": lambda spark, sf: serve.bm25_topk_tiered(
-            spark, gate_index(spark, sf), BM25_TERMS, k=TOPK, max_postings=64
-        ),
-        "bm25_topk_pruned": lambda spark, sf: serve.bm25_topk_pruned(
-            spark, gate_index(spark, sf), BM25_TERMS, k=TOPK, max_postings=64
         ),
         # Lucene-explain-style relevance debugging: per-(doc, term)
         # contribution breakdown of the top-k, one shared contrib expr with
@@ -283,11 +253,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_maxp_topk": lambda spark, sf: serve.bm25_maxp_topk(
             spark, gate_index(spark, sf), BM25_TERMS, k=TOPK
         ),
-        # CORI resource ranking over doc_id-mod shards — the shard router
-        # of selective search (query only the most promising shards)
-        "shard_selection": lambda spark, sf: serve.shard_selection(
-            spark, gate_index(spark, sf), BM25_TERMS, n_shards=8
-        ),
         # pseudo-relevance-feedback expansion (Rocchio two-pass): top docs
         # of pass 1 donate expansion terms, pass 2 re-ranks with weights
         "prf_expansion_topk": lambda spark, sf: serve.prf_expansion_topk(
@@ -346,16 +311,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "term_search_any": lambda spark, sf: serve.term_search_any(
             spark, gate_index(spark, sf), ALL_TERMS
         ),
-        # significant-terms hit-set mining (ES JLH): what the result set is
-        # about — foreground df over the hit docs vs lexicon background df
-        "significant_terms": lambda spark, sf: serve.significant_terms(
-            spark, gate_index(spark, sf), BM25_TERMS, k=20
-        ),
-        # forward-index point lookup (Lucene TermVectors): per-doc stored
-        # (term, tf, positions) from the doc-bucketed docvecs table
-        "term_vectors": lambda spark, sf: serve.term_vectors(
-            spark, gate_index(spark, sf), TV_DOCS
-        ),
         "term_search_except": lambda spark, sf: serve.term_search_except(
             spark, gate_index(spark, sf), ALL_TERMS[:2], [ALL_TERMS[2]]
         ),
@@ -386,12 +341,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # elastic resharding: the exact move set when the fleet grows
         # S→S+1 (rendezvous minimal disruption, ≈1/(S+1) of the corpus)
         "shard_rebalance_moves": lambda spark, sf: _shard_rebalance_moves(spark, sf),
-        # scatter-gather serving over the rendezvous shards: per-shard
-        # bounded top-k with global stats, broker merge — provably equal to
-        # the single-index top-k, so the oracle IS bm25_topk's SQL
-        "federated_topk": lambda spark, sf: serve.federated_topk(
-            spark, gate_index(spark, sf), BM25_TERMS, n_shards=N_SHARDS_ROUTE, k=TOPK
-        ),
         # deterministic epoch shuffle: global training order as a two-phase
         # bucket prefix-sum rank over md5(epoch, doc) — no global window
         "epoch_shuffle": lambda spark, sf: _epoch_shuffle(spark, sf),
@@ -1050,27 +999,6 @@ def _incremental_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_build_postings(_docs(spark, sf_dir), shard_span=64)
 
 
-def _nrt_delta(docs: DataFrame) -> DataFrame:
-    """The not-yet-indexed fresh batch: doc_id%13==4 re-added at id+1e9
-    with ' fresh' appended (the _snapshot_b synthesis pattern — the oracle
-    rebuilds over the identical union)."""
-    from pyspark.sql import functions as F
-
-    return docs.filter(F.col("doc_id") % 13 == 4).select(
-        (F.col("doc_id") + 1_000_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" fresh")).alias("text"),
-    )
-
-
-def _nrt_two_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators import serve
-    from searchengine_spark.plans.gate_index import gate_index as _gi
-
-    return serve.nrt_two_tier_topk(
-        spark, _gi(spark, sf_dir), _nrt_delta(_docs(spark, sf_dir)), BM25_TERMS, k=TOPK
-    )
-
-
 def _bitpacked_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from searchengine_spark.operators.segments import bitpacked_postings_roundtrip
 
@@ -1334,27 +1262,13 @@ def oracle_sql() -> dict[str, str]:
         "span_first_topk": oracles.span_first_topk_sql(BM25_TERMS[0], k=TOPK, max_pos=8),
         "phrase_freq_topk": oracles.phrase_freq_topk_sql(PHRASE, k=TOPK),
         "gap_phrase_topk": oracles.gap_phrase_topk_sql(PHRASE, gap=1, k=TOPK),
-        "front_coded_dictionary": oracles.front_coded_dictionary_sql(
-            block=8, n_buckets=4
-        ),
         "index_stats": oracles.index_stats_sql(),
-        "bm25_topk_tombstoned": oracles.bm25_topk_tombstoned_sql(
-            BM25_TERMS, tombstoned_mod=7, k=TOPK
-        ),
         "bm25_topk": oracles.bm25_topk_sql(BM25_TERMS, k=TOPK),
         # the segment path answers the SAME oracle as the columnar path —
         # the compressed index is hash-gated, not just property-tested
         "bm25_topk_blockmax": oracles.bm25_topk_sql(BM25_TERMS, k=TOPK),
-        "bm25_impact_topk": oracles.bm25_impact_topk_sql(BM25_TERMS, k=TOPK),
         "bm25_boosted_topk": oracles.bm25_boosted_topk_sql(BOOSTS, k=TOPK),
         "common_terms_topk": oracles.common_terms_topk_sql(COMMON_TERMS_QUERY, k=TOPK),
-        "nrt_two_tier_topk": oracles.nrt_two_tier_sql(BM25_TERMS, k=TOPK),
-        "bm25_topk_tiered": oracles.bm25_topk_tiered_sql(
-            BM25_TERMS, k=TOPK, max_postings=64
-        ),
-        "bm25_topk_pruned": oracles.bm25_topk_pruned_sql(
-            BM25_TERMS, k=TOPK, max_postings=64
-        ),
         "bm25_page3": oracles.bm25_page_sql(BM25_TERMS, page=3, k=TOPK),
         "bm25_explain": oracles.bm25_explain_sql(BM25_TERMS, k=TOPK),
         "tfidf_topk": oracles.tfidf_topk_sql(TFIDF_TERMS, k=TOPK),
@@ -1370,10 +1284,7 @@ def oracle_sql() -> dict[str, str]:
         "prf_expansion_topk": oracles.prf_expansion_sql(BM25_TERMS, k=TOPK),
         "bm25f_topk": oracles.bm25f_topk_sql(BM25_TERMS, k=TOPK),
         "bm25_maxp_topk": oracles.bm25_maxp_topk_sql(BM25_TERMS, k=TOPK),
-        "shard_selection": oracles.shard_selection_sql(BM25_TERMS, n_shards=8),
         "term_search_any": oracles.term_search_any_sql(ALL_TERMS),
-        "significant_terms": oracles.significant_terms_sql(BM25_TERMS, k=20),
-        "term_vectors": oracles.term_vectors_sql(TV_DOCS),
         "term_search_except": oracles.term_search_except_sql(ALL_TERMS[:2], [ALL_TERMS[2]]),
         "boolean_query": _boolean_query_sql(),
         "facet_counts": oracles.facet_counts_sql(BM25_TERMS),
@@ -1386,8 +1297,6 @@ def oracle_sql() -> dict[str, str]:
         "shard_rebalance_moves": oracles.shard_rebalance_moves_sql(
             N_SHARDS_ROUTE, N_SHARDS_ROUTE + 1
         ),
-        # federated scatter-gather must reproduce the single-index ranking
-        "federated_topk": oracles.bm25_topk_sql(BM25_TERMS, k=TOPK),
         "epoch_shuffle": oracles.epoch_shuffle_sql(0),
         "quality_tiers": oracles.quality_tiers_sql(),
         "curriculum_order": oracles.curriculum_order_sql(),

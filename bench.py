@@ -38,8 +38,6 @@ BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "50000"))
 HEADLINE = [
     "bm25_topk",
     "bm25_topk_blockmax",
-    "bm25_topk_pruned",
-    "bm25_topk_tiered",
     "bm25_batch_topk",
     "bm25_explain",
     "compat_topk",
@@ -57,29 +55,22 @@ HEADLINE = [
     "bm25plus_topk",
     "mmr_topk",
     "bm25_maxp_topk",
-    "shard_selection",
     "phrase_match",
     "phrase_topk",
     "phrase_topk_wand",
     "gap_phrase_topk",
     "proximity_match_wand",
     "ordered_proximity_wand",
-    "significant_terms",
-    "term_vectors",
     "corrected_search",
     "compaction_plan",
     "hybrid_combmnz_topk",
     "cluster_results",
-    "front_coded_dictionary",
-    "bm25_impact_topk",
     "bm25_boosted_topk",
     "common_terms_topk",
-    "nrt_two_tier_topk",
     "index_stats",
     "stopword_list",
     "span_first_topk",
     "phrase_freq_topk",
-    "bm25_topk_tombstoned",
     "postings_tf",
     "dedup_exact",
     "line_dedup",
@@ -109,7 +100,6 @@ HEADLINE = [
     "more_like_this",
     "shard_routing",
     "shard_rebalance_moves",
-    "federated_topk",
     "epoch_shuffle",
     "quality_tiers",
     "curriculum_order",
@@ -533,7 +523,7 @@ def run_scale_datum() -> None:
     from searchengine_spark.plans.gate_index import gate_index
     from searchengine_spark.session import get_spark
 
-    family = ["bm25_topk_blockmax", "bm25_batch_topk", "phrase_topk_wand", "federated_topk"]
+    family = ["bm25_topk_blockmax", "bm25_batch_topk", "phrase_topk_wand"]
     spark = get_spark(master=f"local[{CPUS}]", app_name="bench_scale_datum")
     qs = entrymod.queries()
     sf1 = _sf1_dir()
@@ -891,20 +881,17 @@ def _zipf_sf_dir(n_docs: int, vocab: int = 100_000, n_files: int = 32) -> str:
 def run_vocab_datum() -> None:
     """Serving tiers at their DESIGN POINT (VERDICT r04 asks #3 + #6): the
     driver corpus has ~31 distinct terms, so block-max skipping,
-    champion lists, trigram pruning, dictionary compression and Heaps' law
+    trigram pruning, dictionary expansion and Heaps' law
     were measured on degenerate input. This datum benches them on a seeded
     synthetic corpus with Zipf vocabulary ~10^5:
 
-    - BM25 serving family: exhaustive vs block-max / pruned / tiered
-      / impact over mixed-frequency query sets (hot+mid+rare terms);
-    - dictionary ops: wildcard expansion, fuzzy suggest, front-coded
-      dictionary build + its byte-savings ratio;
+    - BM25 serving family: exhaustive vs block-max over mixed-frequency
+      query sets (hot+mid+rare terms);
+    - dictionary ops: wildcard expansion and fuzzy suggest;
     - trigram index: candidate-pruning ratio (candidates / corpus) and
       indexed-vs-scan time for substring and literal-alternation regex;
     - heaps_law β on a corpus whose vocabulary actually grows.
     All timings best-of-2 (host stall storms — see _best_of_2)."""
-    from pyspark.sql import functions as F
-
     from searchengine_spark.operators import serve, trigram
     from searchengine_spark.operators.corpusstats import heaps_law
     from searchengine_spark.operators.textstats import regex_search, substring_search
@@ -951,9 +938,6 @@ def run_vocab_datum() -> None:
     tiers = {
         "exhaustive": lambda q: serve.bm25_topk(spark, idx, q, k=10),
         "blockmax": lambda q: serve.bm25_topk_blockmax(spark, idx, q, k=10),
-        "pruned": lambda q: serve.bm25_topk_pruned(spark, idx, q, k=10, max_postings=64),
-        "tiered": lambda q: serve.bm25_topk_tiered(spark, idx, q, k=10, max_postings=64),
-        "impact": lambda q: serve.bm25_impact_topk(spark, idx, q, k=10),
     }
     serve.bm25_topk(spark, idx, queries[0], k=10).collect()  # session warmup
     out["bm25_tiers_5q_sec"] = {}
@@ -1012,7 +996,6 @@ def run_vocab_datum() -> None:
     dict_ops = {
         "wildcard_t0042*": lambda: serve.wildcard_search(spark, idx, "t0042"),
         "fuzzy_suggest_t00420": lambda: serve.fuzzy_suggest(spark, idx, "t00420"),
-        "front_coded_dictionary": lambda: serve.front_coded_dictionary(spark, idx),
     }
     out["dictionary_ops_sec"] = {}
     for name, fn in dict_ops.items():
@@ -1022,12 +1005,6 @@ def run_vocab_datum() -> None:
             rows = fn().count()
             best = min(best, time.monotonic() - t0)
         out["dictionary_ops_sec"][name] = {"sec": round(best, 3), "rows": rows}
-    fc = serve.front_coded_dictionary(spark, idx)
-    savings = fc.agg(
-        F.sum(F.length("term")).alias("raw"),
-        F.sum(F.length("suffix") + F.lit(1)).alias("coded"),
-    ).collect()[0]
-    out["front_coded_savings"] = round(1.0 - savings["coded"] / savings["raw"], 3)
 
     # trigram index at its design point: pruning ratio + indexed vs scan
     t0 = time.monotonic()

@@ -38,8 +38,8 @@ from searchengine_spark.operators.ir import idf_bm25_expr, idf_compat_expr
 
 ANALYZERS = ("reference", "simple")
 
-# Term-hash buckets: the write partition of postings, segments and impacts
-# and a lexicon column, so a query's scan touches only its terms' bucket
+# Term-hash buckets: the write partition of postings and segments and a
+# lexicon column, so a query's scan touches only its terms' bucket
 # directories (partition pruning ≙ the reference's per-term Mongo point
 # lookups, SearchService.java:464-477). The trigram index buckets grams
 # the same way.

@@ -1,7 +1,6 @@
 """Index-served retrieval: every gated query answered from the prebuilt
-gate index (plans/gate_index.py: a ``build_index`` run over the documents
-table, plus the docvecs and impacts tables derived from it) instead of
-re-tokenizing the corpus.
+gate index (plans/gate_index.py: one ``build_index`` run over the
+documents table) instead of re-tokenizing the corpus.
 
 This is the engine's actual physical query path, mirroring the reference's
 index-served lookups (SearchService.java:464-477 — per-term fetches against
@@ -13,7 +12,7 @@ ONE core, :func:`_scored` (the few that cannot say why in their docstrings):
   cf, idf, bucket) — the point-lookup step (:func:`_qlex`);
 - the postings scan is pruned to the query terms' bucket directories
   (partition pruning) plus a term predicate pushed to parquet; a ranker
-  may narrow it further (champion lists, candidate sets, tombstones);
+  may narrow it further (candidate sets, a position window, passages);
 - the |q| rows' statistics ride into the scan as literal term -> value
   maps (:func:`_lex_stats`) — no join on lexicon rows, no corpus scan, no
   driver-side avgdl job (avgdl is a manifest scalar);
@@ -323,92 +322,6 @@ def bm25_page(
     return bm25_search_after(spark, idx, query_terms, cursor, k=k)
 
 
-def _champions(post: DataFrame, max_postings: int, salts: int) -> DataFrame:
-    """Each term's top ``max_postings`` postings by impact proxy (tf desc,
-    doc_id asc): the two-phase salted grouped top-k (rank within (term,
-    doc_id mod salts) slots first), so no single partition ever holds a
-    hot term's full posting list."""
-    from pyspark.sql import Window
-
-    order = [F.desc("tf"), F.asc("doc_id")]
-    partial = Window.partitionBy("term", F.pmod(F.col("doc_id"), F.lit(salts))).orderBy(
-        *order
-    )
-    final = Window.partitionBy("term").orderBy(*order)
-    return (
-        post.withColumn("_pr", F.row_number().over(partial))
-        .filter(F.col("_pr") <= max_postings)
-        .withColumn("_r", F.row_number().over(final))
-        .filter(F.col("_r") <= max_postings)
-        .drop("_pr", "_r")
-    )
-
-
-def bm25_topk_pruned(
-    spark: SparkSession,
-    idx: dict,
-    query_terms: list[str],
-    k: int = 10,
-    max_postings: int = 64,
-    salts: int = 8,
-) -> DataFrame:
-    """Static index pruning (Carmel et al. 2001 / impact-ordered lists):
-    each query term contributes only its top ``max_postings`` postings by
-    impact proxy (tf desc, doc_id asc); idf stays the FULL-index value, as
-    in real pruned indexes. The latency/recall trade every web-scale serving
-    tier ships — at 10^12 docs a stopword's posting list is bounded to a
-    constant instead of scanned.
-
-    The per-term truncation (:func:`_champions`) narrows the :func:`_scored`
-    scan; scoring/tie-breaks share the single-definition
-    :func:`_bm25_contrib` micros contract, so the DuckDB oracle replicates
-    the pruned ranking bit-for-bit."""
-    return _topk(
-        _scored(
-            spark,
-            idx,
-            query_terms,
-            _bm25_contrib(idx["avgdl"]),
-            narrow=lambda post: _champions(post, max_postings, salts),
-        ),
-        k,
-    )
-
-
-def bm25_topk_tiered(
-    spark: SparkSession,
-    idx: dict,
-    query_terms: list[str],
-    k: int = 10,
-    max_postings: int = 64,
-    salts: int = 8,
-) -> DataFrame:
-    """Two-phase tiered retrieval (the Lucene/production refinement of
-    static pruning): phase 1 generates CANDIDATES from each query term's
-    champion list (:func:`_champions`, the :func:`bm25_topk_pruned`
-    truncation); phase 2 re-scores the candidate union with the EXACT
-    full-fidelity BM25 over ALL the candidates' query-term postings. Unlike
-    champion-only scoring, a doc reached through one term's champion list
-    still gets credit for its non-champion postings on the other terms —
-    the standard accuracy/latency middle tier between pruned and exhaustive.
-
-    Scale shape: phase 1 is the salted grouped top-k (bounded per term —
-    a stopword costs a constant, not its posting list); phase 2's scan is
-    the same bucket-pruned postings read semi-joined down to
-    ≤ |q|·max_postings candidate docs before any scoring work."""
-
-    def candidates_only(post: DataFrame) -> DataFrame:
-        cands = _champions(post, max_postings, salts).select("doc_id").distinct()
-        return post.join(cands, "doc_id", "left_semi")
-
-    return _topk(
-        _scored(
-            spark, idx, query_terms, _bm25_contrib(idx["avgdl"]), narrow=candidates_only
-        ),
-        k,
-    )
-
-
 def bm25_batch_topk(
     spark: SparkSession,
     idx: dict,
@@ -448,7 +361,7 @@ def bm25_batch_topk(
     return _grouped_topk(scored, k, salts)
 
 
-def _grouped_topk(scored: DataFrame, k: int, salts: int = 8) -> DataFrame:
+def _grouped_topk(scored: DataFrame, k: int, salts: int) -> DataFrame:
     """Two-phase per-query top-k (rank within (query_id, doc_id mod salts)
     slots, then per query) — no single partition ever holds a hot query's
     full candidate set."""
@@ -1135,6 +1048,32 @@ def doc_keywords(spark: SparkSession, idx: dict, k: int = 3) -> DataFrame:
 # ---------------------------------------------------------------- compat gate
 
 _COMPAT_FIXTURES: dict = {}
+COMPAT_DOCUMENTS_VERSION = 1
+
+
+def _build_compat_documents(spark: SparkSession, sf_dir: str, base: str) -> None:
+    """The compat fixture's documents table into ``base`` (assumed empty/tmp)."""
+    import os
+
+    from searchengine_spark.operators.graph_demo import pagerank_integer
+    from searchengine_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    pr = pagerank_integer(docs, iterations=5)
+    (
+        docs.select(
+            "doc_id",
+            F.concat(
+                F.lit("doc://"), F.col("source"), F.lit("/"), F.col("doc_id").cast("string")
+            ).alias("url"),
+            F.substring("text", 1, 48).alias("title"),
+            F.col("text").alias("content"),
+        )
+        .join(pr, "doc_id")
+        .withColumn("pagerank", F.col("rank_scaled").cast("double"))
+        .drop("rank_scaled")
+        .write.parquet(os.path.join(base, "documents"))
+    )
 
 
 def compat_fixture(spark: SparkSession, sf_dir: str) -> dict:
@@ -1156,9 +1095,7 @@ def compat_fixture(spark: SparkSession, sf_dir: str) -> dict:
     """
     import os
 
-    from searchengine_spark.operators.graph_demo import pagerank_integer
-    from searchengine_spark.plans.gate_index import gate_index
-    from searchengine_spark.sources.tables import load_table
+    from searchengine_spark.plans.gate_index import cached_index, gate_index
 
     key = (spark.sparkContext.applicationId, sf_dir)
     if key in _COMPAT_FIXTURES:
@@ -1177,39 +1114,16 @@ def compat_fixture(spark: SparkSession, sf_dir: str) -> dict:
     )
     lex = idx["lexicon"].select("term", "df", "idf_bm25", "idf_compat")
     # documents side (url/title + the 5-iteration integer PageRank) is a
-    # build artifact like the index itself — disk-cached next to it, keyed
+    # build artifact like the index itself — disk-cached beside it, keyed
     # by the same content digest, so serving never re-runs the PR loop
-    docs_cache = os.path.join(idx["dir"], "compat_documents")
-    if not os.path.exists(os.path.join(docs_cache, "_SUCCESS")):
-        if os.path.exists(docs_cache):  # torn previous write — rebuild
-            import shutil
-
-            shutil.rmtree(docs_cache, ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents")
-        pr = pagerank_integer(docs, iterations=5)
-        tmp = docs_cache + f".tmp{os.getpid()}"
-        (
-            docs.select(
-                "doc_id",
-                F.concat(
-                    F.lit("doc://"), F.col("source"), F.lit("/"), F.col("doc_id").cast("string")
-                ).alias("url"),
-                F.substring("text", 1, 48).alias("title"),
-                F.col("text").alias("content"),
-            )
-            .join(pr, "doc_id")
-            .withColumn("pagerank", F.col("rank_scaled").cast("double"))
-            .drop("rank_scaled")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        try:
-            os.rename(tmp, docs_cache)  # atomic publish, same as the index
-        except OSError:  # concurrent builder won the race — identical bytes
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-    documents = spark.read.parquet(docs_cache)
+    documents = cached_index(
+        spark,
+        sf_dir,
+        "compat",
+        COMPAT_DOCUMENTS_VERSION,
+        _build_compat_documents,
+        lambda spark_, base: {"documents": spark_.read.parquet(os.path.join(base, "documents"))},
+    )["documents"]
     out = {"postings": post, "lexicon": lex, "documents": documents}
     _COMPAT_FIXTURES[key] = out
     return out
@@ -1737,78 +1651,6 @@ def bm25_topk_blockmax(
     )
 
 
-def shard_selection(
-    spark: SparkSession, idx: dict, query_terms: list[str], n_shards: int = 8
-) -> DataFrame:
-    """CORI resource ranking (Callan, Lu & Croft SIGIR'95) — the shard
-    router of selective search: score every index shard for a query so a
-    100 TB deployment broadcasts the query only to the most promising
-    shards instead of all of them. Shards here are ``doc_id mod n_shards``
-    (hash allocation — balanced, the policy the segment layout already
-    uses for buckets).
-
-    Per (shard, term): ``T = df_s / (df_s + 50 + 150·cw_s/avg_cw)`` (df
-    saturated by shard size), ``I = ln((S+0.5)/sf_t) / ln(S+1)`` (shard-
-    level idf), belief ``0.4 + 0.6·T·I``; a shard's score is the sum over
-    query terms of the belief in bigint micros (absent terms contribute
-    the 0.4 default belief). Output: (shard_id, score_micros) for all S
-    shards, ranked.
-
-    Shape: the df_s table comes from the pruned postings scan (|q| terms);
-    the shard collection sizes cw_s are one full pass over per-doc lengths
-    — at scale that is an index-BUILD-time statistic published with the
-    manifest, recomputed here per query only because the gate index stores
-    no shard stats table; S and |q| are tiny, so the belief grid is the
-    shard spine exploded over the literal term list. No corpus scan, no hot
-    keys."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], "shard_id long, score_micros long")
-    post = _pruned_postings(idx, rows)
-    shard = F.pmod(F.col("doc_id"), F.lit(n_shards)).alias("shard_id")
-    dfs = post.groupBy(shard, "term").agg(F.count(F.lit(1)).alias("df_s"))
-    doclen = (
-        idx["postings"].groupBy("doc_id").agg(F.max("dl").alias("dl"))
-    )
-    cw = (
-        doclen.select(shard, "dl")
-        .groupBy("shard_id")
-        .agg(F.sum("dl").cast("long").alias("cw"))
-    )
-    avg_cw = float(idx["sum_dl"]) / float(n_shards)
-    spine = spark.range(n_shards).select(F.col("id").alias("shard_id"))
-    grid = spine.select(
-        "shard_id", F.explode(F.array(*[F.lit(r["term"]) for r in rows])).alias("term")
-    )
-    d = grid.join(dfs, ["shard_id", "term"], "left").select(
-        "shard_id", "term", F.coalesce("df_s", F.lit(0)).cast("long").alias("df_s")
-    )
-    sft = (
-        d.filter(F.col("df_s") > 0)
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("sf_t"))
-    )
-    t_part = F.col("df_s").cast("double") / (
-        F.col("df_s").cast("double")
-        + F.lit(50.0)
-        + F.lit(150.0) * (F.col("cw").cast("double") / F.lit(avg_cw))
-    )
-    i_part = F.log(
-        F.lit(float(n_shards) + 0.5) / F.col("sf_t").cast("double")
-    ) / F.log(F.lit(float(n_shards) + 1.0))
-    belief = F.lit(0.4) + F.lit(0.6) * t_part * i_part
-    return (
-        d.join(F.broadcast(sft), "term")
-        .join(F.broadcast(cw), "shard_id")
-        .select(
-            "shard_id", F.round(belief * 1e6).cast("long").alias("b_micros")
-        )
-        .groupBy("shard_id")
-        .agg(F.sum("b_micros").alias("score_micros"))
-        .orderBy(F.desc("score_micros"), F.asc("shard_id"))
-    )
-
-
 def collapse_topk(
     spark: SparkSession,
     idx: dict,
@@ -1898,35 +1740,6 @@ def more_like_this(
     if not terms:
         return local_frame(spark, [], _EMPTY_TOPK)
     return _topk(bm25_scores(spark, idx, terms).filter(F.col("doc_id") != src_doc_id), k)
-
-
-def federated_topk(
-    spark: SparkSession,
-    idx: dict,
-    query_terms: list[str],
-    n_shards: int = 5,
-    k: int = 10,
-) -> DataFrame:
-    """Scatter-gather distributed serving: the corpus is routed onto
-    ``n_shards`` index shards (rendezvous hashing on doc_id — the exact
-    routing the index builder would use), each shard computes its own
-    bounded top-k using GLOBAL collection statistics (df/idf/avgdl travel
-    with the query, as web serving tiers ship them from the broker), and
-    the broker merges the S small lists. Because every doc lives on exactly
-    one shard and per-doc scores don't depend on the shard, the merged
-    result EQUALS the single-index top-k — the oracle is bm25_topk's own
-    SQL, so the gate proves the scatter-gather plan lossless.
-
-    The per-shard top-k is the two-phase salted grouped heap (never a
-    single partition per shard); the merge is a bounded S·k-row sort.
-    Output: (doc_id, score_micros)."""
-    from searchengine_spark.operators.routing import route_expr
-
-    scored = bm25_scores(spark, idx, query_terms).withColumn(
-        "query_id", route_expr(F.col("doc_id"), n_shards).cast("string")
-    )
-    local = _grouped_topk(scored, k)  # per-shard bounded lists
-    return _topk(local, k).select("doc_id", "score_micros")
 
 
 def compound_split(
@@ -2040,102 +1853,6 @@ def mmr_topk(
         )
         .orderBy("rank")
     )
-
-
-def significant_terms(
-    spark: SparkSession, idx: dict, query_terms: list[str], k: int = 20
-) -> DataFrame:
-    """Significant-terms aggregation (Elasticsearch ``significant_terms`` /
-    JLH): terms overrepresented in the query's HIT SET relative to the whole
-    corpus — "what is this result set about?" The text-analytics sibling of
-    facet_counts (which histograms metadata; this mines the content itself).
-
-    score = (fg_pct - bg_pct) * (fg_pct / bg_pct)   [JLH]
-      fg_pct = fg_df / n_hits   (term's doc freq within the hit set)
-      bg_pct = bg_df / n_docs   (term's corpus doc freq, from the lexicon)
-
-    Physical plan (scale shape): the hit set comes from the PRUNED postings
-    scan of the query terms (partition pruning, |q| buckets); the foreground
-    pass joins the FORWARD index (docvecs, doc_id-bucketed) to the hit set
-    on its own partition key — the hit set broadcasts when small, and when
-    it doesn't, the doc-keyed side shuffles on the key it is already
-    bucketed by (never the term-bucketed postings re-keyed by doc);
-    background df is a lexicon point read, never a second corpus scan.
-    n_hits is an
-    in-plan 1-row broadcast aggregate (no driver collect). Candidates where
-    fg_pct <= bg_pct are dropped with an INTEGER cross-multiplication
-    predicate (fg_df*n_docs > bg_df*n_hits) so the keep/drop boundary can
-    never float-drift between engines; only the reported score is float,
-    rounded once to micros. Query terms themselves are excluded (they are
-    trivially significant). Top-k is a bounded TakeOrderedAndProject.
-
-    Reference analog: SearchService.java's result pages only histogram
-    metadata; this is the §2.8 aggregate family extended to hit-set mining.
-    """
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(
-            spark,
-            [], "term string, fg_df long, bg_df long, score_micros long"
-        )
-    hits = _pruned_postings(idx, rows).select("doc_id").distinct()
-    n_docs = int(idx["n_docs"])
-    fg = (
-        idx["docvecs"]
-        .select("term", "doc_id")
-        .join(hits, "doc_id")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("fg_df"))
-    )
-    nh = hits.agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    lex = idx["lexicon"].select("term", F.col("df").alias("bg_df"))
-    uniq = list(dict.fromkeys(query_terms))
-    fg_pct = F.col("fg_df").cast("double") / F.col("n_hits").cast("double")
-    bg_pct = F.col("bg_df").cast("double") / F.lit(float(n_docs))
-    score = (fg_pct - bg_pct) * (fg_pct / bg_pct)
-    return (
-        fg.join(lex, "term")
-        .crossJoin(F.broadcast(nh))
-        .filter(~F.col("term").isin(uniq))
-        .filter(F.col("fg_df") * F.lit(n_docs) > F.col("bg_df") * F.col("n_hits"))
-        .select(
-            "term",
-            "fg_df",
-            "bg_df",
-            F.round(score * 1e6).cast("long").alias("score_micros"),
-        )
-        .orderBy(F.desc("score_micros"), F.asc("term"))
-        .limit(k)
-    )
-
-
-def term_vectors(
-    spark: SparkSession, idx: dict, doc_ids: list[int]
-) -> DataFrame:
-    """Per-document term vectors from the FORWARD index (Lucene
-    ``TermVectors`` / ES ``_termvectors``): (doc_id, term, tf,
-    positions_csv) for the requested documents.
-
-    The inverted postings are bucketed by TERM, so a by-doc fetch against
-    them would scan every bucket; the gate index therefore also stores
-    ``docvecs`` — the same rows re-bucketed by ``pmod(doc_id, N_BUCKETS)``.
-    The lookup prunes to the requested docs' bucket directories (partition
-    pruning) plus a doc_id predicate pushed to parquet — a true point read,
-    independent of corpus size; at 10^12 docs it touches |docs| buckets.
-    Positions are the stored raw-split-array offsets (quirk Q4 contract),
-    rendered as a sorted CSV string so both engines hash identically.
-    """
-    from searchengine_spark.operators.postings import N_BUCKETS
-
-    uniq = sorted({int(d) for d in doc_ids})
-    buckets = sorted({d % N_BUCKETS for d in uniq})
-    dv = idx["docvecs"].filter(
-        F.col("dbucket").isin(buckets) & F.col("doc_id").isin(uniq)
-    )
-    pos_csv = F.array_join(
-        F.transform(F.array_sort("positions"), lambda p: p.cast("string")), ","
-    )
-    return dv.select("doc_id", "term", "tf", pos_csv.alias("positions_csv"))
 
 
 def corrected_search(
@@ -2303,88 +2020,6 @@ def cluster_results(
     )
 
 
-def front_coded_dictionary(
-    spark: SparkSession, idx: dict, block: int = 16, n_buckets: int = 16
-) -> DataFrame:
-    """Front-coded term dictionary (the Lucene/classic-IR prefix-compressed
-    lexicon layout): within each block of ``block`` sorted terms, the leader
-    is stored whole and every following term stores only
-    (prefix_len, suffix) relative to its predecessor — sorted dictionaries
-    share long prefixes, so this typically removes 30-60% of dictionary
-    bytes. Output: (bucket, blk, slot, term, prefix_len, suffix, df); a
-    reader reconstructs term_i = term_{i-1}[:prefix_len] + suffix.
-
-    Scale shape: coding is per-bucket (engine-portable md5 bucket — the
-    serving lexicon's Spark-hash bucket is not recomputable in SQL), so the
-    sort window is partitioned by bucket (|V|/n_buckets terms each), never a
-    global single-partition sort; common-prefix length is an in-row
-    expression (monotone prefix-match count), no extra shuffle beyond the
-    one per-bucket sort."""
-    from pyspark.sql import Window
-
-    lex = idx["lexicon"].select("term", "df")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("term")), 1, 2), 16, 10).cast("int")
-        % n_buckets
-    )
-    w = Window.partitionBy("bucket").orderBy("term")
-    t = (
-        lex.withColumn("bucket", bucket)
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn("prev", F.lag("term").over(w))
-        .withColumn("blk", F.expr(f"(rn - 1) div {int(block)}"))
-        .withColumn("slot", ((F.col("rn") - 1) % block).cast("int"))
-    )
-    cpl = F.when(F.col("slot") == 0, F.lit(0)).otherwise(
-        F.expr(
-            "size(filter(sequence(1, least(length(term), length(prev))), "
-            "i -> substring(term, 1, i) = substring(prev, 1, i)))"
-        )
-    )
-    t = t.withColumn("prefix_len", cpl.cast("int"))
-    return t.select(
-        "bucket",
-        "blk",
-        "slot",
-        "term",
-        "prefix_len",
-        F.expr("substring(term, prefix_len + 1)").alias("suffix"),
-        "df",
-    )
-
-
-def bm25_impact_topk(
-    spark: SparkSession, idx: dict, query_terms: list[str], k: int = 10
-) -> DataFrame:
-    """Quantized-impact serving (the Anserini/impact-index tier, the shape
-    learned-sparse models like SPLADE serve through): every posting's BM25
-    contribution was frozen AT INDEX TIME to an 8-bit level of the global
-    max contribution (the gate index's ``impacts/`` + the ``max_contrib``
-    manifest scalar), so query-time scoring is a pure integer sum — no
-    doc-length join, no idf lookup, no float op anywhere in the plan.
-
-    The price is score resolution (ties are common at 8 bits; doc_id breaks
-    them deterministically) — the classic efficiency/fidelity trade this
-    tier makes. Plan: bucket-pruned impacts scan → one hash aggregate →
-    bounded top-k heap. Not through :func:`_scored`: it sums levels frozen
-    into the impacts table at build time, with no lexicon statistic and no
-    per-posting expression left to evaluate."""
-    rows = _qlex(spark, idx, query_terms)
-    if not rows:
-        return local_frame(spark, [], "doc_id long, impact_score long")
-    buckets = sorted({int(r["bucket"]) for r in rows})
-    terms = [r["term"] for r in rows]
-    imp = idx["impacts"].filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
-    return (
-        imp.groupBy("doc_id")
-        .agg(F.sum("impact").cast("long").alias("impact_score"))
-        .orderBy(F.desc("impact_score"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
 def bm25_boosted_topk(
     spark: SparkSession, idx: dict, boosts: dict[str, float], k: int = 10
 ) -> DataFrame:
@@ -2396,88 +2031,6 @@ def bm25_boosted_topk(
     boost = literal_map({t: float(b) for t, b in boosts.items()}, "map<string,double>")
     contrib = boost[F.col("term")] * _bm25_contrib(idx["avgdl"])
     return _topk(_scored(spark, idx, list(boosts), contrib), k)
-
-
-def nrt_two_tier_topk(
-    spark: SparkSession,
-    idx: dict,
-    delta_docs: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-) -> DataFrame:
-    """Near-real-time two-tier serving (the Lucene NRT-reader / fresh-
-    segment design): queries answered from the SEALED index UNION a small
-    not-yet-indexed delta batch, with corpus statistics merged at query
-    time — documents become searchable without an index rebuild, and the
-    ranking is EXACTLY what a full rebuild over (corpus ∪ delta) would
-    produce (the driver gate hashes it against that rebuild's oracle).
-
-    Statistics merge (the part naive two-tier serving gets wrong):
-      df'_t  = sealed df_t + delta df_t       (term-level, |q| rows)
-      N'     = sealed n_docs + |delta|
-      avgdl' = (sealed Σdl + delta Σdl) / N'
-    idf recomputes from the merged counts with the same Spark ln-expression
-    the sealed lexicon used, so both tiers score on one consistent model.
-
-    Scale shape: the sealed side stays the pruned postings scan; the delta
-    side tokenizes only the delta batch (the "in-memory segment" — bounded
-    by the refresh interval, not the corpus); the stats merge costs two
-    bounded aggregates (|q| rows + 1 row). No sealed-index rewrite. Both
-    tiers' postings are the :func:`_scored` core's narrowed scan, carrying
-    the merged df (a literal map) and its idf in place of the lexicon's."""
-    from searchengine_spark.functions.tokenize import doc_len, exploded_tokens
-    from searchengine_spark.operators.ir import idf_bm25_expr
-
-    uniq = list(dict.fromkeys(query_terms))
-    rows = _qlex(spark, idx, uniq)
-    sealed_df = {r["term"]: int(r["df"]) for r in rows}
-
-    ddls = delta_docs.select("doc_id", doc_len(F.col("text")).alias("dl"))
-    dstats = ddls.agg(
-        F.count(F.lit(1)).alias("c"), F.sum("dl").alias("s")
-    ).collect()[0]
-    n_delta, sum_dl_delta = int(dstats["c"]), int(dstats["s"] or 0)
-    dpost = (
-        exploded_tokens(delta_docs)
-        .filter(F.col("term").isin(uniq))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(ddls, "doc_id")
-    )
-    delta_df = {
-        r["term"]: int(r["n"])
-        for r in dpost.groupBy("term").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-
-    n_merged = int(idx["n_docs"]) + n_delta
-    avgdl = (
-        float(int(idx["sum_dl"]) + sum_dl_delta) / float(n_merged)
-        if n_merged
-        else 1.0
-    )
-    merged_df = literal_map(
-        {
-            t: sealed_df.get(t, 0) + delta_df.get(t, 0)
-            for t in sorted(set(sealed_df) | set(delta_df))
-        },
-        "map<string,bigint>",
-    )
-
-    def with_delta(sealed: DataFrame) -> DataFrame:
-        cols = ["term", "doc_id", "tf", "dl"]
-        return (
-            sealed.select(*cols)
-            .unionByName(dpost.select(*cols))
-            .withColumn("df", merged_df[F.col("term")])
-            .withColumn("idf_bm25", idf_bm25_expr(n_merged))
-        )
-
-    return _topk(
-        _scored(
-            spark, idx, uniq, _bm25_contrib(avgdl), stats=(), rows=rows, narrow=with_delta
-        ),
-        k,
-    )
 
 
 def common_terms_topk(
@@ -2536,36 +2089,6 @@ def index_stats(spark: SparkSession, idx: dict) -> DataFrame:
         .withColumn("n_docs", F.lit(int(idx["n_docs"])).cast("long"))
         .withColumn("sum_dl", F.lit(int(idx["sum_dl"])).cast("long"))
         .select("n_docs", "n_terms", "n_postings", "n_tokens", "max_df", "sum_dl")
-    )
-
-
-def bm25_topk_tombstoned(
-    spark: SparkSession,
-    idx: dict,
-    query_terms: list[str],
-    tombstoned_mod: int = 7,
-    k: int = 10,
-) -> DataFrame:
-    """Deletion-aware serving with TOMBSTONES (the Lucene liveDocs
-    behavior): deleted documents disappear from results immediately, but
-    collection statistics (df, N, avgdl) stay STALE until the next
-    compaction folds the deletes in — scoring uses the sealed index's
-    numbers, the tombstone set only filters candidates. This is the
-    documented, deliberate semantics of every segment-based engine (fixing
-    the stats per-delete would mean rewriting the index on every delete).
-
-    The tombstone set here is doc_id % tombstoned_mod == 0 (synthesized
-    in-query, the oracle replicates it); at scale it is the broadcast
-    side of a LEFT ANTI join — deletes are rare relative to the corpus.
-    Here it narrows the :func:`_scored` scan, so dead postings never score.
-    Composes with compaction_plan: the merge that policy schedules is
-    exactly where tombstones and stats reconcile."""
-
-    def live(post: DataFrame) -> DataFrame:
-        return post.filter(F.pmod(F.col("doc_id"), F.lit(tombstoned_mod)) != 0)
-
-    return _topk(
-        _scored(spark, idx, query_terms, _bm25_contrib(idx["avgdl"]), narrow=live), k
     )
 
 

@@ -65,14 +65,10 @@ def _bm25_scores_cte(
     terms: list[str],
     k1: float = 1.2,
     b: float = 0.75,
-    postings_rel: str = "post",
     q_cte: str | None = None,
 ) -> str:
     """CTE chain (appended after _TOKENS_CTE) ending in
     ``scores(doc_id, score_micros)`` — shared by every BM25-scored oracle.
-    ``postings_rel`` swaps the relation the SCORING pass reads (the pruned
-    oracle scores a truncated list while df/idf stay full-index, exactly as
-    static pruning does); it is aliased back to ``post`` inside.
     ``q_cte`` replaces the literal VALUES query-term set with a SELECT
     (e.g. the spell-corrected term set) — it must yield a ``term`` column."""
     q_body = q_cte or f"SELECT term FROM {_terms_values(terms)}"
@@ -93,7 +89,7 @@ scored AS (
          CAST(round(idf.idf_bm25 * (post.tf * {k1 + 1.0})
                     / (post.tf + {k1} * (1.0 - {b} + {b} * dls.dl / avg_dl.avgdl))
                     * 1e6) AS BIGINT) AS c_micros
-  FROM {postings_rel} AS post
+  FROM post
   JOIN q ON post.term = q.term
   JOIN idf ON post.term = idf.term
   JOIN dls ON post.doc_id = dls.doc_id
@@ -177,32 +173,6 @@ SELECT doc_id, score_micros FROM ranked WHERE rn > {lo} AND rn <= {hi}
 """
 
 
-def bm25_topk_pruned_sql(
-    terms: list[str],
-    k: int = 10,
-    max_postings: int = 64,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> str:
-    """Twin of serve.bm25_topk_pruned: score over per-term tf-truncated
-    posting lists (rank ``tf DESC, doc_id ASC``), idf from the FULL index."""
-    return f"""
-WITH {_TOKENS_CTE},
-pruned AS (
-  SELECT term, doc_id, tf FROM (
-    SELECT post.*,
-           row_number() OVER (PARTITION BY term ORDER BY tf DESC, doc_id ASC) AS rn
-    FROM post
-    WHERE term IN (SELECT term FROM {_terms_values(terms)})
-  ) WHERE rn <= {max_postings}
-),
-{_bm25_scores_cte(terms, k1, b, postings_rel="pruned")}
-SELECT doc_id, score_micros FROM scores
-ORDER BY score_micros DESC, doc_id ASC
-LIMIT {k}
-"""
-
-
 def bm25_maxp_topk_sql(
     terms: list[str], k: int = 10, passage_size: int = 32, k1: float = 1.2
 ) -> str:
@@ -250,45 +220,6 @@ best AS (
 SELECT doc_id, passage_id, score_micros FROM best WHERE rn = 1
 ORDER BY score_micros DESC, doc_id ASC
 LIMIT {k}
-"""
-
-
-def shard_selection_sql(terms: list[str], n_shards: int = 8) -> str:
-    """Twin of serve.shard_selection: CORI beliefs per (shard, query term)
-    on doc_id-mod shards, micros rounded per term before the shard sum."""
-    s_f = float(n_shards)
-    return f"""
-WITH {_TOKENS_CTE},
-q AS (SELECT term FROM {_terms_values(terms)}),
-qlex AS (SELECT q.term FROM q WHERE q.term IN (SELECT DISTINCT term FROM post)),
-dfs AS (
-  SELECT doc_id % {n_shards} AS shard_id, term, count(*)::BIGINT AS df_s
-  FROM post WHERE term IN (SELECT term FROM qlex) GROUP BY 1, 2
-),
-cw AS (
-  SELECT doc_id % {n_shards} AS shard_id, sum(dl)::BIGINT AS cw
-  FROM dls GROUP BY 1
-),
-avgcw AS (SELECT sum(dl)::DOUBLE / {s_f} AS a FROM dls),
-spine AS (SELECT range AS shard_id FROM range(0, {n_shards})),
-grid AS (SELECT spine.shard_id, qlex.term FROM spine CROSS JOIN qlex),
-d AS (
-  SELECT grid.shard_id, grid.term, coalesce(dfs.df_s, 0)::BIGINT AS df_s
-  FROM grid LEFT JOIN dfs USING (shard_id, term)
-),
-sft AS (SELECT term, count(*)::BIGINT AS sf_t FROM d WHERE df_s > 0 GROUP BY 1),
-scored AS (
-  SELECT d.shard_id,
-         CAST(round((0.4 + 0.6
-                * (d.df_s::DOUBLE
-                   / (d.df_s::DOUBLE + 50.0 + 150.0 * (cw.cw::DOUBLE / avgcw.a)))
-                * (ln(({s_f} + 0.5) / sft.sf_t::DOUBLE) / ln({s_f} + 1.0)))
-               * 1e6) AS BIGINT) AS b_micros
-  FROM d JOIN sft USING (term) JOIN cw USING (shard_id) CROSS JOIN avgcw
-)
-SELECT shard_id, sum(b_micros)::BIGINT AS score_micros
-FROM scored GROUP BY 1
-ORDER BY score_micros DESC, shard_id ASC
 """
 
 
@@ -3812,58 +3743,6 @@ SELECT vec_id, rank, neighbor_id, cosine_micros FROM (
 """
 
 
-def significant_terms_sql(terms: list[str], k: int = 20) -> str:
-    """JLH significant-terms over the hit set of ``terms`` (serve.py twin:
-    same integer keep/drop cross-multiplication, same float op order)."""
-    return f"""
-WITH {_TOKENS_CTE},
-q AS (SELECT term FROM {_terms_values(terms)}),
-hits AS (
-  SELECT DISTINCT doc_id FROM post WHERE term IN (SELECT term FROM q)
-),
-nh AS (SELECT count(*)::BIGINT AS n_hits FROM hits),
-n AS (SELECT count(*)::BIGINT AS n_docs FROM documents),
-fg AS (
-  SELECT term, count(*)::BIGINT AS fg_df
-  FROM post JOIN hits USING (doc_id) GROUP BY 1
-),
-lex AS (SELECT term, count(*)::BIGINT AS bg_df FROM post GROUP BY 1)
-SELECT fg.term, fg.fg_df, lex.bg_df,
-       CAST(round(((fg.fg_df / CAST(nh.n_hits AS DOUBLE))
-                   - (lex.bg_df / CAST(n.n_docs AS DOUBLE)))
-                  * ((fg.fg_df / CAST(nh.n_hits AS DOUBLE))
-                     / (lex.bg_df / CAST(n.n_docs AS DOUBLE)))
-                  * 1e6) AS BIGINT) AS score_micros
-FROM fg
-JOIN lex ON fg.term = lex.term
-CROSS JOIN nh CROSS JOIN n
-WHERE fg.term NOT IN (SELECT term FROM q)
-  AND fg.fg_df * n.n_docs > lex.bg_df * nh.n_hits
-ORDER BY score_micros DESC, fg.term ASC
-LIMIT {k}
-"""
-
-
-def term_vectors_sql(doc_ids: list[int]) -> str:
-    """Forward-index term vectors for ``doc_ids``: tf + sorted CSV of raw
-    split-array positions (empties retained — the posexplode contract)."""
-    ids = ", ".join(str(int(d)) for d in sorted(set(doc_ids)))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, string_split_regex(lower(text), '{TOKEN_SPLIT_RE}') AS t
-  FROM documents WHERE doc_id IN ({ids})
-),
-pos AS (
-  SELECT doc_id, unnest(t) AS term, generate_subscripts(t, 1) - 1 AS pos
-  FROM toks
-)
-SELECT doc_id, term, count(*)::BIGINT AS tf,
-       array_to_string(list_sort(list(pos)), ',') AS positions_csv
-FROM pos WHERE term <> ''
-GROUP BY doc_id, term
-"""
-
-
 def corrected_search_sql(query: str, k: int = 10) -> str:
     """Twin of serve.corrected_search: brute-force Levenshtein top-1
     correction per query word (the fuzzy_suggest ranking contract), then
@@ -4065,79 +3944,6 @@ SELECT doc_id, cid AS cluster_id, cosine_micros FROM (
 """
 
 
-def front_coded_dictionary_sql(block: int = 16, n_buckets: int = 16) -> str:
-    """Twin of serve.front_coded_dictionary: md5 bucket, per-bucket sorted
-    blocks of ``block`` terms, prefix-match-count common-prefix length."""
-    return f"""
-WITH {_TOKENS_CTE},
-lex AS (SELECT term, count(*)::BIGINT AS df FROM post GROUP BY 1),
-b AS (
-  SELECT term, df,
-         (CAST(('0x' || substr(md5(term), 1, 2)) AS INT) % {n_buckets}) AS bucket
-  FROM lex
-),
-r AS (
-  SELECT term, df, bucket,
-         row_number() OVER (PARTITION BY bucket ORDER BY term) AS rn,
-         lag(term) OVER (PARTITION BY bucket ORDER BY term) AS prev
-  FROM b
-),
-c AS (
-  SELECT bucket, ((rn - 1) // {block})::BIGINT AS blk,
-         ((rn - 1) % {block})::INT AS slot, term, df,
-         (CASE WHEN (rn - 1) % {block} = 0 THEN 0 ELSE
-            len(list_filter(range(1, least(length(term), length(prev)) + 1),
-                            i -> substr(term, 1, i) = substr(prev, 1, i)))
-          END)::INT AS prefix_len
-  FROM r
-)
-SELECT bucket, blk, slot, term, prefix_len,
-       substr(term, prefix_len + 1) AS suffix, df
-FROM c
-"""
-
-
-def bm25_impact_topk_sql(
-    terms: list[str], k: int = 10, k1: float = 1.2, b: float = 0.75
-) -> str:
-    """Twin of serve.bm25_impact_topk: recompute every posting's BM25
-    contribution (the shared float tree), quantize to floor(255·c/max(c))
-    over the GLOBAL max, integer-sum the query terms' impacts."""
-    return f"""
-WITH {_TOKENS_CTE},
-n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents),
-avg_dl AS (SELECT sum(dl)::DOUBLE / count(*) AS avgdl FROM dls),
-lex AS (
-  SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM post GROUP BY 1
-),
-idf AS (
-  SELECT lex.term,
-         ln(1.0 + (n.n_docs - lex.df + 0.5) / (lex.df + 0.5)) AS idf_bm25
-  FROM lex, n
-),
-contrib AS (
-  SELECT post.term, post.doc_id,
-         idf.idf_bm25 * (post.tf * {k1 + 1.0})
-         / (post.tf + {k1} * (1.0 - {b} + {b} * dls.dl / avg_dl.avgdl)) AS c
-  FROM post
-  JOIN idf ON post.term = idf.term
-  JOIN dls ON post.doc_id = dls.doc_id
-  CROSS JOIN avg_dl
-),
-maxc AS (SELECT max(c) AS m FROM contrib),
-impacts AS (
-  SELECT term, doc_id, CAST(floor(255.0 * c / maxc.m) AS INT) AS impact
-  FROM contrib CROSS JOIN maxc
-)
-SELECT doc_id, sum(impact)::BIGINT AS impact_score
-FROM impacts
-WHERE term IN (SELECT term FROM {_terms_values(terms)})
-GROUP BY doc_id
-ORDER BY impact_score DESC, doc_id ASC
-LIMIT {k}
-"""
-
-
 def bm25_boosted_topk_sql(
     boosts: dict[str, float], k: int = 10, k1: float = 1.2, b: float = 0.75
 ) -> str:
@@ -4163,63 +3969,6 @@ scored AS (
   SELECT post.doc_id,
          CAST(round(q.boost * (idf.idf_bm25 * (post.tf * {k1 + 1.0})
                     / (post.tf + {k1} * (1.0 - {b} + {b} * dls.dl / avg_dl.avgdl)))
-                    * 1e6) AS BIGINT) AS c_micros
-  FROM post
-  JOIN q ON post.term = q.term
-  JOIN idf ON post.term = idf.term
-  JOIN dls ON post.doc_id = dls.doc_id
-  CROSS JOIN avg_dl
-)
-SELECT doc_id, sum(c_micros)::BIGINT AS score_micros
-FROM scored GROUP BY doc_id
-ORDER BY score_micros DESC, doc_id ASC
-LIMIT {k}
-"""
-
-
-def nrt_two_tier_sql(
-    terms: list[str], k: int = 10, k1: float = 1.2, b: float = 0.75
-) -> str:
-    """Twin of the NRT two-tier gate: a FULL BM25 rebuild over
-    corpus ∪ delta (delta = doc_id%13==4 re-added at id+1e9 with ' fresh'
-    appended — the _snapshot-style in-query synthesis). The two-tier serve
-    with query-time stats merge must hash-equal this rebuild."""
-    return f"""
-WITH corpus2 AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000000 AS doc_id, text || ' fresh' AS text
-  FROM documents WHERE doc_id % 13 = 4
-),
-toks AS (
-  SELECT doc_id, string_split_regex(lower(text), '{TOKEN_SPLIT_RE}') AS t
-  FROM corpus2
-),
-terms_ne AS (SELECT doc_id, unnest(t) AS term FROM toks),
-termz AS (SELECT doc_id, term FROM terms_ne WHERE term <> ''),
-post AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM termz GROUP BY 1, 2),
-dls AS (
-  SELECT doc_id,
-         len(list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_RE}'),
-                         x -> x <> ''))::BIGINT AS dl
-  FROM corpus2
-),
-n AS (SELECT count(*)::DOUBLE AS n_docs FROM corpus2),
-avg_dl AS (SELECT sum(dl)::DOUBLE / count(*) AS avgdl FROM dls),
-q AS (SELECT term FROM {_terms_values(terms)}),
-lex AS (
-  SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM post GROUP BY 1
-),
-idf AS (
-  SELECT lex.term,
-         ln(1.0 + (n.n_docs - lex.df + 0.5) / (lex.df + 0.5)) AS idf_bm25
-  FROM lex, n
-  WHERE lex.term IN (SELECT term FROM q)
-),
-scored AS (
-  SELECT post.doc_id,
-         CAST(round(idf.idf_bm25 * (post.tf * {k1 + 1.0})
-                    / (post.tf + {k1} * (1.0 - {b} + {b} * dls.dl / avg_dl.avgdl))
                     * 1e6) AS BIGINT) AS c_micros
   FROM post
   JOIN q ON post.term = q.term
@@ -4300,21 +4049,6 @@ SELECT (SELECT count(*)::BIGINT FROM documents) AS n_docs,
        max(df)::BIGINT AS max_df,
        (SELECT sum(dl)::BIGINT FROM dls) AS sum_dl
 FROM lex
-"""
-
-
-def bm25_topk_tombstoned_sql(
-    terms: list[str], tombstoned_mod: int = 7, k: int = 10
-) -> str:
-    """Twin of serve.bm25_topk_tombstoned: the UNCHANGED stale-stats BM25
-    scores CTE, tombstoned docs filtered after scoring."""
-    return f"""
-WITH {_TOKENS_CTE},
-{_bm25_scores_cte(terms)}
-SELECT doc_id, score_micros FROM scores
-WHERE doc_id % {tombstoned_mod} <> 0
-ORDER BY score_micros DESC, doc_id ASC
-LIMIT {k}
 """
 
 
@@ -4863,35 +4597,6 @@ SELECT source,
              THEN 1 ELSE 0 END)::BIGINT AS trainable
 FROM lic
 GROUP BY source
-"""
-
-
-def bm25_topk_tiered_sql(
-    terms: list[str],
-    k: int = 10,
-    max_postings: int = 64,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> str:
-    """Twin of serve.bm25_topk_tiered: champion-list candidate union
-    (rank tf DESC, doc_id ASC per term), then EXACT full BM25 over the
-    candidates' complete query-term postings (full-index idf)."""
-    return f"""
-WITH {_TOKENS_CTE},
-champ AS (
-  SELECT term, doc_id FROM (
-    SELECT post.term, post.doc_id,
-           row_number() OVER (PARTITION BY term ORDER BY tf DESC, doc_id ASC) AS rn
-    FROM post
-    WHERE term IN (SELECT term FROM {_terms_values(terms)})
-  ) WHERE rn <= {max_postings}
-),
-cand AS (SELECT DISTINCT doc_id FROM champ),
-cpost AS (SELECT post.* FROM post JOIN cand USING (doc_id)),
-{_bm25_scores_cte(terms, k1, b, postings_rel="cpost")}
-SELECT doc_id, score_micros FROM scores
-ORDER BY score_micros DESC, doc_id ASC
-LIMIT {k}
 """
 
 

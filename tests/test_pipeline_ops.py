@@ -638,30 +638,6 @@ def test_bpe_train_properties(spark):
     assert [tuple(r) for r in rules2] == [tuple(r) for r in rules]
 
 
-def test_pruned_topk_equals_full_at_large_cap(spark):
-    # static pruning with a cap >= every term's df keeps ALL postings, so
-    # the pruned ranking must equal the unpruned one exactly
-    from searchengine_spark.operators import serve
-    from searchengine_spark.plans.gate_index import gate_index
-
-    idx = gate_index(spark, SF_SMALL)
-    terms = ["spark", "hash", "join"]
-    full = serve.bm25_topk(spark, idx, terms, k=10).collect()
-    pruned = serve.bm25_topk_pruned(
-        spark, idx, terms, k=10, max_postings=10_000_000
-    ).collect()
-    assert [tuple(r) for r in pruned] == [tuple(r) for r in full]
-
-    # a tight cap keeps at most max_postings postings per term: every
-    # surviving doc's score is a partial sum, so no score can EXCEED its
-    # full-index value
-    full_scores = {r["doc_id"]: r["score_micros"] for r in full}
-    tight = serve.bm25_topk_pruned(spark, idx, terms, k=10, max_postings=4).collect()
-    for r in tight:
-        if r["doc_id"] in full_scores:
-            assert r["score_micros"] <= full_scores[r["doc_id"]]
-
-
 def test_line_dedup_global_first_occurrence(spark):
     from searchengine_spark.operators.dedup import line_dedup
 
@@ -1010,25 +986,6 @@ def test_quality_tiers_ordered_and_balanced(spark):
             b = [m for t, m in pairs if t == hi]
             if a and b:
                 assert max(a) <= min(b), (lang, lo, hi)
-
-
-def test_federated_topk_matches_single_index_for_any_shards(spark):
-    """Scatter-gather with global stats is lossless at every shard count."""
-    from searchengine_spark.operators import serve
-    from searchengine_spark.plans.gate_index import gate_index
-
-    idx = gate_index(spark, SF_SMALL)
-    terms = ["spark", "hash", "join"]
-    want = [
-        (r["doc_id"], r["score_micros"])
-        for r in serve.bm25_topk(spark, idx, terms, k=10).collect()
-    ]
-    for s in (1, 3, 7):
-        got = [
-            (r["doc_id"], r["score_micros"])
-            for r in serve.federated_topk(spark, idx, terms, n_shards=s, k=10).collect()
-        ]
-        assert got == want, s
 
 
 def test_winnowing_guarantee_and_density(spark):

@@ -222,32 +222,6 @@ def test_maxp_score_at_most_whole_doc_saturation(spark, idx):
     assert all(r["score_micros"] <= whole[r["doc_id"]] for r in split)
 
 
-def test_shard_selection_beliefs_bounded_and_ranked(spark, idx):
-    from searchengine_spark.operators import serve
-
-    out = serve.shard_selection(spark, idx, TERMS, n_shards=8).collect()
-    assert [r["shard_id"] for r in out] != [] and len(out) == 8
-    scores = [r["score_micros"] for r in out]
-    assert scores == sorted(scores, reverse=True)
-    # each present term contributes a belief in (0.4, 1.0); all TERMS exist
-    # in this corpus, so per-shard score is bounded by those rails
-    n_terms = len(TERMS)
-    assert all(400_000 * n_terms <= s <= 1_000_000 * n_terms for s in scores)
-    # the shard with the most matching postings should not rank last:
-    # belief grows with df_s, all else roughly equal on a balanced corpus
-    from pyspark.sql import functions as F
-
-    dfs = (
-        idx["postings"]
-        .filter(F.col("term").isin(TERMS))
-        .groupBy(F.pmod(F.col("doc_id"), F.lit(8)).alias("shard_id"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    hottest = max(dfs, key=lambda r: (r["n"], -r["shard_id"]))["shard_id"]
-    assert out[-1]["shard_id"] != hottest
-
-
 def test_search_after_pages_partition_ranking(spark):
     """Cursor pages are disjoint, ordered, and concatenate to the top-N:
     the search_after total order (score DESC, doc_id ASC) partitions the
@@ -292,84 +266,6 @@ def test_sdm_drops_oov_terms(spark, idx):
     assert [tuple(r) for r in base] == [tuple(r) for r in oov]
 
 
-def test_significant_terms_properties(spark, idx):
-    """Query terms are excluded; every reported term's hit-set rate strictly
-    exceeds its corpus rate (the integer cross-multiplication predicate);
-    scores are positive and sorted."""
-    from searchengine_spark.operators import serve
-
-    rows = serve.significant_terms(spark, idx, TERMS, k=20).collect()
-    assert rows, "non-empty at sf0.001"
-    n_docs = idx["n_docs"]
-    n_hits = (
-        serve.term_search_any(spark, idx, TERMS).count()
-    )
-    scores = [r["score_micros"] for r in rows]
-    assert scores == sorted(scores, reverse=True)
-    for r in rows:
-        assert r["term"] not in TERMS
-        assert r["score_micros"] > 0
-        assert r["fg_df"] * n_docs > r["bg_df"] * n_hits
-        assert r["fg_df"] <= r["bg_df"]
-
-
-def test_term_vectors_matches_postings(spark, idx):
-    """The forward index is the inverted index re-bucketed: per-doc (term,
-    tf) sets must agree exactly between docvecs and postings."""
-    from searchengine_spark.operators import serve
-
-    ids = [3, 10, 41]
-    tv = {
-        (r["doc_id"], r["term"]): r["tf"]
-        for r in serve.term_vectors(spark, idx, ids).collect()
-    }
-    post = {
-        (r["doc_id"], r["term"]): r["tf"]
-        for r in idx["postings"]
-        .filter(F.col("doc_id").isin(ids))
-        .select("doc_id", "term", "tf")
-        .collect()
-    }
-    assert tv == post and tv
-
-
-def test_front_coded_dictionary_roundtrip(spark, idx):
-    """Reconstructing term_i = term_{i-1}[:prefix_len] + suffix along each
-    (bucket, blk, slot) chain recovers the exact lexicon term set."""
-    from searchengine_spark.operators import serve
-
-    rows = serve.front_coded_dictionary(spark, idx, block=8, n_buckets=4).collect()
-    assert rows
-    rows.sort(key=lambda r: (r["bucket"], r["blk"], r["slot"]))
-    rebuilt, prev = set(), {}
-    for r in rows:
-        rec = (
-            r["suffix"]
-            if r["slot"] == 0 and r["blk"] == 0 or r["prefix_len"] == 0
-            else prev[r["bucket"]][: r["prefix_len"]] + r["suffix"]
-        )
-        assert rec == r["term"]
-        prev[r["bucket"]] = rec
-        rebuilt.add(rec)
-    lex_terms = {r["term"] for r in idx["lexicon"].select("term").collect()}
-    assert rebuilt == lex_terms
-
-
-def test_nrt_two_tier_fresh_docs_searchable(spark, idx, docs):
-    """A term that exists ONLY in the delta batch is retrievable before any
-    index rebuild, and every hit is a delta doc (ids shifted +1e9); the
-    sealed tier contributes nothing for it (sealed lexicon has no entry)."""
-    from __spark_entry__ import _nrt_delta
-    from searchengine_spark.operators import serve
-
-    rows = serve.nrt_two_tier_topk(
-        spark, idx, _nrt_delta(docs), ["fresh"], k=10
-    ).collect()
-    assert rows
-    assert all(r["doc_id"] >= 1_000_000_000 for r in rows)
-    assert all(r["score_micros"] > 0 for r in rows)
-
-
 def test_bm25plus_dominates_bm25(spark, idx):
     """BM25+ adds idf·δ per matched term, so every candidate's score
     strictly exceeds its plain-BM25 score (δ=1, idf>0 on this corpus)."""
@@ -387,18 +283,3 @@ def test_bm25plus_dominates_bm25(spark, idx):
     assert all(plus[d] > base[d] for d in base)
 
 
-def test_tombstoned_filters_but_keeps_scores(spark, idx):
-    """Tombstoned serving drops doc_id%7==0 and leaves every surviving
-    score EXACTLY equal to the stale-stats BM25 score (Lucene liveDocs:
-    deletes don't touch statistics until compaction)."""
-    from searchengine_spark.operators import serve
-
-    base = {
-        r["doc_id"]: r["score_micros"]
-        for r in serve.bm25_scores(spark, idx, TERMS).collect()
-    }
-    rows = serve.bm25_topk_tombstoned(spark, idx, TERMS, tombstoned_mod=7, k=50).collect()
-    assert rows
-    for r in rows:
-        assert r["doc_id"] % 7 != 0
-        assert base[r["doc_id"]] == r["score_micros"]

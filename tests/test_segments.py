@@ -133,14 +133,25 @@ def test_one_file_per_bucket_shard(spark, index, tmp_path_factory):
     assert max(n_shards) > 1
 
 
-def test_gate_index_one_file_per_bucket(spark, index):
-    """The gate index's postings, segments and docvecs directories hold one
-    parquet file per bucket (one shard at this size), and so do the
-    postings build_index publishes from a corpus."""
+def test_gate_index_one_file_per_bucket(spark, index, tmp_path):
+    """The gate index is exactly one ``build_index(analyzer="simple")`` run
+    over a documents table: the same manifest stages and the same top-level
+    entries as such a run, so no table is derived after it. Its postings
+    and segments directories hold one parquet file per bucket (one shard at
+    this size), and so do the postings build_index publishes from a
+    corpus."""
     from searchengine_spark.plans.gate_index import gate_index
+    from searchengine_spark.plans.lineage import IndexManifest
 
     base = gate_index(spark, "/root/testdata/sf0.001")["dir"]
-    tables = [os.path.join(base, t) for t in ("postings", "segments", "docvecs")]
+    ref = str(tmp_path)
+    docs = index["documents"].select("doc_id", F.col("content").alias("text"))
+    build_index(spark, docs, ref, analyzer="simple")
+    stages = set(IndexManifest(base).stage_metrics())
+    assert stages == set(IndexManifest(ref).stage_metrics())
+    assert sorted(os.listdir(base)) == sorted(os.listdir(ref))
+
+    tables = [os.path.join(base, t) for t in ("postings", "segments")]
     for table in tables + [os.path.join(index["dir"], "postings")]:
         files = _parquet_files_per_dir(table)
         assert files and {len(f) for f in files.values()} == {1}, (table, files)
