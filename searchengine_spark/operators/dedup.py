@@ -687,7 +687,7 @@ def line_dedup(
     line survives only at its globally FIRST occurrence).
 
     The synthetic corpus has no newlines, so "lines" are fixed windows of
-    ``line_tokens`` tokens (the strip_html/pii_scrub seasoning pattern: the
+    ``line_tokens`` tokens (the strip_html seasoning pattern: the
     structure is synthesized identically in the DuckDB oracle). A line is
     kept iff its (doc_id, line_id) is the minimum over all occurrences of
     its md5 — duplicate lines WITHIN a doc also collapse to the first.

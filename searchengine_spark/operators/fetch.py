@@ -202,7 +202,7 @@ def crawl_schedule(
     sequence number is computed WITHOUT a host-sized window partition:
     the key's first hex byte is an ORDERED bucket, so slot = per-(host,
     bucket) row_number + a per-host 256-row prefix-sum window — the
-    epoch_shuffle two-phase pattern, per group. A hot host with 10^8
+    two-phase rank, run per group. A hot host with 10^8
     frontier URLs costs 256 bounded tasks, never one giant window task.
     """
     from pyspark.sql import Window

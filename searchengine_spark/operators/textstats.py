@@ -1,5 +1,8 @@
-"""Text analysis for training-data pipelines: token counting, quality
-scoring, n-gram-heuristic language ID, document fingerprinting.
+"""Code search, analyzer pieces and corpus statistics over the documents
+table: substring/regex search with a trigram prefilter, symbol
+definitions/references and identifier subtokens; HTML stripping and ASCII
+folding; token counts, document fingerprints, PMI collocations and
+percolation (stored queries matched against incoming documents).
 
 All pure Spark built-ins (whole-stage codegen; no UDFs); ratios reported as
 bigint micros so the DuckDB oracle matches exactly.
@@ -13,17 +16,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from searchengine_spark.functions.tokenize import TOKEN_SPLIT_RE
-
-STOPWORDS_EN = ["the", "is", "in", "at", "of", "on", "and", "a", "to", "an", "by", "for", "with", "it", "as"]
-
-# tiny marker sets for the n-gram-free language heuristic: count marker-word
-# hits per language, argmax with deterministic alphabetical tie-break
-LANG_MARKERS = {
-    "de": ["der", "die", "das", "und", "nicht", "ist"],
-    "en": ["the", "and", "of", "to", "is", "a"],
-    "es": ["el", "la", "de", "que", "y", "los"],
-    "fr": ["le", "la", "les", "de", "et", "est"],
-}
 
 
 def _tokens(text_col: str) -> Column:
@@ -45,57 +37,6 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
         F.when(n > 0, F.round(F.lit(1e6) * total_len.cast("double") / n.cast("double")).cast("long"))
         .otherwise(F.lit(0).cast("long"))
         .alias("mean_token_len_micros"),
-    )
-
-
-def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, n_tokens, stop_ratio_micros, distinct_ratio_micros,
-    alnum_ratio_micros, quality_ok) — the standard cheap quality gates
-    (length bounds, stopword density, repetitiveness, symbol density)."""
-    toks = _tokens(text_col)
-    n = F.size(toks)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-    n_dist = F.size(F.array_distinct(toks))
-    n_chars = F.length(F.col(text_col))
-    n_alnum = F.length(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]", ""))
-    ratio = lambda num, den: F.when(
-        den > 0, F.round(F.lit(1e6) * num.cast("double") / den.cast("double")).cast("long")
-    ).otherwise(F.lit(0).cast("long"))
-    out = docs.select(
-        F.col(id_col),
-        n.cast("long").alias("n_tokens"),
-        ratio(n_stop, n).alias("stop_ratio_micros"),
-        ratio(n_dist, n).alias("distinct_ratio_micros"),
-        ratio(n_alnum, n_chars).alias("alnum_ratio_micros"),
-    )
-    return out.withColumn(
-        "quality_ok",
-        (F.col("n_tokens") >= 5)
-        & (F.col("n_tokens") <= 100000)
-        & (F.col("distinct_ratio_micros") >= 100000),
-    )
-
-
-def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, lang_pred, lang_score) — marker-word-count language ID.
-    Deterministic: argmax over per-language hit counts, ties alphabetical."""
-    toks = _tokens(text_col)
-    counts = []
-    for lang in sorted(LANG_MARKERS):
-        markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-        counts.append(
-            F.size(F.filter(toks, lambda t: F.array_contains(markers, t))).alias(f"_c_{lang}")
-        )
-    with_counts = docs.select(F.col(id_col), *counts)
-    langs = sorted(LANG_MARKERS)
-    best = F.greatest(*[F.col(f"_c_{lang}") for lang in langs])
-    pred = F.lit("und")
-    # reverse order so that on ties the alphabetically-first language wins
-    for lang in reversed(langs):
-        pred = F.when((F.col(f"_c_{lang}") == best) & (best > 0), F.lit(lang)).otherwise(pred)
-    return with_counts.select(
-        F.col(id_col), pred.alias("lang_pred"), best.cast("long").alias("lang_score")
     )
 
 
@@ -137,114 +78,6 @@ def strip_html(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
         F.col(id_col),
         F.md5(stripped).alias("stripped_md5"),
         (F.length(html) - F.length(stripped)).cast("long").alias("n_tag_chars"),
-    )
-
-
-def repetition_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, n_bigrams, n_distinct_bigrams, dup_bigram_frac_micros,
-    top_bigram, top_bigram_n, top_bigram_frac_micros) — per-document
-    repetition signals in the Gopher-rules family (Rae et al. 2021 §A1.1:
-    "fraction of duplicate n-grams" / "fraction of characters in the most
-    common n-gram"), the cheap boilerplate detector a training-data
-    pipeline runs before dedup.
-
-    Plan: bigrams are built array-side behind the same Generate barrier
-    ``dedup._token_ngrams`` uses (Catalyst inlines Project aliases into
-    higher-order-function lambdas, so the token array must become a real
-    attribute first), then ONE word-count-shaped shuffle — groupBy
-    (doc, bigram) with map-side combine — and a second map-side-combined
-    groupBy(doc) that folds total/distinct/argmax in one pass (argmax with
-    deterministic ties via ``min(struct(-n, bigram))``). Both shuffles are
-    keyed on near-unique keys: no skew, linear at any corpus size. Docs
-    with <2 tokens carry no bigrams and are excluded (same both sides)."""
-    toks_arr = _tokens(text_col)
-    # Generate barrier: evaluate the split+filter exactly once per row
-    toks = docs.select(F.col(id_col), F.explode(F.array(toks_arr)).alias("_t"))
-    t = F.col("_t")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 1),
-        lambda i: F.concat_ws(" ", F.slice(t, i, 2)),
-    )
-    exploded = toks.where(F.size(t) >= 2).select(
-        F.col(id_col), F.explode(grams).alias("bigram")
-    )
-    counts = exploded.groupBy(id_col, "bigram").agg(F.count(F.lit(1)).alias("n"))
-    per_doc = counts.groupBy(id_col).agg(
-        F.sum("n").cast("long").alias("n_bigrams"),
-        F.count(F.lit(1)).cast("long").alias("n_distinct_bigrams"),
-        F.min(F.struct((-F.col("n")).alias("neg_n"), F.col("bigram"))).alias("_top"),
-    )
-    frac = lambda num: F.round(
-        F.lit(1e6) * num.cast("double") / F.col("n_bigrams").cast("double")
-    ).cast("long")
-    return per_doc.select(
-        F.col(id_col),
-        "n_bigrams",
-        "n_distinct_bigrams",
-        frac(F.col("n_bigrams") - F.col("n_distinct_bigrams")).alias(
-            "dup_bigram_frac_micros"
-        ),
-        F.col("_top.bigram").alias("top_bigram"),
-        (-F.col("_top.neg_n")).cast("long").alias("top_bigram_n"),
-        frac(-F.col("_top.neg_n")).alias("top_bigram_frac_micros"),
-    )
-
-
-# PII patterns — written in the common Java-regex ∩ RE2 dialect so Spark and
-# the DuckDB oracle compile the identical pattern (no backrefs, no lookaround)
-PII_EMAIL_RE = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
-PII_IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
-PII_PHONE_RE = r"\+\d{1,3}-\d{3}-\d{4}"
-
-
-def pii_scrub(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, n_emails, n_ipv4, n_phones, redacted_md5, n_chars_delta) —
-    PII detection + redaction, the scrub pass every LLM training-data
-    pipeline runs (emails / IPv4 / phone patterns → ``<EMAIL>``/``<IP>``/
-    ``<PHONE>`` placeholders, counts kept for audit).
-
-    The synthetic corpus contains no PII, so — like ``strip_html`` — the
-    gate seasons each doc in-query with a deterministic contact line derived
-    from ``doc_id`` (one email, one IP, one phone per doc); the DuckDB
-    oracle synthesizes the identical line, so detection AND redaction are
-    both certified by ``redacted_md5``. Redactions apply in a fixed order
-    (email → ip → phone) on both sides. Pure built-ins: one map over the
-    scan, no shuffle, whole-stage codegen."""
-    did = F.col(id_col).cast("string")
-    seasoned = F.concat(
-        F.col(text_col),
-        F.lit(" Contact user"),
-        did,
-        F.lit("@mail.example (ip 10."),
-        (F.col(id_col) % 250).cast("string"),
-        F.lit(".0."),
-        (F.col(id_col) % 100).cast("string"),
-        F.lit(", tel +1-555-"),
-        (F.lit(1000) + F.col(id_col) % 9000).cast("string"),
-        F.lit(")"),
-    )
-    redacted = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(seasoned, PII_EMAIL_RE, "<EMAIL>"),
-            PII_IPV4_RE,
-            "<IP>",
-        ),
-        PII_PHONE_RE,
-        "<PHONE>",
-    )
-    return docs.select(
-        F.col(id_col),
-        F.size(F.regexp_extract_all(seasoned, F.lit(PII_EMAIL_RE), F.lit(0)))
-        .cast("long")
-        .alias("n_emails"),
-        F.size(F.regexp_extract_all(seasoned, F.lit(PII_IPV4_RE), F.lit(0)))
-        .cast("long")
-        .alias("n_ipv4"),
-        F.size(F.regexp_extract_all(seasoned, F.lit(PII_PHONE_RE), F.lit(0)))
-        .cast("long")
-        .alias("n_phones"),
-        F.md5(redacted).alias("redacted_md5"),
-        (F.length(seasoned) - F.length(redacted)).cast("long").alias("n_chars_delta"),
     )
 
 
@@ -307,121 +140,6 @@ def pmi_top_pairs(docs: DataFrame, k: int = 20, min_count: int = 5) -> DataFrame
         )
     )
     return scored.orderBy(F.desc("pmi_micros"), F.asc("bigram")).limit(k)
-
-
-def doc_chunks(
-    docs: DataFrame,
-    chunk_size: int = 64,
-    stride: int = 48,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
-    """(doc_id, chunk_id, start_pos, n_tokens, chunk_md5) — fixed-size
-    overlapping token windows, the chunking pass a training pipeline runs
-    before tokenizer packing / embedding (chunk_size tokens every stride,
-    so consecutive chunks overlap by chunk_size - stride).
-
-    Chunk starts are ``0, stride, ..., floor((dl-1)/stride)*stride`` — a
-    pure function of the doc's token count, so chunk ids are stable across
-    partition counts and reruns (resumable exports, same contract as
-    stratified_sample). The token array materializes once per doc BEHIND
-    the explode (Generate) barrier, then each chunk is a slice — zero
-    shuffle, whole-stage codegen, output size bounded by ~dl/stride rows
-    per doc. chunk_md5 certifies the chunk CONTENT, not just its bounds."""
-    arr = _tokens(text_col)
-    extra = [F.col(c) for c in carry]
-    base = (
-        docs.select(F.col(id_col).alias("doc_id"), *extra, arr.alias("arr"))
-        .withColumn("dl", F.size("arr"))
-        .filter(F.col("dl") > 0)
-    )
-    exploded = base.select(
-        "doc_id",
-        *carry,
-        "arr",
-        F.explode(
-            F.sequence(F.lit(0), F.floor((F.col("dl") - 1) / stride).cast("int"))
-        ).alias("chunk_id"),
-    )
-    chunk = F.slice(F.col("arr"), F.col("chunk_id") * stride + 1, chunk_size)
-    return exploded.select(
-        "doc_id",
-        *carry,
-        F.col("chunk_id").cast("int").alias("chunk_id"),
-        (F.col("chunk_id").cast("long") * stride).alias("start_pos"),
-        F.size(chunk).cast("long").alias("n_tokens"),
-        F.md5(F.concat_ws(" ", chunk)).alias("chunk_md5"),
-    )
-
-
-def pack_chunks(
-    docs: DataFrame,
-    budget: int = 512,
-    chunk_size: int = 64,
-    stride: int = 48,
-    bucket_span: int = 1024,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """Concatenate-then-split sequence packing — the step between chunking
-    and training-example export: each chunk's tokens land at ``start_off``
-    in the per-language concatenated token stream (ordered by
-    (doc_id, chunk_id)), and training bin ``bin_id = start_off div budget``
-    with in-bin offset ``bin_off`` — exactly how GPT-style pretraining packs
-    documents into fixed-length context windows, domain-separated per
-    language stream.
-
-    The per-language running offset is a DISTRIBUTED PREFIX SUM in two
-    bounded phases (never one global window): chunks bucket by
-    ``doc_id div bucket_span`` (doc_ids are dense global ranks, so buckets
-    are ordered and balanced by construction); phase 1 aggregates per
-    (lang, bucket) token totals — a tiny ~|docs|/bucket_span-row frame whose
-    per-lang cumulative window is negligible at any scale — and phase 2
-    broadcast-joins the bucket base offsets back and adds a within-bucket
-    running sum whose window partitions are bounded by bucket_span docs.
-    Output: (lang, doc_id, chunk_id, n_tokens, start_off, bin_id, bin_off).
-    """
-    from pyspark.sql import Window
-
-    chunks = doc_chunks(
-        docs, chunk_size, stride, id_col=id_col, text_col=text_col, carry=(lang_col,)
-    )
-    c = chunks.select(
-        F.col(lang_col).alias("lang"),
-        "doc_id",
-        "chunk_id",
-        "n_tokens",
-        F.expr(f"doc_id div {bucket_span}").alias("bucket"),
-    )
-    totals = c.groupBy("lang", "bucket").agg(F.sum("n_tokens").alias("bucket_total"))
-    cum = Window.partitionBy("lang").orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        "lang",
-        "bucket",
-        F.coalesce(F.sum("bucket_total").over(cum), F.lit(0)).alias("bucket_off"),
-    )
-    within = Window.partitionBy("lang", "bucket").orderBy("doc_id", "chunk_id").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    packed = c.join(F.broadcast(offsets), ["lang", "bucket"]).withColumn(
-        "start_off",
-        (F.col("bucket_off") + F.coalesce(F.sum("n_tokens").over(within), F.lit(0))).cast(
-            "long"
-        ),
-    )
-    return packed.select(
-        "lang",
-        "doc_id",
-        "chunk_id",
-        "n_tokens",
-        "start_off",
-        F.expr(f"start_off div {budget}").alias("bin_id"),
-        (F.col("start_off") % budget).cast("long").alias("bin_off"),
-    )
 
 
 def substring_search(
@@ -501,8 +219,8 @@ def regex_search(
     survivors pay the regexp scan. Patterns outside that subset (classes,
     quantifiers, groups) skip the prefilter and verify over the full scan —
     the general trigram extraction (Cox 2012) is a documented extension
-    point. The pattern must sit in the Java∩RE2 common dialect (the
-    pii_scrub rule) so Spark and the DuckDB oracle agree; n_matches counts
+    point. The pattern must sit in the Java∩RE2 common dialect (no
+    backrefs, no lookaround) so Spark and the DuckDB oracle agree; n_matches counts
     non-overlapping matches (regexp_count / len(regexp_extract_all))."""
     alts = pattern.lower().split("|")
     literals = alts if all(re.fullmatch(r"[a-z0-9 ]+", a) for a in alts) else None
@@ -525,7 +243,7 @@ def symbol_definitions(
     ``class Name`` declaration, extracted per document.
 
     The corpus is word-soup (no code), so the gate seasons each doc with a
-    deterministic code header derived from doc_id (the strip_html/pii_scrub
+    deterministic code header derived from doc_id (the strip_html
     in-query synthesis pattern): ``def fn_{id%37}(arg):`` and
     ``class Cls_{id%23}:`` lines prepended to the text. Extraction is
     ``regexp_extract_all`` in the Java∩RE2 common dialect — one map over
@@ -668,253 +386,6 @@ def ident_subtokens(
     return sub.groupBy("subtoken").agg(F.count(F.lit(1)).alias("df"))
 
 
-def bigram_logprob(docs: DataFrame, lam: float = 0.75) -> DataFrame:
-    """Per-document mean bigram surprisal under an interpolated bigram LM —
-    the two-gram step up from ``serve.unigram_logprob`` toward the KenLM
-    perplexity filter of public LM data pipelines (CCNet): each adjacent
-    pair (w0, w1) scores ``-ln(λ·c(w0 w1)/c(w0 ·) + (1-λ)·cf(w1)/total)``
-    with the corpus itself as training counts, and a doc's score is the
-    mean over its bigram positions (``sum div n_bigrams`` in micros).
-    Repetitive/templated docs score low (predictable), gibberish scores
-    high — the usual two-sided quality cut applies downstream.
-
-    Shape at scale: one tokenize pass feeds the bigram, bigram-start, and
-    unigram count tables (map-side-combined aggregates, all term-keyed);
-    the per-position stream then joins those counts back on their own keys
-    — co-keyed shuffles, never a corpus-sized broadcast — and the total is
-    a 1-row in-plan cross join. Per-position surprisal rounds to bigint
-    micros BEFORE the per-doc sum: exact, partition-count-invariant.
-
-    Output: (doc_id, n_bigrams, mean_nll_micros) for docs with >= 2 tokens.
-    """
-    from searchengine_spark.functions.tokenize import (
-        adjacent_token_pairs,
-        exploded_tokens,
-    )
-
-    # the documents table often arrives as ONE parquet file — spread it
-    # before the explode-heavy pass or the whole pair stream aggregates on
-    # a single core (build_postings does the same, postings.py:44)
-    if len(docs.inputFiles()) < docs.sparkSession.sparkContext.defaultParallelism:
-        docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    toks = exploded_tokens(docs, with_pos=True)
-    pairs = adjacent_token_pairs(toks)
-    # aggregate to per-(doc, bigram) occurrence counts FIRST so the count
-    # joins touch distinct triples, not every token position; the per-
-    # position surprisal is identical within a triple, so multiplying the
-    # rounded micros by the occurrence count gives the same integer sum.
-    # dbi feeds THREE consumers (cb, cs, the scored join) and cf two (the
-    # join + the total) — materialize both slim frames once so the
-    # tokenize+explode chain runs twice total, not ~5x per consumer
-    dbi = (
-        pairs.groupBy("doc_id", "t0", "t1")
-        .agg(F.count(F.lit(1)).alias("dtf"))
-        .localCheckpoint(eager=True)
-    )
-    cb = dbi.groupBy("t0", "t1").agg(F.sum("dtf").alias("cxy"))
-    cs = dbi.groupBy("t0").agg(F.sum("dtf").alias("cx0"))
-    cf = (
-        toks.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    tot = cf.agg(F.sum("c").cast("double").alias("_total"))
-    p = F.lit(lam) * (
-        F.col("cxy").cast("double") / F.col("cx0").cast("double")
-    ) + F.lit(1.0 - lam) * (F.col("c").cast("double") / F.col("_total"))
-    scored = (
-        dbi.join(cb, ["t0", "t1"])
-        .join(cs, "t0")
-        .join(cf.withColumnRenamed("term", "t1"), "t1")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "doc_id",
-            "dtf",
-            (
-                F.col("dtf") * F.round(-F.log(p) * F.lit(1e6)).cast("long")
-            ).alias("c_micros"),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sum("dtf").cast("long").alias("n_bigrams"),
-            F.sum("c_micros").alias("s"),
-        )
-        .select("doc_id", "n_bigrams", F.expr("s div n_bigrams").alias("mean_nll_micros"))
-    )
-
-
-def kn_bigram_logprob(docs: DataFrame, discount: float = 0.75) -> DataFrame:
-    """Per-document mean bigram surprisal under an interpolated
-    KNESER-NEY bigram LM — the smoother KenLM actually ships (Heafield
-    2011; Kneser & Ney 1995), one step up from :func:`bigram_logprob`'s
-    fixed-λ interpolation: instead of backing off to raw unigram
-    frequency, the lower-order weight is the CONTINUATION probability
-    (how many distinct left contexts a word follows), which stops
-    high-frequency-but-context-bound words ("francisco") from inflating
-    unseen-pair scores. Per position::
-
-        P(w1|w0) = (c(w0 w1) - D)/c(w0 ·)
-                 + (D · N1+(w0 ·)/c(w0 ·)) · N1+(· w1)/N1+(· ·)
-
-    with D = ``discount``; every scored bigram is corpus-attested
-    (training counts = the corpus itself), so all terms are positive.
-
-    Shape at scale: the bigram-TYPE table (one map-side-combined agg)
-    feeds every count — left counts c(w0·), left fan-out N1+(w0·),
-    continuation counts N1+(·w1), and the 1-row type total — so KN costs
-    the same shuffle family as the plain bigram LM: term-keyed joins
-    against (doc,t0,t1) triples, never a corpus broadcast. Per-position
-    surprisal rounds to bigint micros BEFORE the per-doc sum (exact,
-    partition-count-invariant).
-
-    Output: (doc_id, n_bigrams, mean_nll_micros) for docs with >= 2
-    tokens."""
-    from searchengine_spark.functions.tokenize import (
-        adjacent_token_pairs,
-        exploded_tokens,
-    )
-
-    if len(docs.inputFiles()) < docs.sparkSession.sparkContext.defaultParallelism:
-        docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    toks = exploded_tokens(docs, with_pos=True)
-    pairs = adjacent_token_pairs(toks)
-    # dbi feeds cb + the scored join, cb feeds FOUR consumers (cs, cont,
-    # ntypes, join) — materialize both slim frames once so the
-    # tokenize+explode chain runs once, not once per consumer
-    dbi = (
-        pairs.groupBy("doc_id", "t0", "t1")
-        .agg(F.count(F.lit(1)).alias("dtf"))
-        .localCheckpoint(eager=True)
-    )
-    cb = (
-        dbi.groupBy("t0", "t1")
-        .agg(F.sum("dtf").alias("cxy"))
-        .localCheckpoint(eager=True)
-    )
-    # everything below derives from the TYPE table cb (tiny vs positions)
-    cs = cb.groupBy("t0").agg(
-        F.sum("cxy").alias("cx0"), F.count(F.lit(1)).alias("n1f")
-    )
-    cont = cb.groupBy("t1").agg(F.count(F.lit(1)).alias("n1b"))
-    ntypes = cb.agg(F.count(F.lit(1)).cast("double").alias("_ntypes"))
-    d = F.lit(discount)
-    p = (F.col("cxy").cast("double") - d) / F.col("cx0").cast("double") + (
-        d * F.col("n1f").cast("double") / F.col("cx0").cast("double")
-    ) * (F.col("n1b").cast("double") / F.col("_ntypes"))
-    scored = (
-        dbi.join(cb, ["t0", "t1"])
-        .join(cs, "t0")
-        .join(cont, "t1")
-        .crossJoin(F.broadcast(ntypes))
-        .select(
-            "doc_id",
-            "dtf",
-            (
-                F.col("dtf") * F.round(-F.log(p) * F.lit(1e6)).cast("long")
-            ).alias("c_micros"),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sum("dtf").cast("long").alias("n_bigrams"),
-            F.sum("c_micros").alias("s"),
-        )
-        .select("doc_id", "n_bigrams", F.expr("s div n_bigrams").alias("mean_nll_micros"))
-    )
-
-
-def contrastive_pairs(
-    docs: DataFrame,
-    chunk_size: int = 64,
-    stride: int = 48,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, anchor_chunk_id, positive_chunk_id, anchor_md5,
-    positive_md5) — self-supervised training pairs for a dense retriever /
-    embedding model: the anchor chunk paired with its successor chunk from
-    the SAME document (the adjacent-window positive of public contrastive
-    pretraining recipes — partial overlap included, as in independent-
-    cropping positives; in-batch docs provide the negatives downstream).
-    Degenerate pairs whose two chunks have identical content (md5-equal,
-    e.g. fully repetitive docs) are dropped — they carry no training
-    signal.
-
-    Shape: reuses :func:`doc_chunks` (zero-shuffle chunking behind the
-    Generate barrier), then ONE self-join keyed on (doc_id, chunk_id) —
-    co-partitioned, linear in the chunk count; nothing is quadratic in
-    doc length because only successor pairs join."""
-    ch = doc_chunks(docs, chunk_size, stride, id_col, text_col)
-    a = ch.select(
-        "doc_id",
-        F.col("chunk_id").alias("anchor_chunk_id"),
-        F.col("chunk_md5").alias("anchor_md5"),
-    )
-    b = ch.select(
-        F.col("doc_id").alias("_d"),
-        (F.col("chunk_id") - 1).alias("_c"),
-        F.col("chunk_id").alias("positive_chunk_id"),
-        F.col("chunk_md5").alias("positive_md5"),
-    )
-    return (
-        a.join(b, (a.doc_id == b._d) & (a.anchor_chunk_id == b._c))
-        .filter(F.col("anchor_md5") != F.col("positive_md5"))
-        .select(
-            "doc_id",
-            "anchor_chunk_id",
-            "positive_chunk_id",
-            "anchor_md5",
-            "positive_md5",
-        )
-    )
-
-
-def mask_spans(
-    docs: DataFrame,
-    mask_ppm: int = 150_000,
-    salt: str = "mask:",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, start_pos, span_len) — deterministic span-corruption masks,
-    the noising step of T5/BART-style denoising pretraining data (~15% of
-    tokens masked, adjacent masked positions merged into spans the model
-    reconstructs). Spark's RNG is partition-seeded, so masks instead come
-    from the engine-portable md5-position trick (the stratified_sample
-    contract): a token is masked iff hash('mask:'||doc||':'||pos) lands
-    under ``mask_ppm`` — reruns and both engines mask identical positions,
-    so the export is resumable and hash-gated.
-
-    Runs of consecutive masked raw-split positions merge gaps-and-islands
-    style (pos − row_number per doc); the only window is per-doc and
-    bounded by doc length — no global ordering, no skew."""
-    from pyspark.sql import Window
-
-    from searchengine_spark.functions.tokenize import exploded_tokens
-    from searchengine_spark.operators.sampling import _hash_ppm
-
-    toks = exploded_tokens(docs, id_col, text_col, with_pos=True)
-    key = F.concat(
-        F.col(id_col).cast("string"), F.lit(":"), F.col("pos").cast("string")
-    )
-    masked = toks.filter(_hash_ppm(key, salt) < F.lit(mask_ppm)).select(
-        id_col, "pos"
-    )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    isl = masked.withColumn("_g", F.col("pos") - F.row_number().over(w))
-    return (
-        isl.groupBy(id_col, "_g")
-        .agg(
-            F.min("pos").cast("long").alias("start_pos"),
-            F.count(F.lit(1)).cast("long").alias("span_len"),
-        )
-        .select(id_col, "start_pos", "span_len")
-    )
-
-
 def percolate_matches(
     docs: DataFrame,
     queries: dict[str, list[str]],
@@ -935,16 +406,17 @@ def percolate_matches(
 
     Output: (doc_id, query_id) for every matching pair."""
     from searchengine_spark.functions.tokenize import exploded_tokens
+    from searchengine_spark.operators.literals import local_frame
 
+    spark = docs.sparkSession
     qmap = [
         (qid, t)
         for qid, terms in sorted(queries.items())
         for t in dict.fromkeys(terms)
     ]
     if not qmap:
-        return docs.sparkSession.createDataFrame([], "doc_id long, query_id string")
-    spark = docs.sparkSession
-    qdf = spark.createDataFrame(qmap, "query_id string, term string")
+        return local_frame(spark, [], "doc_id long, query_id string")
+    qdf = local_frame(spark, qmap, "query_id string, term string")
     n_req = qdf.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_req"))
     toks = exploded_tokens(docs, id_col, text_col).distinct()
     hits = (
@@ -970,7 +442,7 @@ def ascii_fold(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     "café" and "cafe" hit the same posting list — required the moment a
     code corpus carries non-English comments or doc strings.
 
-    The synthetic corpus is pure ASCII, so — the pii_scrub seasoning
+    The synthetic corpus is pure ASCII, so — the strip_html seasoning
     pattern — each doc is seasoned in-query with an accented marker word
     chosen by doc_id; both engines fold with the same explicit
     ``translate`` character map (no ICU dependency, parity by
@@ -1001,73 +473,4 @@ def ascii_fold(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
         toks.filter(F.col("term").isin(folded_markers))
         .groupBy("term")
         .agg(F.countDistinct("doc_id").cast("long").alias("df"))
-    )
-
-
-def fim_transform(
-    docs: DataFrame,
-    rate_pct: int = 50,
-    psm_pct: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Fill-in-the-middle training transform (Bavarian et al. 2022, the
-    code-LLM pretraining staple): split a document's text at two
-    deterministic character offsets into (prefix, middle, suffix) and emit
-    the sentinel-delimited training string — PSM layout
-    ``<fim_prefix>P<fim_suffix>S<fim_middle>M`` or SPM layout
-    ``<fim_suffix>S<fim_prefix>P<fim_middle>M`` — leaving the rest of the
-    corpus untransformed (mode 'none'), exactly the rate/format mix the FIM
-    paper ablates (their joint p=0.5 PSM/SPM at 50% rate is the default).
-
-    Determinism contract: all randomness derives from md5 over the doc id
-    (the stratified_sample / epoch_shuffle pattern) — h1 % 100 < rate_pct
-    gates the transform, two more 32-bit hash words pick the cut points in
-    [0, n], a fourth picks PSM vs SPM — so the output is a pure function of
-    the row and the DuckDB twin reproduces it bit-for-bit (substring
-    arithmetic is 1-based chars in both engines).
-
-    Plan: ONE map over the scan, zero shuffle, whole-stage codegen; at
-    100 TB this is a free rider on whatever pass materializes training
-    text. Output: (doc_id, mode, prefix_len, middle_len, suffix_len,
-    fim_md5) — lengths + content digest rather than the (corpus-sized)
-    string itself; the string expression is shared with the digest.
-    """
-    did = F.col(id_col)
-    n = F.length(F.col(text_col))
-    h = F.md5(F.concat(F.lit("fim:"), did.cast("string")))
-    w = lambda a: F.conv(F.substring(h, a, 8), 16, 10).cast("long")  # noqa: E731
-    apply_ = (w(1) % 100) < rate_pct
-    c_a = w(9) % (n.cast("long") + 1)
-    c_b = w(17) % (n.cast("long") + 1)
-    lo = F.least(c_a, c_b).cast("int")
-    hi = F.greatest(c_a, c_b).cast("int")
-    prefix = F.col(text_col).substr(F.lit(1), lo)
-    middle = F.col(text_col).substr(lo + 1, hi - lo)
-    suffix = F.col(text_col).substr(hi + 1, n - hi)
-    is_psm = (w(25) % 100) < psm_pct
-    fim_text = F.when(
-        is_psm,
-        F.concat(
-            F.lit("<fim_prefix>"), prefix,
-            F.lit("<fim_suffix>"), suffix,
-            F.lit("<fim_middle>"), middle,
-        ),
-    ).otherwise(
-        F.concat(
-            F.lit("<fim_suffix>"), suffix,
-            F.lit("<fim_prefix>"), prefix,
-            F.lit("<fim_middle>"), middle,
-        )
-    )
-    return docs.select(
-        did,
-        F.when(~apply_, F.lit("none"))
-        .when(is_psm, F.lit("psm"))
-        .otherwise(F.lit("spm"))
-        .alias("mode"),
-        F.when(apply_, lo).otherwise(n).cast("long").alias("prefix_len"),
-        F.when(apply_, hi - lo).otherwise(F.lit(0)).cast("long").alias("middle_len"),
-        F.when(apply_, n - hi).otherwise(F.lit(0)).cast("long").alias("suffix_len"),
-        F.when(apply_, F.md5(fim_text)).otherwise(F.md5(F.col(text_col))).alias("fim_md5"),
     )

@@ -1070,67 +1070,6 @@ FROM toksarr
 """
 
 
-_STOPLIST_SQL = "['the','is','in','at','of','on','and','a','to','an','by','for','with','it','as']"
-
-
-def quality_score_sql() -> str:
-    return f"""
-WITH toksarr AS (
-  SELECT doc_id, text,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t
-  FROM documents
-),
-m AS (
-  SELECT doc_id,
-         len(t)::BIGINT AS n_tokens,
-         len(list_filter(t, x -> list_contains({_STOPLIST_SQL}, x)))::BIGINT AS n_stop,
-         len(list_distinct(t))::BIGINT AS n_dist,
-         length(text)::BIGINT AS n_chars,
-         length(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))::BIGINT AS n_alnum
-  FROM toksarr
-)
-SELECT doc_id, n_tokens,
-       CASE WHEN n_tokens > 0 THEN CAST(round(1e6 * n_stop / n_tokens) AS BIGINT) ELSE 0 END AS stop_ratio_micros,
-       CASE WHEN n_tokens > 0 THEN CAST(round(1e6 * n_dist / n_tokens) AS BIGINT) ELSE 0 END AS distinct_ratio_micros,
-       CASE WHEN n_chars > 0 THEN CAST(round(1e6 * n_alnum / n_chars) AS BIGINT) ELSE 0 END AS alnum_ratio_micros,
-       (n_tokens >= 5 AND n_tokens <= 100000
-        AND (CASE WHEN n_tokens > 0 THEN CAST(round(1e6 * n_dist / n_tokens) AS BIGINT) ELSE 0 END) >= 100000)
-         AS quality_ok
-FROM m
-"""
-
-
-def lang_id_sql() -> str:
-    markers = {
-        "de": "['der','die','das','und','nicht','ist']",
-        "en": "['the','and','of','to','is','a']",
-        "es": "['el','la','de','que','y','los']",
-        "fr": "['le','la','les','de','et','est']",
-    }
-    counts = ",\n         ".join(
-        f"len(list_filter(t, x -> list_contains({lst}, x)))::BIGINT AS c_{lang}"
-        for lang, lst in sorted(markers.items())
-    )
-    langs = sorted(markers)
-    best = f"greatest({', '.join('c_' + lang for lang in langs)})"
-    pred = "'und'"
-    for lang in reversed(langs):
-        pred = f"CASE WHEN c_{lang} = {best} AND {best} > 0 THEN '{lang}' ELSE {pred} END"
-    return f"""
-WITH toksarr AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t
-  FROM documents
-),
-m AS (
-  SELECT doc_id,
-         {counts}
-  FROM toksarr
-)
-SELECT doc_id, {pred} AS lang_pred, {best}::BIGINT AS lang_score FROM m
-"""
-
-
 def doc_fingerprints_sql() -> str:
     return """
 WITH toksarr AS (
@@ -1707,30 +1646,6 @@ GROUP BY term ORDER BY n DESC, term ASC LIMIT {k}
 """
 
 
-def hll_registers_sql(w_bits: int | None = None) -> str:
-    """Twin of sketches.hll_registers: 60-bit md5 hash, top-8-bit bucket,
-    rank via bin() string length (verified identical in both engines).
-    Defaults derive from sketches.W_BITS — one definition."""
-    if w_bits is None:
-        from searchengine_spark.operators.sketches import W_BITS
-
-        w_bits = W_BITS
-    return f"""
-WITH {_TOKENS_CTE},
-h AS (
-  SELECT CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT) AS h FROM terms
-),
-r AS (
-  SELECT (h >> {w_bits})::BIGINT AS bucket,
-         CASE WHEN (h & {(1 << w_bits) - 1}) = 0 THEN {w_bits + 1}
-              ELSE {w_bits + 1} - length(bin(h & {(1 << w_bits) - 1}))
-         END AS rho
-  FROM h
-)
-SELECT bucket, max(rho)::BIGINT AS rho FROM r GROUP BY bucket
-"""
-
-
 def substring_search_sql(needle: str) -> str:
     """Twin of textstats.substring_search: trigram prefilter (equivalent by
     construction — it only removes docs LACKING a needle trigram) + exact
@@ -1779,27 +1694,6 @@ def regex_search_sql(pattern: str) -> str:
 WITH b AS (SELECT doc_id, lower(text) AS t FROM documents WHERE TRUE{tri_filter})
 SELECT doc_id, len(regexp_extract_all(t, '{pl}'))::BIGINT AS n_matches
 FROM b WHERE len(regexp_extract_all(t, '{pl}')) > 0
-"""
-
-
-def cms_counters_sql(d: int | None = None, w: int | None = None) -> str:
-    """Twin of sketches.cms_counters: salted md5 row hashes, occurrence
-    counts per (row, col) cell. Defaults derive from sketches.CMS_D/CMS_W —
-    one definition."""
-    if d is None or w is None:
-        from searchengine_spark.operators.sketches import CMS_D, CMS_W
-
-        d = CMS_D if d is None else d
-        w = CMS_W if w is None else w
-    return f"""
-WITH {_TOKENS_CTE},
-cells AS (
-  SELECT r.range::INT AS "row",
-         (CAST(('0x' || substr(md5('cms' || r.range || ':' || term), 1, 15))
-               AS BIGINT) % {w})::INT AS col
-  FROM terms CROSS JOIN range({d}) r
-)
-SELECT "row", col, count(*)::BIGINT AS n FROM cells GROUP BY 1, 2
 """
 
 
@@ -1931,68 +1825,6 @@ WHERE hits.n_hit = nreq.n_req
 """
 
 
-def dsir_weights_sql(
-    n_buckets: int = 64, bench_mod: int = 17, bench_rem: int = 3
-) -> str:
-    """Twin of sampling.dsir_weights: hashed unigram+bigram bucket counts,
-    add-one smoothed log-ratio per bucket (each side rounded to micros
-    separately — integer table), weight = integer dot product."""
-    b_f = float(n_buckets)
-    h = "CAST(('0x' || substr(md5({key}), 1, 15)) AS BIGINT)"
-    return f"""
-WITH toksarr AS (
-  SELECT doc_id, string_split_regex(lower(text), '{TOKEN_SPLIT_RE}') AS t
-  FROM documents
-),
-pos AS (
-  SELECT doc_id, unnest(t) AS term, generate_subscripts(t, 1) - 1 AS pos
-  FROM toksarr
-),
-feats AS (
-  SELECT doc_id,
-         {h.format(key="'u:' || term")} % {MERSENNE31} % {n_buckets} AS bucket
-  FROM pos WHERE term <> ''
-  UNION ALL
-  SELECT a.doc_id,
-         {h.format(key="'b:' || a.term || ' ' || b.term")}
-           % {MERSENNE31} % {n_buckets} AS bucket
-  FROM pos a JOIN pos b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  WHERE a.term <> '' AND b.term <> ''
-),
-tb AS (
-  SELECT bucket, count(*)::BIGINT AS pc FROM feats
-  WHERE doc_id % {bench_mod} = {bench_rem} GROUP BY 1
-),
-rb AS (
-  SELECT bucket, count(*)::BIGINT AS qc FROM feats
-  WHERE doc_id % {bench_mod} <> {bench_rem} GROUP BY 1
-),
-spine AS (SELECT range AS bucket FROM range(0, {n_buckets})),
-counts AS (
-  SELECT spine.bucket,
-         coalesce(tb.pc, 0)::BIGINT AS pc,
-         coalesce(rb.qc, 0)::BIGINT AS qc
-  FROM spine
-  LEFT JOIN tb ON spine.bucket = tb.bucket
-  LEFT JOIN rb ON spine.bucket = rb.bucket
-),
-tot AS (SELECT sum(pc)::BIGINT AS pt, sum(qc)::BIGINT AS qt FROM counts),
-lr AS (
-  SELECT bucket,
-         CAST(round(ln((pc + 1.0) / (pt + {b_f})) * 1e6) AS BIGINT)
-         - CAST(round(ln((qc + 1.0) / (qt + {b_f})) * 1e6) AS BIGINT) AS lr_micros
-  FROM counts CROSS JOIN tot
-),
-docfeat AS (
-  SELECT doc_id, bucket, count(*)::BIGINT AS cnt FROM feats
-  WHERE doc_id % {bench_mod} <> {bench_rem} GROUP BY 1, 2
-)
-SELECT doc_id, sum(cnt * lr_micros)::BIGINT AS weight_micros
-FROM docfeat JOIN lr ON docfeat.bucket = lr.bucket
-GROUP BY doc_id
-"""
-
-
 def decontaminate_sql(n: int = 5, bench_mod: int = 17, bench_rem: int = 3) -> str:
     """Twin of dedup.decontaminate: distinct token n-gram overlap between
     each training doc and the deterministic benchmark slice."""
@@ -2081,7 +1913,7 @@ FROM runs GROUP BY doc_id, rid
 
 def dedup_survivors_sql(n_perms: int = 16, rows_per_band: int = 8) -> str:
     """Twin of components.dedup_survivors: one aggregate over the clusters
-    gate's SQL (embedded verbatim, the training_chunks composition rule)."""
+    gate's SQL, embedded verbatim."""
     return f"""
 SELECT component_id AS doc_id, count(*)::BIGINT AS cluster_size
 FROM ({dedup_clusters_sql(n_perms, rows_per_band)})
@@ -2100,45 +1932,6 @@ SELECT doc_id, component_id, rank FROM (
          row_number() OVER (PARTITION BY component_id ORDER BY doc_id)::INT AS rank
   FROM ({dedup_clusters_sql(n_perms, rows_per_band)})
 ) WHERE rank <= {max_per_cluster}
-"""
-
-
-def temperature_mix_sql(target_frac_ppm: int = 500_000, salt: str = "mix:") -> str:
-    """Twin of sampling.temperature_mix (alpha = 0.5 language rebalancing).
-    sqrt is IEEE-exact in both engines and the float expression tree is
-    mirrored literally, so the derived ppm rates are bit-identical."""
-    return f"""
-WITH c AS (SELECT lang AS stratum, count(*)::BIGINT AS c FROM documents GROUP BY 1),
-s AS (SELECT stratum, c,
-             CAST(floor(sqrt(c::DOUBLE) * 1e6) AS BIGINT) AS sl FROM c),
-tot AS (SELECT sum(c)::BIGINT AS total, sum(sl)::BIGINT AS s_sum FROM s),
-r AS (
-  SELECT stratum,
-         least(1000000,
-               CAST(floor(({float(target_frac_ppm)} * sl::DOUBLE * total::DOUBLE)
-                          / (s_sum::DOUBLE * c::DOUBLE)) AS BIGINT)) AS keep_ppm
-  FROM s, tot
-)
-SELECT d.doc_id, d.lang
-FROM documents d JOIN r ON d.lang = r.stratum
-WHERE CAST(('0x' || substr(md5('{salt}' || d.doc_id), 1, 15)) AS BIGINT) % 1000000
-      < r.keep_ppm
-"""
-
-
-def stratified_sample_sql(
-    rates_ppm: dict[str, int], default_ppm: int, salt: str = "sample:"
-) -> str:
-    """Twin of sampling.stratified_sample: md5-position Bernoulli keep per
-    language stratum (60-bit hex prefix → int, mod 1e6 — same literal
-    arithmetic as the Spark side)."""
-    cases = " ".join(
-        f"WHEN '{value}' THEN {ppm}" for value, ppm in sorted(rates_ppm.items())
-    )
-    return f"""
-SELECT doc_id, lang FROM documents
-WHERE CAST(('0x' || substr(md5('{salt}' || doc_id), 1, 15)) AS BIGINT) % 1000000
-      < CASE lang {cases} ELSE {default_ppm} END
 """
 
 
@@ -2180,80 +1973,6 @@ FROM u
 """
 
 
-def repetition_stats_sql() -> str:
-    """Twin of textstats.repetition_stats: bigram repetition signals per doc
-    (generate_series is end-inclusive == Spark sequence; fraction exprs keep
-    Spark's literal order 1e6*num/den so the doubles are IEEE-identical)."""
-    return """
-WITH toksarr AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS w
-  FROM documents
-),
-grams AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, len(w) - 1),
-                               i -> w[i] || ' ' || w[i + 1])) AS bigram
-  FROM toksarr WHERE len(w) >= 2
-),
-counts AS (
-  SELECT doc_id, bigram, count(*) AS n FROM grams GROUP BY doc_id, bigram
-),
-ranked AS (
-  SELECT doc_id, bigram, n,
-         sum(n) OVER (PARTITION BY doc_id) AS total,
-         count(*) OVER (PARTITION BY doc_id) AS n_distinct,
-         row_number() OVER (PARTITION BY doc_id ORDER BY n DESC, bigram ASC) AS rn
-  FROM counts
-)
-SELECT doc_id,
-       CAST(total AS BIGINT) AS n_bigrams,
-       CAST(n_distinct AS BIGINT) AS n_distinct_bigrams,
-       CAST(round(1e6 * CAST(total - n_distinct AS DOUBLE) / CAST(total AS DOUBLE))
-            AS BIGINT) AS dup_bigram_frac_micros,
-       bigram AS top_bigram,
-       CAST(n AS BIGINT) AS top_bigram_n,
-       CAST(round(1e6 * CAST(n AS DOUBLE) / CAST(total AS DOUBLE))
-            AS BIGINT) AS top_bigram_frac_micros
-FROM ranked WHERE rn = 1
-"""
-
-
-def pii_scrub_sql() -> str:
-    """Twin of textstats.pii_scrub: identical seasoning line, identical
-    Java∩RE2 patterns, identical email→ip→phone redaction order (DuckDB
-    regexp_replace needs the 'g' flag to match Spark's global default)."""
-    email = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
-    ipv4 = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
-    phone = "\\+\\d{1,3}-\\d{3}-\\d{4}"
-    return f"""
-WITH s AS (
-  SELECT doc_id,
-         text || ' Contact user' || doc_id::VARCHAR || '@mail.example (ip 10.'
-              || (doc_id % 250)::VARCHAR || '.0.' || (doc_id % 100)::VARCHAR
-              || ', tel +1-555-' || (1000 + doc_id % 9000)::VARCHAR || ')'
-           AS seasoned
-  FROM documents
-),
-r AS (
-  SELECT doc_id, seasoned,
-         regexp_replace(
-           regexp_replace(
-             regexp_replace(seasoned, '{email}', '<EMAIL>', 'g'),
-             '{ipv4}', '<IP>', 'g'),
-           '{phone}', '<PHONE>', 'g') AS redacted
-  FROM s
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(seasoned, '{email}')) AS BIGINT) AS n_emails,
-       CAST(len(regexp_extract_all(seasoned, '{ipv4}')) AS BIGINT) AS n_ipv4,
-       CAST(len(regexp_extract_all(seasoned, '{phone}')) AS BIGINT) AS n_phones,
-       md5(redacted) AS redacted_md5,
-       CAST(length(seasoned) - length(redacted) AS BIGINT) AS n_chars_delta
-FROM r
-"""
-
-
 def fuzzy_suggest_sql(word: str, k: int = 5) -> str:
     """Brute-force twin of serve.fuzzy_suggest: the oracle scans the whole
     vocabulary with levenshtein() (O(|V|) — fine for an oracle), while the
@@ -2268,103 +1987,6 @@ FROM lex
 WHERE levenshtein(term, '{w}') <= 1
 ORDER BY dist ASC, n DESC, term ASC
 LIMIT {k}
-"""
-
-
-def unigram_logprob_sql() -> str:
-    return f"""
-WITH {_TOKENS_CTE},
-tot AS (SELECT sum(dl)::DOUBLE AS t FROM dls),
-cf AS (SELECT term, sum(tf)::BIGINT AS cf FROM post GROUP BY 1),
-contrib AS (
-  SELECT post.doc_id, dls.dl,
-         CAST(round(post.tf::DOUBLE * ln(tot.t / cf.cf::DOUBLE) * 1e6) AS BIGINT) AS c
-  FROM post JOIN cf USING (term) JOIN dls USING (doc_id) CROSS JOIN tot
-)
-SELECT doc_id, dl, (sum(c) // dl)::BIGINT AS mean_nll_micros
-FROM contrib GROUP BY doc_id, dl
-"""
-
-
-def bigram_logprob_sql(lam: float = 0.75) -> str:
-    """Twin of textstats.bigram_logprob: interpolated bigram surprisal,
-    micros per position before the per-doc mean (sum // n_bigrams)."""
-    return f"""
-WITH toksarr AS (
-  SELECT doc_id, string_split_regex(lower(text), '{TOKEN_SPLIT_RE}') AS t FROM documents
-),
-pos AS (
-  SELECT doc_id, unnest(t) AS term, generate_subscripts(t, 1) - 1 AS pos FROM toksarr
-),
-tok AS (SELECT doc_id, term, pos FROM pos WHERE term <> ''),
-pairs AS (
-  SELECT a.doc_id, a.pos, a.term AS t0, b.term AS t1
-  FROM pos a JOIN pos b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  WHERE a.term <> '' AND b.term <> ''
-),
-dbi AS (
-  SELECT doc_id, t0, t1, count(*)::BIGINT AS dtf FROM pairs GROUP BY 1, 2, 3
-),
-cb AS (SELECT t0, t1, sum(dtf)::BIGINT AS cxy FROM dbi GROUP BY 1, 2),
-cs AS (SELECT t0, sum(dtf)::BIGINT AS cx0 FROM dbi GROUP BY 1),
-cf AS (SELECT term, count(*)::BIGINT AS c FROM tok GROUP BY 1),
-tot AS (SELECT count(*)::DOUBLE AS total FROM tok),
-scored AS (
-  SELECT dbi.doc_id, dbi.dtf,
-         dbi.dtf * CAST(round(-ln({lam} * (cb.cxy::DOUBLE / cs.cx0::DOUBLE)
-                        + {1.0 - lam} * (cf.c::DOUBLE / tot.total)) * 1e6)
-              AS BIGINT) AS c_micros
-  FROM dbi
-  JOIN cb USING (t0, t1)
-  JOIN cs USING (t0)
-  JOIN cf ON dbi.t1 = cf.term
-  CROSS JOIN tot
-)
-SELECT doc_id, sum(dtf)::BIGINT AS n_bigrams,
-       (sum(c_micros) // sum(dtf))::BIGINT AS mean_nll_micros
-FROM scored GROUP BY doc_id
-"""
-
-
-def kn_bigram_logprob_sql(discount: float = 0.75) -> str:
-    """Twin of textstats.kn_bigram_logprob: interpolated Kneser-Ney bigram
-    surprisal — absolute discount + continuation-probability backoff, all
-    counts from the bigram-type table; same micros-before-mean contract
-    and the same float tree ((cxy-D)/cx0 + (D*n1f/cx0)*(n1b/ntypes))."""
-    return f"""
-WITH toksarr AS (
-  SELECT doc_id, string_split_regex(lower(text), '{TOKEN_SPLIT_RE}') AS t FROM documents
-),
-pos AS (
-  SELECT doc_id, unnest(t) AS term, generate_subscripts(t, 1) - 1 AS pos FROM toksarr
-),
-pairs AS (
-  SELECT a.doc_id, a.pos, a.term AS t0, b.term AS t1
-  FROM pos a JOIN pos b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  WHERE a.term <> '' AND b.term <> ''
-),
-dbi AS (
-  SELECT doc_id, t0, t1, count(*)::BIGINT AS dtf FROM pairs GROUP BY 1, 2, 3
-),
-cb AS (SELECT t0, t1, sum(dtf)::BIGINT AS cxy FROM dbi GROUP BY 1, 2),
-cs AS (SELECT t0, sum(cxy)::BIGINT AS cx0, count(*)::BIGINT AS n1f FROM cb GROUP BY 1),
-cont AS (SELECT t1, count(*)::BIGINT AS n1b FROM cb GROUP BY 1),
-nt AS (SELECT count(*)::DOUBLE AS v FROM cb),
-scored AS (
-  SELECT dbi.doc_id, dbi.dtf,
-         dbi.dtf * CAST(round(-ln(
-             (cb.cxy::DOUBLE - {discount}) / cs.cx0::DOUBLE
-             + ({discount} * cs.n1f::DOUBLE / cs.cx0::DOUBLE)
-               * (cont.n1b::DOUBLE / nt.v)) * 1e6) AS BIGINT) AS c_micros
-  FROM dbi
-  JOIN cb USING (t0, t1)
-  JOIN cs USING (t0)
-  JOIN cont USING (t1)
-  CROSS JOIN nt
-)
-SELECT doc_id, sum(dtf)::BIGINT AS n_bigrams,
-       (sum(c_micros) // sum(dtf))::BIGINT AS mean_nll_micros
-FROM scored GROUP BY doc_id
 """
 
 
@@ -2454,131 +2076,6 @@ ranked AS (
   FROM agg
 )
 SELECT query_id, rank, doc_id, score_micros FROM ranked WHERE rank <= {k}
-"""
-
-
-def doc_chunks_sql(chunk_size: int = 64, stride: int = 48) -> str:
-    return f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_RE}'),
-                     x -> x <> '') AS arr
-  FROM documents
-),
-nz AS (SELECT doc_id, arr, len(arr) AS dl FROM toks WHERE len(arr) > 0),
-ch AS (
-  SELECT doc_id, arr,
-         unnest(range(0, (dl - 1) // {stride} + 1)) AS chunk_id
-  FROM nz
-)
-SELECT doc_id, chunk_id::INT AS chunk_id,
-       (chunk_id * {stride})::BIGINT AS start_pos,
-       len(arr[chunk_id * {stride} + 1 : chunk_id * {stride} + {chunk_size}])::BIGINT
-         AS n_tokens,
-       md5(array_to_string(
-             arr[chunk_id * {stride} + 1 : chunk_id * {stride} + {chunk_size}], ' '))
-         AS chunk_md5
-FROM ch
-"""
-
-
-def mask_spans_sql(mask_ppm: int = 150_000, salt: str = "mask:") -> str:
-    """Twin of textstats.mask_spans: md5-position mask decisions merged
-    gaps-and-islands into spans."""
-    return f"""
-WITH toksarr AS (
-  SELECT doc_id, string_split_regex(lower(text), '{TOKEN_SPLIT_RE}') AS t
-  FROM documents
-),
-pos AS (
-  SELECT doc_id, unnest(t) AS term, generate_subscripts(t, 1) - 1 AS pos
-  FROM toksarr
-),
-tok AS (SELECT doc_id, pos FROM pos WHERE term <> ''),
-masked AS (
-  SELECT doc_id, pos FROM tok
-  WHERE CAST(('0x' || substr(md5('{salt}' || doc_id || ':' || pos), 1, 15))
-             AS BIGINT) % 1000000 < {mask_ppm}
-),
-isl AS (
-  SELECT doc_id, pos,
-         pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS g
-  FROM masked
-)
-SELECT doc_id, min(pos)::BIGINT AS start_pos, count(*)::BIGINT AS span_len
-FROM isl GROUP BY doc_id, g
-"""
-
-
-def contrastive_pairs_sql(chunk_size: int = 64, stride: int = 48) -> str:
-    """Twin of textstats.contrastive_pairs: the doc_chunks windows
-    self-joined on successor chunk ids, md5-identical pairs dropped."""
-    lo = f"chunk_id * {stride} + 1"
-    hi = f"chunk_id * {stride} + {chunk_size}"
-    return f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_RE}'),
-                     x -> x <> '') AS arr
-  FROM documents
-),
-nz AS (SELECT doc_id, arr, len(arr) AS dl FROM toks WHERE len(arr) > 0),
-ch AS (
-  SELECT doc_id, arr,
-         unnest(range(0, (dl - 1) // {stride} + 1)) AS chunk_id
-  FROM nz
-),
-chunks AS (
-  SELECT doc_id, chunk_id::INT AS chunk_id,
-         md5(array_to_string(arr[{lo} : {hi}], ' ')) AS chunk_md5
-  FROM ch
-)
-SELECT a.doc_id,
-       a.chunk_id AS anchor_chunk_id,
-       b.chunk_id AS positive_chunk_id,
-       a.chunk_md5 AS anchor_md5,
-       b.chunk_md5 AS positive_md5
-FROM chunks a
-JOIN chunks b ON a.doc_id = b.doc_id AND b.chunk_id = a.chunk_id + 1
-WHERE a.chunk_md5 <> b.chunk_md5
-"""
-
-
-def pack_chunks_sql(budget: int = 512, chunk_size: int = 64, stride: int = 48) -> str:
-    """Single-window twin of textstats.pack_chunks: the two-phase distributed
-    prefix sum equals one per-lang cumulative window because bucket =
-    doc_id div span preserves the (doc_id, chunk_id) order."""
-    return f"""
-WITH toks AS (
-  SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_RE}'),
-                     x -> x <> '') AS arr
-  FROM documents
-),
-nz AS (SELECT doc_id, lang, arr, len(arr) AS dl FROM toks WHERE len(arr) > 0),
-ch AS (
-  SELECT doc_id, lang, arr,
-         unnest(range(0, (dl - 1) // {stride} + 1)) AS chunk_id
-  FROM nz
-),
-chunks AS (
-  SELECT lang, doc_id, chunk_id::INT AS chunk_id,
-         len(arr[chunk_id * {stride} + 1 : chunk_id * {stride} + {chunk_size}])::BIGINT
-           AS n_tokens
-  FROM ch
-),
-pre AS (
-  SELECT lang, doc_id, chunk_id, n_tokens,
-         coalesce(sum(n_tokens) OVER (
-             PARTITION BY lang ORDER BY doc_id, chunk_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-           AS start_off
-  FROM chunks
-)
-SELECT lang, doc_id, chunk_id, n_tokens, start_off,
-       (start_off // {budget})::BIGINT AS bin_id,
-       (start_off % {budget})::BIGINT AS bin_off
-FROM pre
 """
 
 
@@ -2766,44 +2263,6 @@ FROM terms WHERE term <> '' GROUP BY 1, 2
 """
 
 
-def training_chunks_sql(
-    rates_ppm: dict[str, int],
-    default_ppm: int,
-    ngram: int = 5,
-    bench_mod: int = 17,
-    bench_rem: int = 3,
-    chunk_size: int = 64,
-    stride: int = 48,
-) -> str:
-    """Twin of plans/prepare.py::prepare_training_chunks, built by embedding
-    the per-stage gate SQL VERBATIM as subqueries (quality_score_sql,
-    exact_dedup_sql, decontaminate_sql, stratified_sample_sql,
-    doc_chunks_sql) — the pipeline oracle cannot drift from the stage
-    oracles because it IS them. Chunk-then-filter here equals the Spark
-    side's filter-then-chunk because chunks are per-doc."""
-    return f"""
-WITH
-q AS (SELECT doc_id FROM ({quality_score_sql()}) WHERE quality_ok),
-canon AS (SELECT canonical_doc_id AS doc_id FROM ({exact_dedup_sql()})),
-contaminated AS (
-  SELECT doc_id FROM ({decontaminate_sql(ngram, bench_mod, bench_rem)})
-),
-sampled AS (
-  SELECT doc_id FROM ({stratified_sample_sql(rates_ppm, default_ppm)})
-),
-keep AS (
-  SELECT q.doc_id FROM q
-  JOIN canon USING (doc_id)
-  JOIN sampled USING (doc_id)
-  WHERE q.doc_id % {bench_mod} <> {bench_rem}
-    AND q.doc_id NOT IN (SELECT doc_id FROM contaminated)
-),
-ch AS (SELECT * FROM ({doc_chunks_sql(chunk_size, stride)}))
-SELECT ch.doc_id, ch.chunk_id, ch.start_pos, ch.n_tokens, ch.chunk_md5
-FROM ch JOIN keep USING (doc_id)
-"""
-
-
 def frontier_bfs_sql(seed_below: int = 5, max_depth: int = 4) -> str:
     """Twin of fetch.frontier_bfs over the synthetic edge graph: min-depth
     reachability via a depth-bounded recursive CTE (shares _EDGES_SQL with
@@ -2821,188 +2280,6 @@ bfs(doc_id, depth) AS (
 )
 SELECT doc_id, min(depth)::INT AS depth FROM bfs GROUP BY 1
 """
-
-
-def bloom_visited_sql(m: int | None = None, k: int | None = None, n_absent: int = 50) -> str:
-    """Twin of sketches.bloom_positions + bloom_probe over doc keys: same
-    salted 60-bit md5 positions, DISTINCT position set, membership = all k
-    probe positions present. Defaults derive from sketches.BLOOM_M/BLOOM_K."""
-    if m is None or k is None:
-        from searchengine_spark.operators.sketches import BLOOM_K, BLOOM_M
-
-        m = BLOOM_M if m is None else m
-        k = BLOOM_K if k is None else k
-    return f"""
-WITH keys AS (SELECT 'doc:' || doc_id AS key FROM documents),
-pos AS (
-  SELECT DISTINCT
-         CAST(('0x' || substr(md5('bloom' || h.range || ':' || key), 1, 15))
-              AS BIGINT) % {m} AS pos
-  FROM keys CROSS JOIN range({k}) h
-),
-probes AS (
-  SELECT 'doc:' || doc_id AS key, 1::BIGINT AS actually_present
-  FROM documents WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT 'absent:' || i.range, 0::BIGINT FROM range({n_absent}) i
-),
-pp AS (
-  SELECT key, actually_present,
-         CAST(('0x' || substr(md5('bloom' || h.range || ':' || key), 1, 15))
-              AS BIGINT) % {m} AS pos
-  FROM probes CROSS JOIN range({k}) h
-)
-SELECT pp.key, pp.actually_present,
-       min(CASE WHEN p.pos IS NULL THEN 0 ELSE 1 END)::BIGINT AS maybe_present
-FROM pp LEFT JOIN pos p ON p.pos = pp.pos
-GROUP BY pp.key, pp.actually_present
-"""
-
-
-def nb_lang_classify_sql() -> str:
-    """Twin of classify.season_lang_markers + nb_train_predict over the lang
-    label: identical seasoning CASE/repeat tree, identical tokenization,
-    Laplace-smoothed multinomial NB with per-token ln() rounded to micros
-    BEFORE the tf-weighted sum (the unigram_logprob contract), argmax with
-    ascending-label tie-break."""
-    from searchengine_spark.operators.classify import SEASON_MARKERS
-
-    case = "NULL"
-    for lang in sorted(SEASON_MARKERS, reverse=True):
-        phrase = " " + " ".join(SEASON_MARKERS[lang])
-        case = f"CASE WHEN lang = '{lang}' THEN '{phrase}' ELSE {case} END"
-    return f"""
-WITH seasoned AS (
-  SELECT doc_id, lang,
-         text || repeat(coalesce({case}, ''), CAST(2 + doc_id % 3 AS INT)) AS text
-  FROM documents
-),
-base AS (
-  SELECT doc_id, lang AS label_true,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS toks,
-         doc_id % 10 < 8 AS is_train
-  FROM seasoned
-),
-train_toks AS (
-  SELECT label_true AS cand, unnest(toks) AS token FROM base WHERE is_train
-),
-model AS (
-  SELECT cand, token, count(*)::BIGINT AS cnt FROM train_toks GROUP BY 1, 2
-),
-class_tot AS (
-  SELECT cand, count(*)::BIGINT AS total_c FROM train_toks GROUP BY 1
-),
-prior_docs AS (
-  SELECT label_true AS cand, count(*)::BIGINT AS n_docs_c FROM base WHERE is_train GROUP BY 1
-),
-consts AS (
-  SELECT (SELECT count(*)::BIGINT FROM base WHERE is_train) AS n_train,
-         (SELECT count(DISTINCT token)::BIGINT FROM train_toks) AS v
-),
-classes AS (
-  SELECT ct.cand, ct.total_c, c.v,
-         CAST(round(1e6 * ln(CAST(pd.n_docs_c AS DOUBLE) / CAST(c.n_train AS DOUBLE)))
-              AS BIGINT) AS prior_micros
-  FROM class_tot ct JOIN prior_docs pd ON pd.cand = ct.cand CROSS JOIN consts c
-),
-test_tf AS (
-  SELECT doc_id, unnest(toks) AS token FROM base WHERE NOT is_train
-),
-test_tf_g AS (
-  SELECT doc_id, token, count(*)::BIGINT AS tf FROM test_tf GROUP BY 1, 2
-),
-tok_sums AS (
-  SELECT t.doc_id, cl.cand,
-         sum(t.tf * CAST(round(1e6 * ln(CAST(coalesce(m.cnt, 0) + 1 AS DOUBLE)
-                                        / CAST(cl.total_c + cl.v AS DOUBLE)))
-                         AS BIGINT))::BIGINT AS tok_sum
-  FROM test_tf_g t
-  CROSS JOIN classes cl
-  LEFT JOIN model m ON m.cand = cl.cand AND m.token = t.token
-  GROUP BY 1, 2
-),
-scored AS (
-  SELECT b.doc_id, b.label_true, cl.cand,
-         cl.prior_micros + coalesce(ts.tok_sum, 0) AS score_micros
-  FROM base b
-  CROSS JOIN classes cl
-  LEFT JOIN tok_sums ts ON ts.doc_id = b.doc_id AND ts.cand = cl.cand
-  WHERE NOT b.is_train
-),
-ranked AS (
-  SELECT doc_id, label_true, cand, score_micros,
-         row_number() OVER (PARTITION BY doc_id ORDER BY score_micros DESC, cand ASC) AS rn
-  FROM scored
-)
-SELECT doc_id, label_true, cand AS label_pred, score_micros
-FROM ranked WHERE rn = 1
-"""
-
-
-def _bpe_chain_sql(n_merges: int) -> str:
-    """Shared unrolled BPE CTE chain (the HITS/kmeans oracle pattern —
-    recursive CTEs can't re-aggregate per step). Identical boundary-safe
-    '|sym|' encoding, identical literal (non-regex) replace, identical
-    (total DESC, left, right) argmax tie-break as bpe.bpe_train. Each seq
-    table carries the original word so the encode twin can read the final
-    segmentation. Pair exhaustion empties best_t; the LEFT JOIN then passes
-    seq through unchanged — the same fixpoint the Spark loop's early break
-    leaves behind (best_t stays empty for every later step, so the merges
-    twin's early-stop is unchanged)."""
-    parts = ["""
-WITH toks AS (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                            x -> x <> '')) AS word
-  FROM documents
-),
-wc AS (SELECT word, count(*)::BIGINT AS n FROM toks GROUP BY 1),
-seq_0 AS (SELECT word, n, regexp_replace(word, '(.)', '|\\1|', 'g') AS seq FROM wc)"""]
-    for t in range(n_merges):
-        parts.append(f""",
-arr_{t} AS (
-  SELECT n, string_split(trim(seq, '|'), '||') AS a FROM seq_{t}
-),
-pairs_{t} AS (
-  SELECT n,
-         unnest(list_transform(generate_series(1, len(a) - 1),
-                               i -> a[i] || chr(9) || a[i + 1])) AS pair
-  FROM arr_{t} WHERE len(a) >= 2
-),
-best_{t} AS (
-  SELECT split_part(pair, chr(9), 1) AS l,
-         split_part(pair, chr(9), 2) AS r,
-         sum(n)::BIGINT AS total
-  FROM pairs_{t} GROUP BY 1, 2
-  ORDER BY total DESC, l ASC, r ASC LIMIT 1
-),
-seq_{t + 1} AS (
-  SELECT s.word, s.n,
-         CASE WHEN b.l IS NULL THEN s.seq
-              ELSE replace(s.seq, '|' || b.l || '||' || b.r || '|',
-                           '|' || b.l || b.r || '|') END AS seq
-  FROM seq_{t} s LEFT JOIN best_{t} b ON TRUE
-)""")
-    return "".join(parts)
-
-
-def bpe_merges_sql(n_merges: int = 6) -> str:
-    """Twin of bpe.bpe_train — the learned merge table (see _bpe_chain_sql)."""
-    selects = [
-        f"""SELECT {t} AS merge_id, l AS "left", r AS "right",
-       l || r AS new_symbol, total AS pair_count FROM best_{t}"""
-        for t in range(n_merges)
-    ]
-    return _bpe_chain_sql(n_merges) + "\n" + "\nUNION ALL\n".join(selects)
-
-
-def bpe_encode_sql(n_merges: int = 6) -> str:
-    """Twin of bpe.bpe_encode over the training vocabulary: the final seq
-    table of the merge chain IS the rules applied in merge order, so the
-    segmentation of every corpus word falls out of the same CTE chain."""
-    return _bpe_chain_sql(n_merges) + f"""
-SELECT word, n,
-       array_to_string(string_split(trim(seq, '|'), '||'), ' ') AS segmented
-FROM seq_{n_merges}"""
 
 
 def collapse_topk_sql(
@@ -3117,50 +2394,6 @@ SELECT a.doc_id, a.shard_from, b.shard_to
 FROM {route(n_from, "shard_from")} a
 JOIN {route(n_to, "shard_to")} b USING (doc_id)
 WHERE a.shard_from <> b.shard_to
-"""
-
-
-def epoch_shuffle_sql(epoch: int) -> str:
-    """Twin of sampling.epoch_shuffle: global rank over the md5 epoch key
-    (lowercase-hex string order is identical in both engines)."""
-    return f"""
-SELECT row_number() OVER (
-         ORDER BY md5('epoch:{epoch}:' || doc_id), doc_id
-       )::BIGINT AS pos,
-       doc_id
-FROM documents
-"""
-
-
-def quality_tiers_sql() -> str:
-    """Twin of sampling.quality_tiers: the unigram_logprob gate SQL embedded
-    as a stage, then exact per-language tercile ranks."""
-    return f"""
-WITH {_TOKENS_CTE},
-tot AS (SELECT sum(dl)::DOUBLE AS t FROM dls),
-cf AS (SELECT term, sum(tf)::BIGINT AS cf FROM post GROUP BY 1),
-contrib AS (
-  SELECT post.doc_id, dls.dl,
-         CAST(round(post.tf::DOUBLE * ln(tot.t / cf.cf::DOUBLE) * 1e6) AS BIGINT) AS c
-  FROM post JOIN cf USING (term) JOIN dls USING (doc_id) CROSS JOIN tot
-),
-nll AS (
-  SELECT doc_id, (sum(c) // dl)::BIGINT AS mean_nll_micros
-  FROM contrib GROUP BY doc_id, dl
-),
-keyed AS (
-  SELECT n.doc_id, d.lang, n.mean_nll_micros
-  FROM nll n JOIN documents d USING (doc_id)
-),
-ranked AS (
-  SELECT doc_id, lang, mean_nll_micros,
-         row_number() OVER (PARTITION BY lang
-                            ORDER BY mean_nll_micros ASC, doc_id ASC) AS r,
-         count(*) OVER (PARTITION BY lang) AS nl
-  FROM keyed
-)
-SELECT doc_id, lang, mean_nll_micros, CAST((r - 1) * 3 // nl AS INT) AS tier
-FROM ranked
 """
 
 
@@ -3304,141 +2537,6 @@ FROM assign a LEFT JOIN dups d USING (vec_id)
 """
 
 
-def license_detect_sql() -> str:
-    """Twin of codestats.license_detect: identical doc_id%5 seasoning
-    headers and the same first-hit-wins phrase CASE (MIT > Apache > GPL >
-    BSD), flags as BIGINT 0/1."""
-    return """
-WITH seasoned AS (
-  SELECT doc_id,
-         CASE doc_id % 5
-           WHEN 0 THEN '// Permission is hereby granted, free of charge, to any person' || chr(10)
-           WHEN 1 THEN '// Licensed under the Apache License, Version 2.0 (the "License")' || chr(10)
-           WHEN 2 THEN '// This program is free software: GNU General Public License' || chr(10)
-           WHEN 3 THEN '// Redistribution and use in source and binary forms, with or without' || chr(10)
-           ELSE ''
-         END || text AS s
-  FROM documents
-),
-low AS (SELECT doc_id, lower(s) AS l FROM seasoned)
-SELECT doc_id,
-  CASE
-    WHEN contains(l, 'permission is hereby granted') THEN 'mit'
-    WHEN contains(l, 'apache license') THEN 'apache-2.0'
-    WHEN contains(l, 'gnu general public license') THEN 'gpl-3.0'
-    WHEN contains(l, 'redistribution and use in source and binary forms') THEN 'bsd-3-clause'
-    ELSE 'unknown'
-  END AS license,
-  (CASE
-    WHEN contains(l, 'permission is hereby granted') THEN 1
-    WHEN contains(l, 'apache license') THEN 1
-    WHEN contains(l, 'gnu general public license') THEN 0
-    WHEN contains(l, 'redistribution and use in source and binary forms') THEN 1
-    ELSE 0
-  END)::BIGINT AS permissive
-FROM low
-"""
-
-
-def code_metrics_sql() -> str:
-    """Twin of codestats.code_metrics: identical seasoning (autogen marker
-    doc_id%11, doc_id%3 comment lines, doc_id%17 500-char line), list
-    lambdas for the per-line counters, integral // for the micros ratios,
-    and the same keep thresholds (max_line_len 400, alnum 200000 ppm)."""
-    return """
-WITH seasoned AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 11 = 0 THEN '// auto-generated do not edit' || chr(10) ELSE '' END
-    || repeat('# c' || chr(10), (doc_id % 3)::INT)
-    || CASE WHEN doc_id % 17 = 0 THEN repeat('x', 500) || chr(10) ELSE '' END
-    || text AS s
-  FROM documents
-),
-m AS (SELECT doc_id, s, string_split(s, chr(10)) AS lines FROM seasoned),
-agg AS (
-  SELECT doc_id,
-    len(lines)::BIGINT AS n_lines,
-    len(list_filter(lines, x -> ltrim(x) = ''))::BIGINT AS n_blank,
-    len(list_filter(lines, x -> starts_with(ltrim(x), '#')
-                             OR starts_with(ltrim(x), '//')))::BIGINT AS n_comment,
-    list_max(list_transform(lines, x -> length(x)))::BIGINT AS max_line_len,
-    ((list_sum(list_transform(lines, x -> length(x)))::BIGINT * 1000000)
-       // len(lines))::BIGINT AS avg_line_len_micros,
-    ((length(regexp_replace(s, '[^a-zA-Z0-9]', '', 'g'))::BIGINT * 1000000)
-       // length(s))::BIGINT AS alnum_frac_micros,
-    (CASE WHEN contains(s, 'auto-generated') THEN 1 ELSE 0 END)::BIGINT AS is_autogenerated
-  FROM m
-)
-SELECT *,
-  (CASE WHEN is_autogenerated = 0 AND max_line_len <= 400
-             AND alnum_frac_micros >= 200000
-        THEN 1 ELSE 0 END)::BIGINT AS keep
-FROM agg
-"""
-
-
-def training_keep_list_sql() -> str:
-    """Twin of codestats.training_keep_list: combined license+metrics
-    seasoning, the same phrase CASE and shape thresholds (cross-multiplied
-    alnum fraction — exact integer equivalent of the floored micros), and
-    the md5(raw text) winner election, with the license > shape >
-    duplicate reason precedence."""
-    return """
-WITH staged AS (
-  SELECT doc_id,
-    CASE doc_id % 5
-      WHEN 0 THEN '// Permission is hereby granted, free of charge, to any person' || chr(10)
-      WHEN 1 THEN '// Licensed under the Apache License, Version 2.0 (the "License")' || chr(10)
-      WHEN 2 THEN '// This program is free software: GNU General Public License' || chr(10)
-      WHEN 3 THEN '// Redistribution and use in source and binary forms, with or without' || chr(10)
-      ELSE ''
-    END
-    || CASE WHEN doc_id % 11 = 0 THEN '// auto-generated do not edit' || chr(10) ELSE '' END
-    || repeat('# c' || chr(10), (doc_id % 3)::INT)
-    || CASE WHEN doc_id % 17 = 0 THEN repeat('x', 500) || chr(10) ELSE '' END
-    || text AS s,
-    md5(text) AS fp
-  FROM documents
-),
-sig AS (
-  SELECT doc_id, s, lower(s) AS l,
-         min(doc_id) OVER (PARTITION BY fp) AS winner
-  FROM staged
-),
-flags AS (
-  SELECT doc_id,
-    CASE
-      WHEN contains(l, 'permission is hereby granted') THEN 'mit'
-      WHEN contains(l, 'apache license') THEN 'apache-2.0'
-      WHEN contains(l, 'gnu general public license') THEN 'gpl-3.0'
-      WHEN contains(l, 'redistribution and use in source and binary forms') THEN 'bsd-3-clause'
-      ELSE 'unknown'
-    END AS license,
-    (CASE
-      WHEN contains(l, 'permission is hereby granted') THEN 1
-      WHEN contains(l, 'apache license') THEN 1
-      WHEN contains(l, 'gnu general public license') THEN 0
-      WHEN contains(l, 'redistribution and use in source and binary forms') THEN 1
-      ELSE 0
-    END)::BIGINT AS perm,
-    (CASE WHEN NOT contains(s, 'auto-generated')
-           AND list_max(list_transform(string_split(s, chr(10)), x -> length(x))) <= 400
-           AND length(regexp_replace(s, '[^a-zA-Z0-9]', '', 'g'))::BIGINT * 1000000
-               >= 200000::BIGINT * length(s)::BIGINT
-      THEN 1 ELSE 0 END)::BIGINT AS shape_keep,
-    (CASE WHEN doc_id <> winner THEN 1 ELSE 0 END)::BIGINT AS is_dup
-  FROM sig
-)
-SELECT doc_id, license, shape_keep, is_dup,
-  CASE WHEN perm = 0 THEN 'license'
-       WHEN shape_keep = 0 THEN 'shape'
-       WHEN is_dup = 1 THEN 'duplicate'
-       ELSE 'kept' END AS drop_reason,
-  (CASE WHEN perm = 1 AND shape_keep = 1 AND is_dup = 0 THEN 1 ELSE 0 END)::BIGINT AS keep
-FROM flags
-"""
-
-
 def domain_kl_drift_sql() -> str:
     """Twin of corpusstats.domain_kl_drift: per-source unigram KL divergence
     vs the corpus distribution, per-term contribution rounded to nanos
@@ -3571,35 +2669,6 @@ FROM s
 """
 
 
-def zorder_layout_sql(bits: int = 16, n_groups: int = 64) -> str:
-    """Twin of layout.zorder_layout: min/max-normalized exact-integer
-    Morton interleave of (user_id, event seconds) + top-bits file group."""
-    top = (1 << bits) - 1
-    group_bits = n_groups.bit_length() - 1
-    inter = " + ".join(
-        f"(((sx >> {i}) & 1) << {2 * i}) + (((sy >> {i}) & 1) << {2 * i + 1})"
-        for i in range(bits)
-    )
-    return f"""
-WITH src AS (
-  SELECT event_id, user_id::BIGINT AS u,
-         epoch_us(ts) // 1000000 AS t
-  FROM events
-),
-b AS (SELECT min(u) AS u_lo, max(u) AS u_hi,
-             min(t) AS t_lo, max(t) AS t_hi FROM src),
-scaled AS (
-  SELECT event_id,
-         ((u - u_lo) * {top}) // greatest(1, u_hi - u_lo) AS sx,
-         ((t - t_lo) * {top}) // greatest(1, t_hi - t_lo) AS sy
-  FROM src, b
-),
-z AS (SELECT event_id, ({inter})::BIGINT AS zval FROM scaled)
-SELECT event_id, zval, (zval >> {2 * bits - group_bits})::BIGINT AS file_group
-FROM z
-"""
-
-
 def crawl_schedule_sql(n_hosts: int = 7, delay_ms: int = 500) -> str:
     """Twin of fetch.crawl_schedule: per-host fetch queue in md5 shuffle
     order, slot = per-host row_number (the oracle ranks directly; the Spark
@@ -3621,22 +2690,6 @@ ranked AS (
 SELECT doc_id, host, slot::BIGINT AS slot,
        ((slot - 1) * {delay_ms})::BIGINT AS fetch_offset_ms
 FROM ranked
-"""
-
-
-def weighted_sample_topn_sql(
-    n: int = 100, salt: str = "wsample", weight_col: str = "n_chars"
-) -> str:
-    """Twin of sampling.weighted_sample_topn: A-ES keys ln(u)/w in integer
-    nanos, u = (2·md5ppm + 1)/2e6, top-n by (key DESC, doc_id ASC)."""
-    return f"""
-SELECT doc_id,
-       CAST(round((ln((2.0 * (CAST(('0x' || substr(md5('{salt}' || doc_id), 1, 15))
-                                   AS BIGINT) % 1000000) + 1.0) / 2e6)
-                   / {weight_col}::DOUBLE) * 1e9) AS BIGINT) AS key_nanos
-FROM documents
-ORDER BY key_nanos DESC, doc_id ASC
-LIMIT {n}
 """
 
 
@@ -4180,21 +3233,6 @@ SELECT rank, doc_id, borda_points FROM (
 """
 
 
-def bpe_fertility_sql(n_merges: int = 6) -> str:
-    """Twin of the bpe_fertility gate: corpus-weighted tokenizer-fertility
-    statistics over the trained BPE segmentation (the metric multilingual
-    tokenizer work reports as tokens-per-word / chars-per-token)."""
-    return f"""
-WITH enc AS (SELECT word, n, segmented FROM ({bpe_encode_sql(n_merges)}))
-SELECT sum(n)::BIGINT AS total_words,
-       sum(n * len(string_split(segmented, ' ')))::BIGINT AS total_pieces,
-       sum(n * length(word))::BIGINT AS total_chars,
-       ((1000000 * sum(n * len(string_split(segmented, ' ')))) // sum(n))::BIGINT
-         AS fertility_micros
-FROM enc
-"""
-
-
 def highlight_fragments_sql(
     terms: list[str],
     k: int = 10,
@@ -4393,100 +3431,6 @@ LIMIT {k}
 """
 
 
-def fim_transform_sql(rate_pct: int = 50, psm_pct: int = 50) -> str:
-    """Twin of textstats.fim_transform: md5-derived 32-bit words gate the
-    transform, pick the two cut points in [0, n] and the PSM/SPM layout;
-    1-based substring arithmetic matches Spark exactly."""
-    return f"""
-WITH base AS (
-  SELECT doc_id, text, length(text)::BIGINT AS n,
-         md5('fim:' || doc_id::VARCHAR) AS h
-  FROM documents
-),
-words AS (
-  SELECT doc_id, text, n,
-         CAST(('0x' || substr(h, 1, 8)) AS BIGINT) % 100 < {rate_pct} AS apply,
-         CAST(('0x' || substr(h, 9, 8)) AS BIGINT) % (n + 1) AS c_a,
-         CAST(('0x' || substr(h, 17, 8)) AS BIGINT) % (n + 1) AS c_b,
-         CAST(('0x' || substr(h, 25, 8)) AS BIGINT) % 100 < {psm_pct} AS is_psm
-  FROM base
-),
-cuts AS (
-  SELECT doc_id, text, n, apply, is_psm,
-         least(c_a, c_b) AS lo, greatest(c_a, c_b) AS hi
-  FROM words
-),
-parts AS (
-  SELECT doc_id, n, apply, is_psm, lo, hi,
-         substring(text, 1, lo::INT) AS p,
-         substring(text, (lo + 1)::INT, (hi - lo)::INT) AS m,
-         substring(text, (hi + 1)::INT, (n - hi)::INT) AS s,
-         text
-  FROM cuts
-)
-SELECT doc_id,
-       CASE WHEN NOT apply THEN 'none'
-            WHEN is_psm THEN 'psm' ELSE 'spm' END AS mode,
-       (CASE WHEN apply THEN lo ELSE n END)::BIGINT AS prefix_len,
-       (CASE WHEN apply THEN hi - lo ELSE 0 END)::BIGINT AS middle_len,
-       (CASE WHEN apply THEN n - hi ELSE 0 END)::BIGINT AS suffix_len,
-       CASE WHEN apply THEN
-         md5(CASE WHEN is_psm
-             THEN '<fim_prefix>' || p || '<fim_suffix>' || s || '<fim_middle>' || m
-             ELSE '<fim_suffix>' || s || '<fim_prefix>' || p || '<fim_middle>' || m
-             END)
-         ELSE md5(text) END AS fim_md5
-FROM parts
-"""
-
-
-def function_chunks_sql() -> str:
-    """Twin of codestats.function_chunks: identical seasoning, line split,
-    running declaration count, per-unit aggregate with an ORDER BY-pinned
-    string_agg for the content digest."""
-    return """
-WITH seasoned AS (
-  SELECT doc_id,
-         'import os' || chr(10) ||
-         'def fn_' || (doc_id % 37)::VARCHAR || '(arg):' || chr(10) ||
-         '    pass' || chr(10) ||
-         'def fn_' || ((doc_id + 1) % 37)::VARCHAR || '(arg):' || chr(10) ||
-         '    ' || text AS s
-  FROM documents
-),
-lines AS (
-  SELECT doc_id, pos, line FROM (
-    SELECT doc_id, unnest(l) AS line, generate_subscripts(l, 1) - 1 AS pos
-    FROM (SELECT doc_id, string_split(s, chr(10)) AS l FROM seasoned)
-  )
-),
-marked AS (
-  SELECT doc_id, pos, line,
-         CASE WHEN starts_with(line, 'def ') OR starts_with(line, 'class ')
-              THEN 1 ELSE 0 END AS m
-  FROM lines
-),
-units AS (
-  SELECT doc_id, pos, line, m,
-         sum(m) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::INT
-           AS unit_id
-  FROM marked
-)
-SELECT doc_id, unit_id,
-       coalesce(
-         max(CASE WHEN m = 1 THEN
-               regexp_extract(line, '(?:def|class) ([a-zA-Z_][a-zA-Z0-9_]*)', 1)
-             END),
-         '<module>') AS symbol,
-       count(*)::BIGINT AS n_lines,
-       sum(length(line))::BIGINT AS n_chars,
-       md5(string_agg(line, chr(10) ORDER BY pos)) AS unit_md5
-FROM units
-GROUP BY doc_id, unit_id
-"""
-
-
 def minhash_calibration_sql(
     n_perms: int = 16, rows_per_band: int = 4, sample_den: int = 1
 ) -> str:
@@ -4551,52 +3495,6 @@ SELECT e.est_matches,
 FROM est e
 JOIN exact x ON x.doc_a = e.doc_a AND x.doc_b = e.doc_b
 GROUP BY 1
-"""
-
-
-def repo_license_rollup_sql() -> str:
-    """Twin of codestats.repo_license_rollup over the license_detect
-    seasoning/CASE chain, grouped on the repo key (source)."""
-    return """
-WITH seasoned AS (
-  SELECT doc_id, source,
-         CASE doc_id % 5
-           WHEN 0 THEN '// Permission is hereby granted, free of charge, to any person' || chr(10)
-           WHEN 1 THEN '// Licensed under the Apache License, Version 2.0 (the "License")' || chr(10)
-           WHEN 2 THEN '// This program is free software: GNU General Public License' || chr(10)
-           WHEN 3 THEN '// Redistribution and use in source and binary forms, with or without' || chr(10)
-           ELSE ''
-         END || text AS s
-  FROM documents
-),
-low AS (SELECT doc_id, source, lower(s) AS l FROM seasoned),
-lic AS (
-  SELECT doc_id, source,
-    CASE
-      WHEN contains(l, 'permission is hereby granted') THEN 'mit'
-      WHEN contains(l, 'apache license') THEN 'apache-2.0'
-      WHEN contains(l, 'gnu general public license') THEN 'gpl-3.0'
-      WHEN contains(l, 'redistribution and use in source and binary forms') THEN 'bsd-3-clause'
-      ELSE 'unknown'
-    END AS license,
-    (CASE
-      WHEN contains(l, 'permission is hereby granted') THEN 1
-      WHEN contains(l, 'apache license') THEN 1
-      WHEN contains(l, 'gnu general public license') THEN 0
-      WHEN contains(l, 'redistribution and use in source and binary forms') THEN 1
-      ELSE 0
-    END)::BIGINT AS permissive
-  FROM low
-)
-SELECT source,
-       count(*)::BIGINT AS n_files,
-       sum(permissive)::BIGINT AS n_permissive,
-       sum(CASE WHEN license = 'gpl-3.0' THEN 1 ELSE 0 END)::BIGINT AS n_copyleft,
-       sum(CASE WHEN license = 'unknown' THEN 1 ELSE 0 END)::BIGINT AS n_unknown,
-       (CASE WHEN sum(CASE WHEN license = 'gpl-3.0' THEN 1 ELSE 0 END) = 0
-             THEN 1 ELSE 0 END)::BIGINT AS trainable
-FROM lic
-GROUP BY source
 """
 
 
@@ -4786,72 +3684,6 @@ SELECT pf.doc_id, pf.phrase_freq,
 FROM pf JOIN dls ON pf.doc_id = dls.doc_id CROSS JOIN avg_dl
 ORDER BY score_micros DESC, pf.doc_id ASC
 LIMIT {k}
-"""
-
-
-def docid_reorder_gain_sql(n_perms: int = 4) -> str:
-    """Twin of layout.docid_reorder_gain: first-band MinHash key (zero-
-    padded, lexicographic == numeric), clustered rank, exact varint gap
-    bytes per term under both layouts."""
-    gap_block = """
-  SELECT term,
-         CASE WHEN prev IS NULL THEN nid + 1 ELSE nid - prev END AS g
-  FROM (
-    SELECT term, nid, lag(nid) OVER (PARTITION BY term ORDER BY nid) AS prev
-    FROM {src}
-  )"""
-    bytes_expr = (
-        "CASE WHEN g < 128 THEN 1 WHEN g < 16384 THEN 2 "
-        "WHEN g < 2097152 THEN 3 WHEN g < 268435456 THEN 4 ELSE 5 END"
-    )
-    bits_expr = ("CASE " + " ".join(
-        f"WHEN g < {1 << w} THEN {w}" for w in range(1, 40)
-    ) + " ELSE 40 END")
-    return f"""
-WITH {_TOKHASH_CTE},
-perms(perm_id, a, b) AS (VALUES {_perms_values(n_perms)}),
-sig AS (
-  SELECT tok.doc_id, perms.perm_id,
-         min((perms.a * tok.x + perms.b) % {MERSENNE31})::BIGINT AS minhash
-  FROM tok CROSS JOIN perms GROUP BY 1, 2
-),
-bk AS (
-  SELECT doc_id,
-         string_agg(lpad(minhash::VARCHAR, 10, '0'), ',' ORDER BY perm_id) AS bk
-  FROM sig GROUP BY 1
-),
-mapping AS (
-  SELECT doc_id, (row_number() OVER (ORDER BY bk, doc_id) - 1)::BIGINT AS nid
-  FROM bk
-),
-pt AS (SELECT DISTINCT doc_id, term FROM terms WHERE term <> ''),
-po AS (SELECT pt.term, pt.doc_id::BIGINT AS nid FROM pt),
-pc AS (SELECT pt.term, m.nid FROM pt JOIN mapping m USING (doc_id)),
-go AS ({gap_block.format(src="po")}),
-gc AS ({gap_block.format(src="pc")})
-SELECT 'original' AS layout, sum({bytes_expr})::BIGINT AS total_varint_bytes,
-       sum({bits_expr})::BIGINT AS total_gap_bits,
-       count(*)::BIGINT AS n_postings
-FROM go
-UNION ALL
-SELECT 'clustered', sum({bytes_expr})::BIGINT, sum({bits_expr})::BIGINT,
-       count(*)::BIGINT
-FROM gc
-"""
-
-
-def curriculum_order_sql() -> str:
-    """Twin of sampling.curriculum_order: the quality_tiers result ranked
-    by (tier, md5 shuffle, doc_id)."""
-    return f"""
-WITH qt AS (
-{quality_tiers_sql()}
-)
-SELECT row_number() OVER (
-         ORDER BY tier ASC, md5('cur:' || doc_id::VARCHAR) ASC, doc_id ASC
-       )::BIGINT AS pos,
-       doc_id, tier
-FROM qt
 """
 
 

@@ -26,13 +26,15 @@ its own directory): the key hashes the documents parquet (path,
 mtime, size) plus a layout version, so driver runs at different scale
 factors never collide and a regenerated corpus invalidates the cache. The
 publish is atomic (build into ``*.tmp<pid>``, rename), so concurrent query
-processes can't observe a half-built index.
+processes can't observe a half-built index. A publish removes the same
+name's directories of lower versions, which no current build can load.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import re
 import shutil
 from collections.abc import Callable
 
@@ -79,7 +81,9 @@ def cached_index(
     """Build-or-load the ``name`` index of ``sf_dir``: ``build(spark,
     sf_dir, dir)`` fills an empty directory once per (content digest,
     version) on disk, and ``load(spark, dir)``'s handles are memoized per
-    Spark application."""
+    Spark application. Publishing a build deletes the ``name`` directories
+    of every lower version (any digest); newer versions and other names
+    stay."""
     key = f"{name}{version}-{_digest(sf_dir)}"
     memo = (spark.sparkContext.applicationId, key)
     if memo in _LOADED:
@@ -95,8 +99,20 @@ def cached_index(
             os.rename(tmp, base)  # atomic publish
         except OSError:  # lost a concurrent-build race — use the winner
             shutil.rmtree(tmp, ignore_errors=True)
+        else:
+            _remove_superseded(name, version)
     _LOADED[memo] = load(spark, base)
     return _LOADED[memo]
+
+
+def _remove_superseded(name: str, version: int) -> None:
+    """Delete ``{name}{v}-*`` under the cache root for every ``v < version``."""
+    pattern = re.compile(rf"^{re.escape(name)}(\d+)-")
+    root = _cache_root()
+    for entry in os.listdir(root):
+        m = pattern.match(entry)
+        if m and int(m.group(1)) < version:
+            shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
 
 
 def build_gate_index(spark: SparkSession, sf_dir: str, base: str) -> None:

@@ -16,11 +16,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # families awaiting retirement (ROADMAP open item 3).
 _PYTHON_ROWS_ALLOWED = {
     "sources/corpus.py",
-    "operators/sampling.py",
-    "operators/layout.py",
     "operators/similarity.py",
-    "operators/textstats.py",
-    "operators/bpe.py",
     "operators/dedup.py",
 }
 

@@ -1,8 +1,8 @@
 """Unit tests for the round-2 training-data-pipeline additions:
-connected-components clustering, decontamination, stratified sampling,
-and the incremental segment-merge postings round-trip.
+connected-components clustering, decontamination and the incremental
+segment-merge postings round-trip.
 
-(Oracle parity for all four is covered by tests/test_entry_parity.py /
+(Oracle parity for all three is covered by tests/test_entry_parity.py /
 the driver gate; these tests check the semantics independently —
 union-find cross-check, hand graphs, and build-vs-incremental equality.)
 """
@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from searchengine_spark.operators.components import connected_components, dedup_clusters
 from searchengine_spark.operators.dedup import decontaminate, minhash_lsh_pairs
-from searchengine_spark.operators.sampling import stratified_sample
 from searchengine_spark.sources.tables import load_table
 
 SF_SMALL = os.environ.get("PARITY_SMALL_SF_DIR", "/root/testdata/sf0.001")
@@ -93,28 +92,6 @@ def test_decontaminate_counts(spark):
         for r in decontaminate(docs, n=3, bench_mod=17, bench_rem=3).collect()
     }
     assert got == {21: 2}
-
-
-def test_stratified_sample_deterministic(spark):
-    docs = load_table(spark, SF_SMALL, "documents")
-    rates = {"en": 300_000}
-    a = sorted(r["doc_id"] for r in stratified_sample(docs, rates, 700_000).collect())
-    b = sorted(
-        r["doc_id"]
-        for r in stratified_sample(docs.repartition(7), rates, 700_000).collect()
-    )
-    assert a == b and len(a) > 0
-    # the kept set is a subset of the corpus and the en rate is below the
-    # default rate → en keep fraction should be lower
-    kept = stratified_sample(docs, rates, 700_000)
-    frac = {
-        r["lang"]: r["k"] / r["n"]
-        for r in docs.join(kept.select("doc_id", F.lit(1).alias("_s")), "doc_id", "left")
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(F.coalesce("_s", F.lit(0))).alias("k"))
-        .collect()
-    }
-    assert frac["en"] < max(v for k, v in frac.items() if k != "en")
 
 
 def test_incremental_merge_equals_direct(spark):
@@ -237,56 +214,6 @@ def test_strip_html_roundtrip(spark):
         assert got[doc_id]["n_tag_chars"] > 0
 
 
-def test_repetition_stats_known_values(spark):
-    from searchengine_spark.operators.textstats import repetition_stats
-
-    docs = spark.createDataFrame(
-        [(1, "a b a b a b c"), (2, "x y x z"), (3, "solo")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in repetition_stats(docs).collect()}
-    # doc 1: bigrams {a b:3, b a:2, b c:1} -> total 6, distinct 3
-    r1 = got[1]
-    assert (r1["n_bigrams"], r1["n_distinct_bigrams"]) == (6, 3)
-    assert r1["dup_bigram_frac_micros"] == 500000
-    assert (r1["top_bigram"], r1["top_bigram_n"], r1["top_bigram_frac_micros"]) == (
-        "a b", 3, 500000,
-    )
-    # doc 2: all counts tie at 1 -> alphabetically-first bigram wins
-    assert got[2]["top_bigram"] == "x y"
-    assert got[2]["dup_bigram_frac_micros"] == 0
-    # doc 3: <2 tokens -> no bigrams, excluded
-    assert 3 not in got
-
-
-def test_pii_scrub_matches_python_re(spark):
-    import hashlib
-    import re as _re
-
-    from searchengine_spark.operators.textstats import (
-        PII_EMAIL_RE, PII_IPV4_RE, PII_PHONE_RE, pii_scrub,
-    )
-
-    rows = [(7, "hello world"), (123, "already has a@b.io and 1.2.3.4 inside")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in pii_scrub(docs).collect()}
-    for doc_id, text in rows:
-        seasoned = (
-            f"{text} Contact user{doc_id}@mail.example (ip 10.{doc_id % 250}"
-            f".0.{doc_id % 100}, tel +1-555-{1000 + doc_id % 9000})"
-        )
-        redacted = _re.sub(PII_EMAIL_RE, "<EMAIL>", seasoned)
-        redacted = _re.sub(PII_IPV4_RE, "<IP>", redacted)
-        redacted = _re.sub(PII_PHONE_RE, "<PHONE>", redacted)
-        r = got[doc_id]
-        assert r["n_emails"] == len(_re.findall(PII_EMAIL_RE, seasoned))
-        assert r["n_ipv4"] == len(_re.findall(PII_IPV4_RE, seasoned))
-        assert r["n_phones"] == len(_re.findall(PII_PHONE_RE, seasoned))
-        assert r["redacted_md5"] == hashlib.md5(redacted.encode()).hexdigest()
-        assert r["n_chars_delta"] == len(seasoned) - len(redacted)
-    assert got[123]["n_emails"] == 2 and got[123]["n_ipv4"] == 2
-
-
 def test_fuzzy_suggest_edit_classes(spark):
     """The SymSpell deletion-key join must surface every Levenshtein<=1
     edit class: exact (dist 0), insertion into the query (ag->agg),
@@ -309,33 +236,6 @@ def test_fuzzy_suggest_edit_classes(spark):
     assert ordered[0] == ("sort", 0)  # exact match ranks first
     assert all(d <= 1 for _, d in ordered)
     assert got("zzzzzz") == []  # no neighbors -> empty, no crash
-
-
-def test_unigram_logprob_hand_corpus(spark):
-    """mean_nll_micros on a 2-doc corpus checked against hand arithmetic:
-    contributions round to micros per (doc, term) BEFORE the sum, then
-    integer-divide by doc_len."""
-    import math
-
-    from searchengine_spark.operators import serve
-
-    # corpus: doc0 = "x x y", doc1 = "y z"  -> total tokens = 5
-    # cf: x=2, y=2, z=1
-    post = spark.createDataFrame(
-        [(0, "x", 2, 3), (0, "y", 1, 3), (1, "y", 1, 2), (1, "z", 1, 2)],
-        "doc_id long, term string, tf long, dl long",
-    )
-    lex = spark.createDataFrame(
-        [("x", 2), ("y", 2), ("z", 1)], "term string, cf long"
-    )
-    idx = {"postings": post, "lexicon": lex, "sum_dl": 5}
-    got = {
-        r["doc_id"]: r["mean_nll_micros"]
-        for r in serve.unigram_logprob(spark, idx).collect()
-    }
-    c = lambda tf, cf: round(tf * math.log(5.0 / cf) * 1e6)
-    assert got[0] == (c(2, 2) + c(1, 2)) // 3
-    assert got[1] == (c(1, 2) + c(1, 1)) // 2
 
 
 def test_hits_sequential_update_hand_graph():
@@ -413,35 +313,6 @@ def test_proximity_contains_phrase_hits(spark):
     assert serve.proximity_match(spark, idx, "hash", "zzzz", slop=3).count() == 0
 
 
-def test_prepare_pipeline_survivor_properties(spark):
-    """Every doc surviving into training chunks must satisfy all five stage
-    predicates: quality_ok, canonical under exact dedup, outside the
-    benchmark slice, zero benchmark-shingle overlap, kept by the sample."""
-    from searchengine_spark.operators.dedup import decontaminate, exact_dedup_groups
-    from searchengine_spark.operators.sampling import stratified_sample
-    from searchengine_spark.operators.textstats import quality_score
-    from searchengine_spark.plans.prepare import prepare_training_chunks
-    from searchengine_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    rates, default = {"en": 300_000}, 700_000
-    chunks = prepare_training_chunks(docs, rates, default).collect()
-    assert chunks
-    survivors = {r["doc_id"] for r in chunks}
-    ok = {r["doc_id"] for r in quality_score(docs).filter("quality_ok").collect()}
-    canon = {r["canonical_doc_id"] for r in exact_dedup_groups(docs).collect()}
-    contaminated = {r["doc_id"] for r in decontaminate(docs, n=5).collect()}
-    sampled = {r["doc_id"] for r in stratified_sample(docs, rates, default).collect()}
-    assert survivors <= ok and survivors <= canon and survivors <= sampled
-    assert not (survivors & contaminated)
-    assert all(d % 17 != 3 for d in survivors)
-    # and chunking is content-complete: chunk ids per doc are 0..n dense
-    per_doc: dict[int, list[int]] = {}
-    for r in chunks:
-        per_doc.setdefault(r["doc_id"], []).append(r["chunk_id"])
-    assert all(sorted(v) == list(range(len(v))) for v in per_doc.values())
-
-
 def _levenshtein(a: str, b: str) -> int:
     prev = list(range(len(b) + 1))
     for i, ca in enumerate(a, 1):
@@ -493,149 +364,6 @@ def test_symspell_key_property():
         assert {t for t in candidates if _levenshtein(q, t) <= 1} == expected
 
     check()
-
-
-def test_hll_estimate_accuracy_and_merge(spark):
-    """(a) the HLL estimate lands within the sketch's error envelope of the
-    true distinct-term count; (b) the sketch of the whole corpus equals the
-    max-merge of the sketches of disjoint halves (mergeability — the scale
-    property the register design exists for)."""
-    from pyspark.sql import functions as F
-
-    from searchengine_spark.functions.tokenize import exploded_tokens
-    from searchengine_spark.operators import sketches
-    from searchengine_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    regs = sketches.hll_registers(docs).collect()
-    est = sketches.hll_estimate([(r.bucket, r.rho) for r in regs])
-    true = exploded_tokens(docs).select("term").distinct().count()
-    # p=8 → ~1.04/sqrt(256) ≈ 6.5% std error; allow 4 sigma
-    assert abs(est - true) <= max(4 * 1.04 / 16 * true, 8)
-
-    even = docs.filter(F.col("doc_id") % 2 == 0)
-    odd = docs.filter(F.col("doc_id") % 2 == 1)
-    merged = sketches.hll_merge(
-        sketches.hll_registers(even), sketches.hll_registers(odd)
-    )
-    whole = {(r.bucket, r.rho) for r in regs}
-    assert {(r.bucket, r.rho) for r in merged.collect()} == whole
-
-
-def test_cms_never_underestimates_and_heavy_terms_exactish(spark):
-    """CMS point estimates are >= true counts for every vocabulary term
-    (the sketch's one-sided guarantee), and per-row counter sums equal the
-    total token count (mass conservation)."""
-    from searchengine_spark.functions.tokenize import exploded_tokens
-    from searchengine_spark.operators import sketches
-    from searchengine_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    counters = [
-        (r["row"], r.col, r.n) for r in sketches.cms_counters(docs).collect()
-    ]
-    true = {
-        r.term: r.n
-        for r in exploded_tokens(docs).groupBy("term").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    total = sum(true.values())
-    for r in range(sketches.CMS_D):
-        assert sum(n for row, _, n in counters if row == r) == total
-    for term, n in true.items():
-        assert sketches.cms_estimate(counters, term) >= n
-
-
-def test_bloom_no_false_negatives_and_mergeable(spark):
-    """(a) every inserted key probes maybe_present (the Bloom one-sided
-    guarantee — a false negative would make the crawler re-skip a page it
-    never fetched); (b) the position set of the whole key set equals the
-    distinct-union of the halves' position sets (mergeability — per-
-    partition filters fold by union, the property the representation
-    exists for); (c) a saturation sanity bound: known-absent keys don't
-    all collide into false positives at this load factor."""
-    from pyspark.sql import functions as F
-
-    from searchengine_spark.operators import sketches
-    from searchengine_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    keys = docs.select(
-        F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("key")
-    )
-    positions = sketches.bloom_positions(keys)
-
-    present = keys.withColumn("actually_present", F.lit(1).cast("long"))
-    absent = spark.range(200).select(
-        F.concat(F.lit("nope:"), F.col("id").cast("string")).alias("key"),
-        F.lit(0).cast("long").alias("actually_present"),
-    )
-    got = {
-        r.key: r.maybe_present
-        for r in sketches.bloom_probe(positions, present.unionByName(absent)).collect()
-    }
-    inserted = {r.key for r in keys.collect()}
-    assert all(got[k] == 1 for k in inserted)  # no false negatives, ever
-    fps = sum(got[f"nope:{i}"] for i in range(200))
-    assert fps <= 40  # ~500 keys * 4 hashes in 65536 bits -> fp ~ 1e-5
-
-    even = keys.filter(F.col("key").substr(5, 99).cast("long") % 2 == 0)
-    odd = keys.filter(F.col("key").substr(5, 99).cast("long") % 2 == 1)
-    merged = sketches.bloom_positions(even).unionByName(
-        sketches.bloom_positions(odd)
-    ).distinct()
-    assert {r.pos for r in merged.collect()} == {r.pos for r in positions.collect()}
-
-
-def test_nb_classifier_learns_and_covers_heldout(spark):
-    """(a) every held-out doc gets exactly one prediction row (prior-only
-    docs included — a doc whose text tokenizes to nothing must not drop);
-    (b) accuracy floor on the seasoned corpus: the count-trained model must
-    actually learn the marker distributions (>= 0.9 here; a broken
-    smoothing/prior/argmax would land near the 0.44 majority-class rate);
-    (c) an UNSEASONED corpus stays label-independent, so predictions
-    collapse toward the prior argmax — the seasoning is what carries
-    signal, not a leak in the split."""
-    from searchengine_spark.operators import classify
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    pred = classify.nb_train_predict(
-        classify.season_lang_markers(docs), label_col="lang"
-    ).collect()
-    n_test = docs.filter(F.col("doc_id") % 10 >= 8).count()
-    assert len(pred) == n_test
-    assert len({r["doc_id"] for r in pred}) == n_test
-    acc = sum(1 for r in pred if r["label_pred"] == r["label_true"]) / n_test
-    assert acc >= 0.9
-    plain = classify.nb_train_predict(docs, label_col="lang").collect()
-    plain_acc = sum(1 for r in plain if r["label_pred"] == r["label_true"]) / len(plain)
-    assert plain_acc < acc
-
-
-def test_bpe_train_properties(spark):
-    """(a) best-pair counts are non-increasing (merging the global-max pair
-    can only create pairs bounded by its count); (b) new_symbol = left+right
-    and rules are distinct; (c) encoding the corpus words with the learned
-    rules reproduces greedy BPE: every learned symbol appears as a piece,
-    and concatenating a word's pieces restores the word; (d) rules are
-    identical under a different input partitioning (determinism)."""
-    from searchengine_spark.operators import bpe
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    rules = bpe.bpe_train(docs, n_merges=6).orderBy("merge_id").collect()
-    assert len(rules) == 6
-    counts = [r["pair_count"] for r in rules]
-    assert counts == sorted(counts, reverse=True)
-    assert all(r["new_symbol"] == r["left"] + r["right"] for r in rules)
-    assert len({(r["left"], r["right"]) for r in rules}) == 6
-
-    words = bpe.word_counts(docs).select("word")
-    enc = bpe.bpe_encode(words, [(r["left"], r["right"]) for r in rules]).collect()
-    assert all("".join(row["pieces"]) == row["word"] for row in enc)
-    seen_pieces = {p for row in enc for p in row["pieces"]}
-    assert {r["new_symbol"] for r in rules} <= seen_pieces
-
-    rules2 = bpe.bpe_train(docs.repartition(13), n_merges=6).orderBy("merge_id").collect()
-    assert [tuple(r) for r in rules2] == [tuple(r) for r in rules]
 
 
 def test_line_dedup_global_first_occurrence(spark):
@@ -706,77 +434,6 @@ def test_anchor_terms_mass_conservation(spark):
     assert out.filter(F.col("anchor_tf") > 1).count() > 0
 
 
-def test_dsir_weights_direction_and_coverage(spark):
-    from searchengine_spark.operators.sampling import dsir_weights
-
-    # docs 3 and 20 (% 17 == 3) are the target slice; doc 1 is a verbatim
-    # copy of the target text, doc 2 shares nothing with it
-    rows = [
-        (3, "alpha beta gamma delta epsilon"),
-        (20, "alpha beta gamma delta epsilon"),
-        (1, "alpha beta gamma delta epsilon"),
-        (2, "one two three four five"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r["weight_micros"]
-        for r in dsir_weights(docs, n_buckets=64).collect()
-    }
-    # target docs never appear; every non-empty candidate does
-    assert set(got) == {1, 2}
-    # the target-identical doc must outweigh the disjoint doc
-    assert got[1] > got[2]
-    # partition-count invariance (integer contract)
-    again = {
-        r["doc_id"]: r["weight_micros"]
-        for r in dsir_weights(docs.repartition(5), n_buckets=64).collect()
-    }
-    assert again == got
-
-
-def test_bigram_logprob_prefers_predictable_text(spark):
-    from searchengine_spark.operators.textstats import bigram_logprob
-
-    docs = spark.createDataFrame(
-        [(1, "a a a a a a"), (2, "q w e r t y")], "doc_id long, text string"
-    )
-    got = {r["doc_id"]: r for r in bigram_logprob(docs).collect()}
-    assert set(got) == {1, 2}
-    # both docs have 6 tokens -> 5 adjacent bigrams
-    assert got[1]["n_bigrams"] == 5 and got[2]["n_bigrams"] == 5
-    # the fully repetitive doc is more predictable under the corpus LM
-    assert got[1]["mean_nll_micros"] < got[2]["mean_nll_micros"]
-    # partition-count invariance (integer contract)
-    again = {
-        r["doc_id"]: r["mean_nll_micros"]
-        for r in bigram_logprob(docs.repartition(4)).collect()
-    }
-    assert again == {d: r["mean_nll_micros"] for d, r in got.items()}
-
-
-def test_contrastive_pairs_successor_structure(spark):
-    from searchengine_spark.operators.textstats import contrastive_pairs, doc_chunks
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    pairs = contrastive_pairs(docs, chunk_size=8, stride=8).collect()
-    assert pairs
-    # every pair is (i, i+1) within one doc and never content-identical
-    assert all(r["positive_chunk_id"] == r["anchor_chunk_id"] + 1 for r in pairs)
-    assert all(r["anchor_md5"] != r["positive_md5"] for r in pairs)
-    # pair count = successor pairs minus the md5-identical ones
-    ch = doc_chunks(docs, chunk_size=8, stride=8).collect()
-    by_doc = {}
-    for r in ch:
-        by_doc.setdefault(r["doc_id"], {})[r["chunk_id"]] = r["chunk_md5"]
-    expected = sum(
-        1
-        for d, cs in by_doc.items()
-        for i in cs
-        if i + 1 in cs and cs[i] != cs[i + 1]
-    )
-    assert len(pairs) == expected
-
-
 def test_triangle_count_matches_bruteforce(spark):
     from searchengine_spark.operators.graph_demo import triangle_count
 
@@ -803,34 +460,6 @@ def test_triangle_count_matches_bruteforce(spark):
     assert row["n_nodes"] == n
     assert row["n_edges"] == len(und)
     assert row["n_triangles"] == tri and tri > 0
-
-
-def test_mask_spans_rate_and_islands(spark):
-    from searchengine_spark.operators.textstats import mask_spans, token_stats
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    spans = mask_spans(docs, mask_ppm=150_000).collect()
-    assert spans
-    masked_tokens = sum(r["span_len"] for r in spans)
-    total_tokens = sum(
-        r["n_tokens"] for r in token_stats(docs).collect()
-    )
-    # mask rate ~15% (md5 positions are uniform; allow wide slack)
-    assert 0.10 < masked_tokens / total_tokens < 0.20
-    # spans within one doc never touch (they would have merged)
-    by_doc = {}
-    for r in spans:
-        by_doc.setdefault(r["doc_id"], []).append((r["start_pos"], r["span_len"]))
-    for d, ss in by_doc.items():
-        ss.sort()
-        for (s1, l1), (s2, _) in zip(ss, ss[1:]):
-            assert s1 + l1 < s2
-    # determinism across partition counts
-    again = sorted(
-        (r["doc_id"], r["start_pos"], r["span_len"])
-        for r in mask_spans(docs.repartition(9), mask_ppm=150_000).collect()
-    )
-    assert again == sorted((r["doc_id"], r["start_pos"], r["span_len"]) for r in spans)
 
 
 def test_percolate_equals_term_search_all(spark):
@@ -945,47 +574,6 @@ def test_collapse_topk_one_per_group(spark):
             (s, -d) for d, s in scores.items() if src[d] == r["group_key"]
         )
         assert (r["score_micros"], -r["doc_id"]) == best
-
-
-def test_epoch_shuffle_is_distinct_permutations(spark):
-    """Each epoch is a full 1..N permutation; different epochs disagree."""
-    from searchengine_spark.operators.sampling import epoch_shuffle
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    e0 = {r["doc_id"]: r["pos"] for r in epoch_shuffle(docs, 0).collect()}
-    e1 = {r["doc_id"]: r["pos"] for r in epoch_shuffle(docs, 1).collect()}
-    n = len(e0)
-    assert set(e0.values()) == set(range(1, n + 1))
-    assert set(e1.values()) == set(range(1, n + 1))
-    assert set(e0) == set(e1)
-    assert sum(1 for d in e0 if e0[d] != e1[d]) > n // 2  # genuinely reshuffled
-
-
-def test_quality_tiers_ordered_and_balanced(spark):
-    """Within each language: tier sizes differ by <=1 and tier boundaries
-    respect the surprisal order (head <= middle <= tail)."""
-    from collections import Counter
-
-    from searchengine_spark.operators.sampling import quality_tiers
-    from searchengine_spark.plans.gate_index import gate_index
-
-    idx = gate_index(spark, SF_SMALL)
-    docs = load_table(spark, SF_SMALL, "documents")
-    rows = quality_tiers(spark, idx, docs).collect()
-    assert rows
-    by_lang: dict = {}
-    for r in rows:
-        by_lang.setdefault(r["lang"], []).append((r["tier"], r["mean_nll_micros"]))
-    for lang, pairs in by_lang.items():
-        sizes = Counter(t for t, _ in pairs)
-        assert set(sizes) <= {0, 1, 2}
-        if len(pairs) >= 3:
-            assert max(sizes.values()) - min(sizes.values()) <= 1, (lang, sizes)
-        for lo, hi in ((0, 1), (1, 2)):
-            a = [m for t, m in pairs if t == lo]
-            b = [m for t, m in pairs if t == hi]
-            if a and b:
-                assert max(a) <= min(b), (lang, lo, hi)
 
 
 def test_winnowing_guarantee_and_density(spark):
@@ -1132,43 +720,6 @@ def test_exact_substring_arrow_equals_catalyst(spark):
     rows_c = sorted(map(tuple, c.collect()))
     assert rows_a == rows_c
     assert len(rows_a) > 0  # the synthetic corpus seeds shared spans
-
-
-def test_kn_bigram_logprob_matches_pure_python(spark):
-    """Kneser-Ney bigram surprisal recomputed in pure Python on a hand
-    corpus — exact micros equality — plus the KN sanity property that the
-    smoothed probability of every scored bigram stays in (0, 1]."""
-    import math
-    from collections import Counter
-
-    from searchengine_spark.operators.textstats import kn_bigram_logprob
-
-    texts = {
-        1: "the cat sat on the mat",
-        2: "the dog sat on the log",
-        3: "a cat and a dog and a cat",
-        4: "san francisco san francisco san diego",
-    }
-    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    got = {r.doc_id: (r.n_bigrams, r.mean_nll_micros) for r in kn_bigram_logprob(docs, discount=0.75).collect()}
-
-    toks = {d: t.split() for d, t in texts.items()}
-    cb = Counter()
-    for t in toks.values():
-        for a, b in zip(t, t[1:]):
-            cb[(a, b)] += 1
-    cx0 = Counter(); n1f = Counter(); n1b = Counter()
-    for (a, b), c in cb.items():
-        cx0[a] += c; n1f[a] += 1; n1b[b] += 1
-    ntypes = float(len(cb))
-    D = 0.75
-    for d, t in toks.items():
-        s = 0; n = 0
-        for a, b in zip(t, t[1:]):
-            p = (cb[(a, b)] - D) / cx0[a] + (D * n1f[a] / cx0[a]) * (n1b[b] / ntypes)
-            assert 0.0 < p <= 1.0
-            s += int(round(-math.log(p) * 1e6)); n += 1
-        assert got[d] == (n, s // n), (d, got[d], (n, s // n))
 
 
 def test_symbol_rank_mass_and_partition_invariance(spark):

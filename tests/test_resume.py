@@ -115,6 +115,31 @@ def test_gate_index_manifest_and_lineage(spark, tmp_path, monkeypatch):
     assert doc_ids <= set(range(N_DOCS)) and len(doc_ids) > N_DOCS // 2
 
 
+def test_cached_index_removes_superseded_versions(spark, tmp_path, monkeypatch):
+    """Publishing ``probe3-<digest>`` deletes the lower versions of
+    ``probe`` and nothing else: not the same version under another digest,
+    not a newer version, not another name (one sharing the prefix
+    included)."""
+    from searchengine_spark.plans.gate_index import _cache_root, cached_index
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    root = _cache_root()
+    seeded = ["probe2-0123456789abcdef", "probe3-fedcba9876543210",
+              "probe4-0123456789abcdef", "other2-0123456789abcdef",
+              "probes1-0123456789abcdef"]
+    for d in seeded:
+        os.makedirs(os.path.join(root, d))
+
+    def build(spark, sf_dir, base):
+        open(os.path.join(base, "built"), "w").close()
+
+    idx = cached_index(
+        spark, str(tmp_path / "sf"), "probe", 3, build, lambda spark, base: {"dir": base}
+    )
+    assert os.path.exists(os.path.join(idx["dir"], "built"))
+    assert sorted(os.listdir(root)) == sorted(seeded[1:] + [os.path.basename(idx["dir"])])
+
+
 def test_partitioning_independence(spark, tmp_path_factory):
     """Same corpus, different partition counts → identical index content
     (the sandbox proxy for N vs 4N executors; doc_ids are rank-based)."""
