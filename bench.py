@@ -100,8 +100,12 @@ HEADLINE = [
     "more_like_this",
     "shard_routing",
     "shard_rebalance_moves",
+    "epoch_shuffle",
+    "quality_tiers",
+    "curriculum_order",
     "winnowing_fingerprints",
     "compound_split",
+    "temperature_mix",
     "dedup_clusters",
     "dedup_survivors",
     "exact_substring_spans",
@@ -112,6 +116,8 @@ HEADLINE = [
     "ident_subtokens",
     "ppr_scores",
     "decontaminate",
+    "dsir_weights",
+    "stratified_sample",
     "fetch_pages",
     "robots_rules",
     "robots_filtered_fetch",
@@ -119,13 +125,18 @@ HEADLINE = [
     "strip_html",
     "ascii_fold",
     "token_stats",
+    "bloom_visited",
     "fuzzy_suggest",
+    "unigram_logprob",
     "percolate_matches",
     "doc_keywords",
     "pmi_top_pairs",
     "domain_kl_drift",
     "zipf_slope",
     "heaps_law",
+    "zorder_layout",
+    "docid_reorder_gain",
+    "weighted_sample",
     "crawl_schedule",
     "hits_scores",
     "graph_triangles",
@@ -1313,11 +1324,13 @@ itself consumes them at scale (star-edge clustering, never m^2 pairs).
 
 | operator | local[8] best (s) | local[32] best (s) | speedup | raw rounds 8 | raw rounds 32 |
 |---|---|---|---|---|---|
+| dsir_weights (uni+bigram features) | 36.81 | 22.61 | 1.63x | [77.64, 36.81] | [68.29, 22.61] |
 | minhash_signatures (16 perms) | 8.33 | 7.20 | 1.16x | [20.73, 8.33] | [24.94, 7.2] |
 | triangle_count (degree-oriented) | 5.10 | 5.58 | 0.91x | [6.92, 5.1] | [8.28, 5.58] |
 
 Read against the machine ceilings above (pure-CPU 8->32 ceiling ~2.0x,
-parallel-copy ceiling <1x): the sub-10s ops are dominated by
+parallel-copy ceiling <1x): the heaviest op (dsir, ~160M feature rows)
+reaches 1.63x = 0.81 of the CPU ceiling; the sub-10s ops are dominated by
 fixed per-job overhead (session scheduling + tiny-shuffle latency) that
 more cores cannot amortize at this input size — their plans (one map +
 map-side-combined aggregates) add executors without new barriers, which is

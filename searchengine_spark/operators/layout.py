@@ -21,6 +21,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from searchengine_spark.operators.literals import local_frame
+
 
 def _interleave(x: Column, y: Column, bits: int) -> Column:
     """Morton-interleave two ``bits``-wide non-negative ints: bit i of x
@@ -148,7 +150,7 @@ def docid_reorder_gain(
     for b, n in counts:
         offsets.append((b, acc))
         acc += n
-    off = spark.createDataFrame(offsets, "b string, off long")
+    off = local_frame(spark, offsets, "b string, off long")
     w = Window.partitionBy("b").orderBy(F.asc("bk"), F.asc(id_col))
     mapping = (
         keyed.withColumn("r", F.row_number().over(w))

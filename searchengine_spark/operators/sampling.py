@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from searchengine_spark.operators.literals import local_frame
+
 PPM = 1_000_000
 
 
@@ -216,7 +218,7 @@ def epoch_shuffle(docs: DataFrame, epoch: int, n_buckets: int = 256) -> DataFram
     The global rank is computed WITHOUT a single-partition window: the key's
     first byte is an ORDERED bucket (hex-string order == bucket-value
     order), so rank = per-bucket row_number + a broadcast prefix-sum of the
-    256 bucket counts (the pack_chunks two-phase pattern). At 10^12 docs
+    256 bucket counts (a two-phase distributed prefix sum). At 10^12 docs
     this is one hash exchange on the bucket plus a 256-row driver job.
 
     Output: (pos, doc_id) with pos = 1..N in shuffled order."""
@@ -238,7 +240,7 @@ def epoch_shuffle(docs: DataFrame, epoch: int, n_buckets: int = 256) -> DataFram
     for b, n in counts:
         offsets.append((b, acc))
         acc += n
-    off = spark.createDataFrame(offsets, "b int, off long")
+    off = local_frame(spark, offsets, "b int, off long")
     w = Window.partitionBy("b").orderBy(F.asc("h"), F.asc("doc_id"))
     return (
         keyed.withColumn("r", F.row_number().over(w))
@@ -289,8 +291,8 @@ def quality_tiers(spark, idx: dict, docs: DataFrame) -> DataFrame:
             rows.append((lang, vb, acc))
             acc += n
         totals[lang] = acc
-    off = spark.createDataFrame(rows, "lang string, vb long, off long")
-    tot = spark.createDataFrame(list(totals.items()), "lang string, n_lang long")
+    off = local_frame(spark, rows, "lang string, vb long, off long")
+    tot = local_frame(spark, list(totals.items()), "lang string, n_lang long")
     w = Window.partitionBy("lang", "vb").orderBy(
         F.asc("mean_nll_micros"), F.asc("doc_id")
     )
@@ -371,7 +373,7 @@ def curriculum_order(spark, idx: dict, docs: DataFrame) -> DataFrame:
     for (tier, b), n in counts:
         rows.append((tier, b, acc))
         acc += n
-    off = spark.createDataFrame(rows, "tier long, b int, off long")
+    off = local_frame(spark, rows, "tier long, b int, off long")
     w = Window.partitionBy("tier", "b").orderBy(F.asc("h"), F.asc("doc_id"))
     return (
         keyed.withColumn("r", F.row_number().over(w))

@@ -865,6 +865,48 @@ def fuzzy_suggest_multi(
     )
 
 
+def unigram_logprob(spark: SparkSession, idx: dict) -> DataFrame:
+    """Per-document mean unigram surprisal (the in-sandbox analog of the
+    CCNet/KenLM perplexity quality filter): for each document,
+    ``mean_nll_micros = (sum over terms of round(tf * ln(total_tokens/cf)
+    * 1e6)) div doc_len``.
+
+    Served entirely from the index: postings (term, doc_id, tf, dl) join the
+    lexicon's corpus frequencies — both sides are bucketed by term hash, so
+    at scale this is a co-partitioned join with no corpus scan; the total
+    token count is the manifest's ``sum_dl`` scalar (every kept token adds 1
+    to exactly one tf). Contributions round to bigint micros before the
+    per-doc sum, so the result is exact and partition-count-invariant.
+    Not a query ranker, so not through :func:`_scored`: it reads every
+    posting against the whole lexicon, where the core serves |q| terms."""
+    total = F.lit(float(idx["sum_dl"]))
+    contrib = (
+        idx["postings"]
+        .select("term", "doc_id", "tf", "dl")
+        .join(idx["lexicon"].select("term", "cf"), "term")
+        .select(
+            "doc_id",
+            "dl",
+            F.round(
+                F.col("tf").cast("double")
+                * F.log(total / F.col("cf").cast("double"))
+                * F.lit(1e6)
+            )
+            .cast("long")
+            .alias("c_micros"),
+        )
+    )
+    return (
+        contrib.groupBy("doc_id", "dl")
+        .agg(F.sum("c_micros").alias("s"))
+        .select(
+            "doc_id",
+            F.col("dl").cast("long").alias("dl"),
+            F.expr("s div dl").alias("mean_nll_micros"),
+        )
+    )
+
+
 def proximity_match(
     spark: SparkSession, idx: dict, term_a: str, term_b: str, slop: int = 3
 ) -> DataFrame:

@@ -5,6 +5,7 @@ Zipf slope direction, containment of a literal subset, rerank bounds)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from searchengine_spark.operators import corpusstats, dedup
 
@@ -104,6 +105,93 @@ def test_heaps_law_sublinear_growth(spark):
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     sat = corpusstats.heaps_law(docs, n_checkpoints=10).collect()[0]
     assert sat["n_terms"] == 10 and sat["slope_micros"] == 0
+
+
+def test_zorder_matches_python_morton(spark):
+    from searchengine_spark.operators.layout import zorder_layout
+
+    rows = [
+        (0, "2024-01-01 00:00:00", 0),
+        (1, "2024-01-01 06:00:00", 5),
+        (2, "2024-01-01 12:00:00", 9),
+        (3, "2024-01-01 18:00:00", 2),
+        (4, "2024-01-02 00:00:00", 7),
+    ]
+    ev = spark.createDataFrame(
+        rows, "event_id long, ts string, user_id long"
+    ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    out = {r["event_id"]: r for r in zorder_layout(ev, bits=16, n_groups=64).collect()}
+
+    def morton(x, y, bits=16):
+        z = 0
+        for i in range(bits):
+            z |= ((x >> i) & 1) << (2 * i)
+            z |= ((y >> i) & 1) << (2 * i + 1)
+        return z
+
+    import datetime as dt
+
+    ts = [dt.datetime.fromisoformat(t).timestamp() for _, t, _ in rows]
+    us = [u for _, _, u in rows]
+    t_lo, t_hi = min(ts), max(ts)
+    u_lo, u_hi = min(us), max(us)
+    top = (1 << 16) - 1
+    for eid, t, u in [(r[0], ts[i], us[i]) for i, r in enumerate(rows)]:
+        sx = int((u - u_lo) * top) // max(1, u_hi - u_lo)
+        sy = int((t - t_lo) * top) // int(max(1, t_hi - t_lo))
+        z = morton(sx, sy)
+        assert out[eid]["zval"] == z
+        assert out[eid]["file_group"] == z >> (32 - 6)
+
+
+def test_zorder_groups_have_tight_boxes(spark):
+    """The layout property that makes Z-order worth writing: per-file-group
+    bounding boxes in (user, time) are small vs the global extent, so
+    parquet min/max stats prune on EITHER dimension."""
+    from searchengine_spark.operators.layout import zorder_layout
+    from searchengine_spark.sources.tables import load_table
+
+    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    z = zorder_layout(ev, bits=16, n_groups=64)
+    joined = z.join(ev.select("event_id", "user_id", "ts"), "event_id")
+    boxes = (
+        joined.groupBy("file_group")
+        .agg(
+            (F.max("user_id") - F.min("user_id")).alias("u_span"),
+            (F.max(F.unix_micros(F.col("ts").cast("timestamp")))
+             - F.min(F.unix_micros(F.col("ts").cast("timestamp")))).alias("t_span"),
+        )
+        .collect()
+    )
+    glob = joined.agg(
+        (F.max("user_id") - F.min("user_id")).alias("u"),
+        (F.max(F.unix_micros(F.col("ts").cast("timestamp")))
+         - F.min(F.unix_micros(F.col("ts").cast("timestamp")))).alias("t"),
+    ).collect()[0]
+    # 64 groups = 3 bits per dimension: every group's box must be ≤ ~1/8 of
+    # the global extent (+1 bucket of slack for boundary rounding)
+    for b in boxes:
+        assert b["u_span"] <= glob["u"] // 8 + max(1, glob["u"] // 64)
+        assert b["t_span"] <= glob["t"] // 8 + max(1, glob["t"] // 64)
+
+
+def test_weighted_sample_prefers_heavy_docs(spark):
+    from searchengine_spark.operators.sampling import weighted_sample_topn
+
+    # 20 light docs (w=10) + 5 heavy docs (w=100000): A-ES keys ln(u)/w pull
+    # heavy docs toward 0 (the max), so the top-5 must be mostly heavy under
+    # any salt; check several salts to rule out a lucky draw
+    rows = [(i, "x", "s", 10) for i in range(20)] + [
+        (100 + i, "x", "s", 100_000) for i in range(5)
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, source string, n_chars long"
+    )
+    heavy_hits = 0
+    for salt in ("a", "b", "c", "d"):
+        top = weighted_sample_topn(docs, n=5, salt=salt).collect()
+        heavy_hits += sum(1 for r in top if r["doc_id"] >= 100)
+    assert heavy_hits >= 16  # ≥80% of slots go to the 10000× heavier docs
 
 
 def test_crawl_schedule_slots_dense_per_host(spark):

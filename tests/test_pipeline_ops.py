@@ -1,8 +1,8 @@
 """Unit tests for the round-2 training-data-pipeline additions:
-connected-components clustering, decontamination and the incremental
-segment-merge postings round-trip.
+connected-components clustering, decontamination, stratified sampling,
+and the incremental segment-merge postings round-trip.
 
-(Oracle parity for all three is covered by tests/test_entry_parity.py /
+(Oracle parity for all four is covered by tests/test_entry_parity.py /
 the driver gate; these tests check the semantics independently —
 union-find cross-check, hand graphs, and build-vs-incremental equality.)
 """
@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from searchengine_spark.operators.components import connected_components, dedup_clusters
 from searchengine_spark.operators.dedup import decontaminate, minhash_lsh_pairs
+from searchengine_spark.operators.sampling import stratified_sample
 from searchengine_spark.sources.tables import load_table
 
 SF_SMALL = os.environ.get("PARITY_SMALL_SF_DIR", "/root/testdata/sf0.001")
@@ -92,6 +93,28 @@ def test_decontaminate_counts(spark):
         for r in decontaminate(docs, n=3, bench_mod=17, bench_rem=3).collect()
     }
     assert got == {21: 2}
+
+
+def test_stratified_sample_deterministic(spark):
+    docs = load_table(spark, SF_SMALL, "documents")
+    rates = {"en": 300_000}
+    a = sorted(r["doc_id"] for r in stratified_sample(docs, rates, 700_000).collect())
+    b = sorted(
+        r["doc_id"]
+        for r in stratified_sample(docs.repartition(7), rates, 700_000).collect()
+    )
+    assert a == b and len(a) > 0
+    # the kept set is a subset of the corpus and the en rate is below the
+    # default rate → en keep fraction should be lower
+    kept = stratified_sample(docs, rates, 700_000)
+    frac = {
+        r["lang"]: r["k"] / r["n"]
+        for r in docs.join(kept.select("doc_id", F.lit(1).alias("_s")), "doc_id", "left")
+        .groupBy("lang")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum(F.coalesce("_s", F.lit(0))).alias("k"))
+        .collect()
+    }
+    assert frac["en"] < max(v for k, v in frac.items() if k != "en")
 
 
 def test_incremental_merge_equals_direct(spark):
@@ -238,6 +261,33 @@ def test_fuzzy_suggest_edit_classes(spark):
     assert got("zzzzzz") == []  # no neighbors -> empty, no crash
 
 
+def test_unigram_logprob_hand_corpus(spark):
+    """mean_nll_micros on a 2-doc corpus checked against hand arithmetic:
+    contributions round to micros per (doc, term) BEFORE the sum, then
+    integer-divide by doc_len."""
+    import math
+
+    from searchengine_spark.operators import serve
+
+    # corpus: doc0 = "x x y", doc1 = "y z"  -> total tokens = 5
+    # cf: x=2, y=2, z=1
+    post = spark.createDataFrame(
+        [(0, "x", 2, 3), (0, "y", 1, 3), (1, "y", 1, 2), (1, "z", 1, 2)],
+        "doc_id long, term string, tf long, dl long",
+    )
+    lex = spark.createDataFrame(
+        [("x", 2), ("y", 2), ("z", 1)], "term string, cf long"
+    )
+    idx = {"postings": post, "lexicon": lex, "sum_dl": 5}
+    got = {
+        r["doc_id"]: r["mean_nll_micros"]
+        for r in serve.unigram_logprob(spark, idx).collect()
+    }
+    c = lambda tf, cf: round(tf * math.log(5.0 / cf) * 1e6)
+    assert got[0] == (c(2, 2) + c(1, 2)) // 3
+    assert got[1] == (c(1, 2) + c(1, 1)) // 2
+
+
 def test_hits_sequential_update_hand_graph():
     """hits_integer's per-iteration arithmetic replicated in pure Python on
     the synthetic edge rule (n=7): authorities see fresh hubs, hubs see
@@ -366,6 +416,97 @@ def test_symspell_key_property():
     check()
 
 
+def test_hll_estimate_accuracy_and_merge(spark):
+    """(a) the HLL estimate lands within the sketch's error envelope of the
+    true distinct-term count; (b) the sketch of the whole corpus equals the
+    max-merge of the sketches of disjoint halves (mergeability — the scale
+    property the register design exists for)."""
+    from pyspark.sql import functions as F
+
+    from searchengine_spark.functions.tokenize import exploded_tokens
+    from searchengine_spark.operators import sketches
+    from searchengine_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    regs = sketches.hll_registers(docs).collect()
+    est = sketches.hll_estimate([(r.bucket, r.rho) for r in regs])
+    true = exploded_tokens(docs).select("term").distinct().count()
+    # p=8 → ~1.04/sqrt(256) ≈ 6.5% std error; allow 4 sigma
+    assert abs(est - true) <= max(4 * 1.04 / 16 * true, 8)
+
+    even = docs.filter(F.col("doc_id") % 2 == 0)
+    odd = docs.filter(F.col("doc_id") % 2 == 1)
+    merged = sketches.hll_merge(
+        sketches.hll_registers(even), sketches.hll_registers(odd)
+    )
+    whole = {(r.bucket, r.rho) for r in regs}
+    assert {(r.bucket, r.rho) for r in merged.collect()} == whole
+
+
+def test_cms_never_underestimates_and_heavy_terms_exactish(spark):
+    """CMS point estimates are >= true counts for every vocabulary term
+    (the sketch's one-sided guarantee), and per-row counter sums equal the
+    total token count (mass conservation)."""
+    from searchengine_spark.functions.tokenize import exploded_tokens
+    from searchengine_spark.operators import sketches
+    from searchengine_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    counters = [
+        (r["row"], r.col, r.n) for r in sketches.cms_counters(docs).collect()
+    ]
+    true = {
+        r.term: r.n
+        for r in exploded_tokens(docs).groupBy("term").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    total = sum(true.values())
+    for r in range(sketches.CMS_D):
+        assert sum(n for row, _, n in counters if row == r) == total
+    for term, n in true.items():
+        assert sketches.cms_estimate(counters, term) >= n
+
+
+def test_bloom_no_false_negatives_and_mergeable(spark):
+    """(a) every inserted key probes maybe_present (the Bloom one-sided
+    guarantee — a false negative would make the crawler re-skip a page it
+    never fetched); (b) the position set of the whole key set equals the
+    distinct-union of the halves' position sets (mergeability — per-
+    partition filters fold by union, the property the representation
+    exists for); (c) a saturation sanity bound: known-absent keys don't
+    all collide into false positives at this load factor."""
+    from pyspark.sql import functions as F
+
+    from searchengine_spark.operators import sketches
+    from searchengine_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    keys = docs.select(
+        F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("key")
+    )
+    positions = sketches.bloom_positions(keys)
+
+    present = keys.withColumn("actually_present", F.lit(1).cast("long"))
+    absent = spark.range(200).select(
+        F.concat(F.lit("nope:"), F.col("id").cast("string")).alias("key"),
+        F.lit(0).cast("long").alias("actually_present"),
+    )
+    got = {
+        r.key: r.maybe_present
+        for r in sketches.bloom_probe(positions, present.unionByName(absent)).collect()
+    }
+    inserted = {r.key for r in keys.collect()}
+    assert all(got[k] == 1 for k in inserted)  # no false negatives, ever
+    fps = sum(got[f"nope:{i}"] for i in range(200))
+    assert fps <= 40  # ~500 keys * 4 hashes in 65536 bits -> fp ~ 1e-5
+
+    even = keys.filter(F.col("key").substr(5, 99).cast("long") % 2 == 0)
+    odd = keys.filter(F.col("key").substr(5, 99).cast("long") % 2 == 1)
+    merged = sketches.bloom_positions(even).unionByName(
+        sketches.bloom_positions(odd)
+    ).distinct()
+    assert {r.pos for r in merged.collect()} == {r.pos for r in positions.collect()}
+
+
 def test_line_dedup_global_first_occurrence(spark):
     from searchengine_spark.operators.dedup import line_dedup
 
@@ -432,6 +573,34 @@ def test_anchor_terms_mass_conservation(spark):
     # the synthetic corpus vocabulary overlaps heavily, so instead assert
     # the per-target aggregation is non-trivial (some anchor_tf > 1)
     assert out.filter(F.col("anchor_tf") > 1).count() > 0
+
+
+def test_dsir_weights_direction_and_coverage(spark):
+    from searchengine_spark.operators.sampling import dsir_weights
+
+    # docs 3 and 20 (% 17 == 3) are the target slice; doc 1 is a verbatim
+    # copy of the target text, doc 2 shares nothing with it
+    rows = [
+        (3, "alpha beta gamma delta epsilon"),
+        (20, "alpha beta gamma delta epsilon"),
+        (1, "alpha beta gamma delta epsilon"),
+        (2, "one two three four five"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: r["weight_micros"]
+        for r in dsir_weights(docs, n_buckets=64).collect()
+    }
+    # target docs never appear; every non-empty candidate does
+    assert set(got) == {1, 2}
+    # the target-identical doc must outweigh the disjoint doc
+    assert got[1] > got[2]
+    # partition-count invariance (integer contract)
+    again = {
+        r["doc_id"]: r["weight_micros"]
+        for r in dsir_weights(docs.repartition(5), n_buckets=64).collect()
+    }
+    assert again == got
 
 
 def test_triangle_count_matches_bruteforce(spark):
@@ -574,6 +743,47 @@ def test_collapse_topk_one_per_group(spark):
             (s, -d) for d, s in scores.items() if src[d] == r["group_key"]
         )
         assert (r["score_micros"], -r["doc_id"]) == best
+
+
+def test_epoch_shuffle_is_distinct_permutations(spark):
+    """Each epoch is a full 1..N permutation; different epochs disagree."""
+    from searchengine_spark.operators.sampling import epoch_shuffle
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    e0 = {r["doc_id"]: r["pos"] for r in epoch_shuffle(docs, 0).collect()}
+    e1 = {r["doc_id"]: r["pos"] for r in epoch_shuffle(docs, 1).collect()}
+    n = len(e0)
+    assert set(e0.values()) == set(range(1, n + 1))
+    assert set(e1.values()) == set(range(1, n + 1))
+    assert set(e0) == set(e1)
+    assert sum(1 for d in e0 if e0[d] != e1[d]) > n // 2  # genuinely reshuffled
+
+
+def test_quality_tiers_ordered_and_balanced(spark):
+    """Within each language: tier sizes differ by <=1 and tier boundaries
+    respect the surprisal order (head <= middle <= tail)."""
+    from collections import Counter
+
+    from searchengine_spark.operators.sampling import quality_tiers
+    from searchengine_spark.plans.gate_index import gate_index
+
+    idx = gate_index(spark, SF_SMALL)
+    docs = load_table(spark, SF_SMALL, "documents")
+    rows = quality_tiers(spark, idx, docs).collect()
+    assert rows
+    by_lang: dict = {}
+    for r in rows:
+        by_lang.setdefault(r["lang"], []).append((r["tier"], r["mean_nll_micros"]))
+    for lang, pairs in by_lang.items():
+        sizes = Counter(t for t, _ in pairs)
+        assert set(sizes) <= {0, 1, 2}
+        if len(pairs) >= 3:
+            assert max(sizes.values()) - min(sizes.values()) <= 1, (lang, sizes)
+        for lo, hi in ((0, 1), (1, 2)):
+            a = [m for t, m in pairs if t == lo]
+            b = [m for t, m in pairs if t == hi]
+            if a and b:
+                assert max(a) <= min(b), (lang, lo, hi)
 
 
 def test_winnowing_guarantee_and_density(spark):
