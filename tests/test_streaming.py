@@ -4,8 +4,12 @@ and watermarked fingerprint dedup — each drained synchronously."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 from pyspark.sql import functions as F
+
+from searchengine_spark.operators.postings import _reference_postings
+from searchengine_spark.schemas import CORPUS
 
 
 def test_stream_corpus_to_postings(spark, tmp_path):
@@ -23,10 +27,24 @@ def test_stream_corpus_to_postings(spark, tmp_path):
     batches = [d for d in os.listdir(out_dir) if d.startswith("batch=")]
     assert batches
     post = spark.read.parquet(os.path.join(out_dir, "*"))
-    assert post.count() > 0
-    assert set(post.columns) >= {"doc_id", "term", "tf", "positions", "dl"}
-    # same tokenizer as batch: spot-check one term exists
     assert post.filter(F.col("term") == "spark").count() > 0
+
+    # the stream tokenizes exactly as the batch build does: the same corpus,
+    # given the stream's doc-id expression, through the batch tokenizer
+    docs = spark.read.schema(CORPUS).parquet(corpus_dir).withColumn(
+        "doc_id", F.abs(F.xxhash64("repo", "path", "commit")) % F.lit(1 << 60)
+    )
+    cols = ["doc_id", "term", "tf", "positions", "dl", "term_h1", "term_h2", "term_h3"]
+
+    def rows(df):
+        return Counter(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*cols).collect()
+        )
+
+    streamed = rows(post)
+    assert sum(streamed.values()) > 0
+    assert streamed == rows(_reference_postings(docs))
 
 
 def test_stream_dedup_within_watermark(spark, tmp_path):
