@@ -70,25 +70,6 @@ def _shard_rebalance_moves(spark: SparkSession, sf: str) -> DataFrame:
     return rebalance_moves(_docs(spark, sf), N_SHARDS_ROUTE, N_SHARDS_ROUTE + 1)
 
 
-def _epoch_shuffle(spark: SparkSession, sf: str) -> DataFrame:
-    from searchengine_spark.operators.sampling import epoch_shuffle
-
-    return epoch_shuffle(_docs(spark, sf), epoch=0)
-
-
-def _curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators.sampling import curriculum_order
-
-    return curriculum_order(spark, gate_index(spark, sf_dir), _docs(spark, sf_dir))
-
-
-def _quality_tiers(spark: SparkSession, sf: str) -> DataFrame:
-    from searchengine_spark.operators.sampling import quality_tiers
-    from searchengine_spark.plans.gate_index import gate_index as _gi
-
-    return quality_tiers(spark, _gi(spark, sf), _docs(spark, sf))
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: BM25 top-k over documents at sf0.001, served from the
     prebuilt gate index (build-or-load, then a pruned postings lookup)."""
@@ -100,24 +81,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
-
-
-def _docid_reorder_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators.layout import docid_reorder_gain
-
-    return docid_reorder_gain(_docs(spark, sf_dir))
-
-
-def _zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators.layout import zorder_layout
-
-    return zorder_layout(load_table(spark, sf_dir, "events"), bits=16, n_groups=64)
-
-
-def _weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators.sampling import weighted_sample_topn
-
-    return weighted_sample_topn(_docs(spark, sf_dir), n=100)
 
 
 def _crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -335,13 +298,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # elastic resharding: the exact move set when the fleet grows
         # S→S+1 (rendezvous minimal disruption, ≈1/(S+1) of the corpus)
         "shard_rebalance_moves": lambda spark, sf: _shard_rebalance_moves(spark, sf),
-        # deterministic epoch shuffle: global training order as a two-phase
-        # bucket prefix-sum rank over md5(epoch, doc) — no global window
-        "epoch_shuffle": lambda spark, sf: _epoch_shuffle(spark, sf),
-        # CCNet-style per-language perplexity terciles (head/middle/tail)
-        "quality_tiers": lambda spark, sf: _quality_tiers(spark, sf),
-        # curriculum order: quality tier asc, md5-shuffled within tier
-        "curriculum_order": lambda spark, sf: _curriculum_order(spark, sf),
         # the reference's own ranking formula (Ranker.java:74-97: weighted
         # tfidf/pagerank/title/header-cap), gated end-to-end incl. url/title
         # result assembly
@@ -445,10 +401,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "compound_split": lambda spark, sf: serve.compound_split(
             spark, gate_index(spark, sf), COMPOUND_WORD, k=5
         ),
-        # LM-perplexity-proxy quality signal, served from postings+lexicon
-        "unigram_logprob": lambda spark, sf: serve.unigram_logprob(
-            spark, gate_index(spark, sf)
-        ),
         # corpus-wide grouped top-k: every doc's top tf-idf keywords
         "doc_keywords": lambda spark, sf: serve.doc_keywords(
             spark, gate_index(spark, sf), k=3
@@ -504,20 +456,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # eval-leakage check: n-gram overlap vs the deterministic benchmark
         # slice of the corpus
         "decontaminate": lambda spark, sf: dedup.decontaminate(_docs(spark, sf), n=5),
-        # DSIR importance weights: hashed unigram+bigram features, target =
-        # the same benchmark slice, integer log-ratio dot product
-        "dsir_weights": lambda spark, sf: _dsir_weights(spark, sf),
-        # deterministic per-language Bernoulli sample (md5-position)
-        "stratified_sample": lambda spark, sf: _stratified_sample(spark, sf),
-        # Efraimidis–Spirakis weighted sampling without replacement:
-        # exactly n rows, one bounded heap, zero shuffle
-        "weighted_sample": lambda spark, sf: _weighted_sample(spark, sf),
         # per-host politeness fetch queue (bounded-QPS crawl schedule);
         # slots via the two-phase ordered-bucket pattern, never a
         # host-sized window partition
         "crawl_schedule": lambda spark, sf: _crawl_schedule(spark, sf),
-        # alpha=0.5 temperature rebalancing: output shares ∝ sqrt(count)
-        "temperature_mix": lambda spark, sf: _temperature_mix(spark, sf),
         # incremental build: two half-corpus segment sets merged, decoded
         # back to postings — codec + merge_segments gated in one hash row
         "incremental_merge_postings": lambda spark, sf: _incremental_postings(spark, sf),
@@ -632,14 +574,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "percolate_matches": lambda spark, sf: textstats.percolate_matches(
             _docs(spark, sf), BATCH_QUERIES
         ),
-        # HLL distinct-term sketch: portable md5 registers, max-merge —
-        # the sub-linear-state cardinality path for 100 TB analytics
-        "hll_term_registers": lambda spark, sf: _hll_registers(spark, sf),
-        # Count-Min sketch of token frequencies: sum-mergeable counters
-        "cms_term_counters": lambda spark, sf: _cms_counters(spark, sf),
-        # Bloom filter: the crawler's visited set in O(m) state — one-sided
-        # error (no false negatives), probed with present + absent keys
-        "bloom_visited": _bloom_visited,
         "doc_fingerprints": lambda spark, sf: textstats.doc_fingerprints(_docs(spark, sf)),
         # winnowing (MOSS) fingerprint selection: per-window k-gram minima,
         # zero-shuffle array-side selection, ~2/(w+1) storage
@@ -669,54 +603,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "heaps_law": lambda spark, sf: corpusstats.heaps_law(
             _docs(spark, sf), n_checkpoints=10
         ),
-        # Z-order (Morton) clustering key + file group over (user, time) —
-        # the write-time layout that lets parquet min/max stats prune scans
-        # on either predicate dimension
-        "zorder_layout": lambda spark, sf: _zorder_layout(spark, sf),
-        # similarity-clustered doc-id reordering: varint gap bytes before
-        # vs after (the BP/document-reordering compression lever)
-        "docid_reorder_gain": lambda spark, sf: _docid_reorder_gain(spark, sf),
     }
-    # driver-gate rotation (VERDICT r02 item 7): the driver checks only the
-    # FIRST 50 entries, so each round this list pulls operators that have
-    # never been driver-checked (plus everything changed this round) to the
-    # front; the rest keep their original order. Rotation log: COVERAGE.md.
-    rotate_front = [
-        # r05 window (VERDICT r04 ask #1): the 50 gates never driver-checked
-        # in CORRECTNESS_r01-r04, less the 11 that left with the TPC-H/event
-        # and media-decode families and the 15 that left with the
-        # training-data prep family. knn_graph leads (ADVICE r04: it was
-        # entry #51 last round and silently dropped).
-        "knn_graph",
-        "kmeans_centroids",
-        "ann_lsh_multiprobe_topk",
-        "ann_filtered_topk",
-        "ann_pq_topk",
-        "embedding_rp_project",
-        "embedding_sq8",
-        "fetch_pages",
-        "strip_html",
-        "ascii_fold",
-        "host_stats",
-        "crawl_delta",
-        "crawl_frontier_bfs",
-        "next_word_suggest",
-        "percolate_matches",
-        "hll_term_registers",
-        "cms_term_counters",
-        "bloom_visited",
-        "winnowing_fingerprints",
-        "pmi_top_pairs",
-        "domain_kl_drift",
-        "zipf_slope",
-        "heaps_law",
-        "zorder_layout",
-    ]
-    ordered = {
-        **{k: out[k] for k in rotate_front},
-        **{k: v for k, v in out.items() if k not in rotate_front},
-    }
-    return {k: _release_scoped(v) for k, v in ordered.items()}
+    return {k: _release_scoped(v) for k, v in out.items()}
 
 
 def _release_scoped(fn):
@@ -766,11 +654,6 @@ def _ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# stratified-sample gate rates: downsample the dominant language (ppm)
-SAMPLE_RATES_PPM = {"en": 300_000}
-SAMPLE_DEFAULT_PPM = 700_000
-
-
 def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from searchengine_spark.operators.components import dedup_clusters
 
@@ -791,18 +674,6 @@ def _dedup_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators.sampling import stratified_sample
-
-    return stratified_sample(_docs(spark, sf_dir), SAMPLE_RATES_PPM, SAMPLE_DEFAULT_PPM)
-
-
-def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators.sampling import dsir_weights
-
-    return dsir_weights(_docs(spark, sf_dir), n_buckets=64)
-
-
 def _boolean_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from searchengine_spark.operators.boolquery import boolean_query
 
@@ -813,45 +684,6 @@ def _boolean_query_sql() -> str:
     from searchengine_spark.operators.boolquery import boolean_query_sql
 
     return boolean_query_sql(BOOL_QUERY)
-
-
-def _hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators.sketches import hll_registers
-
-    return hll_registers(_docs(spark, sf_dir))
-
-
-def _bloom_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter visited-set over doc keys, probed with a present slice
-    (doc_id % 7 == 0) plus 50 known-absent keys."""
-    from pyspark.sql import functions as F
-
-    from searchengine_spark.operators import sketches
-
-    docs = _docs(spark, sf_dir)
-    key = F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("key")
-    positions = sketches.bloom_positions(docs.select(key))
-    probes = docs.filter(F.col("doc_id") % 7 == 0).select(
-        key, F.lit(1).cast("long").alias("actually_present")
-    ).unionByName(
-        spark.range(50).select(
-            F.concat(F.lit("absent:"), F.col("id").cast("string")).alias("key"),
-            F.lit(0).cast("long").alias("actually_present"),
-        )
-    )
-    return sketches.bloom_probe(positions, probes).join(F.broadcast(probes), "key")
-
-
-def _cms_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators.sketches import cms_counters
-
-    return cms_counters(_docs(spark, sf_dir))
-
-
-def _temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.operators.sampling import temperature_mix
-
-    return temperature_mix(_docs(spark, sf_dir), target_frac_ppm=500_000)
 
 
 def _incremental_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1150,9 +982,6 @@ def oracle_sql() -> dict[str, str]:
         "shard_rebalance_moves": oracles.shard_rebalance_moves_sql(
             N_SHARDS_ROUTE, N_SHARDS_ROUTE + 1
         ),
-        "epoch_shuffle": oracles.epoch_shuffle_sql(0),
-        "quality_tiers": oracles.quality_tiers_sql(),
-        "curriculum_order": oracles.curriculum_order_sql(),
         "ann_ivf_topk": oracles.ann_ivf_sql(n_queries=8, k=5, centroid_stride=64, nprobe=2),
         # the approximate LSH path is deterministic (integer plane dots), so
         # even recall<1 output is hash-checkable — no more rows-only gate
@@ -1189,7 +1018,6 @@ def oracle_sql() -> dict[str, str]:
         "fuzzy_suggest": oracles.fuzzy_suggest_sql(FUZZY_WORD, k=5),
         "corrected_search": oracles.corrected_search_sql(CORRECTED_QUERY, k=TOPK),
         "compound_split": oracles.compound_split_sql(COMPOUND_WORD, k=5),
-        "unigram_logprob": oracles.unigram_logprob_sql(),
         "doc_keywords": oracles.doc_keywords_sql(k=3),
         "hits_scores": _hits_scores_sql(),
         "ppr_scores": _ppr_scores_sql(),
@@ -1202,13 +1030,10 @@ def oracle_sql() -> dict[str, str]:
         "domain_kl_drift": oracles.domain_kl_drift_sql(),
         "zipf_slope": oracles.zipf_slope_sql(top_n=1000),
         "heaps_law": oracles.heaps_law_sql(n_checkpoints=10),
-        "weighted_sample": oracles.weighted_sample_topn_sql(n=100),
         "crawl_schedule": oracles.crawl_schedule_sql(n_hosts=7, delay_ms=500),
         "knn_graph": oracles.knn_graph_sql(
             k=3, n_planes=16, rows_per_band=8, max_bucket=1024
         ),
-        "docid_reorder_gain": oracles.docid_reorder_gain_sql(),
-        "zorder_layout": oracles.zorder_layout_sql(bits=16, n_groups=64),
         "mmr_topk": oracles.mmr_topk_sql(BM25_TERMS, k=TOPK, r=50),
         "compat_topk": oracles.compat_topk_sql(COMPAT_TERMS, COMPAT_QUERY, k=TOPK),
         "search_results": oracles.search_results_sql(BM25_TERMS, k=TOPK),
@@ -1258,11 +1083,6 @@ def oracle_sql() -> dict[str, str]:
         "dedup_containment": oracles.containment_pairs_sql(
             n=3, threshold_ppm=500_000, max_shingle_df=64
         ),
-        "dsir_weights": oracles.dsir_weights_sql(n_buckets=64),
-        "stratified_sample": oracles.stratified_sample_sql(
-            SAMPLE_RATES_PPM, SAMPLE_DEFAULT_PPM
-        ),
-        "temperature_mix": oracles.temperature_mix_sql(target_frac_ppm=500_000),
         # the merged-and-decoded segments must equal the corpus tokenization
         "incremental_merge_postings": oracles.postings_sql(),
         "incremental_reindex": oracles.incremental_reindex_sql(),
@@ -1279,9 +1099,6 @@ def oracle_sql() -> dict[str, str]:
         "ascii_fold": oracles.ascii_fold_sql(),
         "token_stats": oracles.token_stats_sql(),
         "percolate_matches": oracles.percolate_matches_sql(BATCH_QUERIES),
-        "hll_term_registers": oracles.hll_registers_sql(),
-        "cms_term_counters": oracles.cms_counters_sql(),
-        "bloom_visited": oracles.bloom_visited_sql(),
         "doc_fingerprints": oracles.doc_fingerprints_sql(),
         "winnowing_fingerprints": oracles.winnowing_sql(),
         "heavy_hitter_terms": oracles.heavy_hitter_terms_sql(),

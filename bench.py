@@ -100,12 +100,8 @@ HEADLINE = [
     "more_like_this",
     "shard_routing",
     "shard_rebalance_moves",
-    "epoch_shuffle",
-    "quality_tiers",
-    "curriculum_order",
     "winnowing_fingerprints",
     "compound_split",
-    "temperature_mix",
     "dedup_clusters",
     "dedup_survivors",
     "exact_substring_spans",
@@ -116,8 +112,6 @@ HEADLINE = [
     "ident_subtokens",
     "ppr_scores",
     "decontaminate",
-    "dsir_weights",
-    "stratified_sample",
     "fetch_pages",
     "robots_rules",
     "robots_filtered_fetch",
@@ -125,18 +119,13 @@ HEADLINE = [
     "strip_html",
     "ascii_fold",
     "token_stats",
-    "bloom_visited",
     "fuzzy_suggest",
-    "unigram_logprob",
     "percolate_matches",
     "doc_keywords",
     "pmi_top_pairs",
     "domain_kl_drift",
     "zipf_slope",
     "heaps_law",
-    "zorder_layout",
-    "docid_reorder_gain",
-    "weighted_sample",
     "crawl_schedule",
     "hits_scores",
     "graph_triangles",

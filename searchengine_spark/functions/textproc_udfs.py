@@ -1,9 +1,9 @@
 """Arrow-vectorized UDF wrappers around the quirk-faithful tokenizer.
 
-These are the ONLY Python crossings on the index-build hot path (SURVEY.md
-§2.9). Everything arrives/leaves as Arrow batches via ``mapInPandas``; the
-regex passes are pandas ``.str`` vectorized, the Porter stemmer is a cached
-dict map (amortized per unique token — text columns are highly repetitive).
+This is the ONLY Python crossing on the index-build hot path (SURVEY.md
+§2.9). Everything arrives/leaves as Arrow batches via ``mapInArrow``; the
+Porter stemmer is a cached dict map (amortized per unique token — text
+columns are highly repetitive).
 
 Per-row semantics are defined by ``functions/textproc.py`` — the exact same
 Python functions the pure-Python oracle uses, so fixture equality is by
@@ -15,7 +15,6 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 
 from searchengine_spark.functions.textproc import index_tokenize
@@ -37,13 +36,16 @@ def _heading_lines(content: str) -> tuple[list[str], list[str], list[str]]:
     return h
 
 
-def emit_postings_arrow(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-    """mapInArrow twin of :func:`emit_postings` — identical rows, but the
-    output batch is built as native pyarrow arrays (flat value buffers +
-    offsets for the positions lists). Skipping the pandas object-dtype
-    round-trip cuts the serialization cost of the ~30 output rows per input
-    doc by ~2×; semantics are byte-identical to the pandas path (same
-    per-doc iteration order).
+def emit_postings_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow: (doc_id, content) batches → one row per (doc, term).
+
+    tf / positions / dl follow computeTFWithPositions exactly (quirks
+    Q1/Q2/Q4/Q15); term_h{1,2,3} is the reference's per-term header flag —
+    the *stemmed* term substring-matched against raw lowercased heading text
+    (Indexer.java:257-270, quirk in SURVEY.md T5). The output batch is built
+    as native pyarrow arrays (flat value buffers + offsets for the positions
+    lists), with no pandas object-dtype round-trip. The batch build and the
+    streaming ingest both call it.
     """
     for batch in batches:
         names = batch.schema.names
@@ -72,6 +74,8 @@ def emit_postings_arrow(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.Rec
             for t in terms:
                 pos_flat.extend(positions[t])
                 pos_offsets.append(len(pos_flat))
+            # substring test against the '\n'-joined heading text is exactly
+            # equivalent to any(term in line): terms never contain '\n'
             for col, lines in ((col_h1, h1), (col_h2, h2), (col_h3, h3)):
                 if lines:
                     joined = "\n".join(lines)
@@ -96,54 +100,3 @@ def emit_postings_arrow(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.Rec
                 "term_h1", "term_h2", "term_h3",
             ],
         )
-
-
-def emit_postings(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas: (doc_id, content) batches → one row per (doc, term).
-
-    tf / positions / dl follow computeTFWithPositions exactly (quirks
-    Q1/Q2/Q4/Q15); term_h{1,2,3} is the reference's per-term header flag —
-    the *stemmed* term substring-matched against raw lowercased heading text
-    (Indexer.java:257-270, quirk in SURVEY.md T5).
-    """
-    for pdf in batches:
-        out: dict[str, list] = {
-            "doc_id": [], "term": [], "tf": [], "positions": [], "dl": [],
-            "term_h1": [], "term_h2": [], "term_h3": [],
-        }
-        for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
-            tf, positions, total = index_tokenize(content)
-            if not tf:
-                continue
-            h1, h2, h3 = _heading_lines(content)
-            terms = list(tf.keys())
-            n = len(terms)
-            out["doc_id"].extend([doc_id] * n)
-            out["term"].extend(terms)
-            out["tf"].extend(tf.values())
-            out["positions"].extend(positions[t] for t in terms)
-            out["dl"].extend([total] * n)
-            # substring test against the '\n'-joined heading text is exactly
-            # equivalent to any(term in line): terms never contain '\n'
-            for col, lines in (("term_h1", h1), ("term_h2", h2), ("term_h3", h3)):
-                if lines:
-                    joined = "\n".join(lines)
-                    out[col].extend((t in joined) for t in terms)
-                else:
-                    out[col].extend([False] * n)
-        yield pd.DataFrame(out)
-
-
-DOCMETA_SCHEMA = "doc_id long, doc_len long, h1 boolean, h2 boolean, h3 boolean"
-
-
-def emit_docmeta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-doc totalTerms + page-level heading-presence flags
-    (Indexer.java:216-219)."""
-    for pdf in batches:
-        rows = []
-        for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
-            _, _, total = index_tokenize(content)
-            h1, h2, h3 = _heading_lines(content)
-            rows.append((doc_id, total, bool(h1), bool(h2), bool(h3)))
-        yield pd.DataFrame(rows, columns=["doc_id", "doc_len", "h1", "h2", "h3"])

@@ -248,9 +248,6 @@ def crawl_schedule(
 # robots.txt family (S3): fetch → parse → per-URL allow filter
 # ---------------------------------------------------------------------------
 
-ROBOTS_BODY_SCHEMA = "host string, status int, content string"
-
-
 def synth_robots_bodies(spark, n_hosts: int = 7) -> DataFrame:
     """Deterministic synthetic robots.txt fetch results for the gate
     corpus hosts — (host, status, content), built DISTRIBUTED with JVM

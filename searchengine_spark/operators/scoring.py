@@ -20,20 +20,7 @@ reference's N+1 Mongo lookups per posting (SearchService.java:301-302):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
 TITLE_WEIGHT = 0.7
 H1_WEIGHT, H2_WEIGHT, H3_WEIGHT = 0.45, 0.25, 0.1
 TFIDF_WEIGHT = 0.4
 PAGERANK_WEIGHT = 0.3
-
-
-def match_postings(postings, lexicon, qterms):
-    """Candidate postings for the query terms: broadcast the tiny query-term
-    set against both tables (J1 — the reference's per-term point lookups)."""
-    from pyspark.sql import functions as F
-
-    return postings.join(F.broadcast(qterms), "term").join(
-        F.broadcast(lexicon.join(F.broadcast(qterms), "term")), "term"
-    )

@@ -1646,30 +1646,6 @@ GROUP BY term ORDER BY n DESC, term ASC LIMIT {k}
 """
 
 
-def hll_registers_sql(w_bits: int | None = None) -> str:
-    """Twin of sketches.hll_registers: 60-bit md5 hash, top-8-bit bucket,
-    rank via bin() string length (verified identical in both engines).
-    Defaults derive from sketches.W_BITS — one definition."""
-    if w_bits is None:
-        from searchengine_spark.operators.sketches import W_BITS
-
-        w_bits = W_BITS
-    return f"""
-WITH {_TOKENS_CTE},
-h AS (
-  SELECT CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT) AS h FROM terms
-),
-r AS (
-  SELECT (h >> {w_bits})::BIGINT AS bucket,
-         CASE WHEN (h & {(1 << w_bits) - 1}) = 0 THEN {w_bits + 1}
-              ELSE {w_bits + 1} - length(bin(h & {(1 << w_bits) - 1}))
-         END AS rho
-  FROM h
-)
-SELECT bucket, max(rho)::BIGINT AS rho FROM r GROUP BY bucket
-"""
-
-
 def substring_search_sql(needle: str) -> str:
     """Twin of textstats.substring_search: trigram prefilter (equivalent by
     construction — it only removes docs LACKING a needle trigram) + exact
@@ -1718,27 +1694,6 @@ def regex_search_sql(pattern: str) -> str:
 WITH b AS (SELECT doc_id, lower(text) AS t FROM documents WHERE TRUE{tri_filter})
 SELECT doc_id, len(regexp_extract_all(t, '{pl}'))::BIGINT AS n_matches
 FROM b WHERE len(regexp_extract_all(t, '{pl}')) > 0
-"""
-
-
-def cms_counters_sql(d: int | None = None, w: int | None = None) -> str:
-    """Twin of sketches.cms_counters: salted md5 row hashes, occurrence
-    counts per (row, col) cell. Defaults derive from sketches.CMS_D/CMS_W —
-    one definition."""
-    if d is None or w is None:
-        from searchengine_spark.operators.sketches import CMS_D, CMS_W
-
-        d = CMS_D if d is None else d
-        w = CMS_W if w is None else w
-    return f"""
-WITH {_TOKENS_CTE},
-cells AS (
-  SELECT r.range::INT AS "row",
-         (CAST(('0x' || substr(md5('cms' || r.range || ':' || term), 1, 15))
-               AS BIGINT) % {w})::INT AS col
-  FROM terms CROSS JOIN range({d}) r
-)
-SELECT "row", col, count(*)::BIGINT AS n FROM cells GROUP BY 1, 2
 """
 
 
@@ -1870,68 +1825,6 @@ WHERE hits.n_hit = nreq.n_req
 """
 
 
-def dsir_weights_sql(
-    n_buckets: int = 64, bench_mod: int = 17, bench_rem: int = 3
-) -> str:
-    """Twin of sampling.dsir_weights: hashed unigram+bigram bucket counts,
-    add-one smoothed log-ratio per bucket (each side rounded to micros
-    separately — integer table), weight = integer dot product."""
-    b_f = float(n_buckets)
-    h = "CAST(('0x' || substr(md5({key}), 1, 15)) AS BIGINT)"
-    return f"""
-WITH toksarr AS (
-  SELECT doc_id, string_split_regex(lower(text), '{TOKEN_SPLIT_RE}') AS t
-  FROM documents
-),
-pos AS (
-  SELECT doc_id, unnest(t) AS term, generate_subscripts(t, 1) - 1 AS pos
-  FROM toksarr
-),
-feats AS (
-  SELECT doc_id,
-         {h.format(key="'u:' || term")} % {MERSENNE31} % {n_buckets} AS bucket
-  FROM pos WHERE term <> ''
-  UNION ALL
-  SELECT a.doc_id,
-         {h.format(key="'b:' || a.term || ' ' || b.term")}
-           % {MERSENNE31} % {n_buckets} AS bucket
-  FROM pos a JOIN pos b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  WHERE a.term <> '' AND b.term <> ''
-),
-tb AS (
-  SELECT bucket, count(*)::BIGINT AS pc FROM feats
-  WHERE doc_id % {bench_mod} = {bench_rem} GROUP BY 1
-),
-rb AS (
-  SELECT bucket, count(*)::BIGINT AS qc FROM feats
-  WHERE doc_id % {bench_mod} <> {bench_rem} GROUP BY 1
-),
-spine AS (SELECT range AS bucket FROM range(0, {n_buckets})),
-counts AS (
-  SELECT spine.bucket,
-         coalesce(tb.pc, 0)::BIGINT AS pc,
-         coalesce(rb.qc, 0)::BIGINT AS qc
-  FROM spine
-  LEFT JOIN tb ON spine.bucket = tb.bucket
-  LEFT JOIN rb ON spine.bucket = rb.bucket
-),
-tot AS (SELECT sum(pc)::BIGINT AS pt, sum(qc)::BIGINT AS qt FROM counts),
-lr AS (
-  SELECT bucket,
-         CAST(round(ln((pc + 1.0) / (pt + {b_f})) * 1e6) AS BIGINT)
-         - CAST(round(ln((qc + 1.0) / (qt + {b_f})) * 1e6) AS BIGINT) AS lr_micros
-  FROM counts CROSS JOIN tot
-),
-docfeat AS (
-  SELECT doc_id, bucket, count(*)::BIGINT AS cnt FROM feats
-  WHERE doc_id % {bench_mod} <> {bench_rem} GROUP BY 1, 2
-)
-SELECT doc_id, sum(cnt * lr_micros)::BIGINT AS weight_micros
-FROM docfeat JOIN lr ON docfeat.bucket = lr.bucket
-GROUP BY doc_id
-"""
-
-
 def decontaminate_sql(n: int = 5, bench_mod: int = 17, bench_rem: int = 3) -> str:
     """Twin of dedup.decontaminate: distinct token n-gram overlap between
     each training doc and the deterministic benchmark slice."""
@@ -2042,45 +1935,6 @@ SELECT doc_id, component_id, rank FROM (
 """
 
 
-def temperature_mix_sql(target_frac_ppm: int = 500_000, salt: str = "mix:") -> str:
-    """Twin of sampling.temperature_mix (alpha = 0.5 language rebalancing).
-    sqrt is IEEE-exact in both engines and the float expression tree is
-    mirrored literally, so the derived ppm rates are bit-identical."""
-    return f"""
-WITH c AS (SELECT lang AS stratum, count(*)::BIGINT AS c FROM documents GROUP BY 1),
-s AS (SELECT stratum, c,
-             CAST(floor(sqrt(c::DOUBLE) * 1e6) AS BIGINT) AS sl FROM c),
-tot AS (SELECT sum(c)::BIGINT AS total, sum(sl)::BIGINT AS s_sum FROM s),
-r AS (
-  SELECT stratum,
-         least(1000000,
-               CAST(floor(({float(target_frac_ppm)} * sl::DOUBLE * total::DOUBLE)
-                          / (s_sum::DOUBLE * c::DOUBLE)) AS BIGINT)) AS keep_ppm
-  FROM s, tot
-)
-SELECT d.doc_id, d.lang
-FROM documents d JOIN r ON d.lang = r.stratum
-WHERE CAST(('0x' || substr(md5('{salt}' || d.doc_id), 1, 15)) AS BIGINT) % 1000000
-      < r.keep_ppm
-"""
-
-
-def stratified_sample_sql(
-    rates_ppm: dict[str, int], default_ppm: int, salt: str = "sample:"
-) -> str:
-    """Twin of sampling.stratified_sample: md5-position Bernoulli keep per
-    language stratum (60-bit hex prefix → int, mod 1e6 — same literal
-    arithmetic as the Spark side)."""
-    cases = " ".join(
-        f"WHEN '{value}' THEN {ppm}" for value, ppm in sorted(rates_ppm.items())
-    )
-    return f"""
-SELECT doc_id, lang FROM documents
-WHERE CAST(('0x' || substr(md5('{salt}' || doc_id), 1, 15)) AS BIGINT) % 1000000
-      < CASE lang {cases} ELSE {default_ppm} END
-"""
-
-
 def strip_html_sql() -> str:
     """Twin of textstats.strip_html: the same synthesized HTML wrapping and
     the same ``<[^>]*>`` strip (regexp_replace needs the 'g' flag — DuckDB
@@ -2133,21 +1987,6 @@ FROM lex
 WHERE levenshtein(term, '{w}') <= 1
 ORDER BY dist ASC, n DESC, term ASC
 LIMIT {k}
-"""
-
-
-def unigram_logprob_sql() -> str:
-    return f"""
-WITH {_TOKENS_CTE},
-tot AS (SELECT sum(dl)::DOUBLE AS t FROM dls),
-cf AS (SELECT term, sum(tf)::BIGINT AS cf FROM post GROUP BY 1),
-contrib AS (
-  SELECT post.doc_id, dls.dl,
-         CAST(round(post.tf::DOUBLE * ln(tot.t / cf.cf::DOUBLE) * 1e6) AS BIGINT) AS c
-  FROM post JOIN cf USING (term) JOIN dls USING (doc_id) CROSS JOIN tot
-)
-SELECT doc_id, dl, (sum(c) // dl)::BIGINT AS mean_nll_micros
-FROM contrib GROUP BY doc_id, dl
 """
 
 
@@ -2443,42 +2282,6 @@ SELECT doc_id, min(depth)::INT AS depth FROM bfs GROUP BY 1
 """
 
 
-def bloom_visited_sql(m: int | None = None, k: int | None = None, n_absent: int = 50) -> str:
-    """Twin of sketches.bloom_positions + bloom_probe over doc keys: same
-    salted 60-bit md5 positions, DISTINCT position set, membership = all k
-    probe positions present. Defaults derive from sketches.BLOOM_M/BLOOM_K."""
-    if m is None or k is None:
-        from searchengine_spark.operators.sketches import BLOOM_K, BLOOM_M
-
-        m = BLOOM_M if m is None else m
-        k = BLOOM_K if k is None else k
-    return f"""
-WITH keys AS (SELECT 'doc:' || doc_id AS key FROM documents),
-pos AS (
-  SELECT DISTINCT
-         CAST(('0x' || substr(md5('bloom' || h.range || ':' || key), 1, 15))
-              AS BIGINT) % {m} AS pos
-  FROM keys CROSS JOIN range({k}) h
-),
-probes AS (
-  SELECT 'doc:' || doc_id AS key, 1::BIGINT AS actually_present
-  FROM documents WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT 'absent:' || i.range, 0::BIGINT FROM range({n_absent}) i
-),
-pp AS (
-  SELECT key, actually_present,
-         CAST(('0x' || substr(md5('bloom' || h.range || ':' || key), 1, 15))
-              AS BIGINT) % {m} AS pos
-  FROM probes CROSS JOIN range({k}) h
-)
-SELECT pp.key, pp.actually_present,
-       min(CASE WHEN p.pos IS NULL THEN 0 ELSE 1 END)::BIGINT AS maybe_present
-FROM pp LEFT JOIN pos p ON p.pos = pp.pos
-GROUP BY pp.key, pp.actually_present
-"""
-
-
 def collapse_topk_sql(
     terms: list[str], field: str = "source", k: int = 10,
     k1: float = 1.2, b: float = 0.75,
@@ -2591,50 +2394,6 @@ SELECT a.doc_id, a.shard_from, b.shard_to
 FROM {route(n_from, "shard_from")} a
 JOIN {route(n_to, "shard_to")} b USING (doc_id)
 WHERE a.shard_from <> b.shard_to
-"""
-
-
-def epoch_shuffle_sql(epoch: int) -> str:
-    """Twin of sampling.epoch_shuffle: global rank over the md5 epoch key
-    (lowercase-hex string order is identical in both engines)."""
-    return f"""
-SELECT row_number() OVER (
-         ORDER BY md5('epoch:{epoch}:' || doc_id), doc_id
-       )::BIGINT AS pos,
-       doc_id
-FROM documents
-"""
-
-
-def quality_tiers_sql() -> str:
-    """Twin of sampling.quality_tiers: the unigram_logprob gate SQL embedded
-    as a stage, then exact per-language tercile ranks."""
-    return f"""
-WITH {_TOKENS_CTE},
-tot AS (SELECT sum(dl)::DOUBLE AS t FROM dls),
-cf AS (SELECT term, sum(tf)::BIGINT AS cf FROM post GROUP BY 1),
-contrib AS (
-  SELECT post.doc_id, dls.dl,
-         CAST(round(post.tf::DOUBLE * ln(tot.t / cf.cf::DOUBLE) * 1e6) AS BIGINT) AS c
-  FROM post JOIN cf USING (term) JOIN dls USING (doc_id) CROSS JOIN tot
-),
-nll AS (
-  SELECT doc_id, (sum(c) // dl)::BIGINT AS mean_nll_micros
-  FROM contrib GROUP BY doc_id, dl
-),
-keyed AS (
-  SELECT n.doc_id, d.lang, n.mean_nll_micros
-  FROM nll n JOIN documents d USING (doc_id)
-),
-ranked AS (
-  SELECT doc_id, lang, mean_nll_micros,
-         row_number() OVER (PARTITION BY lang
-                            ORDER BY mean_nll_micros ASC, doc_id ASC) AS r,
-         count(*) OVER (PARTITION BY lang) AS nl
-  FROM keyed
-)
-SELECT doc_id, lang, mean_nll_micros, CAST((r - 1) * 3 // nl AS INT) AS tier
-FROM ranked
 """
 
 
@@ -2910,35 +2669,6 @@ FROM s
 """
 
 
-def zorder_layout_sql(bits: int = 16, n_groups: int = 64) -> str:
-    """Twin of layout.zorder_layout: min/max-normalized exact-integer
-    Morton interleave of (user_id, event seconds) + top-bits file group."""
-    top = (1 << bits) - 1
-    group_bits = n_groups.bit_length() - 1
-    inter = " + ".join(
-        f"(((sx >> {i}) & 1) << {2 * i}) + (((sy >> {i}) & 1) << {2 * i + 1})"
-        for i in range(bits)
-    )
-    return f"""
-WITH src AS (
-  SELECT event_id, user_id::BIGINT AS u,
-         epoch_us(ts) // 1000000 AS t
-  FROM events
-),
-b AS (SELECT min(u) AS u_lo, max(u) AS u_hi,
-             min(t) AS t_lo, max(t) AS t_hi FROM src),
-scaled AS (
-  SELECT event_id,
-         ((u - u_lo) * {top}) // greatest(1, u_hi - u_lo) AS sx,
-         ((t - t_lo) * {top}) // greatest(1, t_hi - t_lo) AS sy
-  FROM src, b
-),
-z AS (SELECT event_id, ({inter})::BIGINT AS zval FROM scaled)
-SELECT event_id, zval, (zval >> {2 * bits - group_bits})::BIGINT AS file_group
-FROM z
-"""
-
-
 def crawl_schedule_sql(n_hosts: int = 7, delay_ms: int = 500) -> str:
     """Twin of fetch.crawl_schedule: per-host fetch queue in md5 shuffle
     order, slot = per-host row_number (the oracle ranks directly; the Spark
@@ -2960,22 +2690,6 @@ ranked AS (
 SELECT doc_id, host, slot::BIGINT AS slot,
        ((slot - 1) * {delay_ms})::BIGINT AS fetch_offset_ms
 FROM ranked
-"""
-
-
-def weighted_sample_topn_sql(
-    n: int = 100, salt: str = "wsample", weight_col: str = "n_chars"
-) -> str:
-    """Twin of sampling.weighted_sample_topn: A-ES keys ln(u)/w in integer
-    nanos, u = (2·md5ppm + 1)/2e6, top-n by (key DESC, doc_id ASC)."""
-    return f"""
-SELECT doc_id,
-       CAST(round((ln((2.0 * (CAST(('0x' || substr(md5('{salt}' || doc_id), 1, 15))
-                                   AS BIGINT) % 1000000) + 1.0) / 2e6)
-                   / {weight_col}::DOUBLE) * 1e9) AS BIGINT) AS key_nanos
-FROM documents
-ORDER BY key_nanos DESC, doc_id ASC
-LIMIT {n}
 """
 
 
@@ -3970,72 +3684,6 @@ SELECT pf.doc_id, pf.phrase_freq,
 FROM pf JOIN dls ON pf.doc_id = dls.doc_id CROSS JOIN avg_dl
 ORDER BY score_micros DESC, pf.doc_id ASC
 LIMIT {k}
-"""
-
-
-def docid_reorder_gain_sql(n_perms: int = 4) -> str:
-    """Twin of layout.docid_reorder_gain: first-band MinHash key (zero-
-    padded, lexicographic == numeric), clustered rank, exact varint gap
-    bytes per term under both layouts."""
-    gap_block = """
-  SELECT term,
-         CASE WHEN prev IS NULL THEN nid + 1 ELSE nid - prev END AS g
-  FROM (
-    SELECT term, nid, lag(nid) OVER (PARTITION BY term ORDER BY nid) AS prev
-    FROM {src}
-  )"""
-    bytes_expr = (
-        "CASE WHEN g < 128 THEN 1 WHEN g < 16384 THEN 2 "
-        "WHEN g < 2097152 THEN 3 WHEN g < 268435456 THEN 4 ELSE 5 END"
-    )
-    bits_expr = ("CASE " + " ".join(
-        f"WHEN g < {1 << w} THEN {w}" for w in range(1, 40)
-    ) + " ELSE 40 END")
-    return f"""
-WITH {_TOKHASH_CTE},
-perms(perm_id, a, b) AS (VALUES {_perms_values(n_perms)}),
-sig AS (
-  SELECT tok.doc_id, perms.perm_id,
-         min((perms.a * tok.x + perms.b) % {MERSENNE31})::BIGINT AS minhash
-  FROM tok CROSS JOIN perms GROUP BY 1, 2
-),
-bk AS (
-  SELECT doc_id,
-         string_agg(lpad(minhash::VARCHAR, 10, '0'), ',' ORDER BY perm_id) AS bk
-  FROM sig GROUP BY 1
-),
-mapping AS (
-  SELECT doc_id, (row_number() OVER (ORDER BY bk, doc_id) - 1)::BIGINT AS nid
-  FROM bk
-),
-pt AS (SELECT DISTINCT doc_id, term FROM terms WHERE term <> ''),
-po AS (SELECT pt.term, pt.doc_id::BIGINT AS nid FROM pt),
-pc AS (SELECT pt.term, m.nid FROM pt JOIN mapping m USING (doc_id)),
-go AS ({gap_block.format(src="po")}),
-gc AS ({gap_block.format(src="pc")})
-SELECT 'original' AS layout, sum({bytes_expr})::BIGINT AS total_varint_bytes,
-       sum({bits_expr})::BIGINT AS total_gap_bits,
-       count(*)::BIGINT AS n_postings
-FROM go
-UNION ALL
-SELECT 'clustered', sum({bytes_expr})::BIGINT, sum({bits_expr})::BIGINT,
-       count(*)::BIGINT
-FROM gc
-"""
-
-
-def curriculum_order_sql() -> str:
-    """Twin of sampling.curriculum_order: the quality_tiers result ranked
-    by (tier, md5 shuffle, doc_id)."""
-    return f"""
-WITH qt AS (
-{quality_tiers_sql()}
-)
-SELECT row_number() OVER (
-         ORDER BY tier ASC, md5('cur:' || doc_id::VARCHAR) ASC, doc_id ASC
-       )::BIGINT AS pos,
-       doc_id, tier
-FROM qt
 """
 
 

@@ -105,27 +105,3 @@ EDGES = T.StructType(
         T.StructField("dst_doc_id", T.LongType(), False),
     ]
 )
-
-LINEAGE = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("rows_in", T.LongType(), False),
-        T.StructField("postings_out", T.LongType(), False),
-        T.StructField("bytes_compressed", T.LongType(), False),
-        T.StructField("skew_ratio", T.DoubleType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-        T.StructField("input_fingerprint", T.StringType(), False),
-    ]
-)
-
-TOPK_RESULT = T.StructType(
-    [
-        T.StructField("query_id", T.IntegerType(), False),
-        T.StructField("rank", T.IntegerType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)

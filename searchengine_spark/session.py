@@ -165,10 +165,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    """Stop the active session (used by the two-parallelism scaling bench)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -24,8 +24,6 @@ Contract at 100 TB:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -94,9 +92,3 @@ def convert_to_parquet(
     df = read_format(spark, src_path, src_fmt, schema)
     df.write.mode("overwrite").parquet(out_path)
     return spark.read.parquet(out_path)
-
-
-def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
-    """Pin a testdata table's schema from its parquet footer (zero-row read)
-    — the sandbox stand-in for the warehouse catalog entry."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema

@@ -5,7 +5,8 @@ path: ingest new commits continuously instead of batch re-crawl).
 Two streaming operators:
 
 - ``stream_corpus_to_postings``: file-source stream over corpus parquet
-  drops → same tokenizer (mapInPandas works unchanged on streaming DFs) →
+  drops → the batch build's tokenizer (``mapInArrow`` of
+  ``emit_postings_arrow``, which runs unchanged on streaming DFs) →
   postings appended via ``foreachBatch`` (each micro-batch is an idempotent
   segment publish keyed by batch id — exactly-once via the same
   write-tmp/rename protocol as the batch build).
@@ -24,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searchengine_spark.functions.textproc_udfs import POSTINGS_SCHEMA, emit_postings
+from searchengine_spark.functions.textproc_udfs import POSTINGS_SCHEMA, emit_postings_arrow
 from searchengine_spark.schemas import CORPUS
 
 
@@ -33,7 +34,6 @@ def stream_corpus_to_postings(
     corpus_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    doc_id_offset_col: str = "commit",
 ):
     """Continuously tokenize newly-arrived corpus files into postings.
 
@@ -51,7 +51,9 @@ def stream_corpus_to_postings(
         "doc_id",
         F.abs(F.xxhash64("repo", "path", "commit")) % F.lit(1 << 60),
     )
-    postings = with_ids.select("doc_id", "content").mapInPandas(emit_postings, POSTINGS_SCHEMA)
+    postings = with_ids.select("doc_id", "content").mapInArrow(
+        emit_postings_arrow, POSTINGS_SCHEMA
+    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # idempotent per-batch publish: overwrite the batch's own directory

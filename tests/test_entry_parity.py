@@ -3,7 +3,11 @@ the driver performs at sf0.01 (CORRECTNESS_r{N}.json)."""
 
 from __future__ import annotations
 
+import ast
 import os
+import re
+from collections import Counter
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -37,6 +41,33 @@ def test_registries_agree():
     assert gates == set(entrymod.oracle_sql())
     for names in (bench.HEADLINE, bench.BUILD_OPS, bench.R01_BASKET):
         assert set(names) <= gates, sorted(set(names) - gates)
+
+
+def test_no_unreferenced_definitions():
+    """Every top-level def, class and simple assignment in the package is
+    named at least once more somewhere in the code or its tests — so
+    retiring a caller cannot leave its helper behind."""
+    root = Path(__file__).resolve().parent.parent
+    package = sorted((root / "searchengine_spark").rglob("*.py"))
+    corpus = package + [root / "__spark_entry__.py", root / "bench.py"]
+    corpus += sorted((root / "tests").rglob("*.py")) + sorted((root / "perfbench").rglob("*.py"))
+    words = Counter(w for p in corpus for w in re.findall(r"\w+", p.read_text()))
+
+    unreferenced = []
+    for path in package:
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+                names = [node.target.id]
+            else:
+                continue
+            for name in names:
+                if not (name.startswith("__") and name.endswith("__")) and words[name] < 2:
+                    unreferenced.append(f"{path.relative_to(root)}:{name}")
+    assert not unreferenced, "unreferenced: " + ", ".join(unreferenced)
 
 
 @pytest.mark.parametrize("name", sorted(entrymod.queries().keys()))

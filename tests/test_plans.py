@@ -14,7 +14,6 @@ import contextlib
 import io
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
@@ -163,19 +162,6 @@ def test_decontaminate_broadcasts_benchmark(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_stratified_sample_is_scan_only(spark):
-    """Deterministic sampling is a pure row-local filter: no exchange, no
-    join, no Python crossing."""
-    from searchengine_spark.operators.sampling import stratified_sample
-    from searchengine_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = plan_of(stratified_sample(docs, {"en": 300_000}, 700_000))
-    assert "Exchange" not in plan
-    assert "Join" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
-
-
 def test_batch_topk_two_phase_windows(spark):
     """bm25_batch_topk must (a) broadcast the query map, (b)
     run the partial rank keyed by (query_id, salt) BEFORE the per-query
@@ -213,19 +199,6 @@ def test_fuzzy_suggest_is_lexicon_only(spark):
     assert "TakeOrderedAndProject" in plan  # bounded top-k, no global sort
 
 
-def test_unigram_logprob_no_window_no_corpus(spark):
-    """The quality signal is postings ⋈ lexicon + one aggregate: no corpus
-    scan, no window, no driver-side collect in the plan."""
-    from searchengine_spark.operators import serve
-    from searchengine_spark.plans.gate_index import gate_index
-
-    idx = gate_index(spark, SF_DIR)
-    plan = plan_of(serve.unigram_logprob(spark, idx))
-    assert "documents.parquet" not in plan
-    assert "Window" not in plan
-    assert "HashAggregate" in plan
-
-
 def test_search_results_pushes_winner_ids_into_scans(spark):
     """Result assembly must never scan the corpus: the <=k winner doc_ids
     are collected and pushed into the documents scan (PushedFilters In),
@@ -256,20 +229,6 @@ def test_wildcard_search_prunes_postings(spark):
     pushed = plan.split("PushedFilters")[1].split("\n")[0] if "PushedFilters" in plan else ""
     assert "In(term" in pushed or "In(bucket" in pushed
     assert "SortMergeJoin" not in plan  # no join at all: filter + one agg
-
-
-def test_sketches_are_one_aggregate_no_window(spark):
-    """Both sketches must be a row-local projection + ONE map-side-combined
-    aggregate: no window, no join, no second shuffle."""
-    from searchengine_spark.operators import sketches
-    from searchengine_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    for df in (sketches.hll_registers(docs), sketches.cms_counters(docs)):
-        plan = plan_of(df)
-        assert "Window" not in plan
-        assert "Join" not in plan
-        assert plan.count("Exchange") <= 2  # one shuffle (+ AQE read)
 
 
 def test_synonym_topk_broadcasts_and_bounds(spark):
@@ -372,19 +331,6 @@ def test_maxp_serves_from_pruned_postings_no_window(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_dsir_broadcasts_logratio_table(spark):
-    """DSIR: the B-row log-ratio table joins back broadcast; the per-doc
-    weight is a hash aggregate (no window, no sort-merge join)."""
-    from searchengine_spark.operators.sampling import dsir_weights
-    from searchengine_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = plan_of(dsir_weights(docs, n_buckets=64))
-    assert "BroadcastHashJoin" in plan
-    assert "Window" not in plan
-    assert "HashAggregate" in plan
-
-
 def test_routing_is_scan_only_projection(spark):
     """Rendezvous routing must be a pure per-row projection: no exchange,
     no join, no window — at 10^12 docs it fuses into the feeding scan."""
@@ -396,35 +342,6 @@ def test_routing_is_scan_only_projection(spark):
     assert "Exchange" not in plan
     assert "Join" not in plan
     assert "Window" not in plan
-
-
-def test_epoch_shuffle_two_phase_prefix_sum(spark):
-    """Epoch shuffle: per-bucket windows only (never an unkeyed global
-    rank) and the 256-row offset table joins back broadcast."""
-    from searchengine_spark.operators.sampling import epoch_shuffle
-    from searchengine_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = plan_of(epoch_shuffle(docs, 0))
-    assert "BroadcastHashJoin" in plan
-    specs = [l for l in plan.splitlines() if "windowspecdefinition" in l]
-    assert specs and all("b#" in s for s in specs)
-
-
-def test_quality_tiers_bucketed_windows_and_broadcasts(spark):
-    """Quality tiers: the rank window is keyed by (lang, value-bucket) —
-    a hot language never collapses to one partition — and both driver-side
-    tables (offsets, totals) join back broadcast."""
-    from searchengine_spark.operators.sampling import quality_tiers
-    from searchengine_spark.plans.gate_index import gate_index
-    from searchengine_spark.sources.tables import load_table
-
-    idx = gate_index(spark, SF_DIR)
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = plan_of(quality_tiers(spark, idx, docs))
-    assert plan.count("BroadcastHashJoin") >= 2
-    specs = [l for l in plan.splitlines() if "windowspecdefinition" in l]
-    assert specs and all("vb#" in s for s in specs)
 
 
 def test_collapse_topk_is_hash_agg_not_window(spark):
@@ -506,23 +423,6 @@ def test_domain_kl_joins_aggregates_only(spark):
     assert "InMemoryTableScan" in plan
 
 
-def test_zorder_is_map_only_plus_broadcast_bounds(spark):
-    """The Z-order key is ONE 4-value bounds aggregate broadcast back (a
-    1-row cross join) over a map-only projection: no SortMergeJoin, no
-    Python worker, no repartitioning of the fact table."""
-    from searchengine_spark.operators.layout import zorder_layout
-    from searchengine_spark.sources.tables import load_table
-
-    ev = load_table(spark, SF_DIR, "events")
-    plan = plan_of(zorder_layout(ev, bits=16, n_groups=64))
-    assert "BroadcastNestedLoopJoin" in plan  # 1-row bounds cross join
-    assert "SortMergeJoin" not in plan
-    assert "Python" not in plan and "ArrowEval" not in plan
-    # the only exchanges are the bounds aggregate's (partial → 1 row) and
-    # its broadcast — the fact-table side is never repartitioned
-    assert "hashpartitioning(event_id" not in plan
-
-
 def test_crawl_schedule_windows_are_bucketed(spark):
     """Every window in the schedule plan must be partitioned by (host,
     bucket) or by host over the 256-row bucket-count table — never by host
@@ -538,20 +438,6 @@ def test_crawl_schedule_windows_are_bucketed(spark):
     # the row_number window (the one over row data) must carry the bucket
     rank_specs = [l for l in specs if "row_number" in l]
     assert rank_specs and all(" b#" in l or "b#" in l for l in rank_specs)
-
-
-def test_weighted_sample_is_heap_over_map(spark):
-    """A-ES sampling is a map-only key projection + bounded heap: no
-    Exchange other than the heap's own singlePartition merge, no join, no
-    Python."""
-    from searchengine_spark.operators.sampling import weighted_sample_topn
-    from searchengine_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = plan_of(weighted_sample_topn(docs, n=50))
-    assert "TakeOrderedAndProject" in plan
-    assert "Join" not in plan
-    assert "Python" not in plan and "ArrowEval" not in plan
 
 
 def test_knn_graph_co_keyed_join_no_cartesian(spark):
