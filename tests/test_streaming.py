@@ -27,7 +27,6 @@ def test_stream_corpus_to_postings(spark, tmp_path):
     batches = [d for d in os.listdir(out_dir) if d.startswith("batch=")]
     assert batches
     post = spark.read.parquet(os.path.join(out_dir, "*"))
-    assert post.filter(F.col("term") == "spark").count() > 0
 
     # the stream tokenizes exactly as the batch build does: the same corpus,
     # given the stream's doc-id expression, through the batch tokenizer
@@ -43,7 +42,7 @@ def test_stream_corpus_to_postings(spark, tmp_path):
         )
 
     streamed = rows(post)
-    assert sum(streamed.values()) > 0
+    assert streamed
     assert streamed == rows(_reference_postings(docs))
 
 
