@@ -17,6 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from searchengine_spark import oracles
 from searchengine_spark.operators import serve
+from searchengine_spark.plans.build_index import ensure_segments
 from searchengine_spark.plans.gate_index import gate_index
 from searchengine_spark.sources.tables import load_table
 
@@ -174,7 +175,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the same scored phrase served from the COMPRESSED segments
         # (positions decoded from blobs, in-shard adjacency + micros BM25)
         "phrase_topk_wand": lambda spark, sf: segments.phrase_topk_micros(
-            spark, (idx := gate_index(spark, sf))["segments"], idx["lexicon"],
+            spark, ensure_segments(spark, (idx := gate_index(spark, sf))["dir"]), idx["lexicon"],
             PHRASE, idx["avgdl"], k=TOPK,
         ),
         # proximity (within-k positions) — the sloppy-phrase generalization
@@ -183,7 +184,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         # the same proximity query served from the COMPRESSED segments
         "proximity_match_wand": lambda spark, sf: segments.proximity_match_segments(
-            spark, (idx := gate_index(spark, sf))["segments"], idx["lexicon"],
+            spark, ensure_segments(spark, (idx := gate_index(spark, sf))["dir"]), idx["lexicon"],
             PHRASE[0], PHRASE[1], slop=3,
         ),
         # directional variant: term_a BEFORE term_b within k positions
@@ -192,7 +193,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         # ...and its directional sibling from the segments
         "ordered_proximity_wand": lambda spark, sf: segments.ordered_proximity_segments(
-            spark, (idx := gate_index(spark, sf))["segments"], idx["lexicon"],
+            spark, ensure_segments(spark, (idx := gate_index(spark, sf))["dir"]), idx["lexicon"],
             PHRASE[0], PHRASE[1], slop=3,
         ),
         # synonym-group scoring (Lucene SynonymQuery semantics: macro-term

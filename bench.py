@@ -929,12 +929,14 @@ def run_vocab_datum() -> None:
         encode_segments,
         seg_exhaustive_topk_micros,
     )
+    from searchengine_spark.plans.build_index import ensure_segments
     from searchengine_spark.plans.lineage import IndexManifest
 
     out["blockmax_vs_exhaustive"] = {}
+    own = ensure_segments(spark, idx["dir"])
     span = IndexManifest(idx["dir"]).stage_metrics()["segments"]["shard_span"]
     for label, seg in [
-        (f"span_{span}", idx["segments"]),
+        (f"span_{span}", own),
         (
             f"span_{n_docs // 4}",
             encode_segments(

@@ -23,11 +23,12 @@ Result rows carry exactly the reference's five fields
 (SearchService.java:391-423): ``term, url, title, snippet, id``
 (id = doc_id — our analog of the Mongo ObjectId).
 
-Per request, a plain or phrase search is three Spark executions, all in
-results.search_results: one lexicon point lookup; one top-k aggregate over
-the pruned postings that scores, picks each doc's snippet term and (for a
-phrase) checks adjacency in the same pass; one documents scan with the <=k
-winner ids pushed down and their scores/terms inlined as literal maps. The
+Per request, a plain, phrase or boolean search is three Spark executions:
+one lexicon point lookup (for a boolean query, one for the filter and the
+ranking together); one top-k aggregate over the pruned postings that
+scores, picks each doc's snippet term and (for a phrase) checks adjacency
+in the same pass; one documents scan with the <=k winner ids pushed down
+and their scores/terms inlined as literal maps (results.search_results). The
 <=k rows are ordered by rank on the driver.
 
 Scale: the HTTP layer is driver-side only; every request runs the same
@@ -111,21 +112,25 @@ class SearchAPI:
 
         terms, is_phrase = self.parse_query(raw_query)
         raw_s = raw_query.strip()
-        doc_filter = None
+        doc_filter = rows = None
         if not is_phrase and self._BOOL_RE.search(raw_s):
             from searchengine_spark.operators.boolquery import (
                 BoolQueryError,
                 boolean_query,
+                leaf_terms,
                 parse,
                 positive_leaf_terms,
             )
 
             try:
                 ast = parse(raw_s)  # parsed ONCE; the planner reuses the AST
-                doc_filter = boolean_query(self.spark, self.idx, ast)
+                # one lexicon lookup serves the filter and the ranking
+                rows = serve._qlex(self.spark, self.idx, sorted(leaf_terms(ast)))
+                doc_filter = boolean_query(self.spark, self.idx, ast, rows)
                 # rank over positive leaves only — a NOT-ed term is absent
                 # from every surviving doc, so scoring it is a wasted scan
                 terms = sorted(positive_leaf_terms(ast))
+                rows = [r for r in rows if r["term"] in terms]
             except BoolQueryError:
                 pass  # malformed boolean → plain term search over its words
         elif not is_phrase and raw_s.endswith("*") and len(raw_s) >= 2 and " " not in raw_s:
@@ -149,6 +154,7 @@ class SearchAPI:
             k=k,
             doc_filter=doc_filter,
             phrase=is_phrase and len(terms) >= 2,
+            rows=rows,
         )
         # <=k rows: ranked on the driver, not by a Spark range sort
         return [

@@ -156,7 +156,9 @@ def positive_leaf_terms(node: tuple) -> set[str]:
     return set().union(*(positive_leaf_terms(c) for c in node[1]))
 
 
-def boolean_query(spark: SparkSession, idx: dict, query: str | tuple) -> DataFrame:
+def boolean_query(
+    spark: SparkSession, idx: dict, query: str | tuple, rows: list | None = None
+) -> DataFrame:
     """Evaluate a boolean query against the gate index → distinct doc_ids.
 
     One lexicon lookup resolves every leaf term's postings bucket, then each
@@ -164,10 +166,12 @@ def boolean_query(spark: SparkSession, idx: dict, query: str | tuple) -> DataFra
     doc_id set algebra. Terms absent from the lexicon evaluate to the empty
     set (standard boolean-retrieval semantics). ``query`` may be a raw
     string or an already-parsed AST (callers that also need the leaf terms
-    parse once and pass the tuple)."""
+    parse once and pass the tuple); ``rows`` are the leaf terms' lexicon
+    rows (``serve._qlex``) when the caller has looked them up already, as
+    the REST route does to rank with the same rows."""
     ast = parse(query) if isinstance(query, str) else query
-    terms = sorted(leaf_terms(ast))
-    rows = _qlex(spark, idx, terms)
+    if rows is None:
+        rows = _qlex(spark, idx, sorted(leaf_terms(ast)))
     posts = _pruned_postings(idx, rows).select("term", "doc_id") if rows else None
     empty = local_frame(spark, [], "doc_id long")
 

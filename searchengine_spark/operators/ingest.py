@@ -72,17 +72,21 @@ def dedup(docs: DataFrame) -> DataFrame:
 
 
 def _sample_boundaries(
-    sample_from: DataFrame, n_buckets: int, target_per_bucket: int = 128
+    sample_from: DataFrame,
+    n_buckets: int,
+    target_per_bucket: int = 128,
+    n_rows: int | None = None,
 ) -> list[tuple[str, str, str]]:
     """Deterministic range boundaries over the (repo,path,commit) key:
     hash-filter a ~``n_buckets·target_per_bucket``-row sample (same rows at
     any parallelism — the filter is a pure row predicate, not a reservoir),
     sort on the driver, take every len/n_buckets-th key. Boundaries need not
     be exact quantiles — they only balance bucket sizes, never affect the
-    assigned ids."""
+    assigned ids. ``n_rows`` is ``sample_from``'s row count when the caller
+    has it already (else one count job)."""
     if n_buckets <= 1:
         return []
-    n = sample_from.count()
+    n = sample_from.count() if n_rows is None else n_rows
     want = n_buckets * target_per_bucket
     if n <= want:
         return []  # tiny input → one bucket is fine
@@ -109,6 +113,7 @@ def assign_doc_ids(
     docs: DataFrame,
     n_partitions: int | None = None,
     sample_from: DataFrame | None = None,
+    n_rows: int | None = None,
 ) -> Iterator[DataFrame]:
     """Yields ``docs`` with a dense, deterministic doc_id = rank in the
     global (repo,path,commit) order — two-phase assignment with a
@@ -129,7 +134,8 @@ def assign_doc_ids(
     that chain scaling backwards 8→32 cores on small-row inputs (fixed
     per-shuffle costs dominate). ``sample_from`` lets the caller supply a
     cheap key source (the raw corpus scan, column-pruned) so boundary
-    sampling never evaluates the upstream dedup/fingerprint pipeline.
+    sampling never evaluates the upstream dedup/fingerprint pipeline, and
+    ``n_rows`` its row count when the caller has counted it already.
     The boundary count is a load-balance knob only: ids are rank-in-global-
     order at any bucket count, so results stay identical across N/4N
     parallelism. At cluster scale use n_partitions ~ executors·4; the O(B)
@@ -148,7 +154,7 @@ def assign_doc_ids(
         n_partitions = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
 
     src = sample_from if sample_from is not None else docs
-    bounds = _sample_boundaries(src, n_partitions)
+    bounds = _sample_boundaries(src, n_partitions, n_rows=n_rows)
     if bounds:
         barr = F.array(
             *[
@@ -193,9 +199,13 @@ def assign_doc_ids(
 
 
 @contextmanager
-def build_documents(corpus: DataFrame, n_partitions: int | None = None) -> Iterator[DataFrame]:
+def build_documents(
+    corpus: DataFrame, n_partitions: int | None = None, n_rows: int | None = None
+) -> Iterator[DataFrame]:
     """Yields corpus → documents (without doc_len/pagerank, added by later
     stages); consume it inside the ``with`` block (see assign_doc_ids).
+    ``n_rows`` is the corpus's row count if the caller has it (build_index
+    takes it from the corpus fingerprint), saving boundary sampling a count.
 
     The dedup windows + doc_id bucket/ordinal passes all run over a SLIM
     projection (keys + derived metadata, no content) — at 10^12-file scale
@@ -210,7 +220,7 @@ def build_documents(corpus: DataFrame, n_partitions: int | None = None) -> Itera
     # boundary sampling reads keys straight off the (column-pruned) corpus
     # scan — never through the fingerprint/dedup pipeline above
     with assign_doc_ids(
-        dedup(slim), n_partitions, sample_from=corpus.select(*SORT_KEY)
+        dedup(slim), n_partitions, sample_from=corpus.select(*SORT_KEY), n_rows=n_rows
     ) as ids:
         yield ids.join(corpus.select(*SORT_KEY, "lang", "content"), list(SORT_KEY))
 

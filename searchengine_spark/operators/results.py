@@ -138,6 +138,7 @@ def search_results(
     k: int = 10,
     doc_filter: DataFrame | None = None,
     phrase: bool = False,
+    rows: list | None = None,
 ) -> DataFrame:
     """Index-served BM25 top-k assembled into the reference's response shape:
     ``(rank, doc_id, term, url, title, snippet, score_micros)``.
@@ -166,13 +167,17 @@ def search_results(
     (SearchService.handlePhraseSearch, SearchService.java:99-133) on true
     positional adjacency instead of snippet scans. ``doc_filter`` (a
     ``doc_id`` DataFrame, e.g. a boolean query's hit set) likewise
-    restricts candidates before the bound.
+    restricts candidates before the bound. ``rows`` are ``query_terms``'
+    lexicon rows when the caller has looked them up already (the REST
+    boolean route, whose one lookup serves its filter too); step 1 is then
+    skipped.
     """
     from pyspark.sql import Window
 
     from searchengine_spark.operators import serve
 
-    rows = serve._qlex(spark, idx, query_terms)
+    if rows is None:
+        rows = serve._qlex(spark, idx, query_terms)
     if not rows or (phrase and not set(query_terms) <= {r["term"] for r in rows}):
         return local_frame(spark, [], _RESULT_SCHEMA)
     # the <=k winners are collected so their doc_ids PUSH DOWN into the

@@ -1601,11 +1601,13 @@ def bm25_topk_blockmax(
     granularity with numpy scoring to actually pay off. Hash-identical to
     ``bm25_topk`` (same oracle, same integer-micros contract). Not through
     :func:`_scored`: it decodes the segment blobs, not the columnar
-    postings."""
+    postings. The segments are the index's own (``ensure_segments``:
+    encoded on the first call if the build did not publish them)."""
     from searchengine_spark.operators.segments import blockmax_topk_micros
+    from searchengine_spark.plans.build_index import ensure_segments
 
     return blockmax_topk_micros(
-        spark, idx["segments"], idx["lexicon"], query_terms, idx["avgdl"], k=k
+        spark, ensure_segments(spark, idx["dir"]), idx["lexicon"], query_terms, idx["avgdl"], k=k
     )
 
 

@@ -7,7 +7,7 @@ It is exactly one ``build_index`` run (plans/build_index.py) over the sf's
 non-alnum, positions over the raw split — exactly what the DuckDB oracles
 compute, so the gates check the index-served path against the same SQL.
 Nothing is derived after the build; the run publishes, with its manifest,
-lineage rows and stage-level resume:
+lineage rows and stage-level resume, the columnar tables only:
 
 - ``postings/``  (doc_id, term, tf, positions, dl, bucket), one file per
   term-hash ``bucket=*`` directory, so a query's scan touches only its
@@ -15,10 +15,17 @@ lineage rows and stage-level resume:
   point lookups, SearchService.java:464-477);
 - ``lexicon/``   (term, df, cf, idf_compat, idf_bm25, bucket) — query
   serving collects its |q| rows in one tiny job;
-- ``segments/``  compressed delta+varint blocks with skip pointers and
-  block-max scores (operators/segments.py) — the block-max serve path;
 - ``_manifest.json`` with the n_docs / sum_dl / avgdl scalars (avgdl =
   sum_dl/n_docs, computed identically in the DuckDB oracles).
+
+Building and serving these runs in the JVM alone: no pandas/Arrow UDF, so
+a REST process (jobs/serve_api.py) never starts a Python worker. The
+compressed ``segments/`` (delta+varint blocks with skip pointers and
+block-max scores, operators/segments.py) are encoded on first use by
+``build_index.ensure_segments(spark, idx["dir"])``, which every
+segment-served path calls (``serve.bm25_topk_blockmax`` and the ``*_wand``
+gates); the encode publishes into the cached directory atomically and is
+recorded in its manifest and lineage.
 
 :func:`cached_index` is the content-addressed build-or-load cache (the
 trigram index and the compat gate's documents table use it too, each in
@@ -44,7 +51,7 @@ from searchengine_spark.plans import lineage as lin
 from searchengine_spark.plans.build_index import build_index, load_index
 from searchengine_spark.sources.tables import load_table
 
-GATE_INDEX_VERSION = 7  # v7: exactly one build_index run, nothing derived after it
+GATE_INDEX_VERSION = 8  # v8: columnar tables only; segments encoded on first use
 
 # in-memory cache: (spark appId, cache key) -> handles dict
 _LOADED: dict[tuple[str, str], dict] = {}
@@ -133,8 +140,10 @@ def _load_gate_index(spark: SparkSession, base: str) -> dict:
 def gate_index(spark: SparkSession, sf_dir: str) -> dict:
     """Build-or-load the gate index for ``sf_dir``.
 
-    Returns {postings, lexicon, segments: DataFrame, avgdl, n_docs,
-    sum_dl, dir}. Disk-cached across processes
+    Returns {postings, lexicon: DataFrame, avgdl, n_docs, sum_dl, dir}
+    (``segments`` too if some process has encoded them; segment-served
+    paths read them through ``ensure_segments(spark, dir)``). Disk-cached
+    across processes
     (driver gate + bench share one build); the returned handles are
     memoized per Spark application.
     """

@@ -7,10 +7,13 @@ the Spark-native equivalent:
 
 - every build stage writes its output table to ``_tmp_<stage>`` and renames
   to the final dir — an atomic publish, so a killed build never leaves a
-  half-visible stage;
+  half-visible stage (a failed write removes its tmp directory);
 - a ``_manifest.json`` records completed stages + their input fingerprint;
   resume = skip stages whose fingerprint matches (the left-anti-join skip of
-  SURVEY.md F10, done at stage granularity);
+  SURVEY.md F10, done at stage granularity). A stage is recorded by
+  re-reading the file under a lock on the index directory and replacing
+  only that stage's entry, so processes recording different stages of one
+  index keep each other's entries;
 - a ``lineage`` parquet table appends one row per (stage, partition) with
   rows/postings/bytes/skew/wall-time metrics.
 
@@ -21,6 +24,7 @@ uninterrupted one — asserted in tests/test_resume.py.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import shutil
@@ -35,24 +39,41 @@ class IndexManifest:
         self.index_dir = index_dir
         self.path = os.path.join(index_dir, "_manifest.json")
         os.makedirs(index_dir, exist_ok=True)
-        self._data = {"stages": {}, "input_fingerprint": None}
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                self._data = json.load(f)
+        self._data = self._read()
+
+    def _read(self) -> dict:
+        if not os.path.exists(self.path):
+            return {"stages": {}, "input_fingerprint": None}
+        with open(self.path) as f:
+            return json.load(f)
 
     def is_done(self, stage: str, input_fingerprint: str) -> bool:
         info = self._data["stages"].get(stage)
         return bool(info) and info.get("input_fingerprint") == input_fingerprint
 
     def mark_done(self, stage: str, input_fingerprint: str, metrics: dict) -> None:
-        self._data["stages"][stage] = {
-            "input_fingerprint": input_fingerprint,
-            "metrics": metrics,
-        }
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._data, f, indent=2)
-        os.replace(tmp, self.path)
+        """Record ``stage``: re-read the manifest under an exclusive lock on
+        the index directory, replace only this stage's entry, write it back
+        atomically. Entries another process recorded since this one was
+        read stay."""
+        fd = os.open(self.index_dir, os.O_RDONLY)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            self._data = self._read()
+            self._data["stages"][stage] = {
+                "input_fingerprint": input_fingerprint,
+                "metrics": metrics,
+            }
+            tmp = f"{self.path}.tmp{os.getpid()}"
+            with open(tmp, "w") as f:
+                json.dump(self._data, f, indent=2)
+            os.replace(tmp, self.path)
+        finally:
+            os.close(fd)  # releases the lock
+
+    def fingerprint(self, stage: str) -> str:
+        """The input fingerprint ``stage`` was built from."""
+        return self._data["stages"][stage]["input_fingerprint"]
 
     def stage_metrics(self) -> dict:
         return {s: i.get("metrics", {}) for s, i in self._data["stages"].items()}
@@ -60,7 +81,7 @@ class IndexManifest:
     def analyzer(self) -> str:
         """The analyzer the postings were built with: the head of their
         input fingerprint (``<analyzer>:<corpus fingerprint>``)."""
-        return self._data["stages"]["postings"]["input_fingerprint"].split(":", 1)[0]
+        return self.fingerprint("postings").split(":", 1)[0]
 
 
 def corpus_fingerprint(corpus: DataFrame) -> str:
@@ -99,10 +120,18 @@ def publish_stage(
     stage: str,
     partition_by: list[str] | None = None,
     options: dict[str, str] | None = None,
-) -> str:
-    """Write-to-tmp + atomic rename publish of one stage table."""
+    replace: bool = True,
+) -> bool:
+    """Write-to-tmp + atomic rename publish of one stage table; a write
+    that raises removes its tmp directory and publishes nothing.
+
+    ``replace=False`` is for a table several processes may publish at once
+    (the shared gate cache's on-demand segments): each writes its own
+    ``_tmp_<stage>.<pid>``, the first rename wins, and a later one drops
+    its copy and leaves the winner's table in place. Returns whether this
+    call published the table."""
     final = os.path.join(index_dir, stage)
-    tmp = os.path.join(index_dir, f"_tmp_{stage}")
+    tmp = os.path.join(index_dir, f"_tmp_{stage}" + ("" if replace else f".{os.getpid()}"))
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
     writer = df.write.mode("overwrite")
@@ -110,11 +139,22 @@ def publish_stage(
         writer = writer.options(**options)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    if os.path.exists(final):
-        shutil.rmtree(final)
-    os.replace(tmp, final)
-    return final
+    try:
+        writer.parquet(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    if replace:
+        if os.path.exists(final):
+            shutil.rmtree(final)
+        os.replace(tmp, final)
+        return True
+    try:
+        os.rename(tmp, final)  # fails while another process's table is there
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        return False
+    return True
 
 
 def partition_metrics(stage_dir: str) -> list[dict]:

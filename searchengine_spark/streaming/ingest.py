@@ -8,8 +8,9 @@ Two streaming operators:
   drops → the batch build's tokenizer (``mapInArrow`` of
   ``emit_postings_arrow``, which runs unchanged on streaming DFs) →
   postings appended via ``foreachBatch`` (each micro-batch is an idempotent
-  segment publish keyed by batch id — exactly-once via the same
-  write-tmp/rename protocol as the batch build).
+  publish of ``batch=<id>`` through the batch build's write-tmp/rename
+  ``lineage.publish_stage``, so a reader never sees a half-written batch
+  and a replayed batch replaces its earlier copy).
 - ``stream_dedup_pages``: the crawler's fingerprint dedup as a watermarked
   stream (``dropDuplicatesWithinWatermark``).
 
@@ -20,12 +21,11 @@ kafka/iceberg-cdc without touching the transforms.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark.functions.textproc_udfs import POSTINGS_SCHEMA, emit_postings_arrow
+from searchengine_spark.plans import lineage as lin
 from searchengine_spark.schemas import CORPUS
 
 
@@ -55,17 +55,20 @@ def stream_corpus_to_postings(
         emit_postings_arrow, POSTINGS_SCHEMA
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # idempotent per-batch publish: overwrite the batch's own directory
-        batch_df.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
-
     return (
         postings.writeStream.outputMode("append")
-        .foreachBatch(sink)
+        .foreachBatch(lambda batch_df, batch_id: publish_batch(batch_df, batch_id, out_dir))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
+
+
+def publish_batch(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
+    """The postings stream's sink: publish the micro-batch as
+    ``out_dir/batch=<batch_id>`` (write to ``_tmp_batch=<id>``, rename), so
+    a write that fails leaves no ``batch=<id>`` and a replay replaces it."""
+    lin.publish_stage(batch_df, out_dir, f"batch={batch_id}")
 
 
 def stream_dedup_pages(

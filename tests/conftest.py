@@ -66,3 +66,23 @@ def _first_diff(a, b):
         if x != y:
             return f"row {i}: spark={x!r} duck={y!r}"
     return "length mismatch"
+
+
+def sql_plans(spark, fn) -> list[str]:
+    """The physical plans of the SQL executions that ``fn()`` starts, read
+    from Spark's SQL status store once the listener bus has drained."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = {int(e.executionId()) for e in executions()}
+    fn()
+    return [
+        e.physicalPlanDescription()
+        for e in executions()
+        if int(e.executionId()) not in before
+    ]

@@ -165,6 +165,22 @@ def test_boolean_query_routes_to_set_algebra(spark, api_server):
     assert status2 == 200 and body2["total"] > 0
 
 
+def test_boolean_request_looks_up_the_lexicon_once(spark, api_server):
+    """A boolean request is three Spark executions like a plain one: one
+    lexicon lookup, shared by the boolean filter and the ranking, then the
+    top-k aggregate and the documents scan."""
+    from tests.conftest import sql_plans
+
+    api, _ = api_server
+    lexicon_scan = "ReadSchema: struct<term:string,df:bigint"  # lexicon's leading columns
+    for q in ("hash AND NOT join", "(hash OR spark) AND join"):
+        hits = []
+        plans = sql_plans(spark, lambda: hits.append(api.search(q)))
+        assert hits[0], q
+        assert len(plans) == 3, (q, len(plans))
+        assert sum(lexicon_scan in p for p in plans) == 1, q
+
+
 def test_wildcard_query_expands_prefix(api_server):
     api, base = api_server
     status, body = _get(base, "/api/search?query=" + urllib.parse.quote("spar*"))

@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from searchengine_spark.plans.build_index import build_index, load_index
+from searchengine_spark.plans.build_index import build_index, ensure_segments, load_index
 from searchengine_spark.sources.corpus import generate_corpus, generate_corpus_pdf
 
 N_DOCS = 120
@@ -43,10 +43,10 @@ def _documents(spark):
 def _kill_resume(spark, tmp_path_factory, monkeypatch, frame, **kw) -> set:
     """Build ``frame`` uninterrupted, then kill a second build inside the
     lexicon stage and resume it: the resumed index must hash identically.
-    Returns the resumed manifest's stages."""
+    Returns the stages the resumed build recorded."""
     ref_dir = str(tmp_path_factory.mktemp("ref"))
     build_index(spark, frame, ref_dir, **kw)
-    ref = _index_hashes(spark, load_index(spark, ref_dir))
+    ref = _index_hashes(spark, _with_segments(spark, ref_dir))
 
     # killed build: blow up inside the lexicon stage on the first attempt
     kill_dir = str(tmp_path_factory.mktemp("kill"))
@@ -67,11 +67,17 @@ def _kill_resume(spark, tmp_path_factory, monkeypatch, frame, **kw) -> set:
 
     # resume must complete and produce a byte-identical index
     build_index(spark, frame, kill_dir, **kw)
-    got = _index_hashes(spark, load_index(spark, kill_dir))
-    assert got == ref
-
     with open(os.path.join(kill_dir, "_manifest.json")) as f:
-        return set(json.load(f)["stages"])
+        stages = set(json.load(f)["stages"])
+    got = _index_hashes(spark, _with_segments(spark, kill_dir))
+    assert got == ref
+    return stages
+
+
+def _with_segments(spark, index_dir: str) -> dict:
+    """The index's tables, segments included: a documents-table build
+    publishes none, so they are encoded here (``ensure_segments``)."""
+    return {**load_index(spark, index_dir), "segments": ensure_segments(spark, index_dir)}
 
 
 def test_kill_resume_identical(spark, tmp_path_factory, monkeypatch):
@@ -83,17 +89,18 @@ def test_kill_resume_identical(spark, tmp_path_factory, monkeypatch):
 
 def test_kill_resume_identical_documents(spark, tmp_path_factory, monkeypatch):
     """The gate index's build: a documents table under the simple analyzer
-    keeps its doc_ids, skips ingest and resumes the same way."""
+    keeps its doc_ids, skips ingest, publishes no segments and resumes the
+    same way (its segments, encoded afterwards, hash identically too)."""
     stages = _kill_resume(
         spark, tmp_path_factory, monkeypatch, _documents(spark), analyzer="simple"
     )
-    assert stages == {"postings", "lexicon", "segments"}
+    assert stages == {"postings", "lexicon"}
 
 
 def test_gate_index_manifest_and_lineage(spark, tmp_path, monkeypatch):
     """The gate index is a build_index run: its directory holds the build
     manifest (with the scalars that replaced meta.json) and lineage rows
-    for postings, lexicon and segments."""
+    for postings and lexicon, and for segments once they are encoded."""
     from searchengine_spark.plans.gate_index import gate_index
 
     sf = tmp_path / "sf"
@@ -107,9 +114,14 @@ def test_gate_index_manifest_and_lineage(spark, tmp_path, monkeypatch):
     assert (lex["n_docs"], lex["sum_dl"]) == (idx["n_docs"], idx["sum_dl"])
     assert idx["n_docs"] == N_DOCS and idx["avgdl"] == idx["sum_dl"] / N_DOCS > 0
     assert not os.path.exists(os.path.join(idx["dir"], "meta.json"))
-    lineage = spark.read.parquet(os.path.join(idx["dir"], "lineage"))
-    stages = {r["stage"] for r in lineage.select("stage").distinct().collect()}
-    assert {"postings", "lexicon", "segments"} <= stages
+
+    def lineage_stages() -> set:
+        lineage = spark.read.parquet(os.path.join(idx["dir"], "lineage"))
+        return {r["stage"] for r in lineage.select("stage").distinct().collect()}
+
+    assert lineage_stages() == {"postings", "lexicon"}
+    ensure_segments(spark, idx["dir"])
+    assert lineage_stages() == {"postings", "lexicon", "segments"}
     # the documents' own ids, not ingest-assigned ones
     doc_ids = {r["doc_id"] for r in idx["postings"].select("doc_id").distinct().collect()}
     assert doc_ids <= set(range(N_DOCS)) and len(doc_ids) > N_DOCS // 2

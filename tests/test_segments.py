@@ -136,10 +136,12 @@ def test_one_file_per_bucket_shard(spark, index, tmp_path_factory):
 def test_gate_index_one_file_per_bucket(spark, index, tmp_path):
     """The gate index is exactly one ``build_index(analyzer="simple")`` run
     over a documents table: the same manifest stages and the same top-level
-    entries as such a run, so no table is derived after it. Its postings
-    and segments directories hold one parquet file per bucket (one shard at
-    this size), and so do the postings build_index publishes from a
-    corpus."""
+    entries as such a run, so no table is derived after it, before and
+    after both encode their segments on demand (``ensure_segments``). Its
+    postings and on-demand segments directories hold one parquet file per
+    bucket (one shard at this size), and so do the postings build_index
+    publishes from a corpus."""
+    from searchengine_spark.plans.build_index import ensure_segments
     from searchengine_spark.plans.gate_index import gate_index
     from searchengine_spark.plans.lineage import IndexManifest
 
@@ -147,8 +149,13 @@ def test_gate_index_one_file_per_bucket(spark, index, tmp_path):
     ref = str(tmp_path)
     docs = index["documents"].select("doc_id", F.col("content").alias("text"))
     build_index(spark, docs, ref, analyzer="simple")
+    columnar = {"postings", "lexicon"}
+    assert set(IndexManifest(ref).stage_metrics()) == columnar
+    assert columnar <= set(IndexManifest(base).stage_metrics()) <= columnar | {"segments"}
+    for d in (base, ref):
+        ensure_segments(spark, d)
     stages = set(IndexManifest(base).stage_metrics())
-    assert stages == set(IndexManifest(ref).stage_metrics())
+    assert stages == set(IndexManifest(ref).stage_metrics()) == columnar | {"segments"}
     assert sorted(os.listdir(base)) == sorted(os.listdir(ref))
 
     tables = [os.path.join(base, t) for t in ("postings", "segments")]

@@ -46,6 +46,28 @@ def test_stream_corpus_to_postings(spark, tmp_path):
     assert streamed == rows(_reference_postings(docs))
 
 
+def test_stream_batch_publish_is_atomic(spark, tmp_path):
+    """The postings sink publishes ``batch=<id>`` by tmp write + rename: a
+    batch whose write raises leaves no visible ``batch=<id>`` (and no tmp
+    directory), and a failed replay of a published batch keeps its rows."""
+    import pytest
+
+    from searchengine_spark.streaming.ingest import publish_batch
+
+    out_dir = str(tmp_path / "post")
+    good = spark.range(3).withColumnRenamed("id", "doc_id")
+    bad = good.select(F.raise_error(F.lit("simulated write failure")).alias("doc_id"))
+
+    publish_batch(good, 0, out_dir)
+    with pytest.raises(Exception, match="simulated write failure"):
+        publish_batch(bad, 1, out_dir)
+    with pytest.raises(Exception, match="simulated write failure"):
+        publish_batch(bad, 0, out_dir)
+    assert os.listdir(out_dir) == ["batch=0"]
+    rows = spark.read.parquet(os.path.join(out_dir, "batch=0")).collect()
+    assert sorted(r["doc_id"] for r in rows) == [0, 1, 2]
+
+
 def test_stream_dedup_within_watermark(spark, tmp_path):
     """Streaming fingerprint dedup == batch dropDuplicates on fingerprint
     when all rows fall inside the watermark: same fingerprint SET, exactly

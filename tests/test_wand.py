@@ -105,14 +105,14 @@ def test_phrase_micros_equals_columnar(spark):
     """The segments-served scored phrase (positions decoded from blobs)
     must equal the columnar phrase_topk row-for-row in exact micros."""
     from searchengine_spark.operators import serve
+    from searchengine_spark.plans.build_index import ensure_segments
     from searchengine_spark.plans.gate_index import gate_index
 
     idx = gate_index(spark, "/root/testdata/sf0.001")
+    seg = ensure_segments(spark, idx["dir"])
 
     def micros(phrase):
-        return phrase_topk_micros(
-            spark, idx["segments"], idx["lexicon"], phrase, idx["avgdl"], k=10
-        )
+        return phrase_topk_micros(spark, seg, idx["lexicon"], phrase, idx["avgdl"], k=10)
 
     cols = serve.phrase_topk(spark, idx, ["hash", "join"], k=10).collect()
     wand = micros(["hash", "join"]).collect()
