@@ -353,8 +353,10 @@ def run_queries() -> tuple[dict, dict, dict, dict, float, float, float]:
         "p95_sec": round(_p95(lat), 3),
     }
     # REST twin end-to-end (S10): HTTP round-trip over the same session —
-    # wire parse + search_results assembly + JSON encode. Guarded: a
-    # serving hiccup must never fail the whole bench.
+    # wire parse, three Spark executions (lexicon lookup, top-k aggregate,
+    # pushed-down documents scan), driver-side row rendering
+    # (results.result_rows) and JSON encode. Guarded: a serving hiccup must
+    # never fail the whole bench.
     try:
         import json as _json
         import urllib.request

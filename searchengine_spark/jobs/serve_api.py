@@ -17,7 +17,7 @@ Query routing mirrors SearchService.processSearchQuery:
   candidates, THEN BM25 ranks the survivors (filter-then-rank, the
   reference's flow at :99-133);
 - plain query → term path: index-served BM25 top-k with url/title/snippet
-  assembly (results.search_results = convertDocumentsToResults shape).
+  assembly (results.result_rows = convertDocumentsToResults shape).
 
 Result rows carry exactly the reference's five fields
 (SearchService.java:391-423): ``term, url, title, snippet, id``
@@ -27,9 +27,10 @@ Per request, a plain, phrase or boolean search is three Spark executions:
 one lexicon point lookup (for a boolean query, one for the filter and the
 ranking together); one top-k aggregate over the pruned postings that
 scores, picks each doc's snippet term and (for a phrase) checks adjacency
-in the same pass; one documents scan with the <=k winner ids pushed down
-and their scores/terms inlined as literal maps (results.search_results). The
-<=k rows are ordered by rank on the driver.
+in the same pass; one plain documents scan, a single stage with the <=k
+winner ids pushed down, that collects their ``(doc_id, source, text)``.
+The <=k result rows — url, title, snippet, rank — are then built in Python
+on the driver (results.result_rows), the snippet contract's one renderer.
 
 Scale: the HTTP layer is driver-side only; every request runs the same
 partition-pruned plans the gated queries run, so a serving deployment is
@@ -108,7 +109,7 @@ class SearchAPI:
         ``prefix*`` token → dictionary expansion (bounded) then rank;
         plain → BM25 top-k."""
         from searchengine_spark.operators import serve
-        from searchengine_spark.operators.results import search_results
+        from searchengine_spark.operators.results import result_rows
 
         terms, is_phrase = self.parse_query(raw_query)
         raw_s = raw_query.strip()
@@ -146,7 +147,7 @@ class SearchAPI:
                     terms = expanded
         if not terms:
             return []
-        res = search_results(
+        hits = result_rows(
             self.spark,
             self.idx,
             self.documents,
@@ -156,16 +157,15 @@ class SearchAPI:
             phrase=is_phrase and len(terms) >= 2,
             rows=rows,
         )
-        # <=k rows: ranked on the driver, not by a Spark range sort
         return [
             {
-                "term": r["term"],
-                "url": r["url"],
-                "title": r["title"],
-                "snippet": r["snippet"],
-                "id": r["doc_id"],
+                "term": r.term,
+                "url": r.url,
+                "title": r.title,
+                "snippet": r.snippet,
+                "id": r.doc_id,
             }
-            for r in sorted(res.collect(), key=lambda r: r["rank"])
+            for r in hits
         ]
 
     def suggest_query(self, raw_query: str) -> str | None:

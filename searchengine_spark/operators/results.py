@@ -5,25 +5,28 @@ The reference materializes every hit as ``{term, url, title, snippet, id}``
 ``snippet = snippets[0]`` — the first pre-rendered 60-word window of the
 page's last-processed term (quirks Q11/Q12). Round 1 covered this shape only
 in the pytest oracle suite; this module gates it: BM25 top-k from the gate
-index, then url/title lookup and a 60-word centered snippet rendered at
-query time for the <=k candidate docs.
+index, then url/title and a 60-word centered snippet rendered at query time
+for the <=k winners.
 
-A request is three Spark executions (``search_results``): one lexicon
-lookup; one ``groupBy(doc_id)`` over the pruned postings — the
-``serve._scored`` core every ranker shares — that computes the score, the
-snippet term and, for a quoted phrase, the positional adjacency check
-together, then keeps the bounded top-k; one documents scan that
-reads the <=k winners by pushed-down id and takes their scores and terms
-from literal maps — no broadcast join and no second postings pass.
+A request is three Spark executions (``result_rows``): one lexicon lookup;
+one ``groupBy(doc_id)`` over the pruned postings — the ``serve._scored``
+core every ranker shares — that computes the score, the snippet term and,
+for a quoted phrase, the positional adjacency check together, then keeps
+the bounded top-k; one plain documents scan that reads only
+``(doc_id, source, text)`` of the <=k winners by pushed-down id — a single
+stage, no exchange. The rows are then built on the driver in Python, once
+per hit, as the reference's convertDocumentsToResults does in Java.
 
-Snippet contract (the simple-tokenizer analog of
-Indexer.getCenteredTermSnippets, Indexer.java:354-394, so the DuckDB oracle
-can replicate it bit-for-bit — the Porter-stemmed variant stays covered by
-tests/oracle.py):
+Snippet contract (:func:`render_snippet`; the simple-tokenizer analog of
+Indexer.getCenteredTermSnippets, Indexer.java:354-394, which the DuckDB
+oracle ``oracles.search_results_sql`` replicates — the Porter-stemmed
+variant stays covered by tests/oracle.py):
 
-- ``words = split(text, '\\s+')`` (raw, punctuated words);
+- ``words = re.split(r"\\s+", text)`` under ``re.ASCII`` — Java's ``\\s``
+  set ``[ \\t\\n\\x0b\\f\\r]`` (raw, punctuated words; ``\\xa0`` is
+  not whitespace);
 - a word *matches* the snippet term iff the term appears in the word's
-  simple-token list (``split(lower(word), '[^a-z0-9]+')``) — the same
+  simple-token list (``re.split("[^a-z0-9]+", word.lower())``) — the same
   tokenizer that built the index, so every candidate doc has a match;
 - the window centers on the FIRST matching word: ``start = max(0, i - 30)``,
   ``end = min(n, start + 60)``, ``start = max(0, end - 60)`` (the
@@ -31,10 +34,9 @@ tests/oracle.py):
 - matching words inside the window are wrapped in ``<b>..</b>``, words are
   space-joined, ``'... '`` / ``' ...'`` ellipses mark clipped edges;
 - snippet term = the lexicographically LAST matched query term of the doc
-  (the pinned Q12 "last processed term" order).
+  (the pinned Q12 "last processed term" order);
+- a hit whose text is null or has no matching word is dropped (Q11).
 
-The snippet is Catalyst higher-order functions over <=k rows — the
-per-element lambda interpretation cost is bounded by k, not corpus size.
 The phrase check is ``serve._phrase_adjacent`` — the adjacency predicate
 every phrase path shares — over the aggregate's per-doc positions arrays;
 its lambda runs over the first phrase term's positions per candidate doc,
@@ -43,59 +45,60 @@ bounded by the phrase terms' posting mass.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import re
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark.functions.tokenize import TOKEN_SPLIT_RE
-from searchengine_spark.operators.literals import literal_map, local_frame
+from searchengine_spark.operators.literals import local_frame
 
 SNIPPET_WORDS = 60
 _RESULT_SCHEMA = (
     "rank int, doc_id long, term string, url string, title string, "
     "snippet string, score_micros long"
 )
+# Java's \s: [ \t\n\x0b\f\r] — re.ASCII keeps \xa0, \x1c-\x1f, \x85 out
+_WORD_SPLIT = re.compile(r"\s+", re.ASCII)
+_TOKEN_SPLIT = re.compile(TOKEN_SPLIT_RE)
 
 
-def _word_matches(word: Column, term: Column) -> Column:
+class ResultRow(NamedTuple):
+    """One hit, in ``_RESULT_SCHEMA`` order."""
+
+    rank: int
+    doc_id: int
+    term: str
+    url: str | None
+    title: str
+    snippet: str
+    score_micros: int
+
+
+def _word_matches(word: str, term: str) -> bool:
     """Word-vs-term match under the simple-tokenizer contract."""
-    return F.array_contains(F.split(F.lower(word), TOKEN_SPLIT_RE), term)
+    return term in _TOKEN_SPLIT.split(word.lower())
 
 
-def snippet_expr(words: Column, term: Column, n_words: int = SNIPPET_WORDS) -> Column:
-    """60-word centered, bolded, ellipsized snippet as one Catalyst
-    expression (null when the term never matches — callers on index-served
-    candidates never see that).
-
-    ``words`` must be a MATERIALIZED array attribute (not a Project alias
-    of ``split(text, ...)``): Catalyst inlines aliases into higher-order-
-    function lambdas, so an aliased split would re-run per word index —
-    O(words^2) per doc (the dedup._token_ngrams trap). search_results
-    materializes it through an ``explode(array(...))`` Generate barrier."""
-    half = n_words // 2
-    n = F.size(words)
-    # first matching word index (0-based): filter the position sequence
-    pos = F.filter(
-        F.sequence(F.lit(0), n - 1),
-        lambda j: _word_matches(F.element_at(words, j + 1), term),
+def render_snippet(text: str | None, term: str, n_words: int = SNIPPET_WORDS) -> str | None:
+    """The ``n_words``-word window of ``text`` centered on the first word
+    matching ``term``, matching words bolded, clipped edges ellipsized;
+    None when ``text`` is null or no word matches (the module's snippet
+    contract)."""
+    if text is None:
+        return None
+    words = _WORD_SPLIT.split(text)
+    i = next((j for j, w in enumerate(words) if _word_matches(w, term)), None)
+    if i is None:
+        return None
+    n = len(words)
+    end = min(n, max(0, i - n_words // 2) + n_words)
+    start = max(0, end - n_words)
+    body = " ".join(
+        f"<b>{w}</b>" if _word_matches(w, term) else w for w in words[start:end]
     )
-    i = F.get(pos, 0)  # null-safe (ANSI element_at throws on empty arrays)
-    start = F.greatest(F.lit(0), i - half)
-    end = F.least(n, start + n_words)
-    start = F.greatest(F.lit(0), end - n_words)
-    window = F.slice(words, start + 1, end - start)
-    bolded = F.transform(
-        window,
-        lambda w: F.when(_word_matches(w, term), F.concat(F.lit("<b>"), w, F.lit("</b>"))).otherwise(w),
-    )
-    body = F.array_join(bolded, " ")
-    return F.when(
-        i.isNotNull(),
-        F.concat(
-            F.when(start > 0, F.lit("... ")).otherwise(F.lit("")),
-            body,
-            F.when(end < n, F.lit(" ...")).otherwise(F.lit("")),
-        ),
-    )
+    return ("... " if start > 0 else "") + body + (" ..." if end < n else "")
 
 
 def _topk(
@@ -130,7 +133,7 @@ def _topk(
     return serve._topk(top.select("doc_id", "score_micros", "term"), k)
 
 
-def search_results(
+def result_rows(
     spark: SparkSession,
     idx: dict,
     documents: DataFrame,
@@ -139,12 +142,12 @@ def search_results(
     doc_filter: DataFrame | None = None,
     phrase: bool = False,
     rows: list | None = None,
-) -> DataFrame:
-    """Index-served BM25 top-k assembled into the reference's response shape:
-    ``(rank, doc_id, term, url, title, snippet, score_micros)``.
+) -> list[ResultRow]:
+    """Index-served BM25 top-k assembled into the reference's response shape,
+    as driver rows ``(rank, doc_id, term, url, title, snippet,
+    score_micros)`` ordered by rank.
 
-    Plan, three Spark executions per call (the last when the caller
-    collects the returned frame):
+    Three Spark executions per call:
 
     1. one lexicon point lookup (``serve._qlex``) — its rows give the
        bucket pruning, the idf values and, for a phrase, the
@@ -156,14 +159,23 @@ def search_results(
        from literal term → value maps), the Q12 snippet term ``max(term)``
        and, for a phrase, each phrase term's positions, checked for
        adjacency in the same pass; the bounded top-k is collected;
-    3. one results scan: the documents scan with the <=k winner ids
-       pushed down, each winner's score and term read from literal maps,
-       then the snippet expression, the Q11 filter and the rank window.
+    3. one documents scan with the <=k winner ids pushed down
+       (``doc_id IN (...)``: parquet row-group pruning on the
+       doc_id-clustered files — a join key never reaches the reader, so a
+       join would decode the whole corpus's text column) that collects
+       only ``(doc_id, source, text)``.
+
+    Bound: the text of at most ``k`` documents crosses to the driver, and
+    callers keep ``k <= serve_api.MAX_K`` (100). Each row is then built in
+    Python: ``url = doc://{source}/{doc_id}`` and ``title`` = the first 48
+    characters of the text (the compat fixture's derivation — documents
+    carry no url/title columns), the snippet from :func:`render_snippet`,
+    the Q11 drop of snippet-less hits, and the dense rank over the
+    survivors by ``(score_micros desc, doc_id asc)``.
 
     ``phrase=True`` keeps only docs holding ``query_terms`` token-adjacent
     (``serve._phrase_adjacent``, the predicate every phrase path shares)
-    BEFORE the top-k bound — the
-    reference's filter-then-rank phrase flow
+    BEFORE the top-k bound — the reference's filter-then-rank phrase flow
     (SearchService.handlePhraseSearch, SearchService.java:99-133) on true
     positional adjacency instead of snippet scans. ``doc_filter`` (a
     ``doc_id`` DataFrame, e.g. a boolean query's hit set) likewise
@@ -172,51 +184,58 @@ def search_results(
     boolean route, whose one lookup serves its filter too); step 1 is then
     skipped.
     """
-    from pyspark.sql import Window
-
     from searchengine_spark.operators import serve
 
     if rows is None:
         rows = serve._qlex(spark, idx, query_terms)
     if not rows or (phrase and not set(query_terms) <= {r["term"] for r in rows}):
-        return local_frame(spark, [], _RESULT_SCHEMA)
-    # the <=k winners are collected so their doc_ids PUSH DOWN into the
-    # documents scan (parquet row-group pruning on the doc_id-clustered
-    # files) — a join key never reaches the reader, so without this every
-    # request would decode the whole corpus's text column
-    top_rows = _topk(spark, idx, rows, query_terms, k, doc_filter, phrase).collect()
-    if not top_rows:
-        return local_frame(spark, [], _RESULT_SCHEMA)
-    score = {int(r["doc_id"]): int(r["score_micros"]) for r in top_rows}
-    term = {int(r["doc_id"]): r["term"] for r in top_rows}
-    # url/title derived exactly as the compat fixture does (documents.parquet
-    # has no url/title columns): url = doc://{source}/{doc_id}, title = first
-    # 48 chars — the convertDocumentsToResults field mapping
-    doc_id = F.col("doc_id")
-    barrier = documents.filter(doc_id.isin(list(score))).select(
-        "doc_id",
-        literal_map(term)[doc_id].alias("term"),
-        F.concat(
-            F.lit("doc://"), F.col("source"), F.lit("/"), doc_id.cast("string")
-        ).alias("url"),
-        F.substring("text", 1, 48).alias("title"),
-        literal_map(score)[doc_id].alias("score_micros"),
-        # Generate barrier: the word array becomes a real attribute,
-        # evaluated once per row, before the per-word snippet lambdas touch it
-        F.explode(F.array(F.split(F.col("text"), r"\s+"))).alias("_words"),
-    )
-    out = barrier.withColumn(
-        "snippet", snippet_expr(F.col("_words"), F.col("term"))
-    ).filter(F.col("snippet").isNotNull())  # Q11: empty-snippet hits dropped
-    w = Window.partitionBy(F.col("doc_id") % 1).orderBy(
-        F.desc("score_micros"), F.asc("doc_id")
-    )
-    return out.select(
-        F.row_number().over(w).alias("rank"),
-        "doc_id",
-        "term",
-        "url",
-        "title",
-        "snippet",
-        "score_micros",
+        return []
+    top = {
+        int(r["doc_id"]): (int(r["score_micros"]), r["term"])
+        for r in _topk(spark, idx, rows, query_terms, k, doc_filter, phrase).collect()
+    }
+    if not top:
+        return []
+    hits = []
+    for doc_id, source, text in (
+        documents.filter(F.col("doc_id").isin(list(top)))
+        .select("doc_id", "source", "text")
+        .collect()
+    ):
+        score, term = top[doc_id]
+        snippet = render_snippet(text, term)
+        if snippet is not None:  # Q11: snippet-less hits are dropped
+            hits.append((score, doc_id, term, source, text, snippet))
+    hits.sort(key=lambda h: (-h[0], h[1]))
+    return [
+        ResultRow(
+            rank,
+            doc_id,
+            term,
+            None if source is None else f"doc://{source}/{doc_id}",  # as SQL concat
+            text[:48],
+            snippet,
+            score,
+        )
+        for rank, (score, doc_id, term, source, text, snippet) in enumerate(hits, 1)
+    ]
+
+
+def search_results(
+    spark: SparkSession,
+    idx: dict,
+    documents: DataFrame,
+    query_terms: list[str],
+    k: int = 10,
+    doc_filter: DataFrame | None = None,
+    phrase: bool = False,
+    rows: list | None = None,
+) -> DataFrame:
+    """:func:`result_rows` as a frame of ``_RESULT_SCHEMA`` — the gate's
+    form of the rows REST serves. The three executions run at call time;
+    the returned frame holds the <=k rows as literals."""
+    return local_frame(
+        spark,
+        result_rows(spark, idx, documents, query_terms, k, doc_filter, phrase, rows),
+        _RESULT_SCHEMA,
     )

@@ -11,6 +11,8 @@ columns by name before hashing).
 from __future__ import annotations
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
+# Java's \s (results.render_snippet's word split); RE2's \s lacks \x0b
+_JAVA_WS_RE = "[\\t\\n\\v\\f\\r ]+"
 
 # shared CTE: non-empty tokens per doc over the `documents` view
 _TOKENS_CTE = f"""
@@ -1753,7 +1755,7 @@ lastterm AS (
   GROUP BY post.doc_id
 ),
 words AS (
-  SELECT d.doc_id, string_split_regex(d.text, '\\s+') AS w
+  SELECT d.doc_id, string_split_regex(d.text, '{_JAVA_WS_RE}') AS w
   FROM documents d JOIN topk USING (doc_id)
 ),
 wordpos AS (

@@ -186,16 +186,15 @@ def build_index(
             lin.publish_stage(edges, index_dir, "edges")
             edges = read("edges")
             if with_pagerank:
-                pr = pagerank(docs, edges)
-            else:
-                pr = docs.select("doc_id").withColumn("pagerank", F.lit(0.0))
+                final = docs.join(pagerank(docs, edges), "doc_id", "left").withColumn(
+                    "pagerank", F.coalesce("pagerank", F.lit(0.0))
+                )
+            else:  # the constant in place: no join of docs with its own doc_ids
+                final = docs.withColumn("pagerank", F.lit(0.0))
             # doc_len comes from the postings table (Q15: kept tokens only)
             dl = post.groupBy("doc_id").agg(F.first("dl").alias("doc_len"))
-            final = (
-                docs.join(pr, "doc_id", "left")
-                .join(dl, "doc_id", "left")
-                .withColumn("pagerank", F.coalesce("pagerank", F.lit(0.0)))
-                .withColumn("doc_len", F.coalesce("doc_len", F.lit(0)))
+            final = final.join(dl, "doc_id", "left").withColumn(
+                "doc_len", F.coalesce("doc_len", F.lit(0))
             )
             lin.publish_stage(final, index_dir, "documents")
         parts = lin.partition_metrics(stage_path("documents"))

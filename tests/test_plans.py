@@ -13,6 +13,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -199,21 +200,37 @@ def test_fuzzy_suggest_is_lexicon_only(spark):
     assert "TakeOrderedAndProject" in plan  # bounded top-k, no global sort
 
 
+def assert_winner_scan(plan: str) -> None:
+    """``plan`` is one plain documents scan, a single stage: every scan in it
+    reads the documents, the winner ids are pushed into the reader
+    (PushedFilters In), and nothing is exchanged, generated or lambda-mapped."""
+    scans = re.findall(r"Location: \w+ \[(.*?)\]", plan)
+    assert scans and all("documents" in loc for loc in scans), scans
+    assert len(re.findall(r"^\(\d+\) Scan ", plan, re.M)) == len(scans)
+    pushed = plan.split("PushedFilters: ")[1].split("\n")[0]
+    assert "In(doc_id" in pushed, pushed
+    for node in ("Exchange", "Generate", "lambda"):
+        assert node not in plan, node
+
+
 def test_search_results_pushes_winner_ids_into_scans(spark):
-    """Result assembly must never scan the corpus: the <=k winner doc_ids
-    are collected and pushed into the documents scan (PushedFilters In),
-    and the word array reaches the snippet lambdas behind a Generate."""
+    """Result assembly never scans the corpus: the search_results gate runs
+    three executions (lexicon lookup, top-k aggregate, documents scan), and
+    the last is one pushed-down documents scan."""
     from searchengine_spark.operators.results import search_results
     from searchengine_spark.plans.gate_index import gate_index
     from searchengine_spark.sources.tables import load_table
+    from tests.conftest import sql_plans
 
     idx = gate_index(spark, SF_DIR)
     docs = load_table(spark, SF_DIR, "documents")
-    df = search_results(spark, idx, docs, ["spark", "hash"], k=5)
-    plan = plan_of(df)
-    pushed = plan.split("PushedFilters")[1].split("\n")[0] if "PushedFilters" in plan else ""
-    assert "In(doc_id" in pushed or "doc_id IN" in pushed
-    assert "Generate" in plan  # the snippet word-array barrier
+    out = []
+    plans = sql_plans(
+        spark, lambda: out.append(search_results(spark, idx, docs, ["spark", "hash"], k=5))
+    )
+    assert out[0].count() > 0
+    assert len(plans) == 3
+    assert_winner_scan(plans[-1])
 
 
 def test_wildcard_search_prunes_postings(spark):

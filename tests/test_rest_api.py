@@ -94,11 +94,12 @@ def test_phrase_ids_match_oracle(api_server, phrase):
 
 
 def test_search_request_shape(spark, api_server, monkeypatch):
-    """A plain or phrase request looks the lexicon up once, and its results
-    frame reads only the documents: no postings scan, no broadcast."""
+    """A plain or phrase request looks the lexicon up once and runs three
+    Spark executions; the last is one plain documents scan with the winner
+    ids pushed down — no postings, no exchange, no Generate."""
     from searchengine_spark.operators import serve
-    from searchengine_spark.operators.results import search_results
-    from tests.test_plans import plan_of
+    from tests.conftest import sql_plans
+    from tests.test_plans import assert_winner_scan
 
     api, _ = api_server
     lookup, calls = serve._qlex, []
@@ -110,15 +111,12 @@ def test_search_request_shape(spark, api_server, monkeypatch):
     monkeypatch.setattr(serve, "_qlex", counted)
     for q in ("hash join", '"hash join"'):
         calls.clear()
-        assert api.search(q)
+        hits = []
+        plans = sql_plans(spark, lambda: hits.append(api.search(q)))
+        assert hits[0], q
         assert len(calls) == 1, (q, calls)
-    for phrase in (False, True):
-        res = search_results(
-            spark, api.idx, api.documents, ["hash", "join"], k=10, phrase=phrase
-        )
-        plan = plan_of(res)
-        assert "postings" not in plan and "BroadcastExchange" not in plan
-        assert "documents" in plan
+        assert len(plans) == 3, (q, len(plans))
+        assert_winner_scan(plans[-1])
 
 
 def test_no_hit_and_errors(api_server):

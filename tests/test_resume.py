@@ -177,3 +177,19 @@ def test_lineage_metrics_present(spark, tmp_path_factory):
     assert post_row["bytes_compressed"] > 0
     assert post_row["skew_ratio"] >= 1.0
     assert post_row["input_fingerprint"]
+
+
+def test_no_pagerank_documents_keep_every_raw_row(spark, tmp_path):
+    """A build without PageRank publishes documents_raw row for row, each
+    with ``pagerank == 0.0``, in the documents schema."""
+    from searchengine_spark import schemas
+
+    d = str(tmp_path / "idx")
+    build_index(spark, generate_corpus(spark, N_DOCS, seed=7), d, with_pagerank=False)
+    raw = spark.read.parquet(os.path.join(d, "documents_raw"))
+    docs = load_index(spark, d)["documents"]
+    assert docs.columns == schemas.DOCUMENTS.names
+    key = ["doc_id", "url", "content_sha256"]
+    assert sorted(docs.select(*key).collect()) == sorted(raw.select(*key).collect())
+    assert raw.count() > 0
+    assert {r["pagerank"] for r in docs.select("pagerank").distinct().collect()} == {0.0}
