@@ -81,8 +81,8 @@ def _word_matches(word: str, term: str) -> bool:
     return term in _TOKEN_SPLIT.split(word.lower())
 
 
-def render_snippet(text: str | None, term: str, n_words: int = SNIPPET_WORDS) -> str | None:
-    """The ``n_words``-word window of ``text`` centered on the first word
+def render_snippet(text: str | None, term: str) -> str | None:
+    """The ``SNIPPET_WORDS``-word window of ``text`` centered on the first word
     matching ``term``, matching words bolded, clipped edges ellipsized;
     None when ``text`` is null or no word matches (the module's snippet
     contract)."""
@@ -93,8 +93,8 @@ def render_snippet(text: str | None, term: str, n_words: int = SNIPPET_WORDS) ->
     if i is None:
         return None
     n = len(words)
-    end = min(n, max(0, i - n_words // 2) + n_words)
-    start = max(0, end - n_words)
+    end = min(n, max(0, i - SNIPPET_WORDS // 2) + SNIPPET_WORDS)
+    start = max(0, end - SNIPPET_WORDS)
     body = " ".join(
         f"<b>{w}</b>" if _word_matches(w, term) else w for w in words[start:end]
     )
@@ -196,29 +196,29 @@ def result_rows(
     }
     if not top:
         return []
-    hits = []
-    for doc_id, source, text in (
+    docs = sorted(
         documents.filter(F.col("doc_id").isin(list(top)))
         .select("doc_id", "source", "text")
-        .collect()
-    ):
+        .collect(),
+        key=lambda r: (-top[r["doc_id"]][0], r["doc_id"]),
+    )
+    out: list[ResultRow] = []
+    for doc_id, source, text in docs:
         score, term = top[doc_id]
         snippet = render_snippet(text, term)
         if snippet is not None:  # Q11: snippet-less hits are dropped
-            hits.append((score, doc_id, term, source, text, snippet))
-    hits.sort(key=lambda h: (-h[0], h[1]))
-    return [
-        ResultRow(
-            rank,
-            doc_id,
-            term,
-            None if source is None else f"doc://{source}/{doc_id}",  # as SQL concat
-            text[:48],
-            snippet,
-            score,
-        )
-        for rank, (score, doc_id, term, source, text, snippet) in enumerate(hits, 1)
-    ]
+            out.append(
+                ResultRow(
+                    len(out) + 1,
+                    doc_id,
+                    term,
+                    None if source is None else f"doc://{source}/{doc_id}",  # as SQL concat
+                    text[:48],
+                    snippet,
+                    score,
+                )
+            )
+    return out
 
 
 def search_results(
